@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Session-scoped lifecycle for intra-operator caches.
   *
@@ -46,4 +50,39 @@ object Caches {
     * query results), then release every cache it registered. */
   def withScope[T](body: => T): T =
     try body finally release()
+}
+
+/** Independent Spark actions run side by side from the driver. A chain of
+  * small actions costs one scheduling round each when issued one after
+  * another; issued together they share the rounds, and the local executor
+  * runs their tasks concurrently.
+  *
+  * The pool has `min(n, defaultParallelism)` threads, created from the
+  * calling thread, so every action inherits its active session and local
+  * properties. Every action runs to completion; if any failed, the first
+  * failure in argument order is rethrown, so callers keep the error they
+  * would have met running the actions in sequence.
+  */
+object Concurrent {
+  def run[T](spark: SparkSession)(actions: Seq[() => T]): Seq[T] =
+    if (actions.isEmpty) Nil
+    else {
+      val pool = Executors.newFixedThreadPool(
+        math.min(actions.size, spark.sparkContext.defaultParallelism))
+      try {
+        val pending = actions.map(a => pool.submit(new Callable[T] { def call(): T = a() }))
+        pending.map(f => Try(f.get())).map {
+          case Success(v) => v
+          case Failure(e: ExecutionException) => throw e.getCause
+          case Failure(e) => throw e
+        }
+      } finally pool.shutdown()
+    }
+
+  /** Eagerly `localCheckpoint` each frame, concurrently. The returned frames
+    * read executor-resident blocks; release them with
+    * [[graft.operators.DedupOps.unpersistCheckpoint]]. */
+  def checkpoint(frames: Seq[DataFrame]): Seq[DataFrame] =
+    frames.headOption.fold(Seq.empty[DataFrame])(f =>
+      run(f.sparkSession)(frames.map(df => () => df.localCheckpoint())))
 }

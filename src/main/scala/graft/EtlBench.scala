@@ -35,33 +35,34 @@ object EtlBench {
     val out = java.nio.file.Paths.get(args.lift(2).getOrElse("etl_bench.jsonl"))
     val reps = args.lift(3).map(_.toInt).getOrElse(3)
     val spark = Tables.session("etl-bench",
-      cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+        Runtime.getRuntime.availableProcessors.toString))
     spark.sparkContext.setLogLevel("ERROR")
 
     def sentinel(tag: String): Unit = BenchKit.sentinel(spark, out, tag, dir)
-    def bench(name: String, sf: String)(f: => Unit): Unit = {
-      // clear caches per rep, OUTSIDE the clock, same discipline as
-      // Bench: GtexEtl.build caches subtrees (samples, scraped), so
-      // without this the timed reps would read the warm-up rep's
-      // InMemoryRelations and the row would be blind to regressions in
-      // exactly the ingest/join work it exists to clock
-      def once(): Double = {
-        Caches.release(); spark.catalog.clearCache()
-        BenchKit.timed(f)
-      }
-      once() // untimed warm-up rep, same discipline as Bench/DatsModeBench
-      BenchKit.record(out, name, (1 to reps).map(_ => once()).min, sf)
-    }
-
     // JVM/codegen warm-up, then the sentinel bracket
     spark.range(1000000).selectExpr("sum(id)").collect()
     sentinel("start")
 
     val tmp = java.nio.file.Files.createTempDirectory("graft_etl_bench_")
     try {
-      bench("etl_gtex_build_k1", fixtures) {
-        DatsJsonWriter.write(GtexEtl.build(spark, GtexPipeline.inputs(fixtures)),
-          s"$tmp/gtex_dats.json")
+      // each rep starts from clear caches and releases its graph, both
+      // OUTSIDE the clock: GtexEtl.build materializes its tables as local
+      // checkpoints, which catalog.clearCache() does not reach, so without
+      // the unpersist every earlier rep's tables stay in executor storage
+      locally {
+        def once(): Double = {
+          Caches.release(); spark.catalog.clearCache()
+          var graph: GtexEtl.EntityGraph = null
+          val s = BenchKit.timed {
+            graph = GtexEtl.build(spark, GtexPipeline.inputs(fixtures))
+            DatsJsonWriter.write(graph, s"$tmp/gtex_dats.json")
+          }
+          graph.unpersist()
+          s
+        }
+        once() // untimed warm-up rep, same discipline as Bench/DatsModeBench
+        BenchKit.record(out, "etl_gtex_build_k1", (1 to reps).map(_ => once()).min, fixtures)
       }
       // timed: the materialize write ONLY — each rep gets a fresh dir and
       // the between-rep cleanup stays outside the clock

@@ -3,7 +3,11 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.Try
+
+import graft.Concurrent
 import graft.model.Dats
+import graft.operators.DedupOps
 import graft.sources.ValidatedTsv
 import graft.sources.ValidatedTsv.{AnyValue, ColumnSpec, Cv, IntegerCv, Regex}
 
@@ -51,7 +55,27 @@ object GtexEtl {
         * AbBench does exactly that to A/B the Q7 shape switch on a
         * view graph. View graphs and the plain parquet layout leave it
         * None and the queries derive the chain from `materials`. */
-      bucketedDerives: Option[DataFrame] = None)
+      bucketedDerives: Option[DataFrame] = None) {
+
+    /** The twelve entity tables, in field order. */
+    def tables: Seq[DataFrame] = Seq(datasets, identifiers, studies, studyGroups,
+      groupMembers, materials, anatomicalParts, characteristics, dimensions,
+      distributions, dataAcquisitions, diseases)
+
+    /** This graph with its twelve tables materialized once, concurrently,
+      * as local checkpoints: executor-resident, computed once however many
+      * queries read them. */
+    def materialized: EntityGraph = {
+      val t = Concurrent.checkpoint(tables)
+      EntityGraph(t(0), t(1), t(2), t(3), t(4), t(5), t(6), t(7), t(8), t(9), t(10), t(11),
+        bucketedDerives)
+    }
+
+    /** Release the checkpoints behind every table — those [[build]],
+      * [[restrictedOverlay]] and [[graft.io.DatsJsonReader.read]]
+      * materialize. `catalog.clearCache()` does not reach them. */
+    def unpersist(): Unit = (tables ++ bucketedDerives).foreach(DedupOps.unpersistCheckpoint)
+  }
 
   // ---- column specs (ccmm/gtex/parsers/portal_files.py:16-108) ----
 
@@ -274,18 +298,45 @@ object GtexEtl {
   val TopDatasetTitle = "Genotype-Tissue Expression Project (GTEx)"
   val StudyAccession = "phs000424.v7.p2"
 
+  /** §3.1 steps 2-9: the normalized entity graph of the portal and
+    * manifest files, in three concurrent rounds of Spark actions:
+    *  1. the five validated sources (S1/S2) are parsed, each ONCE, into
+    *     scan checkpoints ([[ValidatedTsv.read]]);
+    *  2. every fatal gate runs — each source's validity, orphan samples
+    *     (J1), sample type conflicts (P7), manifest rows with no sample
+    *     (J3) and, with a scrape, its parse and id checks (J10/P5). A read
+    *     that failed in round 1 surfaces at its own gate, and the first
+    *     failing gate in the order listed here (the reference's order) is
+    *     thrown with the same exception and message a sequential run
+    *     would raise;
+    *  3. the twelve entity tables are derived from the checkpoints and
+    *     materialized as local checkpoints of their own, after which the
+    *     scan checkpoints are released.
+    * The returned tables are executor-resident and survive
+    * `catalog.clearCache()`; release them with [[EntityGraph.unpersist]]. */
   def build(spark: SparkSession, in: Inputs): EntityGraph = {
     import Dats.entityId
 
-    // -- step 2 (§3.1): validated portal scans (S1/S2) --
-    val subjects = ValidatedTsv.readStrict(spark, in.subjectsPath, subjectSpec, "SUBJID")
-    val samplesRaw = ValidatedTsv.readStrict(spark, in.samplesPath, sampleSpec, "SAMPID")
+    // -- round 1, step 2 (§3.1): validated portal scans (S1/S2) --
+    val Seq(subjectsR, samplesR, wgsR, rnaR, doisR) = Concurrent.run(spark)(Seq(
+        (in.subjectsPath, subjectSpec, "SUBJID"),
+        (in.samplesPath, sampleSpec, "SAMPID"),
+        (in.wgsManifestPath, manifestSpec(withFirecloud = true), "sample_id"),
+        (in.rnaseqManifestPath, manifestSpec(withFirecloud = false), "sample_id"),
+        (in.doiPath, doiSpec, "sample_id"))
+      .map { case (path, spec, pk) => () => Try(ValidatedTsv.read(spark, path, spec, pk)) })
+
+    // Lazy until round 2: a frame over a failed read throws only inside
+    // the gate that needs it, which always follows that read's own gate.
 
     // -- J1: sample → subject link on the derived prefix key; missing
     //    subject is fatal (portal_files.py:133-146) --
-    val samplesWithSubj = samplesRaw.withColumn("SUBJID", subjectIdOf(col("SAMPID")))
-    val orphans = samplesWithSubj.join(subjects.select("SUBJID"), Seq("SUBJID"), "left_anti")
-    require(orphans.isEmpty, s"samples with no subject: ${orphans.select("SAMPID").collect().mkString(",")}")
+    lazy val subjects = subjectsR.get.data
+    lazy val samplesWithSubj = samplesR.get.data.withColumn("SUBJID", subjectIdOf(col("SAMPID")))
+    def orphanGate(): Unit = {
+      val orphans = samplesWithSubj.join(subjects.select("SUBJID"), Seq("SUBJID"), "left_anti")
+      require(orphans.isEmpty, s"samples with no subject: ${orphans.select("SAMPID").collect().mkString(",")}")
+    }
 
     // -- P7: sample type inference (samples.py:99-141): SMAFRZE ⇒ expected
     //    type (EXCLUDE ⇒ none), SMNABTCHT ⇒ actual type; conflict between
@@ -294,22 +345,74 @@ object GtexEtl {
     //    the expected type, so only rows where both are undetermined are
     //    dropped — and EXCLUDE rows with a determinable batch type are
     //    kept (samples.py:118-127) --
-    val typed = samplesWithSubj
+    lazy val typed = samplesWithSubj
       .withColumn("expected_type",
         when(col("SMAFRZE") === "RNASEQ", "RNA")
           .when(col("SMAFRZE").isin("WGS", "WES", "OMNI"), "DNA"))
       .withColumn("actual_type",
         when(upper(col("SMNABTCHT")).contains("RNA"), "RNA")
           .when(upper(col("SMNABTCHT")).contains("DNA"), "DNA"))
-    val conflicts = typed.filter(
-      col("actual_type").isNotNull && col("expected_type").isNotNull &&
-        col("actual_type") =!= col("expected_type"))
-    require(conflicts.isEmpty,
-      s"sample type conflicts: ${conflicts.select("SAMPID").collect().mkString(",")}")
-    val samples = typed
+    def conflictGate(): Unit = {
+      val conflicts = typed.filter(
+        col("actual_type").isNotNull && col("expected_type").isNotNull &&
+          col("actual_type") =!= col("expected_type"))
+      require(conflicts.isEmpty,
+        s"sample type conflicts: ${conflicts.select("SAMPID").collect().mkString(",")}")
+    }
+    lazy val samples = typed
       .withColumn("actual_type", coalesce(col("actual_type"), col("expected_type")))
       .filter(col("actual_type").isNotNull)
-      .cache()
+
+    // -- file manifests (J3/J4/P6, samples.py:177-326) --
+    lazy val manifest = {
+      val wgsManifest = wgsR.get.data.withColumn("data_type", lit("WGS"))
+      val rnaManifest = rnaR.get.data
+        .withColumn("firecloud_id", lit(null).cast("string"))
+        .withColumn("data_type", lit("RNA-Seq"))
+      // U1: WGS ∪ RNA-Seq (gtex_v7_to_dats.py:385-397)
+      wgsManifest.unionByName(rnaManifest)
+    }
+    // J3 is inner with a fatal on manifest samples lacking a Material
+    // (samples.py:305-307)
+    def manifestOrphanGate(): Unit = {
+      val manifestOrphans = manifest.join(
+        samples.select(col("SAMPID").as("sample_id")), Seq("sample_id"), "left_anti")
+      require(manifestOrphans.isEmpty,
+        s"manifest rows with no sample: ${manifestOrphans.select("sample_id").collect().mkString(",")}")
+    }
+
+    // J10: study Dataset skeleton built FROM the S14 scrape when given
+    // (ccmm/gtex/wgs_datasets.py:85-175 + bin/gtex_v7_to_dats.py:292-324)
+    // — one Dataset per scraped dbGaP study, accession as identifier,
+    // subject count as an "Actual Subject Count" Dimension. The dataset
+    // keyed by StudyAccession keeps the same content-hash id as the
+    // constant path, so file datasets and the Study link are unchanged.
+    lazy val scraped: Option[DataFrame] = in.dbgapStudiesScrapePath.map { p =>
+      val s = graft.sources.Readers.scrapeDbgapStudies(
+        spark, p, descrPrefix = "Genotype-Tissue Expression").localCheckpoint()
+      // P5: every scraped id must carry a parseable phsN.vN prefix
+      val bad = s.filter(normalizeStudyId(col("id")) === "")
+      require(bad.isEmpty, "unable to parse study_id(s): " +
+        bad.select("id").collect().map(_.getString(0)).mkString(","))
+      // the study the samples/files hang off MUST be in the scrape —
+      // otherwise file datasets and the Study link would dangle and the
+      // writer (which walks parent→child) would silently drop them
+      require(!s.filter(col("id") === StudyAccession).isEmpty,
+        s"scraped dbGaP studies do not include $StudyAccession")
+      s
+    }
+
+    // -- round 2: the gates, in the reference's order --
+    Concurrent.run(spark)(Seq[() => Any](
+      () => subjectsR.get.requireValid(),
+      () => samplesR.get.requireValid(),
+      () => orphanGate(),
+      () => conflictGate(),
+      () => wgsR.get.requireValid(),
+      () => rnaR.get.requireValid(),
+      () => manifestOrphanGate(),
+      () => doisR.get.requireValid(),
+      () => scraped))
 
     // -- U3: anatomy dedup on natural key (samples.py:31-60): shared
     //    AnatomicalPart entities become one dimension-table row --
@@ -376,25 +479,8 @@ object GtexEtl {
       }.reduce(_ unionByName _)
     val characteristics = subjChars.unionByName(sampleChars)
 
-    // -- file datasets from CRAM manifests (J3/J4/P6, samples.py:177-326) --
-    val wgsManifest = ValidatedTsv.readStrict(spark, in.wgsManifestPath,
-      manifestSpec(withFirecloud = true), "sample_id").withColumn("data_type", lit("WGS"))
-    val rnaManifest = ValidatedTsv.readStrict(spark, in.rnaseqManifestPath,
-      manifestSpec(withFirecloud = false), "sample_id")
-      .withColumn("firecloud_id", lit(null).cast("string"))
-      .withColumn("data_type", lit("RNA-Seq"))
-    // U1: WGS ∪ RNA-Seq (gtex_v7_to_dats.py:385-397)
-    val manifest = wgsManifest.unionByName(rnaManifest)
-
-    // J3 is inner with a fatal on manifest samples lacking a Material
-    // (samples.py:305-307)
-    val manifestOrphans = manifest.join(
-      samples.select(col("SAMPID").as("sample_id")), Seq("sample_id"), "left_anti")
-    require(manifestOrphans.isEmpty,
-      s"manifest rows with no sample: ${manifestOrphans.select("sample_id").collect().mkString(",")}")
-
-    val dois = ValidatedTsv.readStrict(spark, in.doiPath, doiSpec, "sample_id")
-    val files = manifest.join(dois, Seq("sample_id"), "left") // J4
+    // -- file datasets from the CRAM manifests --
+    val files = manifest.join(doisR.get.data, Seq("sample_id"), "left") // J4
       .withColumn("dataset_id", entityId("Dataset", concat(col("sample_id"), lit("|"), col("data_type"))))
 
     val fileDatasets = files.select(
@@ -442,26 +528,6 @@ object GtexEtl {
       lit("v7").as("version"), lit(null).cast("string").as("data_type"),
       lit(null).cast("string").as("study_id"))
 
-    // J10: study Dataset skeleton built FROM the S14 scrape when given
-    // (ccmm/gtex/wgs_datasets.py:85-175 + bin/gtex_v7_to_dats.py:292-324)
-    // — one Dataset per scraped dbGaP study, accession as identifier,
-    // subject count as an "Actual Subject Count" Dimension. The dataset
-    // keyed by StudyAccession keeps the same content-hash id as the
-    // constant path, so file datasets and the Study link are unchanged.
-    val scraped: Option[DataFrame] = in.dbgapStudiesScrapePath.map { p =>
-      val s = graft.sources.Readers.scrapeDbgapStudies(
-        spark, p, descrPrefix = "Genotype-Tissue Expression").cache()
-      // P5: every scraped id must carry a parseable phsN.vN prefix
-      val bad = s.filter(normalizeStudyId(col("id")) === "")
-      require(bad.isEmpty, "unable to parse study_id(s): " +
-        bad.select("id").collect().map(_.getString(0)).mkString(","))
-      // the study the samples/files hang off MUST be in the scrape —
-      // otherwise file datasets and the Study link would dangle and the
-      // writer (which walks parent→child) would silently drop them
-      require(!s.filter(col("id") === StudyAccession).isEmpty,
-        s"scraped dbGaP studies do not include $StudyAccession")
-      s
-    }
     val studyRows = scraped match {
       case Some(s) =>
         s.select(
@@ -533,7 +599,9 @@ object GtexEtl {
           }.reduce(_ unionByName _)
     }
 
-    EntityGraph(
+    // -- round 3: every entity table materialized once; only then are
+    //    the scan checkpoints they were derived from released --
+    val graph = EntityGraph(
       datasets = datasets,
       identifiers = identifiers,
       studies = studies,
@@ -548,7 +616,10 @@ object GtexEtl {
       dataAcquisitions = dataAcquisitions,
       // public portal columns carry no phenotype variables to harmonize;
       // hypertension arrives with the restricted overlay (P9)
-      diseases = Harmonize.emptyDiseases(spark))
+      diseases = Harmonize.emptyDiseases(spark)).materialized
+    (Seq(subjectsR, samplesR, wgsR, rnaR, doisR).map(_.get.data) ++ scraped)
+      .foreach(DedupOps.unpersistCheckpoint)
+    graph
   }
 
   /** §3.1 step 10 — the restricted-access overlay
@@ -560,7 +631,9 @@ object GtexEtl {
     * Returns the updated graph: characteristics for overlaid subjects are
     * replaced wholesale (the reference rewrites the subject's
     * characteristics list); non-overlaid subjects keep their public
-    * characteristics.
+    * characteristics. The four rewritten tables (characteristics, study
+    * groups, members, diseases) are materialized as checkpoints, as in
+    * [[build]]; the other eight are `graph`'s own.
     */
   def restrictedOverlay(spark: SparkSession, graph: EntityGraph,
                         subjectTsv: String, phenotypesTsv: String,
@@ -640,11 +713,16 @@ object GtexEtl {
       entityId("StudyGroup", concat(lit("consent-"), col("CONSENT"))).as("group_id"),
       entityId("Material", col("SUBJID")).as("material_id"))
 
-    graph.copy(
-      characteristics = keptChars.unionByName(overlaidChars),
-      studyGroups = graph.studyGroups.unionByName(consentGroups),
-      groupMembers = graph.groupMembers.unionByName(consentMembers),
-      diseases = graph.diseases.unionByName(overlaidDiseases))
+    // the four rewritten tables are materialized once, concurrently, like
+    // build's; `merged` backs nothing after that
+    val Seq(characteristics, studyGroups, groupMembers, diseases) = Concurrent.checkpoint(Seq(
+      keptChars.unionByName(overlaidChars),
+      graph.studyGroups.unionByName(consentGroups),
+      graph.groupMembers.unionByName(consentMembers),
+      graph.diseases.unionByName(overlaidDiseases)))
+    merged.unpersist()
+    graph.copy(characteristics = characteristics, studyGroups = studyGroups,
+      groupMembers = groupMembers, diseases = diseases)
   }
 
   /** J2 — manifest ↔ portal reconciliation tallies

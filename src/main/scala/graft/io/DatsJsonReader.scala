@@ -22,7 +22,11 @@ import graft.etl.GtexEtl.EntityGraph
   * token walk; reference instances are ≤ ~420 MB — the same driver-side
   * budget the writer already assumes) and hands Spark the same
   * normalized tables the ETL produced, so every downstream join keeps
-  * its pushdown and pruning. The corpus-sized containers — `hasPart`
+  * its pushdown and pruning. Those tables are local checkpoints: the
+  * row buffers are shipped to the executors once, concurrently, inside
+  * [[read]], and the queries scan executor-resident blocks instead of
+  * re-sending driver-local rows with every plan (release them with
+  * [[EntityGraph.unpersist]]). The corpus-sized containers — `hasPart`
   * dataset children, `isAbout` materials, `hasMember`, `dimensions`,
   * `distributions` — are iterated element-by-element off the parser, so
   * peak heap is the entity ROW buffers plus ONE bounded element subtree,
@@ -305,6 +309,9 @@ object DatsJsonReader {
     def df(rows: Seq[Row], schema: StructType): DataFrame =
       spark.createDataFrame(rows.asJava, schema)
 
+    // the driver-side row buffers are shipped to the executors ONCE, all
+    // twelve tables concurrently: a query over a LocalRelation would
+    // re-send its rows with every plan that scans it
     EntityGraph(
       datasets = df(datasets.toSeq, s("dataset_id", "parent_dataset_id", "title",
         "description", "version", "data_type", "study_id")),
@@ -332,6 +339,6 @@ object DatsJsonReader {
       dataAcquisitions = df(dataAcquisitions.toSeq,
         s("dataset_id", "input_material_id")),
       diseases = df(diseases.toSeq,
-        s("material_id", "name", "disease_id", "status")))
+        s("material_id", "name", "disease_id", "status"))).materialized
   }
 }

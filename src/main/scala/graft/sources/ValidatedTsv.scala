@@ -1,7 +1,15 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** S1 — the reference's workhorse validated-TSV scan
   * (ccmm/gtex/parsers/util.py:31-105): read a tab-delimited file with a
@@ -13,9 +21,14 @@ import org.apache.spark.sql.functions._
   * fatal exit on first error, validation is a declarative pass that
   * returns BOTH the mapped data and a violations DataFrame; callers gate
   * on `violations.isEmpty` (same strictness, whole-file error reporting —
-  * SURVEY.md §7.4.6). All checks are built-in expressions, so the scan +
-  * validation stays in one codegen stage and the violations scan prunes
-  * to only the checked columns.
+  * SURVEY.md §7.4.6). All checks are built-in expressions, so the scan,
+  * the code→label mapping and the validation stay in one codegen stage.
+  *
+  * Dataflow: the header line is read and checked on the driver (no
+  * header-inference job); then ONE job parses the file into a local
+  * checkpoint holding the mapped data plus each row's violation array.
+  * `data`, `violations` and the strict gate all read that checkpoint, so
+  * the CSV is scanned exactly once per [[read]].
   *
   * Divergence from the reference, by design (SURVEY.md §7.4.3): the `cv`
   * whitelist is declared but never enforced there (parsers/util.py:87-89);
@@ -37,9 +50,47 @@ object ValidatedTsv {
 
   final case class ColumnSpec(name: String, rule: Rule = AnyValue, emptyOk: Boolean = false)
 
-  /** data: one column per spec (integer_cv columns mapped to labels, raw
+  /** The parsed file, held as ONE checkpoint: the mapped data columns plus
+    * each row's array of cell violations. `data` and `violations` both
+    * read that checkpoint, so the file is scanned once however both are
+    * consumed.
+    *
+    * data: one column per spec (integer_cv columns mapped to labels, raw
     * code kept as `<name>_raw`); violations: (pk, column, rule, value). */
-  final case class Result(data: DataFrame, violations: DataFrame)
+  final class Result private[ValidatedTsv] (parsed: DataFrame, rawPk: String, primaryKey: String) {
+    val data: DataFrame = parsed.drop(CellViolations)
+
+    def violations: DataFrame = {
+      val pk = col(rawPk)
+      val cells = parsed
+        .select(pk.as("pk"), explode(col(CellViolations)).as("v"))
+        .select(col("pk"), col("v.column").as("column"),
+          col("v.rule").as("rule"), col("v.value").as("value"))
+      // Duplicate-PK check (parsers/util.py:97-103; dup ⇒ fatal there).
+      val dups = parsed.groupBy(pk).agg(count(lit(1)).as("n"))
+        .filter(col("n") > 1)
+        .select(pk.as("pk"), lit(primaryKey).as("column"),
+          lit("duplicate_key").as("rule"), col("n").cast("string").as("value"))
+      cells.unionByName(dups)
+    }
+
+    /** Strict gate: ONE aggregate over the checkpoint decides; only a
+      * failing file pays for the violation sample. Throws (with up to 20
+      * violations) if any exist — the reference's sys.exit(1) semantic,
+      * but reporting the whole file's problems at once. */
+    def requireValid(): DataFrame = {
+      val pk = col(rawPk)
+      // a key repeats iff non-null keys outnumber distinct ones, or more
+      // than one row has a null key (groupBy keeps nulls as one group)
+      val g = parsed.agg(
+        coalesce(bool_or(size(col(CellViolations)) > 0), lit(false)),
+        count(lit(1)), count(pk), count_distinct(pk)).head()
+      val (rows, keyed, distinctKeys) = (g.getLong(1), g.getLong(2), g.getLong(3))
+      if (g.getBoolean(0) || keyed > distinctKeys || rows - keyed > 1)
+        throw ValidationFailedException(violations.limit(20).collect().map(_.toString).toSeq)
+      data
+    }
+  }
 
   final case class HeaderMismatchException(expected: Seq[String], actual: Seq[String])
     extends RuntimeException(s"header mismatch: expected $expected, got $actual")
@@ -47,22 +98,44 @@ object ValidatedTsv {
   final case class ValidationFailedException(sample: Seq[String])
     extends RuntimeException(s"validation failed; sample violations: ${sample.mkString("; ")}")
 
+  private val CellViolations = "__cell_violations"
+
   private def isEmptyCell(c: Column): Column = c.isNull || c === ""
 
+  /** The file's column names as the CSV reader itself would take them from
+    * the header line: first non-empty line, parsed with the reader's own
+    * separator and quote rules, made safe the reader's way. Read on the
+    * driver, so no header-inference job runs. */
+  private def header(spark: SparkSession, file: String, options: CSVOptions): Seq[String] = {
+    val p = new Path(new java.net.URI(file))
+    val in = new BufferedReader(new InputStreamReader(
+      p.getFileSystem(spark.sessionState.newHadoopConf()).open(p), StandardCharsets.UTF_8))
+    try {
+      val lines = Iterator.continually(in.readLine()).takeWhile(_ != null)
+      CSVUtils.filterCommentAndEmpty(lines, options).nextOption().fold(Seq.empty[String]) { l =>
+        CSVUtils.makeSafeHeader(new CsvParser(options.asParserSettings).parseLine(l),
+          spark.sessionState.conf.caseSensitiveAnalysis, options).toSeq
+      }
+    } finally in.close()
+  }
+
+  /** Parse `path` once into an eager checkpoint of the mapped data and each
+    * row's cell violations (see [[Result]]). */
   def read(spark: SparkSession, path: String, specs: Seq[ColumnSpec],
            primaryKey: String, sep: String = "\t"): Result = {
+    val names = specs.map(_.name)
     val raw = spark.read
       .option("sep", sep).option("header", "true")
       // every column arrives as string — the reference keeps strings too
       // (SURVEY.md §1.2); typing happens in downstream projections
-      .option("inferSchema", "false")
+      .schema(StructType(names.map(StructField(_, StringType))))
       .csv(path)
 
     // Header assertion (parsers/util.py:42-47): names AND order.
-    if (raw.columns.toSeq != specs.map(_.name))
-      throw HeaderMismatchException(specs.map(_.name), raw.columns.toSeq)
-
-    val pk = col(primaryKey)
+    val options = new CSVOptions(Map("sep" -> sep, "header" -> "true"), false,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    val actual = raw.inputFiles.headOption.fold(Seq.empty[String])(header(spark, _, options))
+    if (actual != names) throw HeaderMismatchException(names, actual)
 
     def cellViolation(s: ColumnSpec): Column = {
       val c = col(s.name)
@@ -95,25 +168,15 @@ object ValidatedTsv {
         lit(s.name).as("column"), lit(ruleName(s)).as("rule"),
         col(s.name).as("value")))
     }
-    val cellViolations = raw
-      .select(pk.as("pk"), array_compact(array(checkStructs: _*)).as("vs"))
-      .select(col("pk"), explode(col("vs")).as("v"))
-      .select(col("pk"), col("v.column").as("column"),
-        col("v.rule").as("rule"), col("v.value").as("value"))
-
-    // Duplicate-PK check (parsers/util.py:97-103; dup ⇒ fatal there).
-    val dupViolations = raw.groupBy(pk).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-      .select(pk.as("pk"), lit(primaryKey).as("column"),
-        lit("duplicate_key").as("rule"), col("n").cast("string").as("value"))
-
     // Mapped projection: integer_cv code→label, default = raw value
     // (parsers/util.py:74-92 `mapped_value`).
     val dataCols: Seq[Column] = specs.flatMap { s =>
       s.rule match {
         case IntegerCv(m) =>
           val mapping = map(m.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
-          val code = regexp_extract(col(s.name), "^(\\d+)", 1).cast("int")
+          // mapped before any gate runs, so a non-numeric code must map
+          // to null here (and keep its raw value), not fail an ANSI cast
+          val code = regexp_extract(col(s.name), "^(\\d+)", 1).try_cast("int")
           Seq(
             coalesce(element_at(mapping, code), col(s.name)).as(s.name),
             col(s.name).as(s.name + "_raw"))
@@ -121,18 +184,19 @@ object ValidatedTsv {
       }
     }
 
-    Result(raw.select(dataCols: _*), cellViolations.unionByName(dupViolations))
+    // the raw primary-key column as the data carries it: a mapped
+    // integer_cv key keeps its raw code under `<name>_raw`
+    val rawPk = specs.find(_.name == primaryKey).collect {
+      case ColumnSpec(_, _: IntegerCv, _) => primaryKey + "_raw"
+    }.getOrElse(primaryKey)
+    new Result(
+      raw.select(dataCols :+ array_compact(array(checkStructs: _*)).as(CellViolations): _*)
+        .localCheckpoint(),
+      rawPk, primaryKey)
   }
 
-  /** Strict gate: materialize violations; throw (with a sample of them)
-    * if any exist — the reference's sys.exit(1) semantic, but reporting
-    * the whole file's problems at once. */
+  /** [[read]] gated by [[Result.requireValid]]. */
   def readStrict(spark: SparkSession, path: String, specs: Seq[ColumnSpec],
-                 primaryKey: String, sep: String = "\t"): DataFrame = {
-    val r = read(spark, path, specs, primaryKey, sep)
-    val bad = r.violations.limit(20).collect()
-    if (bad.nonEmpty)
-      throw ValidationFailedException(bad.map(_.toString).toSeq)
-    r.data
-  }
+                 primaryKey: String, sep: String = "\t"): DataFrame =
+    read(spark, path, specs, primaryKey, sep).requireValid()
 }

@@ -45,15 +45,53 @@ class EtlSpec extends SparkTestBase {
     }
   }
 
-  test("S1: validation is single-pass — scans don't grow with spec count") {
-    // 11-rule sample spec: cell rules fold into ONE scan (array_compact +
-    // explode); the dup-key agg is a second, pk-pruned scan. The old
-    // per-spec filter+union form produced 12 scans here.
-    val r = ValidatedTsv.read(spark, res("GTEx_v7_Annotations_SampleAttributesDS.txt"),
-      GtexEtl.sampleSpec, "SAMPID")
-    val plan = r.violations.queryExecution.executedPlan.toString
-    val scans = "Scan csv".r.findAllIn(plan).length
-    assert(scans === 2)
+  /** Jobs started by `body` whose stages scan a file (a `FileScanRDD`).
+    * A marker job after `body` orders the count: the listener bus delivers
+    * events in order, so once the marker's start arrives, so have all of
+    * `body`'s. */
+  private def fileScanJobs(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "file-scan-count-marker"
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          done.countDown()
+        else if (e.stageInfos.exists(_.rddInfos.exists(_.name.contains("FileScanRDD"))))
+          scans.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
+      scans.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("S1: validation is single-pass — one CSV-scanning job per read") {
+    // 11-rule sample spec: all cell rules fold into the one parse (array_compact
+    // over one struct per spec), and data, violations and the strict gate
+    // all read its checkpoint — the header is read on the driver. The old
+    // per-spec filter+union form produced 12 scans per violations plan.
+    val samples = res("GTEx_v7_Annotations_SampleAttributesDS.txt")
+    assert(fileScanJobs {
+      val r = ValidatedTsv.read(spark, samples, GtexEtl.sampleSpec, "SAMPID")
+      assert(r.data.count() === 10)
+      assert(r.violations.collect().isEmpty)
+    } === 1)
+    assert(fileScanJobs {
+      assert(ValidatedTsv.readStrict(spark, samples, GtexEtl.sampleSpec, "SAMPID")
+        .collect().length === 10)
+    } === 1)
+    // a failing gate builds its violation sample from the checkpoint too
+    assert(fileScanJobs {
+      intercept[ValidatedTsv.ValidationFailedException] {
+        ValidatedTsv.readStrict(spark, res("subjects_bad.txt"), GtexEtl.subjectSpec, "SUBJID")
+      }
+    } === 1)
   }
 
   test("P16: SMAFRZE freeze-class filter restricts the sample set") {
@@ -126,6 +164,51 @@ class EtlSpec extends SparkTestBase {
     assert(graph.dataAcquisitions.count() === 6)
     assert(graph.groupMembers.count() === 5)
     assert(graph.characteristics.count() === 31)
+  }
+
+  /** The fixture inputs copied to a fresh dir, `edits` (file → lines to
+    * append) applied, and `replace` (input → fixture file) substituted. */
+  private def editedInputs(edits: Map[String, Seq[String]],
+                           replace: Map[String, String] = Map.empty): GtexEtl.Inputs = {
+    import java.nio.file.{Files, Paths, StandardOpenOption}
+    val dir = Files.createTempDirectory("gtex_gates")
+    val files = Seq("GTEx_v7_Annotations_SubjectPhenotypesDS.txt",
+      "GTEx_v7_Annotations_SampleAttributesDS.txt", "wgs_cram_manifest.txt",
+      "rnaseq_cram_manifest.txt", "doi_manifest.txt")
+    files.foreach { f =>
+      val to = dir.resolve(f)
+      Files.copy(Paths.get(res(replace.getOrElse(f, f))), to)
+      edits.get(f).foreach(ls =>
+        Files.writeString(to, ls.map(_ + "\n").mkString, StandardOpenOption.APPEND))
+    }
+    val Seq(subj, samp, wgs, rna, doi) = files.map(f => dir.resolve(f).toString)
+    GtexEtl.Inputs(subj, samp, wgs, rna, doi)
+  }
+
+  test("ETL: concurrent gates throw the first failing gate in the reference's order") {
+    // two failing gates: a sample with no subject (J1) and a manifest row
+    // with no sample (J3); J1 comes first, so it wins on every run
+    val in = editedInputs(Map(
+      "GTEx_v7_Annotations_SampleAttributesDS.txt" -> Seq(
+        "GTEX-9999-0001-SM-Z\t0\tB1\tBlood\tWhole Blood\t0000178\tDNA isolation_Whole Blood\tWGS\t\t\t"),
+      "wgs_cram_manifest.txt" -> Seq(Seq("GTEX-1111-0099-SM-Q",
+        "gs://gtex/wgs/x.cram", "gs://gtex/wgs/x.crai", "s3://gtex/wgs/x.cram",
+        "s3://gtex/wgs/x.crai", "0123456789abcdef0123456789abcdef", "1",
+        "abcdef0123456789abcdef0123456789", "fc-0099").mkString("\t"))))
+    (1 to 3).foreach { _ =>
+      val e = intercept[IllegalArgumentException](GtexEtl.build(spark, in))
+      assert(e.getMessage === "requirement failed: samples with no subject: [GTEX-9999-0001-SM-Z]")
+    }
+    // two files failing validation: the first one read is reported
+    val bad = editedInputs(
+      Map("GTEx_v7_Annotations_SampleAttributesDS.txt" -> Seq(
+        "GTEX-1111-0009-SM-Y\t0\tB1\tBlood\tWhole Blood\t0000178\tDNA isolation\tNOFREEZE\t\t\t")),
+      Map("GTEx_v7_Annotations_SubjectPhenotypesDS.txt" -> "subjects_bad.txt"))
+    (1 to 3).foreach { _ =>
+      val e = intercept[ValidatedTsv.ValidationFailedException](GtexEtl.build(spark, bad))
+      assert(e.getMessage.contains("BADID"))
+      assert(!e.getMessage.contains("NOFREEZE"))
+    }
   }
 
   test("ETL: reconciliation tallies (J2)") {
@@ -220,6 +303,25 @@ class EtlSpec extends SparkTestBase {
     // before slicing, gtex_v7_to_dats.py:375-377)
     val names = (0 until 2).map(i => limited.get(i).path("name").asText())
     assert(names === Seq("GTEX-1111-0001-SM-A extract", "GTEX-1111-0002-SM-B extract"))
+  }
+
+  test("S15: the read-back tables are executor-resident, not LocalRelations") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    val path = java.nio.file.Files.createTempDirectory("dats_read").resolve("g.json").toString
+    DatsJsonWriter.write(graph, path)
+    val g = graft.io.DatsJsonReader.read(spark, path)
+    val tables = Seq(g.datasets, g.identifiers, g.studies, g.studyGroups, g.groupMembers,
+      g.materials, g.anatomicalParts, g.characteristics, g.dimensions, g.distributions,
+      g.dataAcquisitions, g.diseases)
+    assert(tables.size === 12)
+    tables.foreach { t =>
+      val plan = t.queryExecution.analyzed
+      assert(plan.collectFirst { case l: LocalRelation => l }.isEmpty, plan.treeString)
+      assert(plan.collectFirst { case r: LogicalRDD => r }.nonEmpty, plan.treeString)
+    }
+    assert(g.materials.count() === graph.materials.count())
+    g.unpersist()
   }
 
   test("K1: JSON writer is deterministic and uses idrefs after first emission") {

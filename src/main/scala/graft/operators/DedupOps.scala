@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.{Caches, Tables}
 
@@ -240,68 +241,83 @@ object DedupOps {
     * chain graphs use [[nearDupClustersStar]] (alternating large-star/
     * small-star, O(log n) rounds, identical relation); propagation is
     * kept as the default because its round structure mirrors the
-    * recursive-SQL oracle most directly. The driver loop only reads the CHANGED
-    * COUNT per round (an aggregate, not data), so nothing corpus-sized
-    * ever reaches the driver. */
-  def nearDupClusters(spark: SparkSession, dir: String): DataFrame = {
-    // cache the pair relation: the symmetric union below consumes it
-    // twice, and without the cache the whole shingle-join pipeline runs
-    // twice (2 narrow columns, one row per near-dup pair — tiny)
-    val pairs = ngramJaccardPairs(spark, dir).select(col("doc_a"), col("doc_b")).cache()
-    val edges = pairs
-      .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst").cache()
-    // seed = identity labels with one propagation round applied for free
-    // (min of self and direct neighbors) — saves a full join+agg round.
-    // Rounds localCheckpoint rather than cache: each round's plan embeds
-    // the previous round's, so caching alone would let the logical tree
-    // grow exponentially with rounds (see starComponents). LAZY (r22):
-    // the labelSum aggregate below is the materializing action, one job
-    // per round where eager checkpoint + sum scheduled two.
-    var labels = edges.groupBy(col("src").as("node"))
-      .agg(min(col("dst")).as("mn"))
-      .select(col("node"), least(col("node"), col("mn")).as("label"))
-      .localCheckpoint(eager = false)
-    def labelSum(df: DataFrame): Long =
-      Option(df.agg(sum(col("label"))).head.get(0)).fold(0L)(_.asInstanceOf[Long])
-    // labels only ever DECREASE per node, so the total sum strictly
-    // decreases iff any label changed — one aggregate per round instead
-    // of a change-detection join
-    var prevSum = Long.MaxValue
-    var curSum = labelSum(labels)
-    var rounds = 0
-    // node-sized loop frames plan under a partition count derived from
-    // the measured label count — the shared IterLoop discipline; every
-    // action of the loop runs inside the scope (the seed checkpoint and
-    // its count above already materialized the corpus lineage)
-    // AQE stays on in the scope: the balanced A/B measured AQE-off flat
-    // here (1.01×, tools/ab_r22_aqe.jsonl) — see IterLoop's note.
-    IterLoop.withLoopPartitions(spark, Some(labels.count())) {
-      while (curSum != prevSum && rounds < 50) {
-        val nbrMin = edges.join(labels, col("src") === col("node"))
-          .groupBy(col("dst")).agg(min(col("label")).as("nbr_label"))
-        val next = labels.join(nbrMin, col("node") === col("dst"), "left")
-          .select(col("node"),
-            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-          .localCheckpoint(eager = false)
-        prevSum = curSum
-        curSum = labelSum(next)
-        unpersistCheckpoint(labels)
-        labels = next
-        rounds += 1
+    * recursive-SQL oracle most directly. The rounds run under
+    * [[Fixpoint]]: on the driver when the edge list fits its tail, else
+    * as Spark rounds whose driver reads only one aggregate per round. */
+  def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
+    propagationComponents(ngramJaccardPairs(spark, dir).select(col("doc_a"), col("doc_b")))
+      .orderBy("doc_id")
+
+  /** [[nearDupClusters]]' fixpoint over an explicit undirected pair
+    * relation (doc_a, doc_b), without the presentation sort. */
+  private[graft] def propagationComponents(pairs: DataFrame): DataFrame =
+    Fixpoint.run("label_propagation", pairs.sparkSession) { fp =>
+      // one materialized pass of the pair pipeline, counted: the symmetric
+      // edge list (2 rows of (src, dst) per pair) is the loop's state
+      val (p, np) = fp.cut(pairs)
+      fp.collectPairs(p, 2 * np, 2 * Fixpoint.FieldBytes) match {
+        case Some(g) => propagateOnDriver(fp, g)
+        case None => propagateOnSpark(fp, p)
       }
     }
-    // a silent non-converged labeling would be WRONG output (pairs split
-    // across clusters) — refuse instead; 50 rounds covers any diameter a
-    // near-dup graph plausibly has
-    require(curSum == prevSum, s"connected components did not converge in $rounds rounds")
-    pairs.unpersist()
-    edges.unpersist()
-    // intermediate rounds are unpersisted above; the final checkpointed
-    // labels back the returned frame and are context-cleaned on GC
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
-      .orderBy("doc_id")
+
+  /** Label propagation finished on the driver: the component pass gives
+    * every node its component minimum, the labels the rounds settle on.
+    * The Spark rounds settle after `depth` rounds — the seed covers one
+    * hop, each round one more, and the round after the last change
+    * confirms it (at least one round) — so past [[Fixpoint.MaxRounds]]
+    * this path fails exactly where they do. */
+  private def propagateOnDriver(fp: Fixpoint, g: Fixpoint.Indexed): DataFrame = {
+    val t0 = System.nanoTime()
+    val (label, depth) = g.components
+    val rounds = math.max(depth, 1)
+    fp.record(rounds, "driver", g.n, t0)
+    require(rounds <= Fixpoint.MaxRounds,
+      s"${fp.loop} did not converge in ${Fixpoint.MaxRounds} rounds")
+    componentFrame(fp, g, label)
   }
+
+  private def propagateOnSpark(fp: Fixpoint, p: DataFrame): DataFrame = {
+    val edges = fp.checkpoint(
+      p.unionByName(p.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+        .toDF("src", "dst"))
+    // seed = identity labels with one propagation round applied for free
+    // (min of self and direct neighbors) — saves a full join+agg round.
+    // Rounds checkpoint rather than cache: each round's plan embeds the
+    // previous round's, so caching alone would let the logical tree grow
+    // exponentially with rounds (see starComponentsCore).
+    val seed = fp.checkpoint(edges.groupBy(col("src").as("node"))
+      .agg(min(col("dst")).as("mn"))
+      .select(col("node"), least(col("node"), col("mn")).as("label")))
+    // labels only ever DECREASE per node, so the total sum strictly
+    // decreases iff any label changed — one aggregate per round (which
+    // also materializes the round's checkpoint) instead of a
+    // change-detection join
+    def sumAndRows(df: DataFrame): (Long, Long) = {
+      val r = df.agg(sum(col("label")), count(lit(1))).head()
+      (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
+    }
+    val (seedSum, nodes) = sumAndRows(seed)
+    // AQE stays on in the scope: the balanced A/B measured AQE-off flat
+    // here (1.01×, tools/ab_r22_aqe.jsonl) — see IterLoop's note.
+    val (labels, _) = fp.onSpark((seed, seedSum), Fixpoint.MaxRounds, converging = true,
+        partitionRows = Some(nodes))(s => Seq(s._1)) { case ((labels, curSum), _) =>
+      val nbrMin = edges.join(labels, col("src") === col("node"))
+        .groupBy(col("dst")).agg(min(col("label")).as("nbr_label"))
+      val next = fp.checkpoint(labels.join(nbrMin, col("node") === col("dst"), "left")
+        .select(col("node"),
+          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label")))
+      val (nextSum, rows) = sumAndRows(next)
+      Fixpoint.Step((next, nextSum), rows, done = nextSum == curSum)
+    }
+    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+  }
+
+  /** (doc_id, cluster_id) rows of a driver component labeling. */
+  private def componentFrame(fp: Fixpoint, g: Fixpoint.Indexed, label: Array[Int]): DataFrame =
+    Fixpoint.frame(fp.session, StructType(Seq(
+        StructField("doc_id", LongType), StructField("cluster_id", LongType))),
+      (0 until g.n).map(v => Row(g.ids(v), g.ids(label(v)))))
 
   /** Near-dup clusters via alternating LARGE-STAR / SMALL-STAR edge
     * contraction — the adversarial-graph variant of [[nearDupClusters]],
@@ -317,9 +333,9 @@ object DedupOps {
     * Both preserve connectivity, never emit self-loops, and keep edges
     * canonically (bigger, smaller); the joint fixpoint is a forest of
     * stars rooted at the component minima. Each half-round is one
-    * groupBy + one join keyed on node id — nothing corpus-sized reaches
-    * the driver, and convergence is an EXACT set-equality check
-    * (count + except), not a heuristic. */
+    * groupBy + one join keyed on node id on the Spark path, and
+    * convergence is an EXACT set-equality check (count + except), not a
+    * heuristic; small edge sets finish on the driver ([[Fixpoint]]). */
   def nearDupClustersStar(spark: SparkSession, dir: String): DataFrame =
     starComponents(ngramJaccardPairs(spark, dir).select(col("doc_a"), col("doc_b")))
 
@@ -331,126 +347,129 @@ object DedupOps {
 
   /** [[starComponents]] without the presentation sort — the composition
     * seam for consumers that join or re-sort the labeling themselves
-    * (knn components, exemplars); see [[ngramJaccardPairs]]. */
-  private[graft] def starComponentsCore(pairs: DataFrame): DataFrame = {
-    // invariant across rounds: edges are distinct and oriented (u, v)
-    // with u > v.
-    //
-    // r22 NEGATIVE RESULT, kept as shipped: two restructures of this
-    // loop were built and rejected on a same-JVM adjacent A/B (AbR22,
-    // tools/ab_r22_star.jsonl -- order-cancelled geomean 1.10-1.16x
-    // SLOWER across three reps in both orders): (a) dropping
-    // largeStar's distinct (smallStar is duplicate-insensitive, so the
-    // distinct is "only" a sharing barrier -- but without it each
-    // half-star's two references re-execute the child chain, because
-    // the partial-agg exchange and the join-probe exchange are not
-    // canonically equal and ReuseExchange cannot dedupe them; an
-    // explicit repartition as the shared exchange still lost), and
-    // (b) shuffle_hash hints + AQE disabled in the loop scope -- AQE's
-    // runtime broadcast conversion of the tiny per-round mins relations
-    // beats every static co-shuffle plan at bench scale, and at corpus
-    // scale AQE makes the same call from real sizes, so there is
-    // nothing to pin statically. The loop therefore KEEPS AQE and the
-    // r20 formulation (the balanced AQE A/B in tools/ab_r22_aqe.jsonl
-    // confirmed AQE-on across the loop family — see IterLoop's note).
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-        .toDF("n", "nbr")
-      val mins = sym.groupBy("n").agg(min("nbr").as("mn"))
-      sym.join(mins, "n")
-        .filter(col("nbr") > col("n"))
-        .select(col("nbr").as("u"), least(col("n"), col("mn")).as("v"))
-        .distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val mins = e.groupBy("u").agg(min("v").as("m"))
-      val j = e.join(mins, "u")
-      j.select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .unionByName(j.select(col("u"), col("m").as("v")))
-        .distinct()
-    }
-    // each round must CUT LINEAGE, not just cache: a round's plan embeds
-    // the previous round's plan several times over, so with plain cache()
-    // the logical tree grows exponentially with rounds and plan handling
-    // itself OOMs around round ~10. The localCheckpoint materializes the
-    // edge set AND replaces the plan with a leaf scan of it; LAZY (r22)
-    // so the round's ONE aggregate action below materializes it — one
-    // scheduled job per round where eager checkpoint + count + probe
-    // scheduled three.
-    //
-    // Star-forest probe (r22, guide §1.2 — the fixpoint tail is per-job
-    // fixed overhead, not data): a canonical (u > v) edge set is a star
-    // forest rooted at its minima iff every u appears EXACTLY once and
-    // no node appears as both a u and a v. Such a set is a FIXPOINT of
-    // smallStar∘largeStar — largeStar keeps exactly the root-side rows
-    // (member rows fail nbr > n since v < u) and re-emits (u,
-    // least(v, mn)) = (u, v); smallStar's per-u min is u's single v, so
-    // both branches re-emit F — so once `next` is structurally a star
-    // forest, every later round returns it verbatim and the old
-    // comparison-based check would only observe that after ONE MORE full
-    // identity round. Detecting forest-ness directly stops that round
-    // early with byte-identical output. The comparison stays as the
-    // fallback gate, so termination does not DEPEND on the converse
-    // direction of the theorem (Kiveris et al.: all fixpoints are such
-    // forests); a hypothetical non-forest fixpoint converges exactly as
-    // before.
-    // ONE aggregation pass returns (edge count, forest-ness) together —
-    // the edge count is the per-node sum of u-occurrences (each edge
-    // contributes exactly one) — so the round schedules a single action
-    // that materializes the lazy checkpoint, counts, and probes at once.
-    // An empty edge set aggregates to nulls → (0, forest), correct: the
-    // empty set is trivially a fixpoint.
-    def countAndForest(e: DataFrame): (Long, Boolean) = {
-      val st = e.select(explode(array(
-          struct(col("u").as("nd"), lit(1L).as("cu")),
-          struct(col("v").as("nd"), lit(0L).as("cu")))).as("x"))
-        .select(col("x.nd"), col("x.cu"))
-        .groupBy("nd").agg(sum("cu").as("cu"), count(lit(1)).as("ct"))
-        .agg(sum("cu").as("edges"),
-          max(when(col("cu") > 1L || (col("cu") === 1L && col("ct") > 1L), 1L)
-            .otherwise(0L)).as("viol"))
-        .head()
-      (if (st.isNullAt(0)) 0L else st.getLong(0),
-        st.isNullAt(1) || st.getLong(1) == 0L)
-    }
-    // NO seed distinct (r22): every production caller feeds unique
-    // canonical pairs (groupBy outputs or mutualized top-k edges), so
-    // the distinct was a full no-op exchange + hash-dedup of the edge
-    // relation — dropped at a measured 1.11× on the fixpoint (same-JVM
-    // A/B both orders, outputs asserted identical:
-    // tools/ab_r22c2.jsonl via the override below). Safe even for a
-    // hypothetical duplicate-feeding caller: round 1's largeStar ends
-    // in distinct() and re-establishes the invariant, the forest probe
-    // cannot fire on a duplicated round (a dup u fails the
-    // exactly-once test), and the fallback convergence check compares
-    // SETS (count equality gates an except) — only the round-0 count
-    // would shift, never the labeling.
-    val seed0 = pairs.select(col("doc_b").as("u"), col("doc_a").as("v"))
-    var cur = (if (starSeedDistinctOverride.getOrElse(false)) seed0.distinct() else seed0)
-      .localCheckpoint(eager = false)
-    var curCount = cur.count()
-    // the rounds run over EDGE-sized two-column frames that only shrink,
-    // so they plan under a partition count derived from the measured
-    // edge count — the shared IterLoop discipline (the seed checkpoint
-    // and its count above already materialized the corpus lineage)
-    var rounds = 0
-    var converged = false
-    IterLoop.withLoopPartitions(pairs.sparkSession, Some(curCount)) {
-      while (!converged && rounds < 50) {
-        val next = smallStar(largeStar(cur)).localCheckpoint(eager = false)
-        val (nextCount, isForest) = countAndForest(next)
-        converged = isForest ||
-          (nextCount == curCount && next.except(cur).isEmpty)
-        unpersistCheckpoint(cur) // next is lineage-cut, so cur is never re-read
-        cur = next
-        curCount = nextCount
-        rounds += 1
+    * (knn components, exemplars); see [[ngramJaccardPairs]].
+    *
+    * NO seed distinct (r22): every production caller feeds unique
+    * canonical pairs (groupBy outputs or mutualized top-k edges), so the
+    * distinct was a full no-op exchange + hash-dedup of the edge relation
+    * — dropped at a measured 1.11× on the fixpoint (same-JVM A/B both
+    * orders, outputs asserted identical: tools/ab_r22c2.jsonl via the
+    * override below). Safe even for a hypothetical duplicate-feeding
+    * caller: round 1's largeStar ends in distinct() and re-establishes the
+    * invariant, the forest probe cannot fire on a duplicated round (a dup
+    * u fails the exactly-once test), and the fallback convergence check
+    * compares SETS (count equality gates an except) — only the round-0
+    * count would shift, never the labeling. */
+  private[graft] def starComponentsCore(pairs: DataFrame): DataFrame =
+    Fixpoint.run("star_contraction", pairs.sparkSession) { fp =>
+      val seed0 = pairs.select(col("doc_b").as("u"), col("doc_a").as("v"))
+      val (seed, seedCount) =
+        fp.cut(if (starSeedDistinctOverride.getOrElse(false)) seed0.distinct() else seed0)
+      // self-loops leave the Spark rounds at largeStar's filter, and a
+      // node with nothing else leaves the answer with them
+      fp.collectPairs(seed.filter(!(col("u") <=> col("v"))), seedCount,
+          2 * Fixpoint.FieldBytes) match {
+        case Some(g) => starOnDriver(fp, g)
+        case None => starOnSpark(fp, seed, seedCount)
       }
     }
-    require(converged, s"star contraction did not converge in $rounds rounds")
-    // the final checkpointed edge set backs the returned frame; its
-    // blocks are dropped by the context cleaner once the frame is GC'd
+
+  // r22 NEGATIVE RESULT, kept as shipped: two restructures of the star
+  // rounds were built and rejected on a same-JVM adjacent A/B (AbR22,
+  // tools/ab_r22_star.jsonl -- order-cancelled geomean 1.10-1.16x
+  // SLOWER across three reps in both orders): (a) dropping largeStar's
+  // distinct (smallStar is duplicate-insensitive, so the distinct is
+  // "only" a sharing barrier -- but without it each half-star's two
+  // references re-execute the child chain, because the partial-agg
+  // exchange and the join-probe exchange are not canonically equal and
+  // ReuseExchange cannot dedupe them; an explicit repartition as the
+  // shared exchange still lost), and (b) shuffle_hash hints + AQE
+  // disabled in the loop scope -- AQE's runtime broadcast conversion of
+  // the tiny per-round mins relations beats every static co-shuffle plan
+  // at bench scale, and at corpus scale AQE makes the same call from real
+  // sizes, so there is nothing to pin statically. The loop therefore
+  // KEEPS AQE and the r20 formulation (the balanced AQE A/B in
+  // tools/ab_r22_aqe.jsonl confirmed AQE-on across the loop family — see
+  // IterLoop's note).
+  private def largeStar(e: DataFrame): DataFrame = {
+    val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
+      .toDF("n", "nbr")
+    val mins = sym.groupBy("n").agg(min("nbr").as("mn"))
+    sym.join(mins, "n")
+      .filter(col("nbr") > col("n"))
+      .select(col("nbr").as("u"), least(col("n"), col("mn")).as("v"))
+      .distinct()
+  }
+
+  private def smallStar(e: DataFrame): DataFrame = {
+    val mins = e.groupBy("u").agg(min("v").as("m"))
+    val j = e.join(mins, "u")
+    j.select(col("v").as("u"), col("m").as("v"))
+      .filter(col("u") =!= col("v"))
+      .unionByName(j.select(col("u"), col("m").as("v")))
+      .distinct()
+  }
+
+  // Star-forest probe (r22, guide §1.2 — the fixpoint tail is per-job
+  // fixed overhead, not data): a canonical (u > v) edge set is a star
+  // forest rooted at its minima iff every u appears EXACTLY once and no
+  // node appears as both a u and a v. Such a set is a FIXPOINT of
+  // smallStar∘largeStar — largeStar keeps exactly the root-side rows
+  // (member rows fail nbr > n since v < u) and re-emits (u, least(v, mn))
+  // = (u, v); smallStar's per-u min is u's single v, so both branches
+  // re-emit F — so once `next` is structurally a star forest, every later
+  // round returns it verbatim and the comparison-based check would only
+  // observe that after ONE MORE full identity round. Detecting
+  // forest-ness directly stops that round early with byte-identical
+  // output. The comparison stays as the fallback gate, so termination
+  // does not DEPEND on the converse direction of the theorem (Kiveris et
+  // al.: all fixpoints are such forests); a hypothetical non-forest
+  // fixpoint converges exactly as before.
+  // ONE aggregation pass returns (edge count, forest-ness) together — the
+  // edge count is the per-node sum of u-occurrences (each edge
+  // contributes exactly one) — so the round schedules a single action
+  // that materializes the lazy checkpoint, counts, and probes at once.
+  // An empty edge set aggregates to nulls → (0, forest), correct: the
+  // empty set is trivially a fixpoint.
+  private def countAndForest(e: DataFrame): (Long, Boolean) = {
+    val st = e.select(explode(array(
+        struct(col("u").as("nd"), lit(1L).as("cu")),
+        struct(col("v").as("nd"), lit(0L).as("cu")))).as("x"))
+      .select(col("x.nd"), col("x.cu"))
+      .groupBy("nd").agg(sum("cu").as("cu"), count(lit(1)).as("ct"))
+      .agg(sum("cu").as("edges"),
+        max(when(col("cu") > 1L || (col("cu") === 1L && col("ct") > 1L), 1L)
+          .otherwise(0L)).as("viol"))
+      .head()
+    (if (st.isNullAt(0)) 0L else st.getLong(0),
+      st.isNullAt(1) || st.getLong(1) == 0L)
+  }
+
+  /** Star contraction finished on the driver: the component pass labels
+    * every node with its component minimum, the star forest's roots. It
+    * has no rounds, so no round cap: the Spark rounds' cap is a safety
+    * bound that O(log n)-round contraction does not reach. */
+  private def starOnDriver(fp: Fixpoint, g: Fixpoint.Indexed): DataFrame = {
+    val t0 = System.nanoTime()
+    val (label, _) = g.components
+    fp.record(1, "driver", g.n, t0)
+    componentFrame(fp, g, label)
+  }
+
+  // The rounds run over EDGE-sized two-column frames that only shrink,
+  // so they plan under a partition count derived from the measured edge
+  // count. Each round's lazy checkpoint is materialized by its one
+  // countAndForest action (r22: one scheduled job per round where eager
+  // checkpoint + count + probe scheduled three).
+  private def starOnSpark(fp: Fixpoint, seed: DataFrame, seedCount: Long): DataFrame = {
+    val (cur, _) = fp.onSpark((seed, seedCount), Fixpoint.MaxRounds, converging = true,
+        partitionRows = Some(seedCount))(s => Seq(s._1)) { case ((cur, curCount), _) =>
+      val next = fp.checkpoint(smallStar(largeStar(cur)))
+      val (nextCount, isForest) = countAndForest(next)
+      Fixpoint.Step((next, nextCount), nextCount,
+        done = isForest || (nextCount == curCount && next.except(cur).isEmpty))
+    }
+    // the final checkpointed edge set backs the returned frame
     val members = cur.select(col("u").as("doc_id"), col("v").as("cluster_id"))
     val roots = cur.select(col("v")).distinct()
       .select(col("v").as("doc_id"), col("v").as("cluster_id"))
@@ -550,8 +569,8 @@ object DedupOps {
   def embeddingNearDupAuto(spark: SparkSession, dir: String): DataFrame = {
     val q = Caches.cached(quantized(spark, dir))
     // corpus count for the √n list-count rule: parquet metadata, no scan
-    val nlist = KMeans.autoNlist(Tables.load(spark, dir, "embeddings").count())
-    val (asg, _) = KMeans.fit(q, nlist = nlist)
+    val n = Tables.load(spark, dir, "embeddings").count()
+    val (asg, _) = KMeans.fitSized(q, n, nlist = KMeans.autoNlist(n))
     // the assignment is corpus-LENGTH (one row per vector) even though
     // it is narrow, so attaching it must co-shuffle on vec_id — Catalyst
     // would happily broadcast it at toy scale and OOM at real scale

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 import graft.functions.VectorFunctions
 
@@ -38,37 +39,106 @@ object KMeans {
 
   /** Lloyd's for `iters` rounds; returns (assignment, centroids) =
     * ((vec_id, cl), (cl, cv, cnrm)) with the centroids being the integer
-    * means OF that final assignment. The assignment frame is eagerly
-    * `localCheckpoint()`ed — a lineage cut, which consumers (who all use
-    * it at least twice) also get to reuse as materialized blocks; see
-    * the in-loop comment for why a cache alone is not enough.
+    * means OF that final assignment. The rounds run under [[Fixpoint]]:
+    * on the driver when the vectors fit its tail (both frames then hold
+    * driver-built rows), else as Spark rounds whose assignment is a
+    * materialized local checkpoint — a lineage cut, which consumers (who
+    * all use it at least twice) also get to reuse as materialized blocks;
+    * see the in-loop comment for why a cache alone is not enough.
     *
     * The `nlist` default (10) exists for unit specs; production callers
     * pass [[autoNlist]] so list count — and with it per-list size and the
     * block-local pair space of every consumer — scales as √n. */
   def fit(q: DataFrame, iters: Int = 2, nlist: Int = 10,
-          firstSeed: Int = 10): (DataFrame, DataFrame) = {
-    var cents = q
+          firstSeed: Int = 10): (DataFrame, DataFrame) =
+    fitSized(q, q.count(), iters, nlist, firstSeed)
+
+  /** [[fit]] for a caller that already knows `q`'s row count `rows` —
+    * every production caller counts the table for [[autoNlist]]. */
+  private[graft] def fitSized(q: DataFrame, rows: Long, iters: Int = 2, nlist: Int = 10,
+                              firstSeed: Int = 10): (DataFrame, DataFrame) =
+    Fixpoint.using("kmeans", q.sparkSession) { fp =>
+      // state: the vectors themselves, (vec_id, qv[Dim], nrm) per row
+      val local =
+        if (!fp.fitsDriver(rows * (DedupOps.Dim + 2) * Fixpoint.FieldBytes)) None
+        else Fixpoint.Vectors(q.select(col("vec_id"), col("qv"), col("nrm")).collect())
+      local match {
+        case Some(v) => fitOnDriver(fp, v, iters, nlist, firstSeed)
+        case None => fitOnSpark(fp, q, iters, nlist, firstSeed)
+      }
+    } { case (asg, cents) => Seq(asg, cents) }
+
+  private def fitOnSpark(fp: Fixpoint, q: DataFrame, iters: Int, nlist: Int,
+                         firstSeed: Int): (DataFrame, DataFrame) = {
+    val cents0 = q
       .filter(col("vec_id") >= firstSeed && col("vec_id") < firstSeed + nlist)
       .select(col("vec_id").as("cl"), col("qv").as("cv"), col("nrm").as("cnrm"))
-    var asg: DataFrame = q.select(col("vec_id"), col("vec_id").as("cl"))
-    for (_ <- 1 to iters) {
-      // cut lineage at every half-round: a round's plan otherwise embeds
-      // several copies of `q` through the previous round's centroids
-      // and assignment, and the analyzer's self-join deduplication blows
-      // up on the nested tree (measured: an un-checkpointed round 2
-      // OOMs the driver before executing anything). Cost: centroids are
-      // nlist rows; the assignment is 2 narrow columns per vector —
-      // the same storage class as caching it, which consumers need
-      // anyway. Blocks are context-cleaned when the frames are GC'd.
-      asg = assign(q, cents).localCheckpoint()
-      // the zero-centroid filter must sit ABOVE the checkpoint: below it,
-      // the predicate inlines into the aggregate's aliased arithmetic and
-      // Catalyst's constraint propagation explodes the driver heap; on
-      // the leaf, cnrm is a plain attribute and the constraint is tiny
-      cents = update(q, asg).localCheckpoint().filter(col("cnrm") > 0)
+    val asg0: DataFrame = q.select(col("vec_id"), col("vec_id").as("cl"))
+    fp.onSpark((asg0, cents0), iters, converging = false)(s => Seq(s._1, s._2)) {
+      case ((_, cents), _) =>
+        // cut lineage at every half-round: a round's plan otherwise embeds
+        // several copies of `q` through the previous round's centroids
+        // and assignment, and the analyzer's self-join deduplication blows
+        // up on the nested tree (measured: an un-checkpointed round 2
+        // OOMs the driver before executing anything). Cost: centroids are
+        // nlist rows; the assignment is 2 narrow columns per vector —
+        // the same storage class as caching it, which consumers need
+        // anyway.
+        val (asg, rows) = fp.cut(assign(q, cents))
+        // the zero-centroid filter must sit ABOVE the checkpoint: below it,
+        // the predicate inlines into the aggregate's aliased arithmetic and
+        // Catalyst's constraint propagation explodes the driver heap; on
+        // the leaf, cnrm is a plain attribute and the constraint is tiny
+        Fixpoint.Step((asg, fp.cut(update(q, asg))._1.filter(col("cnrm") > 0)), rows)
     }
-    (asg, cents)
+  }
+
+  /** Lloyd's rounds on the driver with the Spark rounds' arithmetic: the
+    * 64-bit dot product, cosine as `dot.toDouble / sqrt(nrm) / sqrt(cnrm)`,
+    * argmax by (scos DESC, cl ASC) — what `max(struct(scos, -cl))`
+    * orders — and means as `sum div count`, truncated toward zero, with
+    * zero-norm means dropped. */
+  private def fitOnDriver(fp: Fixpoint, v: Fixpoint.Vectors, iters: Int, nlist: Int,
+                          firstSeed: Int): (DataFrame, DataFrame) = {
+    final case class Cent(cl: Long, cv: Array[Long], cnrm: Long)
+    val n = v.ids.length
+    val cents0 = (0 until n)
+      .filter(i => v.ids(i) >= firstSeed && v.ids(i) < firstSeed + nlist)
+      .map(i => Cent(v.ids(i), v.qv(i), v.nrm(i)))
+    // the assignment as (vector row → centroid id); None for a vector
+    // with no centroid to join (an empty centroid table)
+    val (asg, cents) = fp.onDriver((v.ids.map(Option(_)), cents0), iters) { case ((_, cents), _) =>
+      val sqrtC = cents.map(c => math.sqrt(c.cnrm.toDouble))
+      val cl = Array.tabulate(n) { i =>
+        val sq = math.sqrt(v.nrm(i).toDouble)
+        var best: Option[Long] = None
+        var bestCos = 0.0
+        for (j <- cents.indices) {
+          val c = cents(j)
+          val cos = Fixpoint.Vectors.dot(v.qv(i), c.cv).toDouble / sq / sqrtC(j)
+          if (best.forall(b => cos > bestCos || (cos == bestCos && c.cl < b))) {
+            best = Some(c.cl); bestCos = cos
+          }
+        }
+        best
+      }
+      val members = (0 until n).filter(cl(_).nonEmpty).groupBy(cl(_).get)
+      val next = members.toIndexedSeq.sortBy(_._1).map { case (c, is) =>
+        val cv = Array.tabulate(DedupOps.Dim) { d =>
+          is.foldLeft(0L)((s, i) => Math.addExact(s, v.qv(i)(d))) / is.length
+        }
+        Cent(c, cv, Fixpoint.Vectors.dot(cv, cv))
+      }.filter(_.cnrm > 0)
+      Fixpoint.Step((cl, next), cl.count(_.nonEmpty).toLong)
+    }
+    val spark = fp.session
+    val asgRows = (0 until n).filter(asg(_).nonEmpty).sortBy(v.ids(_))
+      .map(i => Row(v.ids(i), asg(i).get))
+    (Fixpoint.frame(spark, StructType(Seq(StructField("vec_id", LongType),
+        StructField("cl", LongType))), asgRows),
+      Fixpoint.frame(spark, StructType(Seq(StructField("cl", LongType),
+          StructField("cv", ArrayType(LongType)), StructField("cnrm", LongType))),
+        cents.sortBy(_.cl).map(c => Row(c.cl, c.cv.toSeq, c.cnrm))))
   }
 
   /** The scale rule for the list count: nlist = ⌊√n⌋ (min 1). With ~√n

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Similarity search over the `embeddings` table (north-star extension —
   * ANN over an `Array[Float]` column).
@@ -181,7 +182,7 @@ object SimilarityOps {
     * count from parquet metadata rather than re-counting the frame. */
   private def ivfTopKFrom(q: DataFrame, corpusN: Long): DataFrame = {
     val nlist = KMeans.autoNlist(corpusN)
-    val (asg, cents) = KMeans.fit(q, nlist = nlist, firstSeed = NQueries)
+    val (asg, cents) = KMeans.fitSized(q, corpusN, nlist = nlist, firstSeed = NQueries)
     // corpus-length assignment: co-shuffle, never broadcast
     val lists = q.join(asg.hint("shuffle_hash"), "vec_id")
     val queries = q.filter(col("vec_id") < NQueries)
@@ -281,7 +282,7 @@ object SimilarityOps {
     val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
     val n = graft.Tables.load(spark, dir, "embeddings").count()
     val nlist = KMeans.autoNlist(n)
-    val (asg, _) = KMeans.fit(q, nlist = nlist)
+    val (asg, _) = KMeans.fitSized(q, n, nlist = nlist)
     val blocked = q.join(asg.hint("shuffle_hash"), "vec_id")
     val scored = DedupOps.saltedBlockCosines(
         capSplit(blocked, voronoiCap(n, nlist), narrow = asg), "blk")
@@ -356,7 +357,7 @@ object SimilarityOps {
     val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
     val n = graft.Tables.load(spark, dir, "embeddings").count()
     val nlist = KMeans.autoNlist(n)
-    val (_, cents) = KMeans.fit(q, nlist = nlist)
+    val (_, cents) = KMeans.fitSized(q, n, nlist = nlist)
     // checkpoint the 2-probe assignment: it is a NARROW (vec_id, cl)
     // frame whose lineage holds two corpus-wide centroid-scoring
     // aggregates, and un-barriered it would re-evaluate three times
@@ -445,17 +446,20 @@ object SimilarityOps {
     * Factored out because [[knnGraphRefined]] seeds its descent from
     * exactly these candidates. `tables`/`targetList` default to the
     * shipped constants; the tuned overloads exist ONLY for the recall
-    * sweep harness ([[graft.RecallGate]]) that prices the dials. */
+    * sweep harness ([[graft.RecallGate]]) that prices the dials.
+    * `checkpoint` makes the eager signature checkpoint below — the
+    * descent passes its [[Fixpoint]]'s, which releases it. */
   private def bitsScored(q: DataFrame, n: Long,
                          tables: Int = BitsTables,
                          targetList: Long = BitsTargetList,
-                         dedup: Boolean = true): DataFrame = {
+                         dedup: Boolean = true,
+                         checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
     // checkpoint the NARROW (vec_id, cl) signature assignment: the
     // b·tables plane dot products per row run exactly ONCE here,
     // instead of once per consumer branch (size count + salted probe +
     // salted build = 3×); the pair join re-attaches qv/nrm from the
     // cached quantized frame
-    val narrow = bitAssign(q, n, tables, targetList).localCheckpoint()
+    val narrow = checkpoint(bitAssign(q, n, tables, targetList))
     val blocked = q.join(narrow.hint("shuffle_hash"), "vec_id")
     val scored = DedupOps.saltedBlockCosines(
         capSplit(blocked, CapFactor * targetList, narrow = narrow,
@@ -673,7 +677,9 @@ object SimilarityOps {
     * k'²-sized constant — the SAME linear class as the bits seed, but
     * the descent recovers the cross-bucket edges blocking loses (the
     * gate measures the recovery every round; the bits seed alone
-    * measured 0.00 eval recall at sf10, r11). */
+    * measured 0.00 eval recall at sf10, r11). The rounds run under
+    * [[Fixpoint]]: at the shipped dials, a graph and vector set that fit
+    * its driver tail finish on the driver, output-identical. */
   def knnGraphRefined(spark: SparkSession, dir: String): DataFrame =
     knnGraphRefinedTuned(spark, dir).orderBy("ida", "idb")
 
@@ -696,268 +702,363 @@ object SimilarityOps {
       rhoPct: Int = DescentRhoPct,
       earlyKd: Int = DescentEarlyKd,
       earlyRounds: Int = DescentEarlyRounds,
-      broadcastVecs: Long = DescentBroadcastVecs): DataFrame = {
-    // staged width schedule ([[DescentEarlyKd]]): EXPLORATION width per
-    // round — the neighborhood that generates FoF pairs; the contraction
-    // always runs at the full k'
-    def kdOf(t: Int): Int = if (t >= 1 && t <= earlyRounds && earlyKd < kd) earlyKd else kd
-    val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
-    val n = graft.Tables.load(spark, dir, "embeddings").count()
-    // Shuffle width stays at the session default DELIBERATELY: a
-    // volume-derived raising scope (rows/8M ≈ 400 partitions for the
-    // round-1 k'²·n candidate space at sf10) was built and A/B'd on an
-    // idle machine — 1308 s vs 932 s for the identical 0.9231-recall
-    // edge set (tools/recall_r13_{wideshuffle,defaultwidth}.jsonl).
-    // Fat partitions streaming through single-pass spill beat skinny
-    // partitions' per-task overhead here; on a real cluster the width
-    // is the deployment's dial (spark.sql.shuffle.partitions / AQE
-    // initialPartitionNum), not something this operator should scope.
-    var sd = directedTopFrom(
-        bitsScored(q, n, seedTables, seedTargetList, dedup = false), kd)
-      .localCheckpoint()
-    // static long-range partners (see [[DescentMix]]): symmetrized rank
-    // hops, built once and unioned into every round's neighborhood. The
-    // dense rank is ONE narrow global sort of the id column — at real
-    // cluster scale this window becomes a range-partitioned rank, but
-    // the relation it feeds stays n·mix rows either way.
-    val mixEdges: Option[DataFrame] = if (mix <= 0) None else Some {
-      val ranked = q.select(col("vec_id"))
-        .withColumn("r", row_number().over(Window.orderBy("vec_id")).cast("long") - 1)
-        .localCheckpoint()
-      val hops = ranked.select(col("vec_id"), col("r"),
-          explode(sequence(lit(1), lit(mix))).as("j"))
-        .withColumn("pr", (col("r") * lit(48271L) + col("j") * lit(104729L)) % lit(n))
-      val paired = hops.join(ranked.select(col("r").as("pr"), col("vec_id").as("pid"))
-            .hint("shuffle_hash"), "pr")
-        .filter(col("pid") =!= col("vec_id"))
-        .select(col("vec_id").as("center"), col("pid").as("nbr"))
-      paired.unionByName(paired.select(col("nbr").as("center"), col("center").as("nbr")))
-        .distinct().localCheckpoint()
-    }
-    // the "used" relation for the incremental FoF cut below (empty
-    // before round 1 — everything is new). At ρ = 100 this is the
-    // previous round's full neighborhood relation (the r13-r15
-    // behavior, byte-exact); at ρ < 100 it is the CUMULATIVE set of
-    // entries that have been activated in some earlier round — the
-    // paper's new→old promotion happens on activation, so an entry the
-    // hash skipped stays "new" and keeps drawing in later rounds.
-    var prevUsed: Option[DataFrame] = None
-    // early-exit flag (r22): once a wide round generates ZERO new
-    // neighborhood entries, every remaining round is the identity — see
-    // the proof at the convergence check below.
-    var settled = false
-    (1 to rounds).foreach { round => if (!settled) {
-      val roundT0 = System.nanoTime()
-      // bounded neighborhood: out-edges + top-k' in-edges per node,
-      // plus the static mix partners when configured. Exploration width
-      // follows the staged schedule: on a narrow round the out side of
-      // the (always full-k'-wide) graph needs an explicit re-rank.
-      // FUSED (r22, guide §2.2): the out re-rank, the in re-rank and the
-      // (out ∪ in) DISTINCT — previously up to three exchanges of the
-      // n·k'-row relation per round — run as ONE aggregation over the
-      // mirrored edge relation: TopKEdgesAgg skips null inputs, so the
-      // out and in sides feed separate bounded buffers of the same
-      // groupBy, and the per-center array_distinct of the two k-lists
-      // replaces the global pair DISTINCT. Out-side k = kdt is exact on
-      // wide rounds too: each src holds ≤ k' out-edges, so top-k'
-      // returns all of them — identical to the unaggregated projection
-      // the unfused form used there. Same tie-break (cosine DESC, id
-      // ASC) as the pre-r21 windows; sd is a set, so the buffers'
-      // duplicate collapse is a no-op — byte-identical und set.
-      val kdt = kdOf(round)
-      val mirrored = sd.select(explode(array(
-          struct(col("src").as("center"), col("dst").as("nbr"),
-            col("cosine"), lit(true).as("is_out")),
-          struct(col("dst").as("center"), col("src").as("nbr"),
-            col("cosine"), lit(false).as("is_out")))).as("e"))
-        .select(col("e.center"), col("e.nbr"), col("e.cosine"), col("e.is_out"))
-      val fusedNbrs = mirrored.groupBy("center")
-        .agg(
-          graft.functions.VectorFunctions.topEdges(
-            when(col("is_out"), col("nbr")), col("cosine"), kdt).as("otk"),
-          graft.functions.VectorFunctions.topEdges(
-            when(!col("is_out"), col("nbr")), col("cosine"), kdt).as("itk"))
-        .select(col("center"), explode(array_distinct(concat(
-          transform(col("otk"), e => e("dst")),
-          transform(col("itk"), e => e("dst"))))).as("nbr"))
-      val und = mixEdges.foldLeft(fusedNbrs)((u, m) => u.unionByName(m).distinct())
-        .localCheckpoint()
-      // Incremental FoF (NN-Descent's "new/old" cut — Dong, Moses, Li,
-      // WWW 2011 §2.3): only pairs with at least one NEW neighborhood
-      // entry are generated. An old-old pair through center c was
-      // generated in the round both entries were active there and
-      // scored; since every node's candidate set always contains its
-      // current top-k' (the retained current edges below), a per-node
-      // k'-th-best cosine is monotone non-decreasing across rounds — a
-      // pair that failed the cut once can never pass it later. At
-      // ρ = 100 the cut is OUTPUT-EXACT and the oracle twin deliberately
-      // unrolls the FULL FoF rounds without it, so every refined-family
-      // correctness row doubles as an equivalence proof; at ρ < 100 the
-      // sampling is part of the operator's definition and the twin
-      // replays the identical hash filter + used-set tracking
-      // ([[DescentRhoPct]]). Generated pair volume collapses as the
-      // graph converges (ARCHITECTURE.md has the measured per-round
-      // volumes).
-      // flagged re-evaluates per reference (twoHop's two sides + the
-      // early-exit probe) DELIBERATELY: checkpointing it per round was
-      // A/B'd flat (1.01x, tools/ab_r22d.jsonl) — the join of two
-      // checkpointed narrow relations costs about what the checkpoint
-      // materialization does, so the dedup buys nothing.
-      val flagged = prevUsed match {
-        case None => und.withColumn("is_new", lit(true))
-        case Some(p) => und.join(
-            p.withColumn("seen", lit(true)).hint("shuffle_hash"),
-            Seq("center", "nbr"), "left")
-          .select(col("center"), col("nbr"), col("seen").isNull.as("is_new"))
-      }
-      // EARLY EXIT (r22, output-exact): if this round generated ZERO new
-      // neighborhood entries, every remaining round is the identity and
-      // the build can stop. Proof: with no new entries every `part` row
-      // has act = false (at any ρ — act requires is_new), so twoHop is
-      // empty and cand is exactly sd's own undirected edge set; the
-      // re-contraction of that set returns sd itself, because for every
-      // node u the candidate set out(u) ∪ in(u) CONTAINS out(u) — and
-      // out(u) is u's top-k' of the PREVIOUS round's full mirrored
-      // candidate relation, a superset of out(u) ∪ in(u) (directedTopFrom
-      // mirrors every scored pair, so in-edges were already candidates) —
-      // hence top-k' of the subset = top-k' of the superset = out(u)
-      // under the same total order (cosine DESC, id ASC; cosines are
-      // bit-deterministic per pair). sd unchanged and kdt constant past
-      // the staged window imply und and flagged repeat verbatim: zero
-      // new entries again, by induction to round `rounds`. Valid only
-      // once the exploration width has reached its final k' (inside the
-      // staged window the NEXT round widens the neighborhood and
-      // genuinely new entries appear). The DuckDB twin keeps unrolling
-      // the full `rounds` CTEs — the oracle rows remain an end-to-end
-      // proof that the skipped rounds are no-ops. Cost of the check: one
-      // limit-1 probe of the join of two checkpointed narrow relations;
-      // measured payoff at sf0.1: rounds 6-8 (~1.0 s each) were exactly
-      // this identity.
-      val widthFinal = round > earlyRounds || earlyKd >= kd
-      if (widthFinal && prevUsed.nonEmpty && flagged.filter(col("is_new")).isEmpty) {
-        prevUsed.foreach(DedupOps.unpersistCheckpoint)
-        prevUsed = Some(und)
-        settled = true
-        if (sys.env.contains("SPARK_GRAFT_DESCENT_LOG"))
-          println(f"[descent] round $round%d settled (no new entries) " +
-            f"secs=${(System.nanoTime() - roundT0) / 1e9}%.1f")
-      } else {
-      // participants: every old entry plus the ρ%-activated new ones;
-      // a skipped new entry sits this round out entirely
-      val part =
-        if (rhoPct >= 100) flagged.withColumn("act", col("is_new"))
-        else flagged.withColumn("act", col("is_new") &&
-            (col("center") * lit(48271L) + col("nbr") * lit(104729L) +
-              lit(round * 9973L)) % lit(100L) < lit(rhoPct.toLong))
-          .filter(!col("is_new") || col("act"))
-      // FoF pair generation stays the co-shuffled self-join (r22
-      // NEGATIVE RESULT): a per-center bounded combination explode
-      // (groupBy center → sort_array(collect_list(nbr, act)) →
-      // slice-after-self transform/filter HOFs) generates the identical
-      // pair multiset with ONE evaluation + ONE exchange of `part`
-      // where the join evaluates and co-shuffles it once per side — but
-      // the balanced A/B (identical build, only this expression
-      // flipped; tools/ab_r22c.jsonl) measured the explode form 1.32×
-      // SLOWER on the full build: the ObjectHashAggregate list buffers
-      // and the non-codegen HOF lambdas cost more per candidate than
-      // the whole-stage-codegen'd join saves in exchanges (guide §4 —
-      // prefer codegen'd operators in the hot path).
-      val twoHop = part.as("x").join(part.as("y").hint("shuffle_hash"),
-          col("x.center") === col("y.center") && col("x.nbr") < col("y.nbr") &&
-            (col("x.act") || col("y.act")))
-        .select(col("x.nbr").as("ida"), col("y.nbr").as("idb"))
-      // plus the current edges themselves (so a found neighbor is never
-      // lost to a round that happens not to re-generate it — also the
-      // retention the exactness argument above stands on).
-      // No DISTINCT on the broadcast path: a pair generated through
-      // several shared centers is scored once per copy (map-side
-      // arithmetic, no shuffle) and the top-k aggregate collapses the
-      // copies in its buffer — cheaper than a full corpus-scale dedup
-      // exchange of the candidate relation every round. On the
-      // co-shuffle path (corpus above the broadcast ceiling) the joins
-      // move cand twice, so there the dedup pays for itself.
-      val candRaw = twoHop.unionByName(
-          sd.select(least(col("src"), col("dst")).as("ida"),
-            greatest(col("src"), col("dst")).as("idb")))
-      val cand = if (n <= broadcastVecs) candRaw else candRaw.distinct()
-      // Re-attaching vectors to the candidate relation is the round's
-      // volume cliff: cand is k'²·n-sized (≈1.6e9 pairs in round 1 at
-      // 200k vectors) while the quantized frame is only n rows. A
-      // shuffle_hash join here re-shuffles the GIANT side twice (once
-      // by ida, once by idb) — at sf10 that tripled the round's spill
-      // and exhausted the harness disk. Below [[DescentBroadcastVecs]]
-      // the vector frame broadcasts (both joins reuse one exchange) and
-      // cand never moves; above it, co-shuffled joins — a corpus-sized
-      // broadcast would not fit executors (same dispatch rationale as
-      // DedupOps.embeddingBlocked's assignment join).
-      val qn = q.select(col("vec_id"), col("qv"), col("nrm"))
-      val (qa, qb) =
-        if (n <= broadcastVecs)
-          (broadcast(qn).as("a"), broadcast(qn).as("b"))
-        else (qn.as("a").hint("shuffle_hash"), qn.as("b").hint("shuffle_hash"))
-      // The retention pairs DO re-score through the vector attach (r22
-      // NEGATIVE RESULT): carrying sd's already-computed cosines into
-      // the contraction as a separate union leg — saving n·k'
-      // bit-identical dot products per round — measured 1.05× SLOWER on
-      // the full build (balanced A/B, tools/ab_r22d2.jsonl): on the
-      // broadcast path the re-scoring is map-side-free while the union
-      // leg splits the contraction's input into two partial-aggregation
-      // pipelines. The analytical at-scale saving (the dots are not
-      // free at 10⁹ vectors) cannot be measured on this harness's data
-      // sizes, so the measured form ships.
-      val scored = cand
-        .join(qa, col("ida") === col("a.vec_id"))
-        .join(qb, col("idb") === col("b.vec_id"))
-        .select(col("ida"), col("idb"), DedupOps.dotCosine("a", "b").as("cosine"))
-      val prevSd = sd
-      // contraction ALWAYS at the full k' — narrowing here was priced at
-      // sf10 and rejected (it permanently discards the seed's tail edges;
-      // recall 0.9231 → 0.9021/0.8182). The exploration narrowing above
-      // is where the candidate-volume savings live.
-      sd = directedTopFrom(scored, kd).localCheckpoint()
-      // profile counts taken while und's checkpoint is still alive (at
-      // ρ < 100 it is released below, and a truncated localCheckpoint
-      // cannot recompute)
-      val undRows = if (sys.env.contains("SPARK_GRAFT_DESCENT_LOG")) und.count() else -1L
-      // the new sd is materialized (localCheckpoint is eager), so the
-      // superseded round's checkpoints are dead: without this the build
-      // pins 2·rounds graph-sized block sets (several GB at sf10) for
-      // the session — storage pressure during exactly the stages whose
-      // spill is the build's cost center. The FINAL sd must survive
-      // (the returned plan reads it); everything else is released.
-      DedupOps.unpersistCheckpoint(prevSd)
-      val newUsed =
-        if (rhoPct >= 100) und // act ≡ is_new: last round's neighborhood is the used set
-        else {
-          // cumulative promotion: previously-used entries plus this
-          // round's activated ones (narrow 2-col relation; converging
-          // neighborhoods repeat entries, so distinct keeps it near
-          // n·2k' in practice)
-          val u = prevUsed.foldLeft(
-              part.filter(col("act")).select("center", "nbr"))(_ unionByName _)
-            .distinct().localCheckpoint()
-          DedupOps.unpersistCheckpoint(und) // consumed by u's materialization
-          u
+      broadcastVecs: Long = DescentBroadcastVecs): DataFrame =
+    Fixpoint.run("knn_descent", spark) { fp =>
+      // staged width schedule ([[DescentEarlyKd]]): EXPLORATION width per
+      // round — the neighborhood that generates FoF pairs; the contraction
+      // always runs at the full k'
+      def kdOf(t: Int): Int = if (t >= 1 && t <= earlyRounds && earlyKd < kd) earlyKd else kd
+      // the settled exit below is valid only once the exploration width has
+      // reached its final k'
+      def widthFinal(t: Int): Boolean = t > earlyRounds || earlyKd >= kd
+      val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
+      val n = graft.Tables.load(spark, dir, "embeddings").count()
+      // Shuffle width stays at the session default DELIBERATELY: a
+      // volume-derived raising scope (rows/8M ≈ 400 partitions for the
+      // round-1 k'²·n candidate space at sf10) was built and A/B'd on an
+      // idle machine — 1308 s vs 932 s for the identical 0.9231-recall
+      // edge set (tools/recall_r13_{wideshuffle,defaultwidth}.jsonl).
+      // Fat partitions streaming through single-pass spill beat skinny
+      // partitions' per-task overhead here; on a real cluster the width
+      // is the deployment's dial (spark.sql.shuffle.partitions / AQE
+      // initialPartitionNum), not something this operator should scope.
+      val (seed, seedRows) = fp.cut(directedTopFrom(
+        bitsScored(q, n, seedTables, seedTargetList, dedup = false, checkpoint = fp.cut(_)._1),
+        kd))
+      // the driver tail replays the shipped operator only: any other dial
+      // (a sweep's k', rounds, ρ < 100, mix partners, a forced scoring
+      // dispatch) keeps the Spark rounds that define it. Its state is the
+      // directed graph (src, dst, cosine) plus the vectors it is scored
+      // from, (vec_id, qv[Dim], nrm).
+      val shipped = kd == DescentK && rounds == DescentRounds &&
+        seedTables == DescentSeedTables && seedTargetList == DescentSeedTarget &&
+        mix == 0 && rhoPct == 100 && earlyKd == DescentEarlyKd &&
+        earlyRounds == DescentEarlyRounds && broadcastVecs == DescentBroadcastVecs
+      val local =
+        if (!shipped || !fp.fitsDriver(3 * seedRows * Fixpoint.FieldBytes +
+            n * (DedupOps.Dim + 2) * Fixpoint.FieldBytes)) None
+        else descentOnDriver(fp, q, seed, kd, rounds, kdOf, widthFinal)
+
+      def descentOnSpark(): DataFrame = {
+        // static long-range partners (see [[DescentMix]]): symmetrized rank
+        // hops, built once and unioned into every round's neighborhood. The
+        // dense rank is ONE narrow global sort of the id column — at real
+        // cluster scale this window becomes a range-partitioned rank, but
+        // the relation it feeds stays n·mix rows either way.
+        val mixEdges: Option[DataFrame] = if (mix <= 0) None else Some {
+          val (ranked, _) = fp.cut(q.select(col("vec_id"))
+            .withColumn("r", row_number().over(Window.orderBy("vec_id")).cast("long") - 1))
+          val hops = ranked.select(col("vec_id"), col("r"),
+              explode(sequence(lit(1), lit(mix))).as("j"))
+            .withColumn("pr", (col("r") * lit(48271L) + col("j") * lit(104729L)) % lit(n))
+          val paired = hops.join(ranked.select(col("r").as("pr"), col("vec_id").as("pid"))
+                .hint("shuffle_hash"), "pr")
+            .filter(col("pid") =!= col("vec_id"))
+            .select(col("vec_id").as("center"), col("pid").as("nbr"))
+          fp.cut(paired.unionByName(paired.select(col("nbr").as("center"), col("center").as("nbr")))
+            .distinct())._1
         }
-      prevUsed.foreach(DedupOps.unpersistCheckpoint)
-      prevUsed = Some(newUsed)
-      // env-gated per-round profile (each round ends in an EAGER
-      // localCheckpoint, so the wall-clock split is real): the numbers
-      // that decide which dial to turn at scale — see ARCHITECTURE.md's
-      // descent cost anatomy
-      if (sys.env.contains("SPARK_GRAFT_DESCENT_LOG"))
-        println(f"[descent] round $round%d " +
-          f"secs=${(System.nanoTime() - roundT0) / 1e9}%.1f " +
-          f"sd_rows=${sd.count()}%d und_rows=$undRows%d")
+        // state: (graph, its rows, the "used" relation for the incremental
+        // FoF cut below — None before round 1: everything is new). At ρ = 100
+        // the used relation is the previous round's full neighborhood
+        // relation (the r13-r15 behavior, byte-exact); at ρ < 100 it is the
+        // CUMULATIVE set of entries that have been activated in some earlier
+        // round — the paper's new→old promotion happens on activation, so an
+        // entry the hash skipped stays "new" and keeps drawing in later
+        // rounds. The runner releases each superseded graph and used relation
+        // once the round's new ones are materialized: without that the build
+        // pins 2·rounds graph-sized block sets (several GB at sf10) for the
+        // session — storage pressure during exactly the stages whose spill is
+        // the build's cost center.
+        val (sd, _, _) = fp.onSpark[(DataFrame, Long, Option[DataFrame])](
+            (seed, seedRows, None), rounds, converging = false)(s => s._1 +: s._3.toSeq) {
+          case ((sd, sdRows, prevUsed), round) =>
+            // bounded neighborhood: out-edges + top-k' in-edges per node,
+            // plus the static mix partners when configured. Exploration width
+            // follows the staged schedule: on a narrow round the out side of
+            // the (always full-k'-wide) graph needs an explicit re-rank.
+            // FUSED (r22, guide §2.2): the out re-rank, the in re-rank and the
+            // (out ∪ in) DISTINCT — previously up to three exchanges of the
+            // n·k'-row relation per round — run as ONE aggregation over the
+            // mirrored edge relation: TopKEdgesAgg skips null inputs, so the
+            // out and in sides feed separate bounded buffers of the same
+            // groupBy, and the per-center array_distinct of the two k-lists
+            // replaces the global pair DISTINCT. Out-side k = kdt is exact on
+            // wide rounds too: each src holds ≤ k' out-edges, so top-k'
+            // returns all of them — identical to the unaggregated projection
+            // the unfused form used there. Same tie-break (cosine DESC, id
+            // ASC) as the pre-r21 windows; sd is a set, so the buffers'
+            // duplicate collapse is a no-op — byte-identical und set.
+            val kdt = kdOf(round)
+            val mirrored = sd.select(explode(array(
+                struct(col("src").as("center"), col("dst").as("nbr"),
+                  col("cosine"), lit(true).as("is_out")),
+                struct(col("dst").as("center"), col("src").as("nbr"),
+                  col("cosine"), lit(false).as("is_out")))).as("e"))
+              .select(col("e.center"), col("e.nbr"), col("e.cosine"), col("e.is_out"))
+            val fusedNbrs = mirrored.groupBy("center")
+              .agg(
+                graft.functions.VectorFunctions.topEdges(
+                  when(col("is_out"), col("nbr")), col("cosine"), kdt).as("otk"),
+                graft.functions.VectorFunctions.topEdges(
+                  when(!col("is_out"), col("nbr")), col("cosine"), kdt).as("itk"))
+              .select(col("center"), explode(array_distinct(concat(
+                transform(col("otk"), e => e("dst")),
+                transform(col("itk"), e => e("dst"))))).as("nbr"))
+            val (und, _) = fp.cut(mixEdges.foldLeft(fusedNbrs)((u, m) => u.unionByName(m).distinct()))
+            // Incremental FoF (NN-Descent's "new/old" cut — Dong, Moses, Li,
+            // WWW 2011 §2.3): only pairs with at least one NEW neighborhood
+            // entry are generated. An old-old pair through center c was
+            // generated in the round both entries were active there and
+            // scored; since every node's candidate set always contains its
+            // current top-k' (the retained current edges below), a per-node
+            // k'-th-best cosine is monotone non-decreasing across rounds — a
+            // pair that failed the cut once can never pass it later. At
+            // ρ = 100 the cut is OUTPUT-EXACT and the oracle twin deliberately
+            // unrolls the FULL FoF rounds without it, so every refined-family
+            // correctness row doubles as an equivalence proof; at ρ < 100 the
+            // sampling is part of the operator's definition and the twin
+            // replays the identical hash filter + used-set tracking
+            // ([[DescentRhoPct]]). Generated pair volume collapses as the
+            // graph converges (ARCHITECTURE.md has the measured per-round
+            // volumes).
+            // flagged re-evaluates per reference (twoHop's two sides + the
+            // early-exit probe) DELIBERATELY: checkpointing it per round was
+            // A/B'd flat (1.01x, tools/ab_r22d.jsonl) — the join of two
+            // checkpointed narrow relations costs about what the checkpoint
+            // materialization does, so the dedup buys nothing.
+            val flagged = prevUsed match {
+              case None => und.withColumn("is_new", lit(true))
+              case Some(p) => und.join(
+                  p.withColumn("seen", lit(true)).hint("shuffle_hash"),
+                  Seq("center", "nbr"), "left")
+                .select(col("center"), col("nbr"), col("seen").isNull.as("is_new"))
+            }
+            // EARLY EXIT (r22, output-exact): if this round generated ZERO new
+            // neighborhood entries, every remaining round is the identity and
+            // the build can stop. Proof: with no new entries every `part` row
+            // has act = false (at any ρ — act requires is_new), so twoHop is
+            // empty and cand is exactly sd's own undirected edge set; the
+            // re-contraction of that set returns sd itself, because for every
+            // node u the candidate set out(u) ∪ in(u) CONTAINS out(u) — and
+            // out(u) is u's top-k' of the PREVIOUS round's full mirrored
+            // candidate relation, a superset of out(u) ∪ in(u) (directedTopFrom
+            // mirrors every scored pair, so in-edges were already candidates) —
+            // hence top-k' of the subset = top-k' of the superset = out(u)
+            // under the same total order (cosine DESC, id ASC; cosines are
+            // bit-deterministic per pair). sd unchanged and kdt constant past
+            // the staged window imply und and flagged repeat verbatim: zero
+            // new entries again, by induction to round `rounds`. Valid only
+            // once the exploration width has reached its final k' (inside the
+            // staged window the NEXT round widens the neighborhood and
+            // genuinely new entries appear). The DuckDB twin keeps unrolling
+            // the full `rounds` CTEs — the oracle rows remain an end-to-end
+            // proof that the skipped rounds are no-ops. Cost of the check: one
+            // limit-1 probe of the join of two checkpointed narrow relations;
+            // measured payoff at sf0.1: rounds 6-8 (~1.0 s each) were exactly
+            // this identity.
+            if (widthFinal(round) && prevUsed.nonEmpty && flagged.filter(col("is_new")).isEmpty)
+              Fixpoint.Step((sd, sdRows, Some(und)), sdRows, done = true)
+            else {
+              // participants: every old entry plus the ρ%-activated new ones;
+              // a skipped new entry sits this round out entirely
+              val part =
+                if (rhoPct >= 100) flagged.withColumn("act", col("is_new"))
+                else flagged.withColumn("act", col("is_new") &&
+                    (col("center") * lit(48271L) + col("nbr") * lit(104729L) +
+                      lit(round * 9973L)) % lit(100L) < lit(rhoPct.toLong))
+                  .filter(!col("is_new") || col("act"))
+              // FoF pair generation stays the co-shuffled self-join (r22
+              // NEGATIVE RESULT): a per-center bounded combination explode
+              // (groupBy center → sort_array(collect_list(nbr, act)) →
+              // slice-after-self transform/filter HOFs) generates the identical
+              // pair multiset with ONE evaluation + ONE exchange of `part`
+              // where the join evaluates and co-shuffles it once per side — but
+              // the balanced A/B (identical build, only this expression
+              // flipped; tools/ab_r22c.jsonl) measured the explode form 1.32×
+              // SLOWER on the full build: the ObjectHashAggregate list buffers
+              // and the non-codegen HOF lambdas cost more per candidate than
+              // the whole-stage-codegen'd join saves in exchanges (guide §4 —
+              // prefer codegen'd operators in the hot path).
+              val twoHop = part.as("x").join(part.as("y").hint("shuffle_hash"),
+                  col("x.center") === col("y.center") && col("x.nbr") < col("y.nbr") &&
+                    (col("x.act") || col("y.act")))
+                .select(col("x.nbr").as("ida"), col("y.nbr").as("idb"))
+              // plus the current edges themselves (so a found neighbor is never
+              // lost to a round that happens not to re-generate it — also the
+              // retention the exactness argument above stands on).
+              // No DISTINCT on the broadcast path: a pair generated through
+              // several shared centers is scored once per copy (map-side
+              // arithmetic, no shuffle) and the top-k aggregate collapses the
+              // copies in its buffer — cheaper than a full corpus-scale dedup
+              // exchange of the candidate relation every round. On the
+              // co-shuffle path (corpus above the broadcast ceiling) the joins
+              // move cand twice, so there the dedup pays for itself.
+              val candRaw = twoHop.unionByName(
+                  sd.select(least(col("src"), col("dst")).as("ida"),
+                    greatest(col("src"), col("dst")).as("idb")))
+              val cand = if (n <= broadcastVecs) candRaw else candRaw.distinct()
+              // Re-attaching vectors to the candidate relation is the round's
+              // volume cliff: cand is k'²·n-sized (≈1.6e9 pairs in round 1 at
+              // 200k vectors) while the quantized frame is only n rows. A
+              // shuffle_hash join here re-shuffles the GIANT side twice (once
+              // by ida, once by idb) — at sf10 that tripled the round's spill
+              // and exhausted the harness disk. Below [[DescentBroadcastVecs]]
+              // the vector frame broadcasts (both joins reuse one exchange) and
+              // cand never moves; above it, co-shuffled joins — a corpus-sized
+              // broadcast would not fit executors (same dispatch rationale as
+              // DedupOps.embeddingBlocked's assignment join).
+              val qn = q.select(col("vec_id"), col("qv"), col("nrm"))
+              val (qa, qb) =
+                if (n <= broadcastVecs)
+                  (broadcast(qn).as("a"), broadcast(qn).as("b"))
+                else (qn.as("a").hint("shuffle_hash"), qn.as("b").hint("shuffle_hash"))
+              // The retention pairs DO re-score through the vector attach (r22
+              // NEGATIVE RESULT): carrying sd's already-computed cosines into
+              // the contraction as a separate union leg — saving n·k'
+              // bit-identical dot products per round — measured 1.05× SLOWER on
+              // the full build (balanced A/B, tools/ab_r22d2.jsonl): on the
+              // broadcast path the re-scoring is map-side-free while the union
+              // leg splits the contraction's input into two partial-aggregation
+              // pipelines. The analytical at-scale saving (the dots are not
+              // free at 10⁹ vectors) cannot be measured on this harness's data
+              // sizes, so the measured form ships.
+              val scored = cand
+                .join(qa, col("ida") === col("a.vec_id"))
+                .join(qb, col("idb") === col("b.vec_id"))
+                .select(col("ida"), col("idb"), DedupOps.dotCosine("a", "b").as("cosine"))
+              // contraction ALWAYS at the full k' — narrowing here was priced at
+              // sf10 and rejected (it permanently discards the seed's tail edges;
+              // recall 0.9231 → 0.9021/0.8182). The exploration narrowing above
+              // is where the candidate-volume savings live.
+              val (next, rows) = fp.cut(directedTopFrom(scored, kd))
+              val newUsed =
+                if (rhoPct >= 100) und // act ≡ is_new: last round's neighborhood is the used set
+                else {
+                  // cumulative promotion: previously-used entries plus this
+                  // round's activated ones (narrow 2-col relation; converging
+                  // neighborhoods repeat entries, so distinct keeps it near
+                  // n·2k' in practice)
+                  fp.cut(prevUsed.foldLeft(
+                      part.filter(col("act")).select("center", "nbr"))(_ unionByName _)
+                    .distinct())._1
+                }
+              Fixpoint.Step((next, rows, Some(newUsed)), rows)
+            }
+        }
+        sd
       }
-    }}
-    prevUsed.foreach(DedupOps.unpersistCheckpoint)
-    // no distinct (r21): a mutual pair appears in sd in both directions
-    // with the same cosine; mutualize's TopKEdgesAgg collapses the copies
-    // in its buffer, so the dedup exchange of the n·k'-row final edge
-    // relation is redundant (output unchanged, oracle-proven)
-    mutualizeCore(sd.select(least(col("src"), col("dst")).as("ida"),
-        greatest(col("src"), col("dst")).as("idb"), col("cosine")))
+
+      // no distinct (r21): a mutual pair appears in sd in both directions
+      // with the same cosine; mutualize's TopKEdgesAgg collapses the copies
+      // in its buffer, so the dedup exchange of the n·k'-row final edge
+      // relation is redundant (output unchanged, oracle-proven)
+      val sd = local.getOrElse(descentOnSpark())
+      mutualizeCore(sd.select(least(col("src"), col("dst")).as("ida"),
+          greatest(col("src"), col("dst")).as("idb"), col("cosine")))
+    }
+
+  /** The descent rounds on the driver, at the shipped dials (ρ = 100, no
+    * mix partners): the same staged neighborhoods (out top-k'ₜ ∪ in
+    * top-k'ₜ per center, ranked by [[graft.functions.TopKEdgesAgg.Buf]]),
+    * the same new/old cut and settled exit, the same candidates (FoF
+    * pairs through a shared center with a new side, plus the retained
+    * edges), each scored `dot.toDouble / sqrt(nrm_a) / sqrt(nrm_b)` with
+    * a the smaller id, and the same top-k' contraction. Candidates are
+    * gathered per node rather than per pair — the contraction keeps each
+    * node's top-k' of its candidate SET, whatever order it arrives in —
+    * so the nodes score in parallel on the driver's cores. None when a
+    * vector or seed row falls outside what these rounds replicate (see
+    * [[Fixpoint.Vectors]]). */
+  private def descentOnDriver(fp: Fixpoint, q: DataFrame, seed: DataFrame, kd: Int,
+                              rounds: Int, kdOf: Int => Int,
+                              widthFinal: Int => Boolean): Option[DataFrame] = {
+    import graft.functions.TopKEdgesAgg.Buf
+    for {
+      v <- Fixpoint.Vectors(q.select(col("vec_id"), col("qv"), col("nrm")).collect())
+      seedRows = seed.collect()
+      ix = seedRows.map(r => (v.index(r.getLong(0)), v.index(r.getLong(1))))
+      if ix.forall { case (a, b) => a >= 0 && b >= 0 }
+    } yield {
+      val nv = v.ids.length
+      val sq = v.nrm.map(x => math.sqrt(x.toDouble))
+      def cosine(a: Int, b: Int): Double =
+        Fixpoint.Vectors.dot(v.qv(a), v.qv(b)).toDouble / sq(a) / sq(b)
+      // a node's out-edges, in the buffer's (cosine DESC, dst ASC) order
+      final case class Edges(dst: Array[Int], cos: Array[Double])
+      def edges(b: Buf): Edges =
+        Edges(Array.tabulate(b.size)(i => b.dsts(i).toInt), java.util.Arrays.copyOf(b.coss, b.size))
+      val noEdges = Edges(Array.emptyIntArray, Array.emptyDoubleArray)
+      val seedBufs = Array.fill(nv)(new Buf(kd))
+      for (i <- seedRows.indices)
+        seedBufs(ix(i)._1).insert(ix(i)._2.toLong, seedRows(i).getDouble(2))
+      val sd0 = seedBufs.map(b => if (b.size == 0) noEdges else edges(b))
+      // used (previous round's neighborhood) per center, sorted; null =
+      // not a center then
+      val (sd, _) = fp.onDriver[(Array[Edges], Array[Array[Int]])]((sd0, null), rounds) {
+          case ((sd, prevUsed), round) =>
+        val kdt = kdOf(round)
+        val inBuf = new Array[Buf](nv)
+        val rev = Array.fill(nv)(Array.newBuilder[Int])
+        for (x <- 0 until nv; i <- sd(x).dst.indices) {
+          val y = sd(x).dst(i)
+          if (inBuf(y) == null) inBuf(y) = new Buf(kdt)
+          inBuf(y).insert(x.toLong, sd(x).cos(i))
+          rev(y) += x
+        }
+        val und = Array.tabulate(nv) { c =>
+          if (sd(c).dst.isEmpty && inBuf(c) == null) null
+          else {
+            val out = sd(c).dst.take(kdt)
+            val in = if (inBuf(c) == null) Array.emptyIntArray
+              else Array.tabulate(inBuf(c).size)(i => inBuf(c).dsts(i).toInt)
+            (out ++ in).distinct.sorted
+          }
+        }
+        val isNew = Array.tabulate(nv) { c =>
+          if (und(c) == null) null
+          else und(c).map(y => prevUsed == null || prevUsed(c) == null ||
+            java.util.Arrays.binarySearch(prevUsed(c), y) < 0)
+        }
+        if (widthFinal(round) && prevUsed != null &&
+            !isNew.exists(f => f != null && f.contains(true)))
+          Fixpoint.Step((sd, und), sd.map(_.dst.length.toLong).sum, done = true)
+        else {
+          // the (center, position) entries each node holds
+          val memb = Array.fill(nv)(Array.newBuilder[Long])
+          for (c <- 0 until nv if und(c) != null; k <- und(c).indices)
+            memb(und(c)(k)) += (c.toLong << 32) | k
+          val membs = memb.map(_.result())
+          val revs = rev.map(_.result())
+          // per-thread candidate marks, fresh each round: seen(y) == x
+          // while node x gathers its candidates
+          val scratch = ThreadLocal.withInitial[Array[Int]](() => Array.fill(nv)(-1))
+          val next = new Array[Edges](nv)
+          java.util.stream.IntStream.range(0, nv).parallel().forEach { x =>
+            val seen = scratch.get()
+            val buf = new Buf(kd)
+            def offer(y: Int): Unit = if (y != x && seen(y) != x) {
+              seen(y) = x
+              buf.insert(y.toLong, if (x < y) cosine(x, y) else cosine(y, x))
+            }
+            for (m <- membs(x)) {
+              val c = (m >>> 32).toInt
+              val newX = isNew(c)(m.toInt)
+              val nbrs = und(c)
+              for (j <- nbrs.indices) if (newX || isNew(c)(j)) offer(nbrs(j))
+            }
+            sd(x).dst.foreach(offer)
+            revs(x).foreach(offer)
+            next(x) = if (buf.size == 0) noEdges else edges(buf)
+          }
+          Fixpoint.Step((next, und), next.map(_.dst.length.toLong).sum)
+        }
+      }
+      Fixpoint.frame(fp.session, StructType(Seq(StructField("src", LongType),
+          StructField("dst", LongType), StructField("cosine", DoubleType))),
+        for (x <- 0 until nv; i <- sd(x).dst.indices)
+          yield Row(v.ids(x), v.ids(sd(x).dst(i)), sd(x).cos(i)))
+    }
   }
 
   /** Plan probe for the audit harness: the descent's seed contraction
@@ -1227,12 +1328,13 @@ object SimilarityOps {
     * redistribution (the mutual graph has no sinks among connected
     * nodes; isolated vectors hold the base rank 150000+850000·0).
     * Fixed iterations → deterministic, oracle-replayable (the DuckDB
-    * twin unrolls the same 10 rounds), and ZERO driver round-trips —
-    * unlike the convergence-tested cluster fixpoints there is nothing
-    * to test. At 100 TB: one (src, dst, deg) relation cached; each
-    * round is a rank⋈edges co-shuffle + a dst-keyed sum (deg ≤ k = 3,
-    * so contribution fan-out is bounded); localCheckpoint per round
-    * cuts the lineage exactly as the cluster family does. */
+    * twin unrolls the same 10 rounds), and no convergence test —
+    * unlike the cluster fixpoints there is nothing to test. At 100 TB:
+    * one (src, dst, deg) relation checkpointed; each round is a
+    * rank⋈edges co-shuffle + a dst-keyed sum (deg ≤ k = 3, so
+    * contribution fan-out is bounded), and the rounds chain lazily into
+    * one checkpoint. An edge list that fits the [[Fixpoint]] driver tail
+    * runs its rounds on the driver. */
   def pageRank(spark: SparkSession, dir: String, iters: Int = 10): DataFrame =
     pageRankOverGraph(spark, dir, knnGraph2Edges(spark, dir), iters)
 
@@ -1283,59 +1385,103 @@ object SimilarityOps {
     * caller passes nodes = the full vector id set ⊇ all graph endpoints,
     * so the two forms are output-identical today; a future caller with
     * nodes ⊂ endpoints would not be. */
-  private def pageRankUnsorted(nodes: DataFrame, g: DataFrame,
-                               iters: Int = 10,
-                               nodeCount: Option[Long] = None): DataFrame = {
-    val edges = g.unionByName(g.select(col("idb").as("ida"), col("ida").as("idb")))
-      .toDF("src", "dst")
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    // LEAN materialization barrier, not a plan-carrying cache: the loop
-    // references the edge relation `iters` times, so it becomes a
-    // shallow localCheckpoint — (src, dst, deg) is ≤ k·2n short rows.
-    // Reading an InMemoryRelation whose lineage is a join over the
-    // cached ARRAY-bearing quantized frame instead cost ~0.7 s per round
-    // in deserialization and cache-scan stages (r11 measurement: the 10
-    // rounds fell from ~10-15 s to 0.2-0.5 s with lean checkpoints +
-    // lazy chaining). The checkpoint is eager, so the graph build it
-    // absorbs runs at FULL session parallelism, before the reduced
-    // loop scope below.
-    val out = edges.join(deg.hint("shuffle_hash"), "src").localCheckpoint()
-    // ACTIVE nodes only in the loop (r21): an isolated node (no edges)
-    // never receives a contribution, so its rank is exactly 150000 +
-    // (850000·0) div 10⁶ = 150000 from round 1 on — re-joining the full
-    // node-id frame every round only re-derived that constant. The loop
-    // now iterates over edge-endpoint nodes (every active node receives
-    // ≥ 1 contribution per round because the mutual graph is symmetric,
-    // so the contribution aggregate itself enumerates all of them — the
-    // per-round left join back onto the node frame is gone: 10 joins +
-    // 10 node-frame exchanges removed, guide §2.4), and isolated nodes
-    // re-attach ONCE at the end via coalesce on the final left join.
-    // Output identical for any iters ≥ 1 (the suite always runs 10).
-    require(iters >= 1, "pageRankFrom: iters must be >= 1")
-    // the rounds chain LAZILY — each is referenced exactly once by the
-    // next, so nothing re-evaluates — and the single checkpoint at the
-    // end materializes the whole chain INSIDE the reduced-parallelism
-    // scope (laziness would otherwise defer planning past the restore)
-    // AQE stays on in the scope (r22 negative result): although every
-    // join here is shuffle_hash-hinted, the balanced same-JVM A/B
-    // (tools/ab_r22_aqe.jsonl) measured AQE-off as 1.16× SLOWER on this
-    // loop — AQE's coalescing of the hinted exchanges is worth more
-    // than the per-exchange stage-job overhead. See IterLoop's note.
-    val ranks = IterLoop.withLoopPartitions(nodes.sparkSession, nodeCount) {
-      var r = out.select(col("src").as("vec_id")).distinct()
-        .withColumn("rank_ppm", lit(1000000L))
-      (1 to iters).foreach { _ =>
-        r = r.join(out.hint("shuffle_hash"), col("vec_id") === col("src"))
-          .select(col("dst"), expr("rank_ppm DIV deg").as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("s"))
-          .select(col("dst").as("vec_id"),
-            expr("150000L + (850000L * s) DIV 1000000L").as("rank_ppm"))
+  private[graft] def pageRankUnsorted(nodes: DataFrame, g: DataFrame,
+                                      iters: Int = 10,
+                                      nodeCount: Option[Long] = None): DataFrame =
+    Fixpoint.run("pagerank", nodes.sparkSession) { fp =>
+      val edges = g.unionByName(g.select(col("idb").as("ida"), col("ida").as("idb")))
+        .toDF("src", "dst")
+      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+      // LEAN materialization barrier, not a plan-carrying cache: the loop
+      // references the edge relation `iters` times, so it becomes a
+      // shallow local checkpoint — (src, dst, deg) is ≤ k·2n short rows.
+      // Reading an InMemoryRelation whose lineage is a join over the
+      // cached ARRAY-bearing quantized frame instead cost ~0.7 s per round
+      // in deserialization and cache-scan stages (r11 measurement: the 10
+      // rounds fell from ~10-15 s to 0.2-0.5 s with lean checkpoints +
+      // lazy chaining). The checkpoint is materialized here, so the graph
+      // build it absorbs runs at FULL session parallelism, before the
+      // reduced loop scope below; its row count sizes the driver tail.
+      val (out, outRows) = fp.cut(edges.join(deg.hint("shuffle_hash"), "src"))
+      // ACTIVE nodes only in the loop (r21): an isolated node (no edges)
+      // never receives a contribution, so its rank is exactly 150000 +
+      // (850000·0) div 10⁶ = 150000 from round 1 on — re-joining the full
+      // node-id frame every round only re-derived that constant. The loop
+      // now iterates over edge-endpoint nodes (every active node receives
+      // ≥ 1 contribution per round because the mutual graph is symmetric,
+      // so the contribution aggregate itself enumerates all of them — the
+      // per-round left join back onto the node frame is gone: 10 joins +
+      // 10 node-frame exchanges removed, guide §2.4), and isolated nodes
+      // re-attach ONCE at the end via coalesce on the final left join.
+      // Output identical for any iters ≥ 1 (the suite always runs 10).
+      require(iters >= 1, "pageRankFrom: iters must be >= 1")
+      fp.collectPairs(out.select(col("src"), col("dst")), outRows,
+          3 * Fixpoint.FieldBytes) match {
+        case Some(e) => pageRankOnDriver(fp, nodes, e, iters)
+        case None =>
+          // the rounds chain LAZILY — each is referenced exactly once by
+          // the next, so nothing re-evaluates — and the single checkpoint
+          // at the end materializes the whole chain INSIDE the
+          // reduced-parallelism scope (laziness would otherwise defer
+          // planning past the restore); the chain logs one record.
+          // AQE stays on in the scope (r22 negative result): although every
+          // join here is shuffle_hash-hinted, the balanced same-JVM A/B
+          // (tools/ab_r22_aqe.jsonl) measured AQE-off as 1.16× SLOWER on this
+          // loop — AQE's coalescing of the hinted exchanges is worth more
+          // than the per-exchange stage-job overhead. See IterLoop's note.
+          val ranks = IterLoop.withLoopPartitions(nodes.sparkSession, nodeCount) {
+            val t0 = System.nanoTime()
+            var r = out.select(col("src").as("vec_id")).distinct()
+              .withColumn("rank_ppm", lit(1000000L))
+            (1 to iters).foreach { _ =>
+              r = r.join(out.hint("shuffle_hash"), col("vec_id") === col("src"))
+                .select(col("dst"), expr("rank_ppm DIV deg").as("c"))
+                .groupBy("dst").agg(sum(col("c")).as("s"))
+                .select(col("dst").as("vec_id"),
+                  expr("150000L + (850000L * s) DIV 1000000L").as("rank_ppm"))
+            }
+            val (ranks, rows) = fp.cut(r)
+            fp.record(iters, "spark", rows, t0)
+            ranks
+          }
+          nodes.select(col("vec_id"))
+            .join(ranks.hint("shuffle_hash"), Seq("vec_id"), "left")
+            .join(deg.hint("shuffle_hash"), col("vec_id") === col("src"), "left")
+            .select(col("vec_id"), coalesce(col("deg"), lit(0L)).as("deg"),
+              coalesce(col("rank_ppm"), lit(150000L)).as("rank_ppm"))
       }
-      r.localCheckpoint()
     }
+
+  /** The ppm rounds over the collected directed edge list (src → dst),
+    * each operation the Spark rounds' own: integer `DIV` on non-negatives
+    * and overflow-checked sums. Degrees and ranks return as one frame for
+    * the final attach onto the node frame, so the driver path re-derives
+    * no degree in Spark. */
+  private def pageRankOnDriver(fp: Fixpoint, nodes: DataFrame, e: Fixpoint.Indexed,
+                               iters: Int): DataFrame = {
+    val deg = new Array[Long](e.n)
+    e.a.foreach(u => deg(u) += 1)
+    // -1 = no rank row (a node that received no contribution leaves the
+    // frame, exactly as it leaves the Spark round's aggregate)
+    val r0 = Array.tabulate(e.n)(u => if (deg(u) > 0) 1000000L else -1L)
+    val ranks = fp.onDriver(r0, iters) { (r, _) =>
+      val s = new Array[Long](e.n)
+      val got = new Array[Boolean](e.n)
+      for (i <- e.a.indices) if (r(e.a(i)) >= 0) {
+        s(e.b(i)) = Math.addExact(s(e.b(i)), r(e.a(i)) / deg(e.a(i)))
+        got(e.b(i)) = true
+      }
+      val next = Array.tabulate(e.n)(v =>
+        if (got(v)) 150000L + Math.multiplyExact(850000L, s(v)) / 1000000L else -1L)
+      Fixpoint.Step(next, next.count(_ >= 0).toLong)
+    }
+    val local = Fixpoint.frame(fp.session, StructType(Seq(
+        StructField("vec_id", LongType), StructField("deg", LongType),
+        StructField("rank_ppm", LongType))),
+      (0 until e.n).filter(deg(_) > 0).map(v =>
+        Row(e.ids(v), deg(v), if (ranks(v) >= 0) ranks(v) else null)))
     nodes.select(col("vec_id"))
-      .join(ranks.hint("shuffle_hash"), Seq("vec_id"), "left")
-      .join(deg.hint("shuffle_hash"), col("vec_id") === col("src"), "left")
+      .join(local.hint("shuffle_hash"), Seq("vec_id"), "left")
       .select(col("vec_id"), coalesce(col("deg"), lit(0L)).as("deg"),
         coalesce(col("rank_ppm"), lit(150000L)).as("rank_ppm"))
   }

@@ -1,10 +1,13 @@
 package graft
 
-import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors}
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Session-scoped lifecycle for intra-operator caches.
   *
@@ -78,11 +81,74 @@ object Concurrent {
         }
       } finally pool.shutdown()
     }
+}
 
-  /** Eagerly `localCheckpoint` each frame, concurrently. The returned frames
-    * read executor-resident blocks; release them with
-    * [[graft.operators.DedupOps.unpersistCheckpoint]]. */
-  def checkpoint(frames: Seq[DataFrame]): Seq[DataFrame] =
+/** The local checkpoints of one multi-step build, released together.
+  *
+  * [[apply]] materializes a frame as a local checkpoint that the scope
+  * owns; [[own]] adopts a checkpoint made elsewhere. On leaving
+  * [[Checkpoints.using]] every owned checkpoint is released except those
+  * the result reads, and on a throw all of them, so a failing step leaks
+  * nothing. A checkpoint is owned before its materializing job runs, so one
+  * whose job fails is released too. Safe to use from [[Concurrent]]
+  * actions.
+  */
+final class Checkpoints private {
+  private val made = new ConcurrentLinkedQueue[RDD[_]]
+
+  /** `df` checkpointed now: one job, as an eager `localCheckpoint`. */
+  def apply(df: DataFrame): DataFrame = {
+    val c = lazily(df)
+    Checkpoints.rddsOf(c).foreach(_.count())
+    c
+  }
+
+  /** `df` checkpointed by the first job that reads all of it. */
+  def lazily(df: DataFrame): DataFrame = {
+    val c = df.localCheckpoint(eager = false)
+    own(c)
+    c
+  }
+
+  /** [[apply]] on each frame, concurrently. */
+  def all(frames: Seq[DataFrame]): Seq[DataFrame] =
     frames.headOption.fold(Seq.empty[DataFrame])(f =>
-      run(f.sparkSession)(frames.map(df => () => df.localCheckpoint())))
+      Concurrent.run(f.sparkSession)(frames.map(df => () => apply(df))))
+
+  /** Take ownership of the checkpoints `df` reads. */
+  def own(df: DataFrame): Unit = Checkpoints.rddsOf(df).foreach(made.add)
+
+  /** Release the owned checkpoints that `frames` read, now. */
+  def release(frames: DataFrame*): Unit = {
+    val ids = frames.flatMap(Checkpoints.rddsOf).map(_.id).toSet
+    releaseWhere(rdd => ids(rdd.id))
+  }
+
+  /** The checkpoint RDDs the scope owns, oldest first. */
+  def owned: Seq[RDD[_]] = made.asScala.toList
+
+  /** Release the owned checkpoints that satisfy `p`, now. */
+  def releaseWhere(p: RDD[_] => Boolean): Unit =
+    made.asScala.toList.filter(p).foreach { rdd =>
+      made.remove(rdd)
+      rdd.unpersist(blocking = false)
+    }
+}
+
+object Checkpoints {
+  /** Run `body` in a fresh scope; on exit release every checkpoint it owns
+    * except those `backing` (the result's frames) read. */
+  def using[T](body: Checkpoints => T)(backing: T => Seq[DataFrame]): T = {
+    val cp = new Checkpoints
+    var out: Option[T] = None
+    try { out = Some(body(cp)); out.get }
+    finally {
+      val keep = out.toSeq.flatMap(backing).flatMap(rddsOf).map(_.id).toSet
+      cp.releaseWhere(rdd => !keep(rdd.id))
+    }
+  }
+
+  /** The checkpoint RDDs a frame reads. */
+  def rddsOf(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
 }

@@ -117,6 +117,11 @@ object Tables {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         (1 << 22).toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // upper/lower through the JVM's case mappings, not ICU's: ICU's
+      // one-time start-up cost the first `upper` of a session 1.6-1.8 s on
+      // a 4-core box (0.27 s via the JVM), and both give the same bytes on
+      // the special cases HarmonizeSpec pins
+      .config("spark.sql.icu.caseMappings.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

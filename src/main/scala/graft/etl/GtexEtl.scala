@@ -1,11 +1,11 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.util.Try
 
-import graft.Concurrent
+import graft.{Checkpoints, Concurrent}
 import graft.model.Dats
 import graft.operators.DedupOps
 import graft.sources.ValidatedTsv
@@ -65,11 +65,11 @@ object GtexEtl {
     /** This graph with its twelve tables materialized once, concurrently,
       * as local checkpoints: executor-resident, computed once however many
       * queries read them. */
-    def materialized: EntityGraph = {
-      val t = Concurrent.checkpoint(tables)
+    def materialized: EntityGraph = Checkpoints.using { cp =>
+      val t = cp.all(tables)
       EntityGraph(t(0), t(1), t(2), t(3), t(4), t(5), t(6), t(7), t(8), t(9), t(10), t(11),
         bucketedDerives)
-    }
+    }(_.tables)
 
     /** Release the checkpoints behind every table — those [[build]],
       * [[restrictedOverlay]] and [[graft.io.DatsJsonReader.read]]
@@ -276,7 +276,10 @@ object GtexEtl {
   /** J11 — dbGaP variable lookup keyed by (var_type, var_name +
     * consent-group suffix), the key restricted columns use to find their
     * dbGaP accession; duplicate keys fatal
-    * (ccmm/dbgap/public_metadata.py:352-402). */
+    * (ccmm/dbgap/public_metadata.py:352-402). A data dictionary holds a
+    * table's variables (KB of XML), so the lookup is collected once and
+    * checked and kept on the driver: the overlay broadcasts it without
+    * reading the XML again. */
   def dbgapVarLookup(vars: DataFrame, varType: String): DataFrame = {
     val hasDescription = vars.columns.contains("description")
     val description =
@@ -288,70 +291,87 @@ object GtexEtl {
         regexp_extract(col("_id"), "(\\.c\\d+)$", 1)).as("lookup_key"),
       col("_id").as("var_id"), col("_var_name").as("var_name"),
       description.as("description"))
-    val dups = out.groupBy("var_type", "lookup_key").agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-    require(dups.isEmpty, "duplicate definition for dbGaP variable(s): " +
-      dups.collect().map(_.getString(1)).mkString(","))
-    out
+    val rows = out.collect()
+    val dups = rows.groupBy(_.getString(1)).collect { case (k, rs) if rs.length > 1 => k }
+    require(dups.isEmpty, "duplicate definition for dbGaP variable(s): " + dups.mkString(","))
+    vars.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   val TopDatasetTitle = "Genotype-Tissue Expression Project (GTEx)"
   val StudyAccession = "phs000424.v7.p2"
 
+  /** One row per non-empty cell of the `vars` columns of `df`:
+    * (material_id, var_acc, name, value), with `material_id` derived from
+    * `key` and `var_acc` given per column. One generator pass over `df`. */
+  private def longForm(df: DataFrame, key: String, vars: Seq[(String, Column)]): DataFrame =
+    df.select(Dats.entityId("Material", col(key)).as("material_id"),
+        stack(lit(vars.size) +: vars.flatMap { case (name, acc) => Seq(acc, lit(name), col(name)) }: _*)
+          .as(Seq("var_acc", "name", "value")))
+      .filter(col("value").isNotNull && col("value") =!= "")
+
+  private val NoAccession = lit(null).cast("string")
+
   /** §3.1 steps 2-9: the normalized entity graph of the portal and
     * manifest files, in three concurrent rounds of Spark actions:
     *  1. the five validated sources (S1/S2) are parsed, each ONCE, into
-    *     scan checkpoints ([[ValidatedTsv.read]]);
+    *     scan checkpoints ([[ValidatedTsv.read]]); alongside, the dbGaP
+    *     scrape is read, checkpointed and checked, and the data_dict's
+    *     XML schema is read;
     *  2. every fatal gate runs — each source's validity, orphan samples
     *     (J1), sample type conflicts (P7), manifest rows with no sample
     *     (J3) and, with a scrape, its parse and id checks (J10/P5). A read
     *     that failed in round 1 surfaces at its own gate, and the first
     *     failing gate in the order listed here (the reference's order) is
     *     thrown with the same exception and message a sequential run
-    *     would raise;
-    *  3. the twelve entity tables are derived from the checkpoints and
-    *     materialized as local checkpoints of their own, after which the
-    *     scan checkpoints are released.
-    * The returned tables are executor-resident and survive
+    *     would raise. Alongside the gates, the two frames most tables
+    *     share are checkpointed once: the typed samples (P3/P7 columns,
+    *     before the P7 filter), which the J1/P7/J3 gates read too, and the
+    *     file rows (WGS ∪ RNA-Seq ⋈ DOI, J3/J4). The scan checkpoints of
+    *     samples, manifests and DOIs are released once they are;
+    *  3. the twelve entity tables are derived from the checkpoints, each
+    *     long-form table in one generator pass per source, and
+    *     materialized as local checkpoints of their own, after which every
+    *     intermediate checkpoint is released.
+    * A failing gate or table releases every checkpoint made so far. The
+    * returned tables are executor-resident and survive
     * `catalog.clearCache()`; release them with [[EntityGraph.unpersist]]. */
-  def build(spark: SparkSession, in: Inputs): EntityGraph = {
+  def build(spark: SparkSession, in: Inputs): EntityGraph = Checkpoints.using { cp =>
     import Dats.entityId
 
-    // -- round 1, step 2 (§3.1): validated portal scans (S1/S2) --
-    val Seq(subjectsR, samplesR, wgsR, rnaR, doisR) = Concurrent.run(spark)(Seq(
-        (in.subjectsPath, subjectSpec, "SUBJID"),
-        (in.samplesPath, sampleSpec, "SAMPID"),
-        (in.wgsManifestPath, manifestSpec(withFirecloud = true), "sample_id"),
-        (in.rnaseqManifestPath, manifestSpec(withFirecloud = false), "sample_id"),
-        (in.doiPath, doiSpec, "sample_id"))
-      .map { case (path, spec, pk) => () => Try(ValidatedTsv.read(spark, path, spec, pk)) })
+    // -- step 2 (§3.1): validated portal scans (S1/S2), run in round 1 --
+    def read(path: String, spec: Seq[ColumnSpec], pk: String) =
+      Try(ValidatedTsv.read(spark, path, spec, pk)).map { r => cp.own(r.data); r }
+    lazy val subjectsR = read(in.subjectsPath, subjectSpec, "SUBJID")
+    lazy val samplesR = read(in.samplesPath, sampleSpec, "SAMPID")
+    lazy val wgsR = read(in.wgsManifestPath, manifestSpec(withFirecloud = true), "sample_id")
+    lazy val rnaR = read(in.rnaseqManifestPath, manifestSpec(withFirecloud = false), "sample_id")
+    lazy val doisR = read(in.doiPath, doiSpec, "sample_id")
 
-    // Lazy until round 2: a frame over a failed read throws only inside
-    // the gate that needs it, which always follows that read's own gate.
-
-    // -- J1: sample → subject link on the derived prefix key; missing
-    //    subject is fatal (portal_files.py:133-146) --
+    // A frame over a failed read throws only inside the gate that needs
+    // it, which always follows that read's own gate.
     lazy val subjects = subjectsR.get.data
-    lazy val samplesWithSubj = samplesR.get.data.withColumn("SUBJID", subjectIdOf(col("SAMPID")))
-    def orphanGate(): Unit = {
-      val orphans = samplesWithSubj.join(subjects.select("SUBJID"), Seq("SUBJID"), "left_anti")
-      require(orphans.isEmpty, s"samples with no subject: ${orphans.select("SAMPID").collect().mkString(",")}")
-    }
 
-    // -- P7: sample type inference (samples.py:99-141): SMAFRZE ⇒ expected
-    //    type (EXCLUDE ⇒ none), SMNABTCHT ⇒ actual type; conflict between
-    //    a determined actual and expected type is fatal; when the batch
-    //    type determines neither DNA nor RNA the reference FALLS BACK to
-    //    the expected type, so only rows where both are undetermined are
-    //    dropped — and EXCLUDE rows with a determinable batch type are
+    // -- P3 + P7: sample type inference (samples.py:99-141): SMAFRZE ⇒
+    //    expected type (EXCLUDE ⇒ none), SMNABTCHT ⇒ actual type; conflict
+    //    between a determined actual and expected type is fatal; when the
+    //    batch type determines neither DNA nor RNA the reference FALLS BACK
+    //    to the expected type, so only rows where both are undetermined
+    //    are dropped — and EXCLUDE rows with a determinable batch type are
     //    kept (samples.py:118-127) --
-    lazy val typed = samplesWithSubj
+    lazy val typed = cp(samplesR.get.data
+      .withColumn("SUBJID", subjectIdOf(col("SAMPID")))
       .withColumn("expected_type",
         when(col("SMAFRZE") === "RNASEQ", "RNA")
           .when(col("SMAFRZE").isin("WGS", "WES", "OMNI"), "DNA"))
       .withColumn("actual_type",
         when(upper(col("SMNABTCHT")).contains("RNA"), "RNA")
-          .when(upper(col("SMNABTCHT")).contains("DNA"), "DNA"))
+          .when(upper(col("SMNABTCHT")).contains("DNA"), "DNA")))
+    // J1: sample → subject link on the derived prefix key; missing subject
+    // is fatal (portal_files.py:133-146)
+    def orphanGate(): Unit = {
+      val orphans = typed.join(subjects.select("SUBJID"), Seq("SUBJID"), "left_anti")
+      require(orphans.isEmpty, s"samples with no subject: ${orphans.select("SAMPID").collect().mkString(",")}")
+    }
     def conflictGate(): Unit = {
       val conflicts = typed.filter(
         col("actual_type").isNotNull && col("expected_type").isNotNull &&
@@ -363,15 +383,12 @@ object GtexEtl {
       .withColumn("actual_type", coalesce(col("actual_type"), col("expected_type")))
       .filter(col("actual_type").isNotNull)
 
-    // -- file manifests (J3/J4/P6, samples.py:177-326) --
-    lazy val manifest = {
-      val wgsManifest = wgsR.get.data.withColumn("data_type", lit("WGS"))
-      val rnaManifest = rnaR.get.data
+    // -- file manifests (J3/J4/P6, samples.py:177-326), U1: WGS ∪ RNA-Seq
+    //    (gtex_v7_to_dats.py:385-397) --
+    lazy val manifest = wgsR.get.data.withColumn("data_type", lit("WGS"))
+      .unionByName(rnaR.get.data
         .withColumn("firecloud_id", lit(null).cast("string"))
-        .withColumn("data_type", lit("RNA-Seq"))
-      // U1: WGS ∪ RNA-Seq (gtex_v7_to_dats.py:385-397)
-      wgsManifest.unionByName(rnaManifest)
-    }
+        .withColumn("data_type", lit("RNA-Seq")))
     // J3 is inner with a fatal on manifest samples lacking a Material
     // (samples.py:305-307)
     def manifestOrphanGate(): Unit = {
@@ -380,6 +397,9 @@ object GtexEtl {
       require(manifestOrphans.isEmpty,
         s"manifest rows with no sample: ${manifestOrphans.select("sample_id").collect().mkString(",")}")
     }
+    // the file rows every file-level table reads (J4)
+    lazy val files = cp(manifest.join(doisR.get.data, Seq("sample_id"), "left")
+      .withColumn("dataset_id", entityId("Dataset", concat(col("sample_id"), lit("|"), col("data_type")))))
 
     // J10: study Dataset skeleton built FROM the S14 scrape when given
     // (ccmm/gtex/wgs_datasets.py:85-175 + bin/gtex_v7_to_dats.py:292-324)
@@ -388,22 +408,43 @@ object GtexEtl {
     // keyed by StudyAccession keeps the same content-hash id as the
     // constant path, so file datasets and the Study link are unchanged.
     lazy val scraped: Option[DataFrame] = in.dbgapStudiesScrapePath.map { p =>
-      val s = graft.sources.Readers.scrapeDbgapStudies(
-        spark, p, descrPrefix = "Genotype-Tissue Expression").localCheckpoint()
-      // P5: every scraped id must carry a parseable phsN.vN prefix
-      val bad = s.filter(normalizeStudyId(col("id")) === "")
-      require(bad.isEmpty, "unable to parse study_id(s): " +
-        bad.select("id").collect().map(_.getString(0)).mkString(","))
-      // the study the samples/files hang off MUST be in the scrape —
-      // otherwise file datasets and the Study link would dangle and the
-      // writer (which walks parent→child) would silently drop them
-      require(!s.filter(col("id") === StudyAccession).isEmpty,
-        s"scraped dbGaP studies do not include $StudyAccession")
+      val s = cp(graft.sources.Readers.scrapeDbgapStudies(
+        spark, p, descrPrefix = "Genotype-Tissue Expression"))
+      // both checks in one pass: P5, every scraped id must carry a
+      // parseable phsN.vN prefix; and the study the samples/files hang off
+      // MUST be in the scrape — otherwise file datasets and the Study link
+      // would dangle and the writer (which walks parent→child) would
+      // silently drop them
+      val check = s.agg(
+        sort_array(collect_list(when(normalizeStudyId(col("id")) === "", col("id")))),
+        coalesce(max(col("id") === StudyAccession), lit(false))).head()
+      val bad = check.getSeq[String](0)
+      require(bad.isEmpty, "unable to parse study_id(s): " + bad.mkString(","))
+      require(check.getBoolean(1), s"scraped dbGaP studies do not include $StudyAccession")
       s
     }
 
-    // -- round 2: the gates, in the reference's order --
+    // -- top-level skeleton ids (steps 5-7 of §3.1) --
+    val topId = entityId("Dataset", lit(TopDatasetTitle))
+    val studyDatasetId = entityId("Dataset", lit(StudyAccession))
+    val studyId = entityId("Study", lit(StudyAccession))
+
+    // dbGaP variables as study-dataset Dimensions (add_study_vars,
+    // public_metadata.py:352-402) from the parsed data_dict XML (S7/J11)
+    lazy val dictDimensions = in.dbgapDataDictPath.map(dbgapDimensions(spark, _, studyDatasetId))
+
+    // -- round 1: the reads, the scrape and the data_dict schema; a
+    //    failure here surfaces at its gate in round 2, or where the
+    //    dimensions are built --
     Concurrent.run(spark)(Seq[() => Any](
+      () => Try(scraped), () => Try(dictDimensions),
+      () => subjectsR, () => samplesR, () => wgsR, () => rnaR, () => doisR))
+
+    // -- round 2: the shared checkpoints (their failures surface at the
+    //    gates), then the gates in the reference's order --
+    Concurrent.run(spark)(Seq[() => Any](
+      () => Try(typed),
+      () => Try(files),
       () => subjectsR.get.requireValid(),
       () => samplesR.get.requireValid(),
       () => orphanGate(),
@@ -413,6 +454,7 @@ object GtexEtl {
       () => manifestOrphanGate(),
       () => doisR.get.requireValid(),
       () => scraped))
+    cp.release(Seq(samplesR, wgsR, rnaR, doisR).map(_.get.data): _*)
 
     // -- U3: anatomy dedup on natural key (samples.py:31-60): shared
     //    AnatomicalPart entities become one dimension-table row --
@@ -434,55 +476,31 @@ object GtexEtl {
       lit(null).cast("string").as("anatomy_id"),
       concat(lit("GTEx subject "), col("SUBJID")).as("description"))
 
-    // -- sample materials with derivesFrom nesting (R3, samples.py:89-152) --
-    val sampleMaterials = samples.select(
-      entityId("Material", col("SAMPID")).as("material_id"),
-      col("SAMPID").as("name"),
-      lit("sample").as("material_type"),
-      lit("specimen").as("role"),
-      col("SUBJID").as("subject_id"),
-      entityId("Material", col("SUBJID")).as("derives_from"),
-      entityId("AnatomicalPart", col("SMTSD")).as("anatomy_id"),
-      // P11 string templating (samples.py:144-150)
-      concat(col("SMTSD"), lit(" specimen collected from subject "), col("SUBJID")).as("description"))
-
-    // -- extract materials, one per typed sample (rna_extracts.py /
-    //    dna_extracts.py): role is what Q4 filters on --
-    val extractMaterials = samples.select(
-      entityId("Material", concat(col("SAMPID"), lit("-extract"))).as("material_id"),
-      concat(col("SAMPID"), lit(" extract")).as("name"),
-      lit("extract").as("material_type"),
-      concat(col("actual_type"), lit(" extract")).as("role"),
-      col("SUBJID").as("subject_id"),
-      entityId("Material", col("SAMPID")).as("derives_from"),
-      entityId("AnatomicalPart", col("SMTSD")).as("anatomy_id"),
-      concat(lit("total "), col("actual_type"),
-        lit(" extracted from "), col("SMTSD"),
-        lit(" specimen collected from subject "), col("SUBJID")).as("description"))
-
-    val materials = subjectMaterials
-      .unionByName(sampleMaterials).unionByName(extractMaterials)
+    // -- per typed sample, its material with derivesFrom nesting (R3,
+    //    samples.py:89-152; P11 templating, samples.py:144-150) and its
+    //    extract material (rna_extracts.py / dna_extracts.py; the role is
+    //    what Q4 filters on), in one pass --
+    val sampleMaterials = samples.select(stack(lit(2),
+        entityId("Material", col("SAMPID")), col("SAMPID"), lit("sample"), lit("specimen"),
+        col("SUBJID"), entityId("Material", col("SUBJID")), entityId("AnatomicalPart", col("SMTSD")),
+        concat(col("SMTSD"), lit(" specimen collected from subject "), col("SUBJID")),
+        entityId("Material", concat(col("SAMPID"), lit("-extract"))),
+        concat(col("SAMPID"), lit(" extract")), lit("extract"), concat(col("actual_type"), lit(" extract")),
+        col("SUBJID"), entityId("Material", col("SAMPID")), entityId("AnatomicalPart", col("SMTSD")),
+        concat(lit("total "), col("actual_type"), lit(" extracted from "), col("SMTSD"),
+          lit(" specimen collected from subject "), col("SUBJID")))
+      .as(Seq("material_id", "name", "material_type", "role", "subject_id",
+        "derives_from", "anatomy_id", "description")))
 
     // -- characteristics: subject phenotypes + the P15-selected sample
     //    QC columns (samples.py:70-86) --
-    val subjChars = Seq(("SEX", "phv00169061"), ("AGE", "phv00169063"), ("DTHHRDY", "phv00169064"))
-      .map { case (cname, acc) =>
-        subjects.filter(col(cname).isNotNull && col(cname) =!= "").select(
-          entityId("Material", col("SUBJID")).as("material_id"),
-          lit(acc).as("var_acc"), lit(cname).as("name"), col(cname).as("value"))
-      }.reduce(_ unionByName _)
-    val sampleChars = Seq("SMATSSCR", "SMRIN", "SMMAPRT", "SMGNSDTC")
-      .map { cname =>
-        samples.filter(col(cname).isNotNull && col(cname) =!= "").select(
-          entityId("Material", col("SAMPID")).as("material_id"),
-          lit(null).cast("string").as("var_acc"), lit(cname).as("name"), col(cname).as("value"))
-      }.reduce(_ unionByName _)
-    val characteristics = subjChars.unionByName(sampleChars)
+    val characteristics = longForm(subjects, "SUBJID",
+        Seq("SEX" -> lit("phv00169061"), "AGE" -> lit("phv00169063"),
+          "DTHHRDY" -> lit("phv00169064")))
+      .unionByName(longForm(samples, "SAMPID",
+        Seq("SMATSSCR", "SMRIN", "SMMAPRT", "SMGNSDTC").map(_ -> NoAccession)))
 
     // -- file datasets from the CRAM manifests --
-    val files = manifest.join(doisR.get.data, Seq("sample_id"), "left") // J4
-      .withColumn("dataset_id", entityId("Dataset", concat(col("sample_id"), lit("|"), col("data_type"))))
-
     val fileDatasets = files.select(
       col("dataset_id"),
       lit(null).cast("string").as("parent_dataset_id"),
@@ -492,18 +510,14 @@ object GtexEtl {
       col("data_type"),
       lit(null).cast("string").as("study_id"))
 
-    // index_doi = the .crai index file's DOI (the reference surfaces it
-    // as the distribution's relatedIdentifier, rdflib_tabular_dump.py:199-212)
+    // one GCP and one AWS distribution per file; index_doi = the .crai
+    // index file's DOI (the reference surfaces it as the distribution's
+    // relatedIdentifier, rdflib_tabular_dump.py:199-212)
     val fileDistributions = files.select(col("dataset_id"),
-        col("cram_file_gcp").as("access_url"),
-        col("cram_file_size").cast("long").as("size"),
-        col("cram_file_md5").as("md5"), col("Sodium_GUID_cram").as("doi"),
-        col("Sodium_GUID_crai").as("index_doi"))
-      .unionByName(files.select(col("dataset_id"),
-        col("cram_file_aws").as("access_url"),
-        col("cram_file_size").cast("long").as("size"),
-        col("cram_file_md5").as("md5"), col("Sodium_GUID_cram").as("doi"),
-        col("Sodium_GUID_crai").as("index_doi")))
+      stack(lit(2), col("cram_file_gcp"), col("cram_file_aws")).as("access_url"),
+      col("cram_file_size").cast("long").as("size"),
+      col("cram_file_md5").as("md5"), col("Sodium_GUID_cram").as("doi"),
+      col("Sodium_GUID_crai").as("index_doi"))
 
     val fileDimensions = files.select(
       entityId("Dimension", concat(col("dataset_id"), lit("|md5"))).as("dim_id"),
@@ -518,9 +532,6 @@ object GtexEtl {
       entityId("Material", concat(col("sample_id"), lit("-extract"))).as("input_material_id"))
 
     // -- top-level skeleton (steps 5-7 of §3.1) --
-    val topId = entityId("Dataset", lit(TopDatasetTitle))
-    val studyDatasetId = entityId("Dataset", lit(StudyAccession))
-    val studyId = entityId("Study", lit(StudyAccession))
     val topRow = spark.range(1).select(
       topId.as("dataset_id"), lit(null).cast("string").as("parent_dataset_id"),
       lit(TopDatasetTitle).as("title"),
@@ -583,31 +594,26 @@ object GtexEtl {
     val groupMembers = subjectMaterials.select(
       groupId.as("group_id"), col("material_id"))
 
-    // dbGaP variables as study-dataset Dimensions (add_study_vars,
-    // public_metadata.py:352-402): registered from the parsed data_dict
-    // XML (S7/J11) when provided, else the known phenotype variables
-    val studyDimensions = in.dbgapDataDictPath match {
-      case Some(xml) => dbgapDimensions(spark, xml, studyDatasetId)
-      case None =>
-        Seq(("SEX", "phv00169061"), ("AGE", "phv00169063"), ("DTHHRDY", "phv00169064"))
-          .map { case (n, acc) =>
-            spark.range(1).select(
-              entityId("Dimension", lit(acc)).as("dim_id"),
-              studyDatasetId.as("owner_id"), lit(n).as("name"), lit(acc).as("var_acc"),
-              concat(lit("dbGaP variable "), lit(n)).as("description"),
-              lit(null).cast("string").as("value"))
-          }.reduce(_ unionByName _)
-    }
+    // without a data_dict, the known phenotype variables
+    val studyDimensions = dictDimensions.getOrElse(
+      Seq(("SEX", "phv00169061"), ("AGE", "phv00169063"), ("DTHHRDY", "phv00169064"))
+        .map { case (n, acc) =>
+          spark.range(1).select(
+            entityId("Dimension", lit(acc)).as("dim_id"),
+            studyDatasetId.as("owner_id"), lit(n).as("name"), lit(acc).as("var_acc"),
+            concat(lit("dbGaP variable "), lit(n)).as("description"),
+            lit(null).cast("string").as("value"))
+        }.reduce(_ unionByName _))
 
-    // -- round 3: every entity table materialized once; only then are
-    //    the scan checkpoints they were derived from released --
-    val graph = EntityGraph(
+    // -- round 3: every entity table materialized once; on return the
+    //    intermediate checkpoints they were derived from are released --
+    EntityGraph(
       datasets = datasets,
       identifiers = identifiers,
       studies = studies,
       studyGroups = studyGroups,
       groupMembers = groupMembers,
-      materials = materials,
+      materials = subjectMaterials.unionByName(sampleMaterials),
       anatomicalParts = anatomicalParts,
       characteristics = characteristics,
       dimensions = scrapeDimensions.fold(studyDimensions)(studyDimensions.unionByName)
@@ -617,10 +623,7 @@ object GtexEtl {
       // public portal columns carry no phenotype variables to harmonize;
       // hypertension arrives with the restricted overlay (P9)
       diseases = Harmonize.emptyDiseases(spark)).materialized
-    (Seq(subjectsR, samplesR, wgsR, rnaR, doisR).map(_.get.data) ++ scraped)
-      .foreach(DedupOps.unpersistCheckpoint)
-    graph
-  }
+  }(_.tables)
 
   /** §3.1 step 10 — the restricted-access overlay
     * (ccmm/gtex/dna_extracts.py:434-496 + bin/gtex_v7_to_dats.py:399-402):
@@ -631,51 +634,22 @@ object GtexEtl {
     * Returns the updated graph: characteristics for overlaid subjects are
     * replaced wholesale (the reference rewrites the subject's
     * characteristics list); non-overlaid subjects keep their public
-    * characteristics. The four rewritten tables (characteristics, study
-    * groups, members, diseases) are materialized as checkpoints, as in
-    * [[build]]; the other eight are `graph`'s own.
+    * characteristics. The merged subjects and their restricted variables
+    * in long form are each checkpointed once and every rewritten table
+    * reads them; the four rewritten tables (characteristics, study groups,
+    * members, diseases) are materialized as checkpoints, as in [[build]],
+    * after which the two intermediates are released. The other eight
+    * tables are `graph`'s own.
     */
   def restrictedOverlay(spark: SparkSession, graph: EntityGraph,
                         subjectTsv: String, phenotypesTsv: String,
                         consentMeta: Option[DataFrame] = None,
-                        varLookup: Option[DataFrame] = None): EntityGraph = {
+                        varLookup: Option[DataFrame] = None): EntityGraph = Checkpoints.using { cp =>
     import graft.model.Dats.entityId
     val (subj, _) = graft.sources.Readers.commentTsv(spark, subjectTsv)
     val (pheno, _) = graft.sources.Readers.commentTsv(spark, phenotypesTsv)
-    val merged = TopmedEtl.mergeSubjectTables(subj, pheno, "SUBJID").cache()
-
-    // rewrite characteristics: drop public chars of overlaid subjects,
-    // add the restricted variables in long form; J11: when a dbGaP
-    // variable lookup is given, each restricted column picks up its phv
-    // accession by (var_name + consent-suffix) key
-    val restrictedVars = merged.columns.filterNot(c => c == "SUBJID" || c == "dbGaP_Subject_ID")
-    val bareChars = restrictedVars.map { v =>
-      merged.filter(col(v).isNotNull && col(v) =!= "").select(
-        entityId("Material", col("SUBJID")).as("material_id"),
-        lit(v).as("name"), col(v).as("value"))
-    }.reduce(_ unionByName _)
-    val rawChars = varLookup match {
-      case Some(lk) =>
-        bareChars.join(
-            broadcast(lk.select(col("lookup_key"),
-              regexp_extract(col("var_id"), "^(phv\\d+)", 1).as("var_acc"))),
-            col("name") === col("lookup_key"), "left")
-          .select(col("material_id"), col("var_acc"), col("name"), col("value"))
-      case None =>
-        bareChars.select(col("material_id"),
-          lit(null).cast("string").as("var_acc"), col("name"), col("value"))
-    }
-    // P9: harmonized dimensions prepend the raw dbGaP variables
-    // (dna_extracts.py:93-175; GTEx decodes numeric sex codes) and the
-    // hypertension variables become bearerOfDisease rows
-    val overlaidChars = rawChars.unionByName(
-      Harmonize.harmonizedChars(rawChars, numericSexCodes = true))
-    val overlaidDiseases = Harmonize.hypertension(rawChars, Harmonize.GtexHypertensionVars)
-    val overlaidIds = merged.select(entityId("Material", col("SUBJID")).as("material_id"))
-    val keptChars = graph.characteristics.join(
-      graph.materials.filter(col("material_type") === "subject").select("material_id")
-        .join(overlaidIds, Seq("material_id"), "left_semi"),
-      Seq("material_id"), "left_anti")
+    // materialized by the first job that reads it
+    val merged = cp.lazily(TopmedEtl.mergeSubjectTables(subj, pheno, "SUBJID"))
 
     // A1: per-consent StudyGroups over the overlaid subjects. With P18
     // consent metadata the groups take the CONSENT enum's label as name
@@ -713,17 +687,41 @@ object GtexEtl {
       entityId("StudyGroup", concat(lit("consent-"), col("CONSENT"))).as("group_id"),
       entityId("Material", col("SUBJID")).as("material_id"))
 
-    // the four rewritten tables are materialized once, concurrently, like
-    // build's; `merged` backs nothing after that
-    val Seq(characteristics, studyGroups, groupMembers, diseases) = Concurrent.checkpoint(Seq(
+    // rewrite characteristics: drop public chars of overlaid subjects,
+    // add the restricted variables in long form; J11: when a dbGaP
+    // variable lookup is given, each restricted column picks up its phv
+    // accession by (var_name + consent-suffix) key
+    val restrictedVars = merged.columns.toSeq.filterNot(c => c == "SUBJID" || c == "dbGaP_Subject_ID")
+    val bareChars = longForm(merged, "SUBJID", restrictedVars.map(_ -> NoAccession))
+    val rawChars = cp(varLookup match {
+      case Some(lk) =>
+        bareChars.drop("var_acc").join(
+            broadcast(lk.select(col("lookup_key"),
+              regexp_extract(col("var_id"), "^(phv\\d+)", 1).as("var_acc"))),
+            col("name") === col("lookup_key"), "left")
+          .select(col("material_id"), col("var_acc"), col("name"), col("value"))
+      case None => bareChars
+    })
+    // P9: harmonized dimensions prepend the raw dbGaP variables
+    // (dna_extracts.py:93-175; GTEx decodes numeric sex codes) and the
+    // hypertension variables become bearerOfDisease rows
+    val overlaidChars = rawChars.unionByName(
+      Harmonize.harmonizedChars(rawChars, numericSexCodes = true))
+    val overlaidDiseases = Harmonize.hypertension(rawChars, Harmonize.GtexHypertensionVars)
+    val overlaidIds = merged.select(entityId("Material", col("SUBJID")).as("material_id"))
+    val keptChars = graph.characteristics.join(
+      graph.materials.filter(col("material_type") === "subject").select("material_id")
+        .join(overlaidIds, Seq("material_id"), "left_semi"),
+      Seq("material_id"), "left_anti")
+
+    val Seq(characteristics, studyGroups, groupMembers, diseases) = cp.all(Seq(
       keptChars.unionByName(overlaidChars),
       graph.studyGroups.unionByName(consentGroups),
       graph.groupMembers.unionByName(consentMembers),
       graph.diseases.unionByName(overlaidDiseases)))
-    merged.unpersist()
     graph.copy(characteristics = characteristics, studyGroups = studyGroups,
       groupMembers = groupMembers, diseases = diseases)
-  }
+  }(_.tables)
 
   /** J2 — manifest ↔ portal reconciliation tallies
     * (bin/gtex_v7_to_dats.py:42-94): anti-join counts in both directions. */

@@ -1,22 +1,30 @@
 package graft.io
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import java.io.{StringWriter, Writer}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import scala.util.Using
+
+import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator}
 
 import org.apache.spark.sql.Row
 
+import graft.Concurrent
 import graft.etl.GtexEtl.EntityGraph
 
 /** K1 — the single-document DATS JSON-LD sink
   * (bin/gtex_v7_to_dats.py:404-406; encoder ccmm/dats/datsobj.py:144-149).
   *
-  * The entity tables stay distributed until this step; the top-level tree
-  * is driver-assembled (reference instances are ≤ ~420 MB — SURVEY.md
-  * §7.1.6). Three properties of the reference output are reproduced
-  * deliberately:
+  * The entity tables stay distributed until this step: they are collected
+  * in one concurrent round, and the document is streamed depth-first
+  * through one Jackson generator with the default pretty printer — no
+  * document tree and no whole-document string is built (reference
+  * instances are ≤ ~420 MB — SURVEY.md §7.1.6). Three properties of the
+  * reference output are reproduced deliberately:
   *
-  *  1. insertion-ordered keys (`OrderedDict`, datsobj.py:118) — Jackson's
-  *     ObjectNode preserves insertion order;
+  *  1. insertion-ordered keys (`OrderedDict`, datsobj.py:118) — each
+  *     node's fields are written in a fixed order;
   *  2. first-occurrence / id-reference semantics (`DatsObjCache`,
   *     datsobj.py:156-172): the first emission of an entity is the full
   *     object, every later one is `{"@id": …}` — emission order is pinned
@@ -37,39 +45,48 @@ object DatsJsonWriter {
   private val SdoContextBase = "https://datatagsuite.github.io/context/sdo/"
   private val OboContextBase = "https://datatagsuite.github.io/context/obo/"
 
-  final class Emitter(mapper: ObjectMapper) {
+  private val factory = new JsonFactory()
+
+  /** Writes DATS nodes to one generator and remembers which entities it
+    * has emitted in full. */
+  final class Emitter(gen: JsonGenerator) {
     private val emitted = scala.collection.mutable.HashSet[String]()
 
-    /** `@context` is a two-element [sdo, obo] array whose filenames
-      * derive from the registry's snake_case schema name
+    def obj(body: => Unit): Unit = { gen.writeStartObject(); body; gen.writeEndObject() }
+    def obj(field: String)(body: => Unit): Unit = { gen.writeFieldName(field); obj(body) }
+    def arr(field: String)(body: => Unit): Unit = {
+      gen.writeArrayFieldStart(field); body; gen.writeEndArray()
+    }
+    def str(field: String, v: String): Unit = gen.writeStringField(field, v)
+    /** A string field written only when `v` is not null. */
+    def opt(field: String, v: String): Unit = if (v != null) str(field, v)
+
+    /** A node of `datsType`: `@type`, `@context`, `@id`, then `body`'s
+      * fields. `@context` is a two-element [sdo, obo] array whose
+      * filenames derive from the registry's snake_case schema name
       * (datsobj.py:89-95), e.g. `anatomical_part_sdo_context.jsonld`;
       * `has_context: False` types (License) carry no @context. */
-    def node(datsType: String, id: String): ObjectNode = {
-      val n = mapper.createObjectNode()
-      n.put("@type", datsType)
+    def node(datsType: String, id: String)(body: => Unit): Unit = obj {
+      str("@type", datsType)
       if (!graft.model.Dats.NoContextTypes.contains(datsType)) {
         val schemaName = graft.model.Dats.SchemaNames.getOrElse(datsType,
           sys.error(s"Unknown DATS object type '$datsType'"))
-        val ctx = mapper.createArrayNode()
-        ctx.add(SdoContextBase + schemaName + "_sdo_context.jsonld")
-        ctx.add(OboContextBase + schemaName + "_obo_context.jsonld")
-        n.set[ObjectNode]("@context", ctx)
+        arr("@context") {
+          gen.writeString(SdoContextBase + schemaName + "_sdo_context.jsonld")
+          gen.writeString(OboContextBase + schemaName + "_obo_context.jsonld")
+        }
       }
-      n.put("@id", id)
-      n
+      str("@id", id)
+      body
     }
 
-    /** First occurrence → full node (caller fills it); later → idref. */
+    /** First occurrence → full node (caller writes it); later → idref. */
     def full(id: String): Boolean = emitted.add(id)
 
-    def idref(id: String): ObjectNode = {
-      val n = mapper.createObjectNode()
-      n.put("@id", id)
-      n
-    }
+    def idref(id: String): Unit = obj(str("@id", id))
   }
 
-  /** Assemble the whole graph into one JSON document string.
+  /** The whole graph as one JSON document string.
     *
     * `maxOutputSamples` is O2 (`--max_output_samples`,
     * bin/gtex_v7_to_dats.py:376-378): the study dataset's `isAbout` list
@@ -77,25 +94,41 @@ object DatsJsonWriter {
     * else (file datasets, derivesFrom chains) stays complete, exactly as
     * the reference truncates only that one list. */
   def render(g: EntityGraph, maxOutputSamples: Option[Int] = None): String = {
-    val mapper = new ObjectMapper()
-    val em = new Emitter(mapper)
+    val emit = document(g, maxOutputSamples)
+    val out = new StringWriter()
+    emit(out)
+    out.toString
+  }
 
+  /** [[render]] streamed into a UTF-8 file at `path`; a document that
+    * fails part-way leaves no file behind. */
+  def write(g: EntityGraph, path: String,
+            maxOutputSamples: Option[Int] = None): Unit = {
+    val emit = document(g, maxOutputSamples)
+    val p = Paths.get(path)
+    try Using.resource(Files.newBufferedWriter(p, StandardCharsets.UTF_8))(emit)
+    catch { case e: Throwable => Files.deleteIfExists(p); throw e }
+  }
+
+  /** Collect `g`'s tables and check the graph's shape; returns the
+    * function that writes the document. */
+  private def document(g: EntityGraph, maxOutputSamples: Option[Int]): Writer => Unit = {
     // collect entity tables (driver-side assembly; tables are the small
     // top of the pyramid — file-level fan-out stays in the arrays below)
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[Row] = df.collect().toSeq
-    val datasets = rows(g.datasets)
-    val identifiers = rows(g.identifiers).groupBy(_.getAs[String]("entity_id"))
-    val studies = rows(g.studies).groupBy(_.getAs[String]("dataset_id"))
-    val groups = rows(g.studyGroups).groupBy(_.getAs[String]("study_id"))
-    val members = rows(g.groupMembers).groupBy(_.getAs[String]("group_id"))
-    val materials = rows(g.materials)
+    val Seq(datasets, identifierRows, studyRows, groupRows, memberRows, materials,
+        anatomyRows, charRows, dimRows, distRows, acqRows, diseaseRows) =
+      Concurrent.run(g.datasets.sparkSession)(g.tables.map(t => () => t.collect().toSeq))
+    val identifiers = identifierRows.groupBy(_.getAs[String]("entity_id"))
+    val studies = studyRows.groupBy(_.getAs[String]("dataset_id"))
+    val groups = groupRows.groupBy(_.getAs[String]("study_id"))
+    val members = memberRows.groupBy(_.getAs[String]("group_id"))
     val materialById = materials.map(r => r.getAs[String]("material_id") -> r).toMap
-    val anatomies = rows(g.anatomicalParts).map(r => r.getAs[String]("anatomy_id") -> r).toMap
-    val chars = rows(g.characteristics).groupBy(_.getAs[String]("material_id"))
-    val diseases = rows(g.diseases).groupBy(_.getAs[String]("material_id"))
-    val dims = rows(g.dimensions).groupBy(_.getAs[String]("owner_id"))
-    val dists = rows(g.distributions).groupBy(_.getAs[String]("dataset_id"))
-    val acqs = rows(g.dataAcquisitions).groupBy(_.getAs[String]("dataset_id"))
+    val anatomies = anatomyRows.map(r => r.getAs[String]("anatomy_id") -> r).toMap
+    val chars = charRows.groupBy(_.getAs[String]("material_id"))
+    val diseases = diseaseRows.groupBy(_.getAs[String]("material_id"))
+    val dims = dimRows.groupBy(_.getAs[String]("owner_id"))
+    val dists = distRows.groupBy(_.getAs[String]("dataset_id"))
+    val acqs = acqRows.groupBy(_.getAs[String]("dataset_id"))
     // O2/isAbout: name-sorted EXTRACT materials, truncated to N when set.
     // Both reference pipelines put the DNA/RNA-extract nodes in isAbout —
     // each deriving from its biological sample, which derives from its
@@ -122,201 +155,141 @@ object DatsJsonWriter {
         studyLinked.map(_.getAs[String]("dataset_id")).mkString(","))
     val children = datasets.filter(_.getAs[String]("parent_dataset_id") != null)
       .groupBy(_.getAs[String]("parent_dataset_id"))
-
-    def materialNode(mid: String): ObjectNode = {
-      val r = materialById(mid)
-      if (!em.full(mid)) return em.idref(mid)
-      val n = em.node("Material", mid)
-      n.put("name", r.getAs[String]("name"))
-      Option(r.getAs[String]("description")).foreach(n.put("description", _))
-      val roles = mapper.createArrayNode()
-      val role = mapper.createObjectNode()
-      role.put("value", r.getAs[String]("role"))
-      roles.add(role)
-      n.set[ObjectNode]("roles", roles)
-      chars.get(mid).foreach { cs =>
-        val arr = mapper.createArrayNode()
-        cs.sortBy(c => (c.getAs[String]("name"), c.getAs[String]("value"))).foreach { c =>
-          val cv = mapper.createObjectNode()
-          cv.put("name", c.getAs[String]("name"))
-          // harmonized phenotype dimensions carry the reference's fixed
-          // descriptions (P9, ccmm/topmed/subjects.py:55-93)
-          graft.etl.Harmonize.Descriptions.get(c.getAs[String]("name"))
-            .foreach(cv.put("description", _))
-          Option(c.getAs[String]("var_acc")).foreach(cv.put("identifier", _))
-          cv.put("value", c.getAs[String]("value"))
-          arr.add(cv)
-        }
-        n.set[ObjectNode]("characteristics", arr)
-      }
-      diseases.get(mid).foreach { ds =>
-        // P9 bearerOfDisease (subjects.py:96-110): Disease node with DOID
-        // identifier, OBO alternate id, and yes/no diseaseStatus
-        val arr = mapper.createArrayNode()
-        ds.sortBy(_.getAs[String]("name")).foreach { d =>
-          val dn = mapper.createObjectNode()
-          dn.put("name", d.getAs[String]("name"))
-          val idn = mapper.createObjectNode()
-          idn.put("identifier", d.getAs[String]("disease_id"))
-          idn.put("identifierSource", "Disease Ontology")
-          dn.set[ObjectNode]("identifier", idn)
-          val altArr = mapper.createArrayNode()
-          val alt = mapper.createObjectNode()
-          alt.put("identifier", "http://purl.obolibrary.org/obo/" +
-            d.getAs[String]("disease_id").replace(":", "_"))
-          alt.put("identifierSource", "Disease Ontology")
-          altArr.add(alt)
-          dn.set[ObjectNode]("alternateIdentifiers", altArr)
-          val st = mapper.createObjectNode()
-          st.put("value", d.getAs[String]("status"))
-          dn.set[ObjectNode]("diseaseStatus", st)
-          arr.add(dn)
-        }
-        n.set[ObjectNode]("bearerOfDisease", arr)
-      }
-      Option(r.getAs[String]("anatomy_id")).foreach { aid =>
-        val a = anatomies(aid)
-        val an = if (em.full(aid)) {
-          val x = em.node("AnatomicalPart", aid)
-          x.put("name", a.getAs[String]("name"))
-          x.put("identifier", a.getAs[String]("uberon_id"))
-          x
-        } else em.idref(aid)
-        n.set[ObjectNode]("anatomicalPart", an)
-      }
-      Option(r.getAs[String]("derives_from")).foreach { df =>
-        val arr = mapper.createArrayNode()
-        arr.add(materialNode(df))
-        n.set[ObjectNode]("derivesFrom", arr)
-      }
-      n
-    }
-
-    def datasetNode(r: Row): ObjectNode = {
-      val id = r.getAs[String]("dataset_id")
-      if (!em.full(id)) return em.idref(id)
-      val n = em.node("Dataset", id)
-      n.put("title", r.getAs[String]("title"))
-      Option(r.getAs[String]("description")).foreach(n.put("description", _))
-      Option(r.getAs[String]("version")).foreach(n.put("version", _))
-      identifiers.get(id).foreach { ids =>
-        val idn = mapper.createObjectNode()
-        idn.put("identifier", ids.head.getAs[String]("identifier"))
-        idn.put("identifierSource", ids.head.getAs[String]("identifier_source"))
-        n.set[ObjectNode]("identifier", idn)
-      }
-      Option(r.getAs[String]("data_type")).foreach { dt =>
-        val types = mapper.createArrayNode()
-        val t = mapper.createObjectNode()
-        t.put("value", dt)
-        types.add(t)
-        n.set[ObjectNode]("types", types)
-      }
-      // study datasets carry the (possibly O2-truncated) sample list
-      // (gtex_v7_to_dats.py:379 `isAbout`)
-      if (r.getAs[String]("study_id") != null && isAboutIds.nonEmpty) {
-        val arr = mapper.createArrayNode()
-        isAboutIds.foreach(mid => arr.add(materialNode(mid)))
-        n.set[ObjectNode]("isAbout", arr)
-      }
-      dims.get(id).foreach { ds =>
-        val arr = mapper.createArrayNode()
-        ds.sortBy(_.getAs[String]("dim_id")).foreach { d =>
-          val dn = if (em.full(d.getAs[String]("dim_id"))) {
-            val x = em.node("Dimension", d.getAs[String]("dim_id"))
-            x.put("name", d.getAs[String]("name"))
-            Option(d.getAs[String]("var_acc")).foreach(x.put("identifier", _))
-            Option(d.getAs[String]("description")).foreach(x.put("description", _))
-            Option(d.getAs[String]("value")).foreach(x.put("values", _))
-            x
-          } else em.idref(d.getAs[String]("dim_id"))
-          arr.add(dn)
-        }
-        n.set[ObjectNode]("dimensions", arr)
-      }
-      dists.get(id).foreach { ds =>
-        val arr = mapper.createArrayNode()
-        ds.sortBy(_.getAs[String]("access_url")).foreach { d =>
-          val dn = mapper.createObjectNode()
-          dn.put("@type", "DatasetDistribution")
-          val acc = mapper.createObjectNode()
-          acc.put("landingPage", d.getAs[String]("access_url"))
-          dn.set[ObjectNode]("access", acc)
-          if (!d.isNullAt(d.fieldIndex("size"))) dn.put("size", d.getAs[Long]("size"))
-          Option(d.getAs[String]("doi")).foreach(dn.put("identifier", _))
-          // index-file DOI as a relatedIdentifier (the reference stores
-          // the .crai DOI there, rdflib_tabular_dump.py:199-212)
-          Option(d.getAs[String]("index_doi")).foreach { idx =>
-            val rel = mapper.createArrayNode()
-            val rn = mapper.createObjectNode()
-            rn.put("@type", "RelatedIdentifier")
-            rn.put("identifier", idx)
-            rel.add(rn)
-            dn.set[ObjectNode]("relatedIdentifiers", rel)
-          }
-          arr.add(dn)
-        }
-        n.set[ObjectNode]("distributions", arr)
-      }
-      acqs.get(id).foreach { as =>
-        val pb = mapper.createObjectNode()
-        pb.put("@type", "DataAcquisition")
-        val inputs = mapper.createArrayNode()
-        as.sortBy(_.getAs[String]("input_material_id")).foreach { a =>
-          inputs.add(materialNode(a.getAs[String]("input_material_id")))
-        }
-        pb.set[ObjectNode]("input", inputs)
-        require(!n.has("producedBy"),
-          s"dataset $id already has producedBy; would drop the DataAcquisition")
-        n.set[ObjectNode]("producedBy", pb)
-      }
-      studies.get(id).map(_.head).foreach { s =>
-        val sid = s.getAs[String]("study_id")
-        val sn = if (em.full(sid)) {
-          val x = em.node("Study", sid)
-          x.put("name", s.getAs[String]("name"))
-          val parts = mapper.createArrayNode()
-          groups.getOrElse(sid, Seq.empty).sortBy(_.getAs[String]("name")).foreach { gr =>
-            val gid = gr.getAs[String]("group_id")
-            val gn = em.node("StudyGroup", gid)
-            gn.put("name", gr.getAs[String]("name"))
-            val mem = mapper.createArrayNode()
-            // O1: deterministic emission order — members sorted by name
-            members.getOrElse(gid, Seq.empty)
-              .map(m => materialById(m.getAs[String]("material_id")))
-              .sortBy(_.getAs[String]("name"))
-              .foreach(m => mem.add(materialNode(m.getAs[String]("material_id"))))
-            gn.set[ObjectNode]("hasMember", mem)
-            parts.add(gn)
-          }
-          x.set[ObjectNode]("hasPart", parts)
-          x
-        } else em.idref(sid)
-        // disjoint today (acquisitions on file datasets, studies on the
-        // study dataset) — fail loudly rather than silently overwrite
-        require(!n.has("producedBy"),
-          s"dataset $id already has producedBy; would drop the prior value")
-        n.set[ObjectNode]("producedBy", sn)
-      }
-      children.get(id).foreach { cs =>
-        val arr = mapper.createArrayNode()
-        cs.sortBy(_.getAs[String]("title")).foreach(c => arr.add(datasetNode(c)))
-        n.set[ObjectNode]("hasPart", arr)
-      }
-      n
-    }
-
     val roots = datasets.filter(_.getAs[String]("parent_dataset_id") == null)
       .sortBy(_.getAs[String]("title"))
-    val out: ArrayNode = mapper.createArrayNode()
-    roots.foreach(r => out.add(datasetNode(r)))
-    val root = if (roots.length == 1) out.get(0) else out
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
-  }
 
-  def write(g: EntityGraph, path: String,
-            maxOutputSamples: Option[Int] = None): Unit = {
-    val s = render(g, maxOutputSamples)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), s)
+    out => {
+      val gen = factory.createGenerator(out).useDefaultPrettyPrinter()
+      val em = new Emitter(gen)
+      import em.{arr, obj, opt, str}
+
+      def material(mid: String): Unit = {
+        val r = materialById(mid)
+        if (!em.full(mid)) return em.idref(mid)
+        em.node("Material", mid) {
+          str("name", r.getAs[String]("name"))
+          opt("description", r.getAs[String]("description"))
+          arr("roles")(obj(str("value", r.getAs[String]("role"))))
+          chars.get(mid).foreach(cs => arr("characteristics") {
+            cs.sortBy(c => (c.getAs[String]("name"), c.getAs[String]("value"))).foreach(c => obj {
+              str("name", c.getAs[String]("name"))
+              // harmonized phenotype dimensions carry the reference's fixed
+              // descriptions (P9, ccmm/topmed/subjects.py:55-93)
+              graft.etl.Harmonize.Descriptions.get(c.getAs[String]("name")).foreach(str("description", _))
+              opt("identifier", c.getAs[String]("var_acc"))
+              str("value", c.getAs[String]("value"))
+            })
+          })
+          // P9 bearerOfDisease (subjects.py:96-110): Disease node with DOID
+          // identifier, OBO alternate id, and yes/no diseaseStatus
+          diseases.get(mid).foreach(ds => arr("bearerOfDisease") {
+            ds.sortBy(_.getAs[String]("name")).foreach(d => obj {
+              str("name", d.getAs[String]("name"))
+              obj("identifier") {
+                str("identifier", d.getAs[String]("disease_id"))
+                str("identifierSource", "Disease Ontology")
+              }
+              arr("alternateIdentifiers")(obj {
+                str("identifier", "http://purl.obolibrary.org/obo/" +
+                  d.getAs[String]("disease_id").replace(":", "_"))
+                str("identifierSource", "Disease Ontology")
+              })
+              obj("diseaseStatus")(str("value", d.getAs[String]("status")))
+            })
+          })
+          Option(r.getAs[String]("anatomy_id")).foreach { aid =>
+            val a = anatomies(aid)
+            gen.writeFieldName("anatomicalPart")
+            if (em.full(aid)) em.node("AnatomicalPart", aid) {
+              str("name", a.getAs[String]("name"))
+              str("identifier", a.getAs[String]("uberon_id"))
+            } else em.idref(aid)
+          }
+          Option(r.getAs[String]("derives_from")).foreach(df => arr("derivesFrom")(material(df)))
+        }
+      }
+
+      def dataset(r: Row): Unit = {
+        val id = r.getAs[String]("dataset_id")
+        if (!em.full(id)) return em.idref(id)
+        em.node("Dataset", id) {
+          str("title", r.getAs[String]("title"))
+          opt("description", r.getAs[String]("description"))
+          opt("version", r.getAs[String]("version"))
+          identifiers.get(id).foreach(ids => obj("identifier") {
+            str("identifier", ids.head.getAs[String]("identifier"))
+            str("identifierSource", ids.head.getAs[String]("identifier_source"))
+          })
+          Option(r.getAs[String]("data_type")).foreach(dt => arr("types")(obj(str("value", dt))))
+          // study datasets carry the (possibly O2-truncated) sample list
+          // (gtex_v7_to_dats.py:379 `isAbout`)
+          if (r.getAs[String]("study_id") != null && isAboutIds.nonEmpty)
+            arr("isAbout")(isAboutIds.foreach(material))
+          dims.get(id).foreach(ds => arr("dimensions") {
+            ds.sortBy(_.getAs[String]("dim_id")).foreach { d =>
+              val did = d.getAs[String]("dim_id")
+              if (em.full(did)) em.node("Dimension", did) {
+                str("name", d.getAs[String]("name"))
+                opt("identifier", d.getAs[String]("var_acc"))
+                opt("description", d.getAs[String]("description"))
+                opt("values", d.getAs[String]("value"))
+              } else em.idref(did)
+            }
+          })
+          dists.get(id).foreach(ds => arr("distributions") {
+            ds.sortBy(_.getAs[String]("access_url")).foreach(d => obj {
+              str("@type", "DatasetDistribution")
+              obj("access")(str("landingPage", d.getAs[String]("access_url")))
+              if (!d.isNullAt(d.fieldIndex("size"))) gen.writeNumberField("size", d.getAs[Long]("size"))
+              opt("identifier", d.getAs[String]("doi"))
+              // index-file DOI as a relatedIdentifier (the reference stores
+              // the .crai DOI there, rdflib_tabular_dump.py:199-212)
+              Option(d.getAs[String]("index_doi")).foreach(idx => arr("relatedIdentifiers")(obj {
+                str("@type", "RelatedIdentifier")
+                str("identifier", idx)
+              }))
+            })
+          })
+          // one producedBy per dataset: disjoint today (acquisitions on
+          // file datasets, studies on the study dataset) — fail loudly
+          // rather than silently drop one
+          val study = studies.get(id).map(_.head)
+          require(!(acqs.contains(id) && study.nonEmpty),
+            s"dataset $id already has producedBy; would drop the prior value")
+          acqs.get(id).foreach(as => obj("producedBy") {
+            str("@type", "DataAcquisition")
+            arr("input")(as.sortBy(_.getAs[String]("input_material_id"))
+              .foreach(a => material(a.getAs[String]("input_material_id"))))
+          })
+          study.foreach { s =>
+            val sid = s.getAs[String]("study_id")
+            gen.writeFieldName("producedBy")
+            if (em.full(sid)) em.node("Study", sid) {
+              str("name", s.getAs[String]("name"))
+              arr("hasPart")(groups.getOrElse(sid, Seq.empty).sortBy(_.getAs[String]("name")).foreach { gr =>
+                val gid = gr.getAs[String]("group_id")
+                em.node("StudyGroup", gid) {
+                  str("name", gr.getAs[String]("name"))
+                  // O1: deterministic emission order — members sorted by name
+                  arr("hasMember")(members.getOrElse(gid, Seq.empty)
+                    .map(m => materialById(m.getAs[String]("material_id")))
+                    .sortBy(_.getAs[String]("name"))
+                    .foreach(m => material(m.getAs[String]("material_id"))))
+                }
+              })
+            } else em.idref(sid)
+          }
+          children.get(id).foreach(cs => arr("hasPart")(cs.sortBy(_.getAs[String]("title")).foreach(dataset)))
+        }
+      }
+
+      if (roots.length == 1) dataset(roots.head)
+      else {
+        gen.writeStartArray()
+        roots.foreach(dataset)
+        gen.writeEndArray()
+      }
+      gen.close()
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
@@ -8,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
+
+import graft.Checkpoints
 
 /** The one round-loop lifecycle of the iterative operators: the k-NN
   * descent, PageRank, k-means, label propagation and star contraction.
@@ -43,13 +44,13 @@ import org.apache.spark.sql.types.StructType
   * lazily chained Spark rounds) logs one record for it ([[record]]).
   *
   * A runner lives for one operator call ([[Fixpoint.run]] /
-  * [[Fixpoint.using]]): on exit it unpersists every checkpoint it made
-  * except those the returned frames read; on a throw, all of them.
+  * [[Fixpoint.using]]) and keeps its checkpoints in one
+  * [[graft.Checkpoints]] scope: on exit it unpersists every checkpoint it
+  * made except those the returned frames read; on a throw, all of them.
   */
-private[graft] final class Fixpoint private (val loop: String, val session: SparkSession) {
+private[graft] final class Fixpoint private (val loop: String, val session: SparkSession,
+                                             scope: Checkpoints) {
   import Fixpoint._
-
-  private val made = mutable.ArrayBuffer.empty[RDD[_]]
 
   /** Whether a state of `bytes` fits the driver tail. */
   def fitsDriver(bytes: Long): Boolean = {
@@ -59,17 +60,13 @@ private[graft] final class Fixpoint private (val loop: String, val session: Spar
 
   /** A lazy local checkpoint of `df`, owned by this runner. The first
     * action that reads all of it materializes it. */
-  def checkpoint(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint(eager = false)
-    made ++= rddsOf(c)
-    c
-  }
+  def checkpoint(df: DataFrame): DataFrame = scope.lazily(df)
 
   /** [[checkpoint]] materialized now, with its row count: one job, the
     * same as an eager `localCheckpoint`, that also counts. */
   def cut(df: DataFrame): (DataFrame, Long) = {
     val c = checkpoint(df)
-    (c, rddsOf(c).head.count())
+    (c, Checkpoints.rddsOf(c).head.count())
   }
 
   /** The two long columns of `df` (`rows` rows, `bytesPerRow` of loop
@@ -95,16 +92,18 @@ private[graft] final class Fixpoint private (val loop: String, val session: Spar
   def onSpark[S](init: S, rounds: Int, converging: Boolean, partitionRows: Option[Long] = None)
                 (live: S => Seq[DataFrame])(step: (S, Int) => Step[S]): S = {
     def body = iterate("spark", init, rounds, converging) { (s, t) =>
-      val superseded = live(s).flatMap(stateRdds)
-      val mark = made.size
+      val superseded = live(s).flatMap(stateRdds).map(_.id).toSet
+      val before = scope.owned.map(_.id).toSet
       val r = step(s, t)
       val kept = live(r.state).flatMap(stateRdds)
-      kept.filter(isMade).foreach(rdd => require(rdd.isCheckpointed,
+      val owned = scope.owned.map(_.id).toSet
+      kept.filter(rdd => owned(rdd.id)).foreach(rdd => require(rdd.isCheckpointed,
         s"$loop round $t: state checkpoint ${rdd.id} is not materialized, " +
           "so its predecessor cannot be released"))
       val keep = kept.map(_.id).toSet
-      (superseded ++ made.drop(mark)).filter(rdd => isMade(rdd) && !keep(rdd.id))
-        .foreach(release)
+      // the superseded state and whatever this round checkpointed and no
+      // longer needs
+      scope.releaseWhere(rdd => (superseded(rdd.id) || !before(rdd.id)) && !keep(rdd.id))
       r
     }
     partitionRows.fold(body)(n => IterLoop.withLoopPartitions(session, Some(n))(body))
@@ -145,17 +144,6 @@ private[graft] final class Fixpoint private (val loop: String, val session: Spar
     own(df.queryExecution.analyzed)
   }
 
-  private def isMade(rdd: RDD[_]): Boolean = made.exists(_.id == rdd.id)
-
-  private def release(rdd: RDD[_]): Unit = {
-    rdd.unpersist(blocking = false)
-    made.filterInPlace(_.id != rdd.id)
-  }
-
-  private def releaseExcept(keep: Seq[DataFrame]): Unit = {
-    val ids = keep.flatMap(rddsOf).map(_.id).toSet
-    made.toList.filterNot(rdd => ids(rdd.id)).foreach(release)
-  }
 }
 
 private[graft] object Fixpoint {
@@ -181,16 +169,8 @@ private[graft] object Fixpoint {
 
   /** [[run]] for a result of several frames; `backing` lists them. */
   def using[T](loop: String, spark: SparkSession)(body: Fixpoint => T)
-              (backing: T => Seq[DataFrame]): T = {
-    val fp = new Fixpoint(loop, spark)
-    var out: Option[T] = None
-    try { out = Some(body(fp)); out.get }
-    finally fp.releaseExcept(out.toSeq.flatMap(backing))
-  }
-
-  /** The checkpoint RDDs a frame reads. */
-  def rddsOf(df: DataFrame): Seq[RDD[_]] =
-    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+              (backing: T => Seq[DataFrame]): T =
+    Checkpoints.using(scope => body(new Fixpoint(loop, spark, scope)))(backing)
 
   /** A frame over rows built on the driver. */
   def frame(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =

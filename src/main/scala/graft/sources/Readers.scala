@@ -17,8 +17,10 @@ object Readers {
     *         study_accession / table_accession extracted from comments.
     */
   def commentTsv(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val data = spark.read
-      .option("sep", "\t").option("header", "true").option("comment", "#")
+    // the header is read on the driver, so no header-inference job runs
+    val options = Map("sep" -> "\t", "header" -> "true", "comment" -> "#")
+    val data = spark.read.options(options)
+      .schema(ValidatedTsv.stringSchema(ValidatedTsv.header(spark, path, options)))
       .csv(path)
     val comments = spark.read.text(path)
       .filter(col("value").startsWith("#"))

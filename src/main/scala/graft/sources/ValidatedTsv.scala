@@ -100,23 +100,32 @@ object ValidatedTsv {
 
   private val CellViolations = "__cell_violations"
 
+  private[sources] def stringSchema(names: Seq[String]): StructType =
+    StructType(names.map(StructField(_, StringType)))
+
   private def isEmptyCell(c: Column): Column = c.isNull || c === ""
 
-  /** The file's column names as the CSV reader itself would take them from
-    * the header line: first non-empty line, parsed with the reader's own
-    * separator and quote rules, made safe the reader's way. Read on the
-    * driver, so no header-inference job runs. */
-  private def header(spark: SparkSession, file: String, options: CSVOptions): Seq[String] = {
-    val p = new Path(new java.net.URI(file))
-    val in = new BufferedReader(new InputStreamReader(
-      p.getFileSystem(spark.sessionState.newHadoopConf()).open(p), StandardCharsets.UTF_8))
-    try {
-      val lines = Iterator.continually(in.readLine()).takeWhile(_ != null)
-      CSVUtils.filterCommentAndEmpty(lines, options).nextOption().fold(Seq.empty[String]) { l =>
-        CSVUtils.makeSafeHeader(new CsvParser(options.asParserSettings).parseLine(l),
-          spark.sessionState.conf.caseSensitiveAnalysis, options).toSeq
-      }
-    } finally in.close()
+  /** The column names the CSV reader would take from the header of the
+    * first file `path` resolves to, under the reader options `options`:
+    * first line that is neither empty nor (with a `comment` option) a
+    * comment, parsed with the reader's own separator and quote rules, made
+    * safe the reader's way. Read on the driver, so no header-inference job
+    * runs. */
+  private[sources] def header(spark: SparkSession, path: String,
+                              options: Map[String, String]): Seq[String] = {
+    val csv = new CSVOptions(options, false, spark.sessionState.conf.sessionLocalTimeZone)
+    spark.read.text(path).inputFiles.headOption.fold(Seq.empty[String]) { file =>
+      val p = new Path(new java.net.URI(file))
+      val in = new BufferedReader(new InputStreamReader(
+        p.getFileSystem(spark.sessionState.newHadoopConf()).open(p), StandardCharsets.UTF_8))
+      try {
+        val lines = Iterator.continually(in.readLine()).takeWhile(_ != null)
+        CSVUtils.filterCommentAndEmpty(lines, csv).nextOption().fold(Seq.empty[String]) { l =>
+          CSVUtils.makeSafeHeader(new CsvParser(csv.asParserSettings).parseLine(l),
+            spark.sessionState.conf.caseSensitiveAnalysis, csv).toSeq
+        }
+      } finally in.close()
+    }
   }
 
   /** Parse `path` once into an eager checkpoint of the mapped data and each
@@ -124,18 +133,13 @@ object ValidatedTsv {
   def read(spark: SparkSession, path: String, specs: Seq[ColumnSpec],
            primaryKey: String, sep: String = "\t"): Result = {
     val names = specs.map(_.name)
-    val raw = spark.read
-      .option("sep", sep).option("header", "true")
-      // every column arrives as string — the reference keeps strings too
-      // (SURVEY.md §1.2); typing happens in downstream projections
-      .schema(StructType(names.map(StructField(_, StringType))))
-      .csv(path)
-
+    val options = Map("sep" -> sep, "header" -> "true")
     // Header assertion (parsers/util.py:42-47): names AND order.
-    val options = new CSVOptions(Map("sep" -> sep, "header" -> "true"), false,
-      spark.sessionState.conf.sessionLocalTimeZone)
-    val actual = raw.inputFiles.headOption.fold(Seq.empty[String])(header(spark, _, options))
+    val actual = header(spark, path, options)
     if (actual != names) throw HeaderMismatchException(names, actual)
+    // every column arrives as string — the reference keeps strings too
+    // (SURVEY.md §1.2); typing happens in downstream projections
+    val raw = spark.read.options(options).schema(stringSchema(names)).csv(path)
 
     def cellViolation(s: ColumnSpec): Column = {
       val c = col(s.name)

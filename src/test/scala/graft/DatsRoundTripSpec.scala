@@ -18,17 +18,7 @@ class DatsRoundTripSpec extends SparkTestBase {
 
   private def res(name: String): String = getClass.getResource(s"/gtex/$name").getPath
 
-  private lazy val graph = GtexEtl.build(spark, GtexEtl.Inputs(
-    subjectsPath = res("GTEx_v7_Annotations_SubjectPhenotypesDS.txt"),
-    samplesPath = res("GTEx_v7_Annotations_SampleAttributesDS.txt"),
-    wgsManifestPath = res("wgs_cram_manifest.txt"),
-    rnaseqManifestPath = res("rnaseq_cram_manifest.txt"),
-    doiPath = res("doi_manifest.txt"),
-    dbgapDataDictPath = Some(res(
-      "phs000424.v7.pht002742.v7.p2.GTEx_Subject.data_dict.xml")),
-    dbgapStudiesScrapePath = Some(res("dbgap_studies.txt")),
-    dbgapVarReportPath = Some(res(
-      "dbgap_dir/phs000424.v7.pht002742.v7.p2.GTEx_Subject.var_report.xml"))))
+  private lazy val graph = GtexEtl.build(spark, GtexFixture.inputs)
 
   private def queries(g: GtexEtl.EntityGraph): Seq[(String, DataFrame)] = Seq(
     "q1" -> DatsQueries.listSecondLevelDatasets(g, Seq(GtexEtl.TopDatasetTitle)),
@@ -56,6 +46,19 @@ class DatsRoundTripSpec extends SparkTestBase {
     val path = java.nio.file.Files.createTempDirectory("dats_rt").toString + "/gtex.json"
     DatsJsonWriter.write(graph, path)
     assertSameAnswers(DatsJsonReader.read(spark, path))
+  }
+
+  test("K1: the GTEx fixture document, overlay included, has its golden bytes") {
+    // golden recorded from the tree-building writer over the
+    // union-per-column build; the streaming writer must match it byte
+    // for byte
+    val path = java.nio.file.Files.createTempDirectory("dats_pin").toString + "/gtex.json"
+    val over = GtexFixture.overlay(spark, graph)
+    DatsJsonWriter.write(over, path)
+    assert(Digests.sha256File(path) ===
+      "979ebc8e0d151856cf67a290260ef20720a8d45835899ef2ec2e6b5be7b4d114")
+    assert(DatsJsonWriter.render(over).getBytes("UTF-8") ===
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
   }
 
   test("EntityStore: all seven queries answer identically over materialized parquet") {

@@ -121,6 +121,16 @@ class EtlSpec extends SparkTestBase {
     assert(a.getString(1) === "pht003641.v2.p2")
   }
 
+  test("S6: the header is read on the driver — no job runs before the data is used") {
+    assert(fileScanJobs {
+      Readers.commentTsv(spark, res("restricted_subject.txt"))
+      Readers.commentTsv(spark, res("restricted_gtex_subject_phenotypes.txt"))
+    } === 0)
+    val (data, _) = Readers.commentTsv(spark, res("restricted_gtex_subject_phenotypes.txt"))
+    assert(data.columns.toSeq ===
+      Seq("dbGaP_Subject_ID", "SUBJID", "GENDER", "VISIT_AGE", "HYPERTENSION"))
+  }
+
   test("S11/R5: GFF3 scan filters source, maps attributes, builds adjacency") {
     val feats = Readers.gff3(spark, res("annot.gff3"),
       expectedGenomeBuild = Some("GRCm38-C57BL/6J"))
@@ -209,6 +219,72 @@ class EtlSpec extends SparkTestBase {
       assert(e.getMessage.contains("BADID"))
       assert(!e.getMessage.contains("NOFREEZE"))
     }
+  }
+
+  // Digests.table of the twelve tables, in EntityGraph field order.
+  // Goldens recorded from the union-per-column build, which the
+  // single-pass build must reproduce row for row.
+  private val minimalDigests = Seq("1fee27a9ad09d1a6", "aff3723656ec5a31",
+    "8da36e3ae06f81fd", "86e96de5d248ff2c", "5b029f858b65bcf6", "17ad4ccc369d84e8",
+    "3f3c9ec0b7b77c29", "692b9fd91bc94c29", "daf907c02b4f8059", "ee9e370f5d399a3d",
+    "48bc37155d34a444", "6e4777a75767ee03")
+  private val fullDigests = Seq("3ff011d176c9c3ee", "f23e35a960213e4f",
+    "8da36e3ae06f81fd", "86e96de5d248ff2c", "5b029f858b65bcf6", "17ad4ccc369d84e8",
+    "3f3c9ec0b7b77c29", "692b9fd91bc94c29", "fe83625aa94b467f", "ee9e370f5d399a3d",
+    "48bc37155d34a444", "6e4777a75767ee03")
+  private val overlayDigests = Seq("3ff011d176c9c3ee", "f23e35a960213e4f",
+    "8da36e3ae06f81fd", "cc113cfe7ddf15ae", "dfa1f08a3354d5fa", "17ad4ccc369d84e8",
+    "3f3c9ec0b7b77c29", "7b303dcd55e96d6c", "fe83625aa94b467f", "ee9e370f5d399a3d",
+    "48bc37155d34a444", "414a3c1dd2c4655b")
+
+  test("ETL: every table matches its golden digest, after build and after the overlay") {
+    assert(graph.tables.map(Digests.table) === minimalDigests)
+    val full = GtexEtl.build(spark, GtexFixture.inputs)
+    assert(full.tables.map(Digests.table) === fullDigests)
+    val over = GtexFixture.overlay(spark, full)
+    assert(over.tables.map(Digests.table) === overlayDigests)
+    over.unpersist()
+    full.unpersist()
+  }
+
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def checkpointIds(tables: Seq[org.apache.spark.sql.DataFrame]): Set[Int] =
+    tables.flatMap(Checkpoints.rddsOf).map(_.id).toSet
+
+  test("ETL: build and overlay keep only their returned tables' checkpoints") {
+    val before = persisted
+    val full = GtexEtl.build(spark, GtexFixture.inputs)
+    assert(persisted -- before === checkpointIds(full.tables))
+    assert(checkpointIds(full.tables).size === 12)
+    val over = GtexFixture.overlay(spark, full)
+    val added = Seq(over.characteristics, over.studyGroups, over.groupMembers, over.diseases)
+    assert(persisted -- before === checkpointIds(full.tables ++ added))
+    assert(checkpointIds(added).size === 4)
+    over.unpersist()
+    full.unpersist()
+    assert(persisted === before)
+  }
+
+  test("ETL: a failing gate leaves no checkpoint behind") {
+    graph // built before the baseline is taken
+    val before = persisted
+    val orphan = editedInputs(Map("GTEx_v7_Annotations_SampleAttributesDS.txt" -> Seq(
+      "GTEX-9999-0001-SM-Z\t0\tB1\tBlood\tWhole Blood\t0000178\tDNA isolation_Whole Blood\tWGS\t\t\t")))
+    intercept[IllegalArgumentException](GtexEtl.build(spark, orphan))
+    assert(persisted === before)
+    val invalid = editedInputs(Map.empty,
+      Map("GTEx_v7_Annotations_SubjectPhenotypesDS.txt" -> "subjects_bad.txt"))
+    intercept[ValidatedTsv.ValidationFailedException](GtexEtl.build(spark, invalid))
+    assert(persisted === before)
+    // an overlay whose consent gate fails releases its own intermediates
+    import spark.implicits._
+    val meta = Seq(("1", "General Research Use (GRU)", 9L), ("2", "Disease-Specific (DS)", 1L))
+      .toDF("CONSENT", "consent_name", "declared_count")
+    intercept[IllegalArgumentException](GtexEtl.restrictedOverlay(spark, graph,
+      res("restricted_gtex_subject.txt"), res("restricted_gtex_subject_phenotypes.txt"),
+      consentMeta = Some(meta)))
+    assert(persisted -- before === Set.empty)
   }
 
   test("ETL: reconciliation tallies (J2)") {

@@ -139,7 +139,7 @@ class FixpointParitySpec extends SparkTestBase {
       }
       Caches.release()
       // the checkpoints the returned frames read that the loop made
-      val backing = out.flatMap(Fixpoint.rddsOf).filterNot(rdd => before(rdd.id))
+      val backing = out.flatMap(Checkpoints.rddsOf).filterNot(rdd => before(rdd.id))
       assert(backing.nonEmpty, s"$name: the Spark path returned no checkpointed frame")
       assert(persistent -- before === backing.map(_.id).toSet, s"$name: checkpoints left behind")
       backing.foreach(_.unpersist(blocking = false))

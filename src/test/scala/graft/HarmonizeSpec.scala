@@ -77,4 +77,29 @@ class HarmonizeSpec extends SparkTestBase {
     assert(Harmonize.Descriptions("Systolic blood pressure") ===
       "Systolic blood pressure of subject, measured in mmHg")
   }
+
+  test("case mapping: the session's upper/lower give ICU's bytes on the special cases") {
+    // the session maps case through the JVM, not ICU (Tables.session);
+    // expected values recorded with spark.sql.icu.caseMappings.enabled=true
+    assert(spark.conf.get("spark.sql.icu.caseMappings.enabled") === "false")
+    val probes = Seq(
+      // input -> (upper, lower)
+      "\u00df" -> ("\u0053\u0053", "\u00df"), // ß
+      "\ufb01" -> ("\u0046\u0049", "\ufb01"), // ﬁ ligature
+      "\u01c6" -> ("\u01c4", "\u01c6"), // ǆ digraph
+      "\u017f" -> ("\u0053", "\u017f"), // long s
+      "\u0390" -> ("\u0399\u0308\u0301", "\u0390"), // ΐ
+      "\u0130" -> ("\u0130", "\u0069\u0307"), // İ
+      "\u039f\u0394\u039f\u03a3" -> ("\u039f\u0394\u039f\u03a3", "\u03bf\u03b4\u03bf\u03c2"), // final Σ
+      "\u03bf\u03b4\u03bf\u03c2" -> ("\u039f\u0394\u039f\u03a3", "\u03bf\u03b4\u03bf\u03c2"),
+      "\u1e9e" -> ("\u1e9e", "\u00df"), // capital sharp s
+      "i" -> ("I", "i"))
+    import spark.implicits._
+    val got = probes.map(_._1).toDF("s")
+      .select(col("s"), upper(col("s")), lower(col("s"))).collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+    probes.foreach { case (in, want) =>
+      assert(got(in) === want, s"case mapping of ${in.map(c => f"U+${c.toInt}%04X").mkString(" ")}")
+    }
+  }
 }

@@ -172,4 +172,13 @@ class TopmedPipelineSpec extends SparkTestBase {
     assert(json.contains("Trans-Omics for Precision Medicine (TOPMed)"))
     assert(json === DatsJsonWriter.render(graph)) // deterministic
   }
+
+  test("K1: the TOPMed fixture document has its golden bytes") {
+    // golden recorded from the tree-building writer; the streaming writer
+    // must match it byte for byte
+    val path = java.nio.file.Files.createTempDirectory("topmed_pin").toString + "/topmed.json"
+    DatsJsonWriter.write(graph, path)
+    assert(Digests.sha256File(path) ===
+      "2a9ac85a3f479e1b7d9e0dc278fd8567fcc957167d518e88577396d17f839ff7")
+  }
 }

@@ -1,32 +1,10 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import BenchKit.jstr
 object Bench {
-
-  /** JSON-escape a string for the hand-built result lines. */
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // TopKEdgesAgg groups are corpus-sized — see Tables.session
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 22).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Tables.session("graft-bench")
     // ERROR, not WARN: every localCheckpoint emits a lineage warning, and
     // at 69 queries the flood buries the one JSON result line the driver
     // tail-parses (r9/r10: parsed null three rounds running)
@@ -70,8 +48,8 @@ object Bench {
         .split("\\s+").take(3).toSeq.map(_.toDouble)
       catch { case _: Throwable => Seq.empty }
     // the ONE calibration kernel ([[BenchKit.calibSec]]), shared with
-    // the JSONL instruments so every artifact's calib_sec measures the
-    // same fixed single-thread work and stays cross-comparable
+    // perfbench so every artifact's calib_sec measures the same fixed
+    // single-thread work and stays cross-comparable
     def calibSec(): Double = BenchKit.calibSec(spark)
     def sentinelJson(load: Seq[Double], calib: Double): String =
       s"""{"loadavg":[${load.mkString(",")}],"calib_sec":$calib}"""

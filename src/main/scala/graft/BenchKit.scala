@@ -1,40 +1,33 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared scaffolding for the JSONL bench instruments (DatsModeBench,
-  * AbBench): JSON string escaping, row recording, GC-bracketed timing,
-  * and the load sentinel. ONE copy, because the instruments' whole
-  * value is cross-artifact comparability — a sentinel kernel or escape
-  * table that drifted between two instruments would make their rows
-  * silently incomparable, which is the exact failure the sentinel
-  * exists to rule out. [[Bench]] keeps its own single-JSON-line
-  * artifact schema (the driver tail-parses it) but calls
-  * [[calibSec]] for its sentinel numbers, so the kernel has exactly
-  * one definition.
+/** Shared helpers for the mains that write result artifacts ([[Bench]],
+  * [[Verify]], perfbench) and for [[graft.query.DatsGen]]: the one JSON
+  * string escaper, GC-bracketed timing, the calibration kernel, and a
+  * recursive delete. One copy each, so two artifacts never disagree on
+  * how a string is quoted or what the calibration kernel measures.
   */
 object BenchKit {
 
-  /** Escape for interpolation into a JSON string literal, so a quote
-    * or backslash in a path cannot produce a malformed JSONL line. */
-  def jstr(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  /** Echo to stdout and append to the artifact. */
-  def writeLine(out: Path, line: String): Unit = {
-    println(line)
-    Files.writeString(out, line + "\n",
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
-
-  def record(out: Path, name: String, secs: Double, sf: String): Unit =
-    writeLine(out, s"""{"name":"${jstr(name)}","secs":$secs,"sf":"${jstr(sf)}"}""")
+  /** `s` as a quoted JSON string literal: named escapes for `" \ \n \r
+    * \t`, a six-character unicode escape (backslash, `u00`, two hex
+    * digits) for every other control character below 0x20, and
+    * everything else (non-ASCII included) passed through. A tab or CR
+    * in a query name, path or SQL text would otherwise make a consumer's
+    * JSON parse fail. */
+  def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
 
   /** Wall-clock seconds of `f`, GC'd first so a prior query's garbage
     * is not charged to this one. */
@@ -45,35 +38,18 @@ object BenchKit {
 
   /** The calibration kernel: one partition ⇒ one task ⇒ a fixed amount
     * of single-thread work, so contention from other processes shows up
-    * directly in its wall-time. Every artifact's calib_sec — [[Bench]]'s
-    * single-line schema and the JSONL instruments' sentinel rows — runs
-    * THIS definition, so the numbers are cross-comparable by
-    * construction. */
+    * directly in its wall-time. [[Bench]]'s sentinel and perfbench's
+    * both run THIS definition, so their calib_sec numbers are
+    * cross-comparable by construction. */
   def calibSec(spark: SparkSession): Double = timed(
     spark.range(0L, 200000000L, 1L, 1).selectExpr("sum(id)").collect())
 
   /** Recursively delete a directory tree, children first (best-effort:
-    * already-missing entries are tolerated). ONE copy shared by the
-    * instruments' temp-dir cleanup and [[graft.query.DatsGen]]'s
-    * shutdown hook, so a future fix (symlinks, error reporting) cannot
-    * miss a duplicate. */
+    * already-missing entries are tolerated). */
   def deleteTree(root: Path): Unit = {
     val walk = Files.walk(root)
     try walk.sorted(java.util.Comparator.reverseOrder[Path]())
       .forEach(p => { Files.deleteIfExists(p); () })
     finally walk.close()
-  }
-
-  /** Load sentinel (r16 verdict #2): /proc/loadavg plus the wall-time
-    * of the FIXED calibration kernel, recorded as a JSONL row. Fixed
-    * single-thread work moves 1:1 with machine contention, so any two
-    * artifacts can be compared on calibrated numbers: if calib_sec
-    * moved, the machine moved, not the plans. */
-  def sentinel(spark: SparkSession, out: Path, tag: String, sf: String): Unit = {
-    val load = try Files.readString(Paths.get("/proc/loadavg"))
-      .split("\\s+").take(3).mkString(",") catch { case _: Throwable => "" }
-    val calib = calibSec(spark)
-    writeLine(out, s"""{"name":"sentinel_$tag","loadavg":[$load],""" +
-      s""""calib_sec":$calib,"sf":"${jstr(sf)}"}""")
   }
 }

@@ -19,8 +19,9 @@ object GtexPipeline {
   private def ifExists(p: String): Option[String] =
     Some(p).filter(x => new java.io.File(x).exists())
 
-  /** The portal/manifest input wiring for `inDir` — shared with
-    * [[EtlBench]], which wall-clocks the same build this main runs. */
+  /** The portal/manifest input wiring for `inDir` — shared with the
+    * specs' fixtures and perfbench's `gtex_etl`, which wall-clocks the
+    * same build this main runs. */
   def inputs(inDir: String): GtexEtl.Inputs = GtexEtl.Inputs(
     subjectsPath = s"$inDir/GTEx_v7_Annotations_SubjectPhenotypesDS.txt",
     samplesPath = s"$inDir/GTEx_v7_Annotations_SampleAttributesDS.txt",

@@ -474,19 +474,14 @@ object Oracles {
     * reverse bound), c = distinct friend-of-a-friend pairs through a
     * shared center plus the current edges, s = exact cosine over c,
     * sd = directed top-k' of s mirrored. Tail = the shared mutual-top-3.
-    * When SimilarityOps.DescentMix > 0 the pipe also carries the static
-    * long-range partner relation (mx): dense 0-based rank r over
-    * vec_id, partners at (r·48271 + j·104729) mod n for j = 1..mix,
-    * symmetrized and distinct — unioned into every round's
-    * neighborhood, exactly the Scala's mixEdges.
+    * The Scala build's new/old cut is output-invisible, so the twin
+    * omits it and unrolls the full FoF rounds.
     * MATERIALIZED per round: sd{t-1} is referenced three times and u/c
     * twice — inlining doubles the tree per round (same rationale as
     * TOPC_PIPE). */
   private val KNNR_PIPE: String = {
     val kd = graft.operators.SimilarityOps.DescentK
     val nr = graft.operators.SimilarityOps.DescentRounds
-    val mix = graft.operators.SimilarityOps.DescentMix
-    val rho = graft.operators.SimilarityOps.DescentRhoPct
     val ekd = graft.operators.SimilarityOps.DescentEarlyKd
     val er = graft.operators.SimilarityOps.DescentEarlyRounds
     // staged EXPLORATION-width schedule — identical to the Scala kdOf
@@ -495,19 +490,6 @@ object Oracles {
     // every staged clause below reduces to the unstaged r16 pipe
     // byte-for-byte.
     def kdOf(t: Int): Int = if (t >= 1 && t <= er && ekd < kd) ekd else kd
-    val mixCtes = if (mix <= 0) "" else
-      s"""rkm AS MATERIALIZED (SELECT vec_id,
-         |  CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) - 1 AS r FROM n),
-         |mxh AS (SELECT a.vec_id AS center, b.vec_id AS nbr
-         |  FROM rkm a CROSS JOIN range(1, ${mix + 1}) jj(j) JOIN rkm b
-         |    ON b.r = (a.r * 48271 + j * 104729) % (SELECT n FROM nbb)
-         |  WHERE b.vec_id <> a.vec_id),
-         |mx AS MATERIALIZED (SELECT DISTINCT center, nbr FROM (
-         |  SELECT center, nbr FROM mxh
-         |  UNION ALL SELECT nbr, center FROM mxh) mxu),
-         |""".stripMargin
-    val mixUnion = if (mix <= 0) ""
-      else "\n  UNION ALL SELECT center, nbr FROM mx"
     def topCte(name: String, src: String, k: Int = kd): String =
       s"""$name AS MATERIALIZED (SELECT src, dst, cosine FROM (
          |  SELECT src, dst, cosine, row_number() OVER (PARTITION BY src
@@ -515,13 +497,6 @@ object Oracles {
          |  FROM (SELECT ida AS src, idb AS dst, cosine FROM $src
          |        UNION ALL SELECT idb, ida, cosine FROM $src) d_$name) t_$name
          | WHERE rnk <= $k)""".stripMargin
-    // ρ < 100 (SimilarityOps.DescentRhoPct) adds the deterministic
-    // sampling the Scala build applies: per round, a NEW entry (not in
-    // the cumulative used set) participates only when the round-keyed
-    // hash activates it; pairs need two participants and ≥1 activated-
-    // new side; activated entries promote into used$t. At ρ = 100 the
-    // pipe stays the plain full-FoF unroll (the cut is output-invisible
-    // there, so the twin omits it entirely).
     def roundCtes(t: Int): String = {
       val p = s"sd${t - 1}"
       val kdt = kdOf(t)
@@ -540,42 +515,22 @@ object Oracles {
            |  SELECT dst AS center, src AS nbr FROM (
            |    SELECT src, dst, row_number() OVER (PARTITION BY dst
            |      ORDER BY cosine DESC, src ASC) AS irnk FROM $p) i$t
-           |  WHERE irnk <= $kdt$mixUnion) uu$t)""".stripMargin
-      val pairSrc = if (rho >= 100)
+           |  WHERE irnk <= $kdt) uu$t)""".stripMargin
+      val pairSrc =
         s"""c$t AS MATERIALIZED (SELECT DISTINCT ida, idb FROM (
            |  SELECT x.nbr AS ida, y.nbr AS idb FROM u$t x JOIN u$t y
            |    ON x.center = y.center AND x.nbr < y.nbr
            |  UNION ALL SELECT LEAST(src, dst), GREATEST(src, dst) FROM $p) cc$t)""".stripMargin
-      else
-        s"""f$t AS MATERIALIZED (SELECT u.center, u.nbr,
-           |    us.seen IS NULL AS is_new,
-           |    (us.seen IS NULL AND
-           |     (u.center*48271 + u.nbr*104729 + $t*9973) % 100 < $rho) AS act
-           |  FROM u$t u LEFT JOIN (SELECT center, nbr, TRUE AS seen
-           |    FROM used${t - 1}) us ON u.center = us.center AND u.nbr = us.nbr),
-           |c$t AS MATERIALIZED (SELECT DISTINCT ida, idb FROM (
-           |  SELECT x.nbr AS ida, y.nbr AS idb FROM f$t x JOIN f$t y
-           |    ON x.center = y.center AND x.nbr < y.nbr
-           |    AND (NOT x.is_new OR x.act) AND (NOT y.is_new OR y.act)
-           |    AND (x.act OR y.act)
-           |  UNION ALL SELECT LEAST(src, dst), GREATEST(src, dst) FROM $p) cc$t),
-           |used$t AS MATERIALIZED (SELECT DISTINCT center, nbr FROM (
-           |  SELECT center, nbr FROM used${t - 1}
-           |  UNION ALL SELECT center, nbr FROM f$t WHERE act) uu2$t)""".stripMargin
       s"""$uCte,
          |$pairSrc,
          |s$t AS (SELECT ida, idb, ${cosine("a", "b")} AS cosine
          |  FROM c$t JOIN n a ON ida = a.vec_id JOIN n b ON idb = b.vec_id),
          |${topCte(s"sd$t", s"s$t")}""".stripMargin
     }
-    val usedSeed = if (rho >= 100) "" else
-      """used0 AS (SELECT CAST(NULL AS BIGINT) AS center,
-        |  CAST(NULL AS BIGINT) AS nbr WHERE FALSE),
-        |""".stripMargin
     val rounds = (1 to nr).map(roundCtes).mkString(",\n")
     s"""${knnbCandidates(graft.operators.SimilarityOps.DescentSeedTables,
            graft.operators.SimilarityOps.DescentSeedTarget)},
-       |$mixCtes$usedSeed${topCte("sd0", "scb")},
+       |${topCte("sd0", "scb")},
        |$rounds,
        |fr AS (SELECT DISTINCT LEAST(src, dst) AS ida, GREATEST(src, dst) AS idb, cosine
        |  FROM sd$nr),
@@ -883,7 +838,7 @@ object Oracles {
     * COHERENT: two independent IGNORE-NULLS windows (the pre-r20 shape)
     * silently backfilled a null totalprice from an EARLIER order while
     * keeping the later order's key — caught by the r20 evt fuzz
-    * (fuzz_evt_r20.jsonl seed 1), where the Spark side's atomic struct
+    * (bench/history/fuzz_evt_r20.jsonl seed 1), where the Spark side's atomic struct
     * carry was RIGHT and this oracle was wrong. Undated orders are
     * filtered on both sides (no position on the as-of timeline). */
   val evtAsofJoin: String =

@@ -452,7 +452,7 @@ object PlanAudit {
     // per-source shape additionally emits __b<i> from the disease
     // pivot. A __b0 here means the view path is paying the second
     // aggregation + scaffold join the sf10 A/B priced at 1.12×
-    // (ab_sf10.jsonl: union/per-source geomean 0.894 on views).
+    // (bench/history/ab_sf10.jsonl: union/per-source geomean 0.894 on views).
     assert(!q7Plan.contains("__b0"),
       "q7 direct (view graph) must use the single union pivot — no disease-pivot columns")
     // materialized deployment (EntityStore parquet): Q3's typed member

@@ -29,7 +29,7 @@ import graft.operators.SimilarityOps
   *          1probe | 2probe | bits | refined
   *        or a tuned refined sweep point ('+'-separated dials — ','
   *        already separates the spec list)
-  *          refined@kd=48+rounds=7+tables=8+target=128+rho=50
+  *          refined@kd=48+rounds=7+tables=8+target=128+ekd=16
   *        (omitted dials default to the shipped constants; tuned points
   *        exist to PRICE the dials — only the default config is
   *        oracle-checked).
@@ -44,8 +44,7 @@ object RecallGate {
     * prevent. */
   private val AcceptedDials: Map[String, Set[String]] = Map(
     "1probe" -> Set.empty, "2probe" -> Set.empty, "bits" -> Set.empty,
-    "refined" -> Set("kd", "rounds", "tables", "target", "mix", "rho",
-      "ekd", "erounds"))
+    "refined" -> Set("kd", "rounds", "tables", "target", "ekd", "erounds"))
 
   private[graft] def parseSpec(spec: String): (String, Map[String, Long]) = {
     val (name, dials) = spec.split("@", 2) match {
@@ -79,8 +78,6 @@ object RecallGate {
         rounds = d.getOrElse("rounds", SimilarityOps.DescentRounds.toLong).toInt,
         seedTables = d.getOrElse("tables", SimilarityOps.DescentSeedTables.toLong).toInt,
         seedTargetList = d.getOrElse("target", SimilarityOps.DescentSeedTarget),
-        mix = d.getOrElse("mix", SimilarityOps.DescentMix.toLong).toInt,
-        rhoPct = d.getOrElse("rho", SimilarityOps.DescentRhoPct.toLong).toInt,
         earlyKd = d.getOrElse("ekd", SimilarityOps.DescentEarlyKd.toLong).toInt,
         earlyRounds = d.getOrElse("erounds", SimilarityOps.DescentEarlyRounds.toLong).toInt)
       case other => sys.error(s"RecallGate: unknown graph spec '$other'") // unreachable: parseSpec validates

@@ -84,7 +84,7 @@ object SparkEntry {
     // k-NN graph family, r14 default switch: the DESCENT-REFINED build is
     // the edge supplier behind the unsuffixed consumer names — it is the
     // only build that is simultaneously linear-cost (×10.3/decade measured,
-    // benchmarks_sf1/sf10.jsonl) and high-recall (0.9231 at sf10,
+    // bench/history/benchmarks_sf{1,10}.jsonl) and high-recall (0.9231 at sf10,
     // RECALL_r15). The legacy suppliers stay reachable for calibration:
     // sim_knn_graph2 (2-probe Voronoi — exact-leaning but n^1.5: 0.9021
     // recall at sf10 for a 500 s build vs the refined build's 593 s

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import BenchKit.jstr
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,17 +11,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // TopKEdgesAgg groups are corpus-sized — see Tables.session
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 22).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Tables.session("graft-verify")
     // ERROR: the localCheckpoint lineage WARNs flood the log at 69
     // queries (same rationale as Bench)
     spark.sparkContext.setLogLevel("ERROR")
@@ -60,23 +50,14 @@ object Verify {
         Files.writeString(Paths.get(s"$outDir/$name/_ERROR.txt"), msg + "\n")
       } finally Caches.release() // each query's internal caches die with it
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // JSON string escape for every key and value: a tab or CR in
+    // builder-authored SQL would otherwise make the driver's json.load
+    // fail and silently zero the round's correctness.
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     // Run manifest: the names this invocation actually executed. A
     // filtered run (names-csv) followed by a checker pass would
@@ -85,7 +66,7 @@ object Verify {
     val ranNames = SparkEntry.queries.keys
       .filter(n => only.forall(_.contains(n))).toSeq.sorted
     Files.writeString(Paths.get(s"$outDir/manifest.json"),
-      ranNames.map(q).mkString("[", ",", "]"))
+      ranNames.map(jstr).mkString("[", ",", "]"))
     // the one-line summary a log tail can't miss
     val selectedN = SparkEntry.queries.count { case (n, _) => only.forall(_.contains(n)) }
     println(s"[verify] ${selectedN - failures.size} dumped, " +

@@ -51,9 +51,8 @@ object GtexEtl {
         * pivot to the per-source shape that rides them. Normally set
         * only by loadBucketed; any other producer MUST set it to the
         * real chain relation (EntityStore.chainRelation is the single
-        * definition) because Q4 reads the ROWS, not just the presence —
-        * AbBench does exactly that to A/B the Q7 shape switch on a
-        * view graph. View graphs and the plain parquet layout leave it
+        * definition) because Q4 reads the ROWS, not just the presence.
+        * View graphs and the plain parquet layout leave it
         * None and the queries derive the chain from `materials`. */
       bucketedDerives: Option[DataFrame] = None) {
 

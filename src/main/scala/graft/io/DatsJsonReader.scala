@@ -31,8 +31,8 @@ import graft.etl.GtexEtl.EntityGraph
   * `distributions` — are iterated element-by-element off the parser, so
   * peak heap is the entity ROW buffers plus ONE bounded element subtree,
   * never the whole-document node tree plus its source string (the r16
-  * readTree shape). Measured by [[graft.DatsReadBench]] across a
-  * three-point document ladder (dats_read_bench_r20.jsonl): streaming
+  * readTree shape). Measured across a three-point document ladder
+  * (bench/history/dats_read_bench_r20.jsonl): streaming
   * residency 1.58/2.21/4.80 GB on 108/217/436 MB writer-grammar
   * documents — 3.04× peak across a 4× document range, overall scaling
   * exponent ≈0.8, i.e. LINEAR with no superlinear term in the token

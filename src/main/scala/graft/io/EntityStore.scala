@@ -190,9 +190,9 @@ object EntityStore {
   /** Drop everything [[saveBucketed]] created for `out`: the catalog
     * entries (session-scoped, but they otherwise outlive a deleted data
     * dir and dangle) and the data directory itself. The cleanup half of
-    * the deployment contract — instruments that materialize throwaway
-    * layouts (AbBench's A/B copies, DatsModeBench's per-run dir) call
-    * this instead of leaking full entity-table copies under /tmp. */
+    * the deployment contract — callers that materialize throwaway
+    * layouts (the round-trip specs' temp dirs) call this instead of
+    * leaking full entity-table copies under /tmp. */
   def dropBucketed(spark: SparkSession, out: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(out)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())

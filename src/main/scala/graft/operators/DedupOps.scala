@@ -28,10 +28,8 @@ object DedupOps {
 
   private val P = 2147483647L // 2^31 - 1, Mersenne prime for minhash perms
 
-  /** Instrument-only override (AbR22c's seed-distinct A/B): forces the
-    * star fixpoint's seed distinct on (Some(true)) or off (Some(false)).
-    * Always None in production paths. */
-  @volatile private[graft] var starSeedDistinctOverride: Option[Boolean] = None
+  // Always None; read by no production code, only by perfbench's start-of-run guard
+  private[graft] val starSeedDistinctOverride: Option[Boolean] = None
 
   /** Drop the storage behind an eagerly-localCheckpointed frame once the
     * iterative loops below have advanced past it. (Dataset.unpersist
@@ -353,18 +351,17 @@ object DedupOps {
     * canonical pairs (groupBy outputs or mutualized top-k edges), so the
     * distinct was a full no-op exchange + hash-dedup of the edge relation
     * — dropped at a measured 1.11× on the fixpoint (same-JVM A/B both
-    * orders, outputs asserted identical: tools/ab_r22c2.jsonl via the
-    * override below). Safe even for a hypothetical duplicate-feeding
-    * caller: round 1's largeStar ends in distinct() and re-establishes the
-    * invariant, the forest probe cannot fire on a duplicated round (a dup
-    * u fails the exactly-once test), and the fallback convergence check
+    * orders, outputs asserted identical: tools/ab_r22c2.jsonl). Safe
+    * even for a hypothetical duplicate-feeding caller: round 1's
+    * largeStar ends in distinct() and re-establishes the invariant, the
+    * forest probe cannot fire on a duplicated round (a dup u fails the
+    * exactly-once test), and the fallback convergence check
     * compares SETS (count equality gates an except) — only the round-0
     * count would shift, never the labeling. */
   private[graft] def starComponentsCore(pairs: DataFrame): DataFrame =
     Fixpoint.run("star_contraction", pairs.sparkSession) { fp =>
-      val seed0 = pairs.select(col("doc_b").as("u"), col("doc_a").as("v"))
       val (seed, seedCount) =
-        fp.cut(if (starSeedDistinctOverride.getOrElse(false)) seed0.distinct() else seed0)
+        fp.cut(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
       // self-loops leave the Spark rounds at largeStar's filter, and a
       // node with nothing else leaves the answer with them
       fp.collectPairs(seed.filter(!(col("u") <=> col("v"))), seedCount,
@@ -375,8 +372,8 @@ object DedupOps {
     }
 
   // r22 NEGATIVE RESULT, kept as shipped: two restructures of the star
-  // rounds were built and rejected on a same-JVM adjacent A/B (AbR22,
-  // tools/ab_r22_star.jsonl -- order-cancelled geomean 1.10-1.16x
+  // rounds were built and rejected on a same-JVM adjacent A/B
+  // (tools/ab_r22_star.jsonl -- order-cancelled geomean 1.10-1.16x
   // SLOWER across three reps in both orders): (a) dropping largeStar's
   // distinct (smallStar is duplicate-insensitive, so the distinct is
   // "only" a sharing barrier -- but without it each half-star's two

@@ -402,7 +402,7 @@ object EventOps {
       // nullif BEFORE the cast: regexp_extract returns '' on a no-match
       // (props without a "k", e.g. '{}' or another key) and under ANSI
       // mode ''.cast(long) THROWS instead of yielding null — caught by
-      // the r20 evt fuzz (fuzz_evt_r20.jsonl); the oracle uses the same
+      // the r20 evt fuzz (bench/history/fuzz_evt_r20.jsonl); the oracle uses the same
       // nullif(regexp_extract(..), '') shape, so both engines agree the
       // no-match rows are the n_null rows
       .withColumn("k",

@@ -29,11 +29,8 @@ private[graft] object IterLoop {
   // fat partitions through single-pass spill beat skinny partitions'
   // per-task overhead on this harness, and on a real cluster the
   // width is the deployment's dial, not an operator scope.
-  /** Instrument-only override (AbR22's balanced AQE A/B): forces AQE
-    * off (Some(true)) or on (Some(false)) inside loop scopes instead of
-    * the production default (leave AQE alone). Always None in
-    * production paths. */
-  @volatile private[graft] var aqeOverride: Option[Boolean] = None
+  // Always None; read by no production code, only by perfbench's start-of-run guard
+  private[graft] val aqeOverride: Option[Boolean] = None
 
   def withLoopPartitions[T](spark: SparkSession, rows: Option[Long])(body: => T): T = {
     require(active.compareAndSet(false, true),
@@ -49,29 +46,16 @@ private[graft] object IterLoop {
       val loopParts = rows
         .map(n => math.max(1L, math.min(defaultParts.toLong, n / 100000L + 1)).toInt)
         .getOrElse(defaultParts)
-      // AQE stays ON in loop scopes (r22 NEGATIVE RESULT): the
-      // hypothesis was that under AQE every exchange materializes as
-      // its own stage-job (plan → schedule → codegen per query stage),
-      // so a fixpoint round over a node-sized frame pays ~10 micro-jobs
-      // of 10-100 ms pure overhead that a fully-hinted loop could skip.
-      // The BALANCED same-JVM A/B (AbR22, tools/ab_r22_aqe.jsonl:
-      // identical code, only this flag flipped via aqeOverride, both
-      // orders, 3 reps) measured AQE-off as 1.16× SLOWER on the
-      // shuffle_hash-hinted pagerank loop and flat (1.01×) on the
-      // label-propagation loop — AQE's runtime re-planning and
-      // partition coalescing beat the stage-job overhead even with
-      // every join pre-hinted. The override below exists only so that
-      // instrument can keep re-measuring the question.
-      val aqeOff = aqeOverride.getOrElse(false)
-      val aqeDefault = conf.get("spark.sql.adaptive.enabled")
+      // AQE stays ON in loop scopes (r22 NEGATIVE RESULT): a balanced
+      // same-JVM A/B with only AQE flipped (tools/ab_r22_aqe.jsonl, both
+      // orders, 3 reps) measured AQE-off 1.16× SLOWER on the
+      // shuffle_hash-hinted pagerank loop and flat (1.01×) on label
+      // propagation — AQE's runtime re-planning and partition coalescing
+      // beat the per-stage-job overhead even with every join pre-hinted.
       try {
         conf.set("spark.sql.shuffle.partitions", loopParts)
-        if (aqeOff) conf.set("spark.sql.adaptive.enabled", "false")
         body
-      } finally {
-        conf.set("spark.sql.shuffle.partitions", defaultParts)
-        if (aqeOff) conf.set("spark.sql.adaptive.enabled", aqeDefault)
-      }
+      } finally conf.set("spark.sql.shuffle.partitions", defaultParts)
     } finally active.set(false)
   }
 }

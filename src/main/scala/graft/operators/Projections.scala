@@ -55,7 +55,7 @@ object Projections {
     * its row over EMPTY input too, exactly like SQL's ROLLUP `()`
     * grouping set — Spark's Expand-based rollup returns zero rows
     * there, diverging from the standard (caught by the r20 fuzz pass,
-    * fuzz_rel_r20.jsonl seed 0). */
+    * bench/history/fuzz_rel_r20.jsonl seed 0). */
   def ordersRollup(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables.load(spark, dir, "orders")
     // cached: consumed by all three union branches — without it each

@@ -540,7 +540,8 @@ object SimilarityOps {
     * identical staged filters when active. SPARK_GRAFT_DESCENT_EKD /
     * _EROUNDS (harness-only env, never set by the driver) move build +
     * twin in lockstep for equivalence sweeps (tools/ekd_twin_check.sh),
-    * same mechanism as SPARK_GRAFT_DESCENT_RHO. The full pricing
+    * because the twin interpolates these constants when Verify dumps
+    * oracle_sql.json at runtime. The full pricing
     * ladder — including the REJECTED contraction-narrowing variant
     * (recall 0.9021/0.8182) — lives in RECALL_r17.json /
     * ARCHITECTURE.md. */
@@ -562,78 +563,6 @@ object SimilarityOps {
     * constants. */
   private[graft] val DescentSeedTables = 8
   private[graft] val DescentSeedTarget: Long = 256L
-
-  /** Long-range exploration partners per node (0 = none): the descent's
-    * third dial. Every locality-blocked seed (Voronoi or signature)
-    * feeds each node only SAME-REGION candidates, so friend-of-a-friend
-    * diffusion widens the search radius additively per round — at 200k
-    * vectors, 5-8 rounds from a local seed stall below the recall the
-    * same machinery reaches at 20k (the sf10 sweep's 0.31-0.76
-    * plateau). Classic NN-Descent avoids this by RANDOM initialization:
-    * every neighborhood starts with global samples. Here the same
-    * mixing is deterministic and oracle-replayable: each node's dense
-    * rank r (one narrow global sort) gets partners at ranks
-    * (r·48271 + j·104729) mod n, j = 1..mix — fixed pseudo-random
-    * permutation hops that join every round's NEIGHBORHOOD relation
-    * (never the scored graph itself), so FoF generation always pairs
-    * each region's candidates with a few far-away nodes' candidates.
-    *
-    * PRICED AND REJECTED (r13, kept at 0): the nominal cost is only
-    * 2k' → 2k'+2·mix neighborhood growth, but the measured cost is the
-    * candidate CHURN it induces — cross-region FoF pairs are unique
-    * per center (distinct can't collapse them) and keep every round's
-    * top-k' lists moving, so the incremental new/old cut stops biting.
-    * Measured at sf1, k'=16: recall 0.348 → 0.368 (+0.02) for 8.6×
-    * build time (48.6 s → 417 s); at sf10 the shuffle volume exceeded
-    * the harness's disk twice. Widening k' and the seed buys recall
-    * strictly cheaper (RECALL_r13.json); the dial and its oracle
-    * mirror stay for the record. */
-  private[graft] val DescentMix = 0
-
-  /** NN-Descent's incremental-search sampling rate ρ, as an integer
-    * PERCENT (100 = no sampling — every FoF pair through a new
-    * neighborhood entry is scored, the r13-r15 behavior). Below 100,
-    * each round deterministically activates only ρ% of a node's NEW
-    * neighborhood entries — the hash (center·48271 + nbr·104729 +
-    * round·9973) mod 100 < ρ, round-keyed so an entry skipped in round
-    * t gets fresh draws in later rounds — and FoF pairs are generated
-    * only among participants (old entries + activated new ones) with at
-    * least one activated-new side. This is the paper's ρ-sampling
-    * (Dong, Moses, Li — WWW 2011 §2.3, "incremental search" + sampling)
-    * made deterministic and SQL-replayable: round-1 candidate volume —
-    * the build's measured cost cliff at 200k vectors — scales ~ρ².
-    * "Used" entries (activated once) are tracked cumulatively, exactly
-    * like the paper's new/old flag: a pair of used entries was already
-    * scored together in the round both were active, and the per-node
-    * k-th-best cosine is monotone, so skipping it is output-exact given
-    * the sampling pattern. The oracle twin (Oracles.KNNR_PIPE)
-    * interpolates this constant and unrolls the SAME hash filter, so
-    * every refined-family correctness row remains an end-to-end
-    * equivalence proof at the shipped ρ.
-    *
-    * PRICED AND REJECTED at sf10 (r16, 200k vectors, 64 GB heap,
-    * RECALL_r16.json): rho=50 → recall 0.8531 at 1042 s BUILD — slower
-    * than the 1011 s unsampled same-session baseline, and under the
-    * 0.9 gate; rho=70 → 0.8811 at 869 s. The round-1 ρ² volume cut is
-    * real, but un-activated entries stay "new" and re-draw every round,
-    * so convergence drags: rounds 4-8, which the unsampled new/old cut
-    * collapses to near-zero volume (measured 59/31/18/11/14 s), keep
-    * generating under sampling — the tail gives back what the head
-    * saved, and the recall loss buys nothing. The dial and its oracle
-    * mirror stay for the record; the shipped build cost lever that DID
-    * work is [[graft.functions.TopKEdgesAgg]] (output-invariant, no
-    * recall trade).
-    *
-    * SPARK_GRAFT_DESCENT_RHO (harness-only env, never set by the
-    * driver): overrides the shipped 100 for twin-equivalence sweeps.
-    * Because [[graft.Oracles]] interpolates THIS constant when Verify
-    * dumps oracle_sql.json at runtime, one env var moves the Scala
-    * build and its DuckDB twin in lockstep — `tools/rho_twin_check.sh`
-    * automates the ρ<100 differential the r16 advice asked for, so a
-    * divergence between the hash/used-set logic and the twin's unroll
-    * is one command away from detection instead of dormant. */
-  private[graft] val DescentRhoPct =
-    sys.env.get("SPARK_GRAFT_DESCENT_RHO").map(_.toInt).getOrElse(100)
 
   /** Corpus-size ceiling for broadcasting the quantized vector frame
     * into the descent's scoring joins. At 500k vectors the (vec_id, qv,
@@ -698,8 +627,6 @@ object SimilarityOps {
       kd: Int = DescentK, rounds: Int = DescentRounds,
       seedTables: Int = DescentSeedTables,
       seedTargetList: Long = DescentSeedTarget,
-      mix: Int = DescentMix,
-      rhoPct: Int = DescentRhoPct,
       earlyKd: Int = DescentEarlyKd,
       earlyRounds: Int = DescentEarlyRounds,
       broadcastVecs: Long = DescentBroadcastVecs): DataFrame =
@@ -726,13 +653,13 @@ object SimilarityOps {
         bitsScored(q, n, seedTables, seedTargetList, dedup = false, checkpoint = fp.cut(_)._1),
         kd))
       // the driver tail replays the shipped operator only: any other dial
-      // (a sweep's k', rounds, ρ < 100, mix partners, a forced scoring
+      // (a sweep's k', rounds, seed or staged widths, a forced scoring
       // dispatch) keeps the Spark rounds that define it. Its state is the
       // directed graph (src, dst, cosine) plus the vectors it is scored
       // from, (vec_id, qv[Dim], nrm).
       val shipped = kd == DescentK && rounds == DescentRounds &&
         seedTables == DescentSeedTables && seedTargetList == DescentSeedTarget &&
-        mix == 0 && rhoPct == 100 && earlyKd == DescentEarlyKd &&
+        earlyKd == DescentEarlyKd &&
         earlyRounds == DescentEarlyRounds && broadcastVecs == DescentBroadcastVecs
       val local =
         if (!shipped || !fp.fitsDriver(3 * seedRows * Fixpoint.FieldBytes +
@@ -740,32 +667,10 @@ object SimilarityOps {
         else descentOnDriver(fp, q, seed, kd, rounds, kdOf, widthFinal)
 
       def descentOnSpark(): DataFrame = {
-        // static long-range partners (see [[DescentMix]]): symmetrized rank
-        // hops, built once and unioned into every round's neighborhood. The
-        // dense rank is ONE narrow global sort of the id column — at real
-        // cluster scale this window becomes a range-partitioned rank, but
-        // the relation it feeds stays n·mix rows either way.
-        val mixEdges: Option[DataFrame] = if (mix <= 0) None else Some {
-          val (ranked, _) = fp.cut(q.select(col("vec_id"))
-            .withColumn("r", row_number().over(Window.orderBy("vec_id")).cast("long") - 1))
-          val hops = ranked.select(col("vec_id"), col("r"),
-              explode(sequence(lit(1), lit(mix))).as("j"))
-            .withColumn("pr", (col("r") * lit(48271L) + col("j") * lit(104729L)) % lit(n))
-          val paired = hops.join(ranked.select(col("r").as("pr"), col("vec_id").as("pid"))
-                .hint("shuffle_hash"), "pr")
-            .filter(col("pid") =!= col("vec_id"))
-            .select(col("vec_id").as("center"), col("pid").as("nbr"))
-          fp.cut(paired.unionByName(paired.select(col("nbr").as("center"), col("center").as("nbr")))
-            .distinct())._1
-        }
         // state: (graph, its rows, the "used" relation for the incremental
-        // FoF cut below — None before round 1: everything is new). At ρ = 100
-        // the used relation is the previous round's full neighborhood
-        // relation (the r13-r15 behavior, byte-exact); at ρ < 100 it is the
-        // CUMULATIVE set of entries that have been activated in some earlier
-        // round — the paper's new→old promotion happens on activation, so an
-        // entry the hash skipped stays "new" and keeps drawing in later
-        // rounds. The runner releases each superseded graph and used relation
+        // FoF cut below — None before round 1: everything is new). The used
+        // relation is the previous round's full neighborhood relation. The
+        // runner releases each superseded graph and used relation
         // once the round's new ones are materialized: without that the build
         // pins 2·rounds graph-sized block sets (several GB at sf10) for the
         // session — storage pressure during exactly the stages whose spill is
@@ -773,10 +678,10 @@ object SimilarityOps {
         val (sd, _, _) = fp.onSpark[(DataFrame, Long, Option[DataFrame])](
             (seed, seedRows, None), rounds, converging = false)(s => s._1 +: s._3.toSeq) {
           case ((sd, sdRows, prevUsed), round) =>
-            // bounded neighborhood: out-edges + top-k' in-edges per node,
-            // plus the static mix partners when configured. Exploration width
-            // follows the staged schedule: on a narrow round the out side of
-            // the (always full-k'-wide) graph needs an explicit re-rank.
+            // bounded neighborhood: out-edges + top-k' in-edges per node.
+            // Exploration width follows the staged schedule: on a narrow
+            // round the out side of the (always full-k'-wide) graph needs an
+            // explicit re-rank.
             // FUSED (r22, guide §2.2): the out re-rank, the in re-rank and the
             // (out ∪ in) DISTINCT — previously up to three exchanges of the
             // n·k'-row relation per round — run as ONE aggregation over the
@@ -805,7 +710,7 @@ object SimilarityOps {
               .select(col("center"), explode(array_distinct(concat(
                 transform(col("otk"), e => e("dst")),
                 transform(col("itk"), e => e("dst"))))).as("nbr"))
-            val (und, _) = fp.cut(mixEdges.foldLeft(fusedNbrs)((u, m) => u.unionByName(m).distinct()))
+            val (und, _) = fp.cut(fusedNbrs)
             // Incremental FoF (NN-Descent's "new/old" cut — Dong, Moses, Li,
             // WWW 2011 §2.3): only pairs with at least one NEW neighborhood
             // entry are generated. An old-old pair through center c was
@@ -813,15 +718,12 @@ object SimilarityOps {
             // scored; since every node's candidate set always contains its
             // current top-k' (the retained current edges below), a per-node
             // k'-th-best cosine is monotone non-decreasing across rounds — a
-            // pair that failed the cut once can never pass it later. At
-            // ρ = 100 the cut is OUTPUT-EXACT and the oracle twin deliberately
-            // unrolls the FULL FoF rounds without it, so every refined-family
-            // correctness row doubles as an equivalence proof; at ρ < 100 the
-            // sampling is part of the operator's definition and the twin
-            // replays the identical hash filter + used-set tracking
-            // ([[DescentRhoPct]]). Generated pair volume collapses as the
-            // graph converges (ARCHITECTURE.md has the measured per-round
-            // volumes).
+            // pair that failed the cut once can never pass it later. The cut
+            // is OUTPUT-EXACT and the oracle twin deliberately unrolls the
+            // FULL FoF rounds without it, so every refined-family correctness
+            // row doubles as an equivalence proof. Generated pair volume
+            // collapses as the graph converges (ARCHITECTURE.md has the
+            // measured per-round volumes).
             // flagged re-evaluates per reference (twoHop's two sides + the
             // early-exit probe) DELIBERATELY: checkpointing it per round was
             // A/B'd flat (1.01x, tools/ab_r22d.jsonl) — the join of two
@@ -836,43 +738,34 @@ object SimilarityOps {
             }
             // EARLY EXIT (r22, output-exact): if this round generated ZERO new
             // neighborhood entries, every remaining round is the identity and
-            // the build can stop. Proof: with no new entries every `part` row
-            // has act = false (at any ρ — act requires is_new), so twoHop is
-            // empty and cand is exactly sd's own undirected edge set; the
-            // re-contraction of that set returns sd itself, because for every
-            // node u the candidate set out(u) ∪ in(u) CONTAINS out(u) — and
-            // out(u) is u's top-k' of the PREVIOUS round's full mirrored
-            // candidate relation, a superset of out(u) ∪ in(u) (directedTopFrom
-            // mirrors every scored pair, so in-edges were already candidates) —
-            // hence top-k' of the subset = top-k' of the superset = out(u)
-            // under the same total order (cosine DESC, id ASC; cosines are
-            // bit-deterministic per pair). sd unchanged and kdt constant past
-            // the staged window imply und and flagged repeat verbatim: zero
-            // new entries again, by induction to round `rounds`. Valid only
-            // once the exploration width has reached its final k' (inside the
-            // staged window the NEXT round widens the neighborhood and
-            // genuinely new entries appear). The DuckDB twin keeps unrolling
-            // the full `rounds` CTEs — the oracle rows remain an end-to-end
-            // proof that the skipped rounds are no-ops. Cost of the check: one
-            // limit-1 probe of the join of two checkpointed narrow relations;
-            // measured payoff at sf0.1: rounds 6-8 (~1.0 s each) were exactly
-            // this identity.
+            // the build can stop. Proof: with no new entries every `flagged`
+            // row has is_new = false, so twoHop is empty and cand is exactly
+            // sd's own undirected edge set; the re-contraction of that set
+            // returns sd itself, because for every node u the candidate set
+            // out(u) ∪ in(u) CONTAINS out(u) — and out(u) is u's top-k' of the
+            // PREVIOUS round's full mirrored candidate relation, a superset of
+            // out(u) ∪ in(u) (directedTopFrom mirrors every scored pair, so
+            // in-edges were already candidates) — hence top-k' of the subset =
+            // top-k' of the superset = out(u) under the same total order
+            // (cosine DESC, id ASC; cosines are bit-deterministic per pair).
+            // sd unchanged and kdt constant past the staged window imply und
+            // and flagged repeat verbatim: zero new entries again, by
+            // induction to round `rounds`. Valid only once the exploration
+            // width has reached its final k' (inside the staged window the
+            // NEXT round widens the neighborhood and genuinely new entries
+            // appear). The DuckDB twin keeps unrolling the full `rounds` CTEs
+            // — the oracle rows remain an end-to-end proof that the skipped
+            // rounds are no-ops. Cost of the check: one limit-1 probe of the
+            // join of two checkpointed narrow relations; measured payoff at
+            // sf0.1: rounds 6-8 (~1.0 s each) were exactly this identity.
             if (widthFinal(round) && prevUsed.nonEmpty && flagged.filter(col("is_new")).isEmpty)
               Fixpoint.Step((sd, sdRows, Some(und)), sdRows, done = true)
             else {
-              // participants: every old entry plus the ρ%-activated new ones;
-              // a skipped new entry sits this round out entirely
-              val part =
-                if (rhoPct >= 100) flagged.withColumn("act", col("is_new"))
-                else flagged.withColumn("act", col("is_new") &&
-                    (col("center") * lit(48271L) + col("nbr") * lit(104729L) +
-                      lit(round * 9973L)) % lit(100L) < lit(rhoPct.toLong))
-                  .filter(!col("is_new") || col("act"))
               // FoF pair generation stays the co-shuffled self-join (r22
               // NEGATIVE RESULT): a per-center bounded combination explode
-              // (groupBy center → sort_array(collect_list(nbr, act)) →
+              // (groupBy center → sort_array(collect_list(nbr, is_new)) →
               // slice-after-self transform/filter HOFs) generates the identical
-              // pair multiset with ONE evaluation + ONE exchange of `part`
+              // pair multiset with ONE evaluation + ONE exchange of `flagged`
               // where the join evaluates and co-shuffles it once per side — but
               // the balanced A/B (identical build, only this expression
               // flipped; tools/ab_r22c.jsonl) measured the explode form 1.32×
@@ -880,9 +773,9 @@ object SimilarityOps {
               // and the non-codegen HOF lambdas cost more per candidate than
               // the whole-stage-codegen'd join saves in exchanges (guide §4 —
               // prefer codegen'd operators in the hot path).
-              val twoHop = part.as("x").join(part.as("y").hint("shuffle_hash"),
+              val twoHop = flagged.as("x").join(flagged.as("y").hint("shuffle_hash"),
                   col("x.center") === col("y.center") && col("x.nbr") < col("y.nbr") &&
-                    (col("x.act") || col("y.act")))
+                    (col("x.is_new") || col("y.is_new")))
                 .select(col("x.nbr").as("ida"), col("y.nbr").as("idb"))
               // plus the current edges themselves (so a found neighbor is never
               // lost to a round that happens not to re-generate it — also the
@@ -932,18 +825,8 @@ object SimilarityOps {
               // recall 0.9231 → 0.9021/0.8182). The exploration narrowing above
               // is where the candidate-volume savings live.
               val (next, rows) = fp.cut(directedTopFrom(scored, kd))
-              val newUsed =
-                if (rhoPct >= 100) und // act ≡ is_new: last round's neighborhood is the used set
-                else {
-                  // cumulative promotion: previously-used entries plus this
-                  // round's activated ones (narrow 2-col relation; converging
-                  // neighborhoods repeat entries, so distinct keeps it near
-                  // n·2k' in practice)
-                  fp.cut(prevUsed.foldLeft(
-                      part.filter(col("act")).select("center", "nbr"))(_ unionByName _)
-                    .distinct())._1
-                }
-              Fixpoint.Step((next, rows, Some(newUsed)), rows)
+              // this round's neighborhood is the next round's used set
+              Fixpoint.Step((next, rows, Some(und)), rows)
             }
         }
         sd
@@ -958,13 +841,13 @@ object SimilarityOps {
           greatest(col("src"), col("dst")).as("idb"), col("cosine")))
     }
 
-  /** The descent rounds on the driver, at the shipped dials (ρ = 100, no
-    * mix partners): the same staged neighborhoods (out top-k'ₜ ∪ in
-    * top-k'ₜ per center, ranked by [[graft.functions.TopKEdgesAgg.Buf]]),
-    * the same new/old cut and settled exit, the same candidates (FoF
-    * pairs through a shared center with a new side, plus the retained
-    * edges), each scored `dot.toDouble / sqrt(nrm_a) / sqrt(nrm_b)` with
-    * a the smaller id, and the same top-k' contraction. Candidates are
+  /** The descent rounds on the driver, at the shipped dials: the same
+    * staged neighborhoods (out top-k'ₜ ∪ in top-k'ₜ per center, ranked
+    * by [[graft.functions.TopKEdgesAgg.Buf]]), the same new/old cut and
+    * settled exit, the same candidates (FoF pairs through a shared
+    * center with a new side, plus the retained edges), each scored
+    * `dot.toDouble / sqrt(nrm_a) / sqrt(nrm_b)` with a the smaller id,
+    * and the same top-k' contraction. Candidates are
     * gathered per node rather than per pair — the contraction keeps each
     * node's top-k' of its candidate SET, whatever order it arrives in —
     * so the nodes score in parallel on the driver's cores. None when a

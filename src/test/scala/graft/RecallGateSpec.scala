@@ -25,6 +25,10 @@ class RecallGateSpec extends AnyFunSuite {
       RecallGate.parseSpec("refined@round=7")
     }
     assert(typo.getMessage.contains("round"))
+    // the priced-and-rejected ρ-sampling and mix-partner dials do not ship
+    for ((spec, dial) <- Seq("refined@rho=50" -> "rho", "refined@mix=2" -> "mix"))
+      assert(intercept[IllegalArgumentException](RecallGate.parseSpec(spec))
+        .getMessage.contains(dial))
     intercept[IllegalArgumentException] {
       RecallGate.parseSpec("bits@tables=8") // bits ignores dials — reject
     }

@@ -1,8 +1,8 @@
 #!/usr/bin/env bash
 # Differential check of the descent's staged-width schedule against its
-# DuckDB twin (same discipline as rho_twin_check.sh: a dial that ships
-# dormant at its no-op default must have its active branch provable in
-# one command, or a build/twin divergence hides until someone turns it).
+# DuckDB twin: a dial whose non-default branch is not what ships must
+# have that branch provable in one command, or a build/twin divergence
+# hides until someone turns it.
 #
 # SPARK_GRAFT_DESCENT_EKD / _EROUNDS move BOTH sides in lockstep:
 # SimilarityOps reads them for the build's kdOf(t) schedule, and Verify

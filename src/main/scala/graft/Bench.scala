@@ -13,7 +13,7 @@ object Bench {
     // timed query isn't charged for session initialization
     spark.range(1000000).selectExpr("sum(id)").collect()
     graft.Tables.names.foreach(n =>
-      try graft.Tables.load(spark, sfDir, n).count() catch { case _: Throwable => () })
+      try graft.Tables.rowCount(spark, sfDir, n) catch { case _: Throwable => () })
     // optional comma-separated name filter for local iteration; the
     // driver never sets it, so the per-round bench is always the full
     // suite. Blank names are dropped so SPARK_GRAFT_ONLY="" means

@@ -84,6 +84,27 @@ object RecallGate {
     }
   }
 
+  /** One JSONL row of the sweep, every string quoted by [[BenchKit.jstr]]
+    * (an sf path may hold `"` or `\`). Zero true edges means the gate
+    * itself is degenerate (empty/tiny embeddings table, broken eval set) —
+    * writing recall=1.0 would put a perfect-recall row into the artifact
+    * of record, the inverse of the r11 misleading-gate failure this tool
+    * exists to prevent — so that point is an explicit ERROR row
+    * (consumers filter on the `error` key). Locale.ROOT: a comma-decimal
+    * default locale would emit invalid JSON through the format. */
+  private[graft] def jsonRow(graph: String, config: String, sf: String, nVectors: Long,
+                             nQueries: Long, trueEdges: Long, hits: Long,
+                             buildSecs: Double, gateSecs: Double): String = {
+    import BenchKit.jstr
+    val head = s"""{"graph":${jstr(graph)},"config":${jstr(config)},"sf":${jstr(sf)},""" +
+      s""""n_vectors":$nVectors,"n_queries":$nQueries,"true_edges":$trueEdges,"""
+    if (trueEdges == 0) head + s""""error":${jstr("degenerate gate: 0 true edges")}}"""
+    else head + String.format(java.util.Locale.ROOT,
+      """"hits":%d,"recall":%.4f,"build_secs":%.2f,"gate_secs":%.2f}""",
+      Long.box(hits), Double.box(hits.toDouble / trueEdges), Double.box(buildSecs),
+      Double.box(gateSecs))
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RecallGate <outJsonl> <sfDir> [sfDir ...]")
     val outPath = java.nio.file.Paths.get(args(0))
@@ -97,7 +118,7 @@ object RecallGate {
     // as an explicit error row and keep sweeping, then exit non-zero
     var degenerate = 0
     for (dir <- sfDirs; spec <- graphs) {
-      val n = Tables.load(spark, dir, "embeddings").count()
+      val n = Tables.rowCount(spark, dir, "embeddings")
       // build and gate timed separately: the build is the graph's cost
       // story; the gate is the fixed O(|eval|·n) harness
       val t0 = System.nanoTime()
@@ -115,32 +136,14 @@ object RecallGate {
       val (name, dials) = parseSpec(spec)
       val cfg = if (dials.isEmpty) "default"
         else dials.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(",")
-      // zero true edges means the gate itself is degenerate (empty/tiny
-      // embeddings table, broken eval set) — writing recall=1.0 would put
-      // a perfect-recall row into the artifact of record, the inverse of
-      // the r11 misleading-gate failure this tool exists to prevent. The
-      // point is recorded as an explicit ERROR row (consumers filter on
-      // the `error` key) and the sweep continues.
-      val row = if (t == 0) {
+      // a degenerate gate writes an error row ([[jsonRow]]) and the sweep
+      // continues
+      if (t == 0) {
         degenerate += 1
         System.err.println(s"RecallGate: 0 true edges for $spec at $dir " +
           s"($n vectors, $q queries) — degenerate gate, recording error row")
-        String.format(java.util.Locale.ROOT,
-          """{"graph":"%s","config":"%s","sf":"%s","n_vectors":%d,""" +
-            """"n_queries":%d,"true_edges":0,""" +
-            """"error":"degenerate gate: 0 true edges"}""",
-          name, cfg, dir, Long.box(n), Long.box(q))
-      } else {
-        val recall = h.toDouble / t
-        // Locale.ROOT: a comma-decimal default locale would emit invalid
-        // JSON through the f-interpolator and break the artifact build
-        String.format(java.util.Locale.ROOT,
-          """{"graph":"%s","config":"%s","sf":"%s","n_vectors":%d,""" +
-            """"n_queries":%d,"true_edges":%d,"hits":%d,"recall":%.4f,""" +
-            """"build_secs":%.2f,"gate_secs":%.2f}""",
-          name, cfg, dir, Long.box(n), Long.box(q), Long.box(t), Long.box(h),
-          Double.box(recall), Double.box(buildSecs), Double.box(gateSecs))
       }
+      val row = jsonRow(name, cfg, dir, n, q, t, h, buildSecs, gateSecs)
       java.nio.file.Files.writeString(outPath, row + "\n",
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)

@@ -1,6 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr, unix_micros, unix_millis}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
@@ -16,8 +24,49 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Table `name` of `dir`, its schema read on the driver from the footer
+    * of the file Spark's own inference reads ([[dataFiles]]), so no
+    * schema-inference job runs. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    dataFiles(spark, path).fold(spark.read.parquet(path)) { fs =>
+      val first = new Footer(fs.head.getPath, footer(spark, fs.head))
+      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(first,
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))).parquet(path)
+    }
+  }
+
+  /** Rows of table `name` of `dir`: the row-group counts of its files'
+    * footers, read on the driver — no job, where `count()` runs two. */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long = {
+    val path = s"$dir/$name.parquet"
+    dataFiles(spark, path).fold(spark.read.parquet(path).count())(
+      _.map(footer(spark, _).getBlocks.asScala.map(_.getRowCount).sum).sum)
+  }
+
+  /** `path`'s data files in path order, the first being the one Spark's
+    * schema inference reads — None where that inference does more than
+    * read one footer (a missing path, no data file, partition
+    * directories, schema merging, summary files), so the caller falls
+    * back to Spark's reader and its answer or error. */
+  private def dataFiles(spark: SparkSession, path: String): Option[Seq[FileStatus]] = {
+    val p = new Path(path)
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
+        !p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
+    else {
+      val index = new InMemoryFileIndex(spark, Seq(p), Map.empty, None)
+      val files = index.allFiles().sortBy(_.getPath.toString)
+      if (files.isEmpty || index.partitionSchema.nonEmpty ||
+          files.exists(_.getPath.getName.startsWith("_"))) None
+      else Some(files)
+    }
+  }
+
+  private def footer(spark: SparkSession, file: FileStatus): ParquetMetadata = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()))
+    try reader.getFooter finally reader.close()
+  }
 
   /** Schema-tolerant epoch-milliseconds extraction for the events `ts`
     * column. Real lakes mix parquet timestamp physical encodings:
@@ -122,6 +171,11 @@ object Tables {
       // a 4-core box (0.27 s via the JVM), and both give the same bytes on
       // the special cases HarmonizeSpec pins
       .config("spark.sql.icu.caseMappings.enabled", "false")
+      // generated classes cached per JVM: the default 100 entries evict
+      // almost every class a pass of the suite compiles, so a second
+      // identical pass recompiles nearly all of them. One sf0.01 Verify
+      // session compiles 1,352 distinct classes; 4096 holds them with room.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -566,7 +566,7 @@ object DedupOps {
   def embeddingNearDupAuto(spark: SparkSession, dir: String): DataFrame = {
     val q = Caches.cached(quantized(spark, dir))
     // corpus count for the √n list-count rule: parquet metadata, no scan
-    val n = Tables.load(spark, dir, "embeddings").count()
+    val n = Tables.rowCount(spark, dir, "embeddings")
     val (asg, _) = KMeans.fitSized(q, n, nlist = KMeans.autoNlist(n))
     // the assignment is corpus-LENGTH (one row per vector) even though
     // it is narrow, so attaching it must co-shuffle on vec_id — Catalyst

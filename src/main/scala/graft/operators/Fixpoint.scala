@@ -6,22 +6,26 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 import graft.Checkpoints
 
 /** The one round-loop lifecycle of the iterative operators: the k-NN
-  * descent, PageRank, k-means, label propagation and star contraction.
+  * descent, PageRank, k-means, label propagation and star contraction,
+  * and the k-NN recall gate that scores the descent's graph.
   *
   * Two paths per loop:
   *  - **driver tail**: when the loop's state — sized from counts the
   *    operator already takes, times its row width at [[FieldBytes]] per
   *    numeric column — is no larger than
-  *    `spark.sql.autoBroadcastJoinThreshold`, the operator collects it
-  *    once and finishes on the driver, then hands back a frame. The
-  *    descent, PageRank and k-means repeat their Spark rounds' arithmetic
-  *    round by round ([[onDriver]]); the two component loops share one
-  *    pass, [[Indexed.components]]. The threshold is the size up to which
+  *    `spark.sql.autoBroadcastJoinThreshold` ([[Fixpoint.fitsDriver]],
+  *    the one rule), the operator collects it once and finishes on the
+  *    driver, then hands back a frame. The descent (seed, rounds and
+  *    mutual tail, decided from the corpus size before any of them),
+  *    PageRank and k-means repeat their Spark rounds' arithmetic round by
+  *    round ([[onDriver]]); the two component loops share one pass,
+  *    [[Indexed.components]]. The threshold is the size up to which
   *    Spark itself ships a relation to the driver and back out as a
   *    broadcast; the collected rows are boxed, so the driver briefly holds
   *    about three times the estimate. The threshold bounds driver memory,
@@ -41,7 +45,8 @@ import graft.Checkpoints
   * converging fails. Every round logs one INFO record on the
   * `graft.Fixpoint` logger: loop, round, path, state rows and seconds; a
   * loop that finishes in one step (a driver component pass, PageRank's
-  * lazily chained Spark rounds) logs one record for it ([[record]]).
+  * lazily chained Spark rounds) logs one record for it, and a stage
+  * outside the rounds one record with its name ([[record]]).
   *
   * A runner lives for one operator call ([[Fixpoint.run]] /
   * [[Fixpoint.using]]) and keeps its checkpoints in one
@@ -52,11 +57,8 @@ private[graft] final class Fixpoint private (val loop: String, val session: Spar
                                              scope: Checkpoints) {
   import Fixpoint._
 
-  /** Whether a state of `bytes` fits the driver tail. */
-  def fitsDriver(bytes: Long): Boolean = {
-    val limit = session.sessionState.conf.autoBroadcastJoinThreshold
-    limit >= 0 && bytes >= 0 && bytes <= limit
-  }
+  /** Whether a state of `bytes` fits the driver tail ([[Fixpoint.fitsDriver]]). */
+  def fitsDriver(bytes: Long): Boolean = Fixpoint.fitsDriver(session, bytes)
 
   /** A lazy local checkpoint of `df`, owned by this runner. The first
     * action that reads all of it materializes it. */
@@ -127,10 +129,14 @@ private[graft] final class Fixpoint private (val loop: String, val session: Spar
     s
   }
 
-  /** Log the record of `round` on `path`, begun at `t0` (nanoTime). */
-  def record(round: Int, path: String, rows: Long, t0: Long): Unit =
+  /** Log the record of `round` on `path`, begun at `t0` (nanoTime). A
+    * stage outside the rounds (the descent's seed and mutual tail, the
+    * recall gate) logs round 0 and its `stage` name; a lazily planned
+    * Spark stage logs rows=-1, its time falling to the action that reads
+    * it. */
+  def record(round: Int, path: String, rows: Long, t0: Long, stage: String = ""): Unit =
     log.info(f"loop=$loop round=$round path=$path rows=$rows " +
-      f"secs=${(System.nanoTime() - t0) / 1e9}%.3f")
+      f"secs=${(System.nanoTime() - t0) / 1e9}%.3f" + (if (stage.isEmpty) "" else s" stage=$stage"))
 
   /** The checkpoint a state frame is a projection or filter of — not
     * the checkpoints it merely reads (a frame derived from the loop's
@@ -157,6 +163,17 @@ private[graft] object Fixpoint {
 
   /** Width of one numeric column of loop state, in bytes. */
   val FieldBytes = 8L
+
+  /** The one size rule of every driver tail: a state of `bytes` fits when
+    * it is no larger than `spark.sql.autoBroadcastJoinThreshold` (-1, no
+    * broadcasts, keeps every loop on its Spark path). */
+  def fitsDriver(spark: SparkSession, bytes: Long): Boolean = {
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    limit >= 0 && bytes >= 0 && bytes <= limit
+  }
+
+  /** State bytes of `n` collected [[Vectors]] rows: (vec_id, qv[Dim], nrm). */
+  def vectorBytes(n: Long): Long = n * (DedupOps.Dim + 2) * FieldBytes
 
   /** One round's outcome: the new state, its row count for the round
     * record, and whether the loop is finished. */
@@ -241,10 +258,7 @@ private[graft] object Fixpoint {
   /** Collected (vec_id, qv, nrm) rows, sorted by id, for the driver tails
     * that score vectors. */
   final class Vectors private (val ids: Array[Long], val qv: Array[Array[Long]],
-                               val nrm: Array[Long]) {
-    /** The row of `id`, negative when absent. */
-    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
-  }
+                               val nrm: Array[Long])
 
   object Vectors {
     /** [[graft.functions.LongArrayDot]]'s arithmetic on driver arrays:
@@ -273,5 +287,10 @@ private[graft] object Fixpoint {
           sorted.map(_.getLong(2))))
       }
     }
+
+    /** [[apply]] over the (vec_id, qv, nrm) columns of `q`, collected in
+      * one job. */
+    def collect(q: DataFrame): Option[Vectors] =
+      apply(q.select(col("vec_id"), col("qv"), col("nrm")).collect())
   }
 }

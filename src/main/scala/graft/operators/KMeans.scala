@@ -60,8 +60,8 @@ object KMeans {
     Fixpoint.using("kmeans", q.sparkSession) { fp =>
       // state: the vectors themselves, (vec_id, qv[Dim], nrm) per row
       val local =
-        if (!fp.fitsDriver(rows * (DedupOps.Dim + 2) * Fixpoint.FieldBytes)) None
-        else Fixpoint.Vectors(q.select(col("vec_id"), col("qv"), col("nrm")).collect())
+        if (!fp.fitsDriver(Fixpoint.vectorBytes(rows))) None
+        else Fixpoint.Vectors.collect(q)
       local match {
         case Some(v) => fitOnDriver(fp, v, iters, nlist, firstSeed)
         case None => fitOnSpark(fp, q, iters, nlist, firstSeed)

@@ -173,7 +173,7 @@ object SimilarityOps {
     * nlist is a parquet metadata read, not a scan. */
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
-    ivfTopKFrom(q, graft.Tables.load(spark, dir, "embeddings").count())
+    ivfTopKFrom(q, graft.Tables.rowCount(spark, dir, "embeddings"))
   }
 
   /** IVF pipe over an already-cached quantized frame — shared by
@@ -224,7 +224,7 @@ object SimilarityOps {
   def ivfRecall(spark: SparkSession, dir: String): DataFrame = {
     val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
     val brute = bruteForceTopKFrom(q).select(col("query_id"), col("neighbor"))
-    val ivf = ivfTopKFrom(q, graft.Tables.load(spark, dir, "embeddings").count())
+    val ivf = ivfTopKFrom(q, graft.Tables.rowCount(spark, dir, "embeddings"))
       .select(col("query_id").as("q2"), col("neighbor").as("n2"))
     recallOf(brute, ivf)
   }
@@ -280,7 +280,7 @@ object SimilarityOps {
     * only to make output deterministic"). Same rows. */
   private[graft] def knnGraphEdges(spark: SparkSession, dir: String): DataFrame = {
     val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
-    val n = graft.Tables.load(spark, dir, "embeddings").count()
+    val n = graft.Tables.rowCount(spark, dir, "embeddings")
     val nlist = KMeans.autoNlist(n)
     val (asg, _) = KMeans.fitSized(q, n, nlist = nlist)
     val blocked = q.join(asg.hint("shuffle_hash"), "vec_id")
@@ -355,7 +355,7 @@ object SimilarityOps {
   /** [[knnGraph2]] without the presentation sort (see [[knnGraphEdges]]). */
   private[graft] def knnGraph2Edges(spark: SparkSession, dir: String): DataFrame = {
     val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
-    val n = graft.Tables.load(spark, dir, "embeddings").count()
+    val n = graft.Tables.rowCount(spark, dir, "embeddings")
     val nlist = KMeans.autoNlist(n)
     val (_, cents) = KMeans.fitSized(q, n, nlist = nlist)
     // checkpoint the 2-probe assignment: it is a NARROW (vec_id, cl)
@@ -434,7 +434,7 @@ object SimilarityOps {
   /** [[knnGraphBits]] without the presentation sort (see [[knnGraphEdges]]). */
   private[graft] def knnGraphBitsEdges(spark: SparkSession, dir: String): DataFrame = {
     val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
-    val n = graft.Tables.load(spark, dir, "embeddings").count()
+    val n = graft.Tables.rowCount(spark, dir, "embeddings")
     // dedup = false (r21): multi-table collisions repeat with the same
     // cosine and mutualize's TopKEdgesAgg collapses them in its buffer —
     // the full-relation distinct exchange is redundant (output unchanged)
@@ -606,9 +606,10 @@ object SimilarityOps {
     * k'²-sized constant — the SAME linear class as the bits seed, but
     * the descent recovers the cross-bucket edges blocking loses (the
     * gate measures the recovery every round; the bits seed alone
-    * measured 0.00 eval recall at sf10, r11). The rounds run under
-    * [[Fixpoint]]: at the shipped dials, a graph and vector set that fit
-    * its driver tail finish on the driver, output-identical. */
+    * measured 0.00 eval recall at sf10, r11). The operator runs under
+    * [[Fixpoint]]: at the shipped dials, a corpus whose graph and vectors
+    * fit its driver tail is built on the driver from seed to mutual
+    * tail ([[descentOnDriver]]), output-identical. */
   def knnGraphRefined(spark: SparkSession, dir: String): DataFrame =
     knnGraphRefinedTuned(spark, dir).orderBy("ida", "idb")
 
@@ -639,42 +640,47 @@ object SimilarityOps {
       // reached its final k'
       def widthFinal(t: Int): Boolean = t > earlyRounds || earlyKd >= kd
       val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
-      val n = graft.Tables.load(spark, dir, "embeddings").count()
-      // Shuffle width stays at the session default DELIBERATELY: a
-      // volume-derived raising scope (rows/8M ≈ 400 partitions for the
-      // round-1 k'²·n candidate space at sf10) was built and A/B'd on an
-      // idle machine — 1308 s vs 932 s for the identical 0.9231-recall
-      // edge set (tools/recall_r13_{wideshuffle,defaultwidth}.jsonl).
-      // Fat partitions streaming through single-pass spill beat skinny
-      // partitions' per-task overhead here; on a real cluster the width
-      // is the deployment's dial (spark.sql.shuffle.partitions / AQE
-      // initialPartitionNum), not something this operator should scope.
-      val (seed, seedRows) = fp.cut(directedTopFrom(
-        bitsScored(q, n, seedTables, seedTargetList, dedup = false, checkpoint = fp.cut(_)._1),
-        kd))
-      // the driver tail replays the shipped operator only: any other dial
-      // (a sweep's k', rounds, seed or staged widths, a forced scoring
-      // dispatch) keeps the Spark rounds that define it. Its state is the
-      // directed graph (src, dst, cosine) plus the vectors it is scored
-      // from, (vec_id, qv[Dim], nrm).
+      val n = graft.Tables.rowCount(spark, dir, "embeddings")
+      // One decision, from n alone: the driver tail replays the shipped
+      // operator only — any other dial (a sweep's k', rounds or seed, a
+      // forced scoring dispatch) keeps the Spark stages that define it.
+      // Its state is the directed graph, at most n·k' rows of (src, dst,
+      // cosine), plus the vectors it is scored from.
       val shipped = kd == DescentK && rounds == DescentRounds &&
         seedTables == DescentSeedTables && seedTargetList == DescentSeedTarget &&
-        earlyKd == DescentEarlyKd &&
-        earlyRounds == DescentEarlyRounds && broadcastVecs == DescentBroadcastVecs
+        earlyKd == DescentEarlyKd && earlyRounds == DescentEarlyRounds &&
+        broadcastVecs == DescentBroadcastVecs
       val local =
-        if (!shipped || !fp.fitsDriver(3 * seedRows * Fixpoint.FieldBytes +
-            n * (DedupOps.Dim + 2) * Fixpoint.FieldBytes)) None
-        else descentOnDriver(fp, q, seed, kd, rounds, kdOf, widthFinal)
+        if (!shipped || !fp.fitsDriver(3 * n * kd * Fixpoint.FieldBytes + Fixpoint.vectorBytes(n)))
+          None
+        else {
+          val t0 = System.nanoTime()
+          Fixpoint.Vectors.collect(q).map(descentOnDriver(fp, _, n, t0, kd, rounds, seedTables,
+            seedTargetList, kdOf, widthFinal))
+        }
 
       def descentOnSpark(): DataFrame = {
-        // state: (graph, its rows, the "used" relation for the incremental
-        // FoF cut below — None before round 1: everything is new). The used
-        // relation is the previous round's full neighborhood relation. The
-        // runner releases each superseded graph and used relation
-        // once the round's new ones are materialized: without that the build
-        // pins 2·rounds graph-sized block sets (several GB at sf10) for the
-        // session — storage pressure during exactly the stages whose spill is
-        // the build's cost center.
+        // Shuffle width stays at the session default DELIBERATELY: a
+        // volume-derived raising scope (rows/8M ≈ 400 partitions for the
+        // round-1 k'²·n candidate space at sf10) was built and A/B'd on an
+        // idle machine — 1308 s vs 932 s for the identical 0.9231-recall
+        // edge set (tools/recall_r13_{wideshuffle,defaultwidth}.jsonl).
+        // Fat partitions streaming through single-pass spill beat skinny
+        // partitions' per-task overhead here; on a real cluster the width
+        // is the deployment's dial (spark.sql.shuffle.partitions / AQE
+        // initialPartitionNum), not something this operator should scope.
+        val t0 = System.nanoTime()
+        val (seed, seedRows) = fp.cut(directedTopFrom(
+          bitsScored(q, n, seedTables, seedTargetList, dedup = false, checkpoint = fp.cut(_)._1),
+          kd))
+        fp.record(0, "spark", seedRows, t0, "seed")
+        // state: (graph, its rows, the previous round's neighborhood
+        // relation for the incremental FoF cut below — None before round
+        // 1: everything is new). The runner releases each superseded graph
+        // and neighborhood once the round's new ones are materialized:
+        // without that the build pins 2·rounds graph-sized block sets
+        // (several GB at sf10) for the session — storage pressure during
+        // exactly the stages whose spill is the build's cost center.
         val (sd, _, _) = fp.onSpark[(DataFrame, Long, Option[DataFrame])](
             (seed, seedRows, None), rounds, converging = false)(s => s._1 +: s._3.toSeq) {
           case ((sd, sdRows, prevUsed), round) =>
@@ -829,119 +835,162 @@ object SimilarityOps {
               Fixpoint.Step((next, rows, Some(und)), rows)
             }
         }
-        sd
-      }
-
-      // no distinct (r21): a mutual pair appears in sd in both directions
-      // with the same cosine; mutualize's TopKEdgesAgg collapses the copies
-      // in its buffer, so the dedup exchange of the n·k'-row final edge
-      // relation is redundant (output unchanged, oracle-proven)
-      val sd = local.getOrElse(descentOnSpark())
-      mutualizeCore(sd.select(least(col("src"), col("dst")).as("ida"),
+        // no distinct (r21): a mutual pair appears in sd in both directions
+        // with the same cosine; mutualize's TopKEdgesAgg collapses the copies
+        // in its buffer, so the dedup exchange of the n·k'-row final edge
+        // relation is redundant (output unchanged, oracle-proven)
+        val t1 = System.nanoTime()
+        val out = mutualizeCore(sd.select(least(col("src"), col("dst")).as("ida"),
           greatest(col("src"), col("dst")).as("idb"), col("cosine")))
+        fp.record(0, "spark", -1, t1, "mutual")
+        out
+      }
+
+      local.getOrElse(descentOnSpark())
     }
 
-  /** The descent rounds on the driver, at the shipped dials: the same
-    * staged neighborhoods (out top-k'ₜ ∪ in top-k'ₜ per center, ranked
-    * by [[graft.functions.TopKEdgesAgg.Buf]]), the same new/old cut and
-    * settled exit, the same candidates (FoF pairs through a shared
-    * center with a new side, plus the retained edges), each scored
-    * `dot.toDouble / sqrt(nrm_a) / sqrt(nrm_b)` with a the smaller id,
-    * and the same top-k' contraction. Candidates are
-    * gathered per node rather than per pair — the contraction keeps each
-    * node's top-k' of its candidate SET, whatever order it arrives in —
-    * so the nodes score in parallel on the driver's cores. None when a
-    * vector or seed row falls outside what these rounds replicate (see
-    * [[Fixpoint.Vectors]]). */
-  private def descentOnDriver(fp: Fixpoint, q: DataFrame, seed: DataFrame, kd: Int,
-                              rounds: Int, kdOf: Int => Int,
-                              widthFinal: Int => Boolean): Option[DataFrame] = {
+  /** The whole shipped descent on the driver, over the collected vectors:
+    * each stage the Spark operator's own arithmetic, with every cosine
+    * `dot.toDouble / sqrt(nrm_a) / sqrt(nrm_b)` and a the smaller id
+    * (index order is id order, so every tie-break on an index is the same
+    * tie-break on the id).
+    *  - seed: [[bitAssign]]'s signature per table (its planes,
+    *    [[bitPlaneWeight]]), [[capSplit]]'s `vec_id mod nsplit` sub-blocks,
+    *    and each node's top-k' of its same-block pairs
+    *    ([[directedTopFrom]] over [[bitsScored]]);
+    *  - rounds: the same staged neighborhoods (out top-k'ₜ ∪ in top-k'ₜ
+    *    per center, ranked by [[graft.functions.TopKEdgesAgg.Buf]]), the
+    *    same new/old cut and settled exit, the same candidates (FoF pairs
+    *    through a shared center with a new side, plus the retained edges)
+    *    and the same top-k' contraction;
+    *  - tail: [[mutualizeCore]]'s per-node top-[[KGraph]] over the final
+    *    edges taken both ways, an edge kept when each endpoint ranks the
+    *    other, as (ida, idb, cosine, rnk_a, rnk_b).
+    * Candidates are gathered per node rather than per pair — a top-k'
+    * keeps each node's best of its candidate SET, whatever order it
+    * arrives in — so the nodes score in parallel on the driver's cores.
+    * `t0` is when the vector collect began: the seed's record counts it. */
+  private def descentOnDriver(fp: Fixpoint, v: Fixpoint.Vectors, n: Long, t0: Long, kd: Int,
+                              rounds: Int, seedTables: Int, seedTargetList: Long,
+                              kdOf: Int => Int, widthFinal: Int => Boolean): DataFrame = {
     import graft.functions.TopKEdgesAgg.Buf
-    for {
-      v <- Fixpoint.Vectors(q.select(col("vec_id"), col("qv"), col("nrm")).collect())
-      seedRows = seed.collect()
-      ix = seedRows.map(r => (v.index(r.getLong(0)), v.index(r.getLong(1))))
-      if ix.forall { case (a, b) => a >= 0 && b >= 0 }
-    } yield {
-      val nv = v.ids.length
-      val sq = v.nrm.map(x => math.sqrt(x.toDouble))
-      def cosine(a: Int, b: Int): Double =
-        Fixpoint.Vectors.dot(v.qv(a), v.qv(b)).toDouble / sq(a) / sq(b)
-      // a node's out-edges, in the buffer's (cosine DESC, dst ASC) order
-      final case class Edges(dst: Array[Int], cos: Array[Double])
-      def edges(b: Buf): Edges =
-        Edges(Array.tabulate(b.size)(i => b.dsts(i).toInt), java.util.Arrays.copyOf(b.coss, b.size))
-      val noEdges = Edges(Array.emptyIntArray, Array.emptyDoubleArray)
-      val seedBufs = Array.fill(nv)(new Buf(kd))
-      for (i <- seedRows.indices)
-        seedBufs(ix(i)._1).insert(ix(i)._2.toLong, seedRows(i).getDouble(2))
-      val sd0 = seedBufs.map(b => if (b.size == 0) noEdges else edges(b))
-      // used (previous round's neighborhood) per center, sorted; null =
-      // not a center then
-      val (sd, _) = fp.onDriver[(Array[Edges], Array[Array[Int]])]((sd0, null), rounds) {
-          case ((sd, prevUsed), round) =>
-        val kdt = kdOf(round)
-        val inBuf = new Array[Buf](nv)
-        val rev = Array.fill(nv)(Array.newBuilder[Int])
-        for (x <- 0 until nv; i <- sd(x).dst.indices) {
-          val y = sd(x).dst(i)
-          if (inBuf(y) == null) inBuf(y) = new Buf(kdt)
-          inBuf(y).insert(x.toLong, sd(x).cos(i))
-          rev(y) += x
-        }
-        val und = Array.tabulate(nv) { c =>
-          if (sd(c).dst.isEmpty && inBuf(c) == null) null
-          else {
-            val out = sd(c).dst.take(kdt)
-            val in = if (inBuf(c) == null) Array.emptyIntArray
-              else Array.tabulate(inBuf(c).size)(i => inBuf(c).dsts(i).toInt)
-            (out ++ in).distinct.sorted
-          }
-        }
-        val isNew = Array.tabulate(nv) { c =>
-          if (und(c) == null) null
-          else und(c).map(y => prevUsed == null || prevUsed(c) == null ||
-            java.util.Arrays.binarySearch(prevUsed(c), y) < 0)
-        }
-        if (widthFinal(round) && prevUsed != null &&
-            !isNew.exists(f => f != null && f.contains(true)))
-          Fixpoint.Step((sd, und), sd.map(_.dst.length.toLong).sum, done = true)
+    val nv = v.ids.length
+    val sq = v.nrm.map(x => math.sqrt(x.toDouble))
+    def cosine(a: Int, b: Int): Double =
+      Fixpoint.Vectors.dot(v.qv(a), v.qv(b)).toDouble / sq(a) / sq(b)
+    // a node's out-edges, in the buffer's (cosine DESC, dst ASC) order
+    final case class Edges(dst: Array[Int], cos: Array[Double])
+    def edges(b: Buf): Edges =
+      Edges(Array.tabulate(b.size)(i => b.dsts(i).toInt), java.util.Arrays.copyOf(b.coss, b.size))
+    val noEdges = Edges(Array.emptyIntArray, Array.emptyDoubleArray)
+    // each node's top-k' over the candidates `each(x, offer)` offers it,
+    // nodes in parallel; a candidate offered twice is scored once:
+    // seen(y) == x while node x gathers (per-thread marks)
+    def topPerNode(each: (Int, Int => Unit) => Unit): Array[Edges] = {
+      val scratch = ThreadLocal.withInitial[Array[Int]](() => Array.fill(nv)(-1))
+      val out = new Array[Edges](nv)
+      java.util.stream.IntStream.range(0, nv).parallel().forEach { x =>
+        val seen = scratch.get()
+        val buf = new Buf(kd)
+        each(x, y => if (y != x && seen(y) != x) {
+          seen(y) = x
+          buf.insert(y.toLong, if (x < y) cosine(x, y) else cosine(y, x))
+        })
+        out(x) = if (buf.size == 0) noEdges else edges(buf)
+      }
+      out
+    }
+
+    // seed: (table, signature) cell per node and table, then the cells'
+    // sub-blocks; a node's candidates are its blocks' other members
+    val b = autoPlanes(n, seedTargetList)
+    val planes = Array.tabulate(seedTables, b)((t, h) =>
+      Array.tabulate(DedupOps.Dim)(d => bitPlaneWeight(t * 64 + h, d + 1).toLong))
+    val cl = Array.tabulate(nv, seedTables) { (x, t) =>
+      var bucket = 0L
+      for (h <- 0 until b) if (Fixpoint.Vectors.dot(v.qv(x), planes(t)(h)) >= 0) bucket += 1L << h
+      t.toLong * (1L << b) + bucket
+    }
+    val cap = CapFactor * seedTargetList
+    val m = cl.flatten.groupBy(identity).map { case (c, xs) => c -> xs.length.toLong }
+    val blk = cl.zipWithIndex.map { case (cs, x) =>
+      cs.map(c => c * (1L << 20) + Math.floorMod(v.ids(x), (m(c) + cap - 1) / cap)) }
+    val members = blk.zipWithIndex.flatMap { case (ks, x) => ks.map(_ -> x) }
+      .groupBy(_._1).map { case (k, kx) => k -> kx.map(_._2) }
+    val sd0 = topPerNode((x, offer) => blk(x).foreach(k => members(k).foreach(offer)))
+    fp.record(0, "driver", sd0.map(_.dst.length.toLong).sum, t0, "seed")
+
+    // used (previous round's neighborhood) per center, sorted; null =
+    // not a center then
+    val (sd, _) = fp.onDriver[(Array[Edges], Array[Array[Int]])]((sd0, null), rounds) {
+        case ((sd, prevUsed), round) =>
+      val kdt = kdOf(round)
+      val inBuf = new Array[Buf](nv)
+      val rev = Array.fill(nv)(Array.newBuilder[Int])
+      for (x <- 0 until nv; i <- sd(x).dst.indices) {
+        val y = sd(x).dst(i)
+        if (inBuf(y) == null) inBuf(y) = new Buf(kdt)
+        inBuf(y).insert(x.toLong, sd(x).cos(i))
+        rev(y) += x
+      }
+      val und = Array.tabulate(nv) { c =>
+        if (sd(c).dst.isEmpty && inBuf(c) == null) null
         else {
-          // the (center, position) entries each node holds
-          val memb = Array.fill(nv)(Array.newBuilder[Long])
-          for (c <- 0 until nv if und(c) != null; k <- und(c).indices)
-            memb(und(c)(k)) += (c.toLong << 32) | k
-          val membs = memb.map(_.result())
-          val revs = rev.map(_.result())
-          // per-thread candidate marks, fresh each round: seen(y) == x
-          // while node x gathers its candidates
-          val scratch = ThreadLocal.withInitial[Array[Int]](() => Array.fill(nv)(-1))
-          val next = new Array[Edges](nv)
-          java.util.stream.IntStream.range(0, nv).parallel().forEach { x =>
-            val seen = scratch.get()
-            val buf = new Buf(kd)
-            def offer(y: Int): Unit = if (y != x && seen(y) != x) {
-              seen(y) = x
-              buf.insert(y.toLong, if (x < y) cosine(x, y) else cosine(y, x))
-            }
-            for (m <- membs(x)) {
-              val c = (m >>> 32).toInt
-              val newX = isNew(c)(m.toInt)
-              val nbrs = und(c)
-              for (j <- nbrs.indices) if (newX || isNew(c)(j)) offer(nbrs(j))
-            }
-            sd(x).dst.foreach(offer)
-            revs(x).foreach(offer)
-            next(x) = if (buf.size == 0) noEdges else edges(buf)
-          }
-          Fixpoint.Step((next, und), next.map(_.dst.length.toLong).sum)
+          val out = sd(c).dst.take(kdt)
+          val in = if (inBuf(c) == null) Array.emptyIntArray
+            else Array.tabulate(inBuf(c).size)(i => inBuf(c).dsts(i).toInt)
+          (out ++ in).distinct.sorted
         }
       }
-      Fixpoint.frame(fp.session, StructType(Seq(StructField("src", LongType),
-          StructField("dst", LongType), StructField("cosine", DoubleType))),
-        for (x <- 0 until nv; i <- sd(x).dst.indices)
-          yield Row(v.ids(x), v.ids(sd(x).dst(i)), sd(x).cos(i)))
+      val isNew = Array.tabulate(nv) { c =>
+        if (und(c) == null) null
+        else und(c).map(y => prevUsed == null || prevUsed(c) == null ||
+          java.util.Arrays.binarySearch(prevUsed(c), y) < 0)
+      }
+      if (widthFinal(round) && prevUsed != null &&
+          !isNew.exists(f => f != null && f.contains(true)))
+        Fixpoint.Step((sd, und), sd.map(_.dst.length.toLong).sum, done = true)
+      else {
+        // the (center, position) entries each node holds
+        val memb = Array.fill(nv)(Array.newBuilder[Long])
+        for (c <- 0 until nv if und(c) != null; k <- und(c).indices)
+          memb(und(c)(k)) += (c.toLong << 32) | k
+        val membs = memb.map(_.result())
+        val revs = rev.map(_.result())
+        val next = topPerNode { (x, offer) =>
+          for (mb <- membs(x)) {
+            val c = (mb >>> 32).toInt
+            val newX = isNew(c)(mb.toInt)
+            val nbrs = und(c)
+            for (j <- nbrs.indices) if (newX || isNew(c)(j)) offer(nbrs(j))
+          }
+          sd(x).dst.foreach(offer)
+          revs(x).foreach(offer)
+        }
+        Fixpoint.Step((next, und), next.map(_.dst.length.toLong).sum)
+      }
     }
+
+    // mutual tail: each node's top-KGraph over the edges taken both ways
+    val t1 = System.nanoTime()
+    val top = Array.fill(nv)(new Buf(KGraph))
+    for (x <- 0 until nv; i <- sd(x).dst.indices) {
+      top(x).insert(sd(x).dst(i).toLong, sd(x).cos(i))
+      top(sd(x).dst(i)).insert(x.toLong, sd(x).cos(i))
+    }
+    def rankOf(x: Int, y: Int): Int = (0 until top(x).size).indexWhere(top(x).dsts(_) == y)
+    val mutual = for {
+      x <- 0 until nv
+      p <- 0 until top(x).size
+      y = top(x).dsts(p).toInt
+      if x < y
+      r = rankOf(y, x)
+      if r >= 0
+    } yield Row(v.ids(x), v.ids(y), top(x).coss(p), p + 1L, r + 1L)
+    fp.record(0, "driver", mutual.length, t1, "mutual")
+    Fixpoint.frame(fp.session, StructType(Seq(StructField("ida", LongType),
+        StructField("idb", LongType), StructField("cosine", DoubleType),
+        StructField("rnk_a", LongType), StructField("rnk_b", LongType))), mutual)
   }
 
   /** Plan probe for the audit harness: the descent's seed contraction
@@ -952,7 +1001,7 @@ object SimilarityOps {
     * re-sorts its corpus-scale input. */
   private[graft] def seedContractionProbe(spark: SparkSession, dir: String): DataFrame = {
     val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
-    val n = graft.Tables.load(spark, dir, "embeddings").count()
+    val n = graft.Tables.rowCount(spark, dir, "embeddings")
     directedTopFrom(
       bitsScored(q, n, DescentSeedTables, DescentSeedTarget, dedup = false), DescentK)
   }
@@ -1095,10 +1144,28 @@ object SimilarityOps {
 
   /** The gate body behind every knnRecall* query — graph-agnostic, so
     * the sweep harness ([[graft.RecallGate]]) and Bench's shared-build
-    * attribution can score an already-built (ida, idb) edge relation. */
+    * attribution can score an already-built (ida, idb) edge relation.
+    * Under [[Fixpoint]]'s size rule, sized from n — the vectors plus the
+    * graph's edges from an eval query, at most [[EvalQueries]]·n pairs —
+    * a gate that fits runs on the driver ([[recallOnDriver]]),
+    * output-identical. */
   private[graft] def knnRecallOf(spark: SparkSession, dir: String,
-                                 graph: DataFrame): DataFrame = {
-    val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
+                                 graph: DataFrame): DataFrame =
+    Fixpoint.run("knn_recall", spark) { fp =>
+      val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
+      val n = graft.Tables.rowCount(spark, dir, "embeddings")
+      val t0 = System.nanoTime()
+      val local =
+        if (!fp.fitsDriver(Fixpoint.vectorBytes(n) + EvalQueries * n * 2 * Fixpoint.FieldBytes)) None
+        else Fixpoint.Vectors.collect(q).map(recallOnDriver(fp, _, graph, t0))
+      local.getOrElse {
+        val out = recallOnSpark(q, graph)
+        fp.record(0, "spark", -1, t0, "gate")
+        out
+      }
+    }
+
+  private def recallOnSpark(q: DataFrame, graph: DataFrame): DataFrame = {
     def directedTopK(src: DataFrame): DataFrame = {
       val pairs = broadcast(src).as("a").join(q.as("b"),
           col("a.vec_id") =!= col("b.vec_id"))
@@ -1138,6 +1205,50 @@ object SimilarityOps {
         when(col("n_true") === 0, lit(1.0))
           .otherwise(col("hits").cast("double") / col("n_true")).as("recall"))
       .orderBy("query_id")
+  }
+
+  /** [[recallOnSpark]] on the driver over the collected vectors and the
+    * graph's edges with ida < [[EvalQueries]] (an edge matching an eval
+    * query has that query or a smaller id as its ida): the same exact
+    * top-[[KGraph]] per query and per candidate, each cosine with the
+    * ranking side as `a` (`dot.toDouble / sqrt(nrm_a) / sqrt(nrm_b)`),
+    * ties to the smaller id; the same true mutual edges; and one hit per
+    * matching graph row, one miss for a true edge no row matches, as the
+    * left join counts them. `t0` is when the vector collect began. */
+  private def recallOnDriver(fp: Fixpoint, v: Fixpoint.Vectors, graph: DataFrame,
+                             t0: Long): DataFrame = {
+    import graft.functions.TopKEdgesAgg.Buf
+    val nv = v.ids.length
+    val sq = v.nrm.map(x => math.sqrt(x.toDouble))
+    // exact top-KGraph of each of `srcs` against every other vector
+    def tops(srcs: Array[Int]): Map[Int, Array[Int]] = {
+      val out = new Array[Array[Int]](srcs.length)
+      java.util.stream.IntStream.range(0, srcs.length).parallel().forEach { i =>
+        val a = srcs(i)
+        val buf = new Buf(KGraph)
+        for (b <- 0 until nv if b != a)
+          buf.insert(b.toLong, Fixpoint.Vectors.dot(v.qv(a), v.qv(b)).toDouble / sq(a) / sq(b))
+        out(i) = Array.tabulate(buf.size)(buf.dsts(_).toInt)
+      }
+      srcs.zip(out).toMap
+    }
+    val queries = (0 until nv).filter(v.ids(_) < EvalQueries).toArray
+    val fwd = tops(queries)
+    val rev = tops(queries.flatMap(fwd).distinct)
+    val found = graph.filter(col("ida") < EvalQueries).select(col("ida"), col("idb")).collect()
+      .filterNot(_.isNullAt(1)).groupBy(r => (r.getLong(0), r.getLong(1)))
+      .map { case (e, rs) => e -> rs.length.toLong }
+    val rows = queries.map { x =>
+      val truth = fwd(x).filter(rev(_).contains(x)).map { y =>
+        found.getOrElse((math.min(v.ids(x), v.ids(y)), math.max(v.ids(x), v.ids(y))), 0L) }
+      val nTrue = truth.map(math.max(_, 1L)).sum
+      val hits = truth.sum
+      Row(v.ids(x), nTrue, hits, if (nTrue == 0) 1.0 else hits.toDouble / nTrue)
+    }
+    fp.record(0, "driver", rows.length, t0, "gate")
+    Fixpoint.frame(fp.session, StructType(Seq(StructField("query_id", LongType),
+        StructField("n_true", LongType), StructField("hits", LongType),
+        StructField("recall", DoubleType))), rows.toSeq)
   }
 
   /** Connected components over the mutual-kNN edge relation — semantic
@@ -1234,7 +1345,7 @@ object SimilarityOps {
     val g = graft.Caches.cached(graph.select(col("ida"), col("idb")))
     val nodes = DedupOps.quantized(spark, dir).select(col("vec_id"))
     pageRankFrom(nodes, g, iters,
-      nodeCount = Some(graft.Tables.load(spark, dir, "embeddings").count()))
+      nodeCount = Some(graft.Tables.rowCount(spark, dir, "embeddings")))
   }
 
   /** The ppm recurrence over an explicit (nodes, undirected edges) pair —
@@ -1411,7 +1522,7 @@ object SimilarityOps {
       .select(col("doc_id").as("vec_id"), col("cluster_id"))
     val nodes = DedupOps.quantized(spark, dir).select(col("vec_id"))
     val pr = pageRankUnsorted(nodes, g,
-        nodeCount = Some(graft.Tables.load(spark, dir, "embeddings").count()))
+        nodeCount = Some(graft.Tables.rowCount(spark, dir, "embeddings")))
       .select(col("vec_id"), col("rank_ppm"))
     val w = Window.partitionBy("cluster_id")
     comp.join(pr.hint("shuffle_hash"), "vec_id")

@@ -6,9 +6,8 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, transform, when}
 
 import graft.operators.{DedupOps, Fixpoint, KMeans, SimilarityOps}
 
@@ -22,7 +21,10 @@ import graft.operators.{DedupOps, Fixpoint, KMeans, SimilarityOps}
   * took, so neither side can silently take the other. Also pinned: the
   * Spark path releases every checkpoint it made except the returned
   * frame's, on success and on failure; the round cap fails on both paths;
-  * and the descent's driver rounds schedule no Spark job.
+  * the descent's driver tail schedules no Spark job but the vector
+  * collect; the recall gate's driver path scores every graph as its Spark
+  * path does; and both leave to the Spark path the vectors it alone
+  * defines (a zero norm, a duplicated id).
   */
 class FixpointParitySpec extends SparkTestBase {
 
@@ -35,8 +37,9 @@ class FixpointParitySpec extends SparkTestBase {
     try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  /** `body`'s result and the (loop, path) of every round record it logged. */
-  private def recorded[T](body: => T): (T, Seq[(String, String)]) = {
+  /** `body`'s result and the (loop, path, stage) of every round record it
+    * logged; the stage is empty for a round. */
+  private def recorded[T](body: => T): (T, Seq[(String, String, String)]) = {
     // start the session first: its log-level reset would drop the appender
     spark.version
     val lines = mutable.ArrayBuffer.empty[String]
@@ -54,9 +57,14 @@ class FixpointParitySpec extends SparkTestBase {
       logger.setLevel(level)
       app.stop()
     }
-    val rec = "loop=(\\S+) round=\\d+ path=(\\S+) .*".r
-    (out, lines.toSeq.collect { case rec(loop, path) => (loop, path) })
+    val rec = "loop=(\\S+) round=\\d+ path=(\\S+) .*?( stage=\\S+)?".r
+    (out, lines.toSeq.collect { case rec(loop, path, stage) =>
+      (loop, path, Option(stage).fold("")(_.stripPrefix(" stage="))) })
   }
+
+  /** The (stage, path) of `loop`'s records of stages outside the rounds. */
+  private def stages(loop: String, recs: Seq[(String, String, String)]): Seq[(String, String)] =
+    recs.collect { case (`loop`, path, stage) if stage.nonEmpty => (stage, path) }
 
   /** Rows as comparable values: doubles by raw bits, arrays by element,
     * in a canonical order. */
@@ -68,8 +76,10 @@ class FixpointParitySpec extends SparkTestBase {
     }).sortBy(_.toString)
 
   /** Collect `run()` once per path; assert both took their path for
-    * `loop` and agree byte for byte. */
-  private def assertParity(loop: String)(run: () => Seq[DataFrame]): Unit = {
+    * `loop` and agree byte for byte. Returns each path's (stage, path)
+    * records of `loop`'s stages outside the rounds. */
+  private def assertParity(loop: String)(run: () => Seq[DataFrame])
+      : (Seq[(String, String)], Seq[(String, String)]) = {
     def collectAll() = Caches.withScope(run().map(df => canon(df.collect())))
     val (local, localPaths) = recorded(collectAll())
     val (dist, distPaths) = recorded(sparkPath(collectAll()))
@@ -79,6 +89,7 @@ class FixpointParitySpec extends SparkTestBase {
       s"$loop: expected Spark rounds, records $distPaths")
     assert(local.exists(_.nonEmpty), s"$loop: empty answer")
     local.zip(dist).foreach { case (l, d) => assert(l === d, s"$loop: driver and Spark rows differ") }
+    (stages(loop, localPaths), stages(loop, distPaths))
   }
 
   private lazy val refined: DataFrame =
@@ -89,10 +100,60 @@ class FixpointParitySpec extends SparkTestBase {
 
   private def quantized: DataFrame = Caches.cached(DedupOps.quantized(spark, sf01))
 
-  private def nlist: Int = KMeans.autoNlist(Tables.load(spark, sf01, "embeddings").count())
+  private def nlist: Int = KMeans.autoNlist(Tables.rowCount(spark, sf01, "embeddings"))
 
   test("k-NN descent: driver tail and Spark rounds build the identical graph") {
-    assertParity("knn_descent")(() => Seq(SimilarityOps.knnGraphRefinedEdges(spark, sf01)))
+    val (local, dist) =
+      assertParity("knn_descent")(() => Seq(SimilarityOps.knnGraphRefinedEdges(spark, sf01)))
+    // the whole operator takes one path: seed and mutual tail with the rounds
+    assert(local === Seq("seed" -> "driver", "mutual" -> "driver"))
+    assert(dist === Seq("seed" -> "spark", "mutual" -> "spark"))
+  }
+
+  private lazy val bits: DataFrame =
+    SimilarityOps.knnGraphBitsEdges(spark, sf01).select(col("ida"), col("idb")).localCheckpoint()
+
+  test("k-NN recall gate: driver and Spark paths score the refined and the bits graph identically") {
+    for (graph <- Seq(refined, bits)) {
+      val (local, dist) =
+        assertParity("knn_recall")(() => Seq(SimilarityOps.knnRecallOf(spark, sf01, graph)))
+      assert(local === Seq("gate" -> "driver"))
+      assert(dist === Seq("gate" -> "spark"))
+    }
+  }
+
+  test("k-NN build and recall gate: a zero-norm vector or a duplicated id leaves both on Spark") {
+    import spark.implicits._
+    val emb = Tables.load(spark, sf, "embeddings")
+    val zero = emb.withColumn("embedding",
+      when(col("vec_id") === 5L, transform(col("embedding"), _ * 0)).otherwise(col("embedding")))
+    val dup = emb.unionByName(emb.filter(col("vec_id") === 3L))
+    val graph = Seq((0L, 1L), (3L, 5L)).toDF("ida", "idb")
+    for ((name, table) <- Seq("zero norm" -> zero, "duplicated id" -> dup)) {
+      val dir = java.nio.file.Files.createTempDirectory("fixpoint-fallback").toString
+      try {
+        table.write.parquet(s"$dir/embeddings.parquet")
+        val (built, buildRecs) = recorded(Caches.withScope(
+          scala.util.Try(SimilarityOps.knnGraphRefinedEdges(spark, dir).collect())))
+        val (out, gateRecs) = recorded(Caches.withScope(
+          scala.util.Try(SimilarityOps.knnRecallOf(spark, dir, graph).collect())))
+        assert(stages("knn_recall", gateRecs) === Seq("gate" -> "spark"), s"$name: $gateRecs")
+        name match {
+          // the Spark plans divide by the zero norm: ANSI's divide by zero,
+          // which the driver arithmetic never raises — in the build, in its
+          // seed, before any record
+          case "zero norm" =>
+            assert(built.failed.get.getMessage.contains("DIVIDE_BY_ZERO"), name)
+            assert(buildRecs.filter(_._1 == "knn_descent") === Nil, s"$name: $buildRecs")
+            assert(out.failed.get.getMessage.contains("DIVIDE_BY_ZERO"), name)
+          case _ =>
+            assert(built.get.nonEmpty, name)
+            assert(stages("knn_descent", buildRecs) === Seq("seed" -> "spark", "mutual" -> "spark"),
+              s"$name: $buildRecs")
+            assert(out.get.length === emb.filter(col("vec_id") < 100L).count(), name)
+        }
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("PageRank: driver tail and Spark rounds give identical ranks") {
@@ -172,34 +233,16 @@ class FixpointParitySpec extends SparkTestBase {
   }
 
   test("the descent's driver rounds schedule no Spark job after the state collect") {
-    // jobs started during the build, in order, by call site; a marker job
-    // after the build orders the listener's events
-    val marker = "fixpoint-descent-marker"
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          done.countDown()
-        else sites.add(e.stageInfos.maxBy(_.stageId).name)
-    }
     Caches.withScope {
-      spark.sparkContext.addSparkListener(listener)
-      val (graph, paths) = try recorded {
-        val g = SimilarityOps.knnGraphRefinedEdges(spark, sf01)
-        spark.sparkContext.setJobDescription(marker)
-        try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-        assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
-        g
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val ((rows, paths), jobs) =
+        jobsOf(recorded(SimilarityOps.knnGraphRefinedEdges(spark, sf01).collect()))
       assert(paths.filter(_._1 == "knn_descent").map(_._2).distinct === Seq("driver"))
-      val jobs = sites.toArray(Array.empty[String]).toSeq
-      assert(jobs.nonEmpty)
-      // the last two jobs collect the vectors and the seed graph; the
-      // rounds and the (lazy) mutual top-k tail schedule nothing
-      assert(jobs.takeRight(2).forall(_.startsWith("collect at SimilarityOps")),
-        s"jobs after the state collect: $jobs")
-      assert(graph.collect().nonEmpty)
+      // the table's schema and row count come from its footers, so the
+      // build's one job reads and collects the vectors; the seed, the
+      // rounds, the mutual tail and reading the returned frame schedule
+      // nothing
+      assert(jobs === Seq("collect at Fixpoint.scala"))
+      assert(rows.nonEmpty)
     }
   }
 }

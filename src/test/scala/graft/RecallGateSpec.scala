@@ -41,4 +41,20 @@ class RecallGateSpec extends AnyFunSuite {
     }
     assert(unknown.getMessage.contains("voronoi3"))
   }
+
+  test("JSONL rows quote an sf path holding a quote and a backslash") {
+    val dir = "/data/sf \"q\" \\x"
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val normal = json.readTree(RecallGate.jsonRow("refined", "kd=48,rounds=7", dir,
+      1000L, 100L, 143L, 135L, 1.5, 0.25))
+    assert(normal.get("sf").asText === dir)
+    assert(normal.get("config").asText === "kd=48,rounds=7")
+    assert(normal.get("hits").asLong === 135L)
+    assert(normal.get("recall").asDouble === 0.9441)
+    val degenerate = json.readTree(RecallGate.jsonRow("bits", "default", dir,
+      3L, 100L, 0L, 0L, 0.1, 0.1))
+    assert(degenerate.get("sf").asText === dir)
+    assert(degenerate.get("true_edges").asLong === 0L)
+    assert(degenerate.has("error") && !degenerate.has("recall"))
+  }
 }

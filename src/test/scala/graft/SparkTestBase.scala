@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,6 +13,30 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.shared
   val sf: String = "/root/testdata/sf0.001"
   private val suiteT0 = System.nanoTime()
+
+  /** `body`'s result and the call sites (file, no line) of the jobs it
+    * started, in order; a marker job after `body` orders the listener's
+    * events. */
+  protected def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val marker = "jobs-of-marker"
+    val sites = new ConcurrentLinkedQueue[String]
+    val done = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          done.countDown()
+        else sites.add(e.stageInfos.maxBy(_.stageId).name.takeWhile(_ != ':'))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val out = try {
+      val out = body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(done.await(60, TimeUnit.SECONDS), "marker job not seen")
+      out
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (out, sites.toArray(Array.empty[String]).toSeq)
+  }
   override def afterAll(): Unit = {
     // wall-time attribution for the parallel forked groups (the sbt
     // summary aggregates; this is the per-suite number)

@@ -159,10 +159,13 @@ object Bench {
           Left(s"${t.getClass.getSimpleName}: ${String.valueOf(t.getMessage).take(300)}")
         }
       }
+      // every job of the query, AQE stage jobs included, carries its name
+      spark.sparkContext.setJobGroup(name, name)
       once() // untimed warm-up rep: first-position JIT/codegen cost otherwise
              // contaminates whichever query happens to run first (r7 verdict:
              // 12.0 s first-position vs 0.82 s isolated for the same plan)
       val runs = (1 to reps).map(_ => once())
+      spark.sparkContext.clearJobGroup()
       val times = runs.collect { case Right(s) => s }
       val err = runs.collectFirst { case Left(e) => e }
       // a failed query reports -1 (never a plausible duration) plus err —

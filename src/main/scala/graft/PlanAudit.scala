@@ -256,17 +256,21 @@ object PlanAudit {
     // no stage of the pair pipeline may broadcast a corpus-sized frame
     // (r22) the index is localCheckpoint'ed inside the pair pipeline, so
     // the LeftAnti shape is pinned on the pre-checkpoint probe — the
-    // exact relation the checkpoint materializes
+    // exact relation the checkpoint materializes. A shingle table that
+    // fits the driver tail skips these plans, so the section runs with
+    // auto-broadcast off, the at-scale path.
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val njIdx = graft.operators.DedupOps.ngramIndexProbe(spark, dir)
-    show("dedup_ngram_jaccard index (pre-checkpoint)", njIdx)
+    show("dedup_ngram_jaccard index (pre-checkpoint, auto-broadcast off)", njIdx)
     val njIdxPlan = njIdx.queryExecution.executedPlan.toString
+    val njDf = SparkEntry.queries("dedup_ngram_jaccard")(spark, dir)
+    show("dedup_ngram_jaccard (auto-broadcast off)", njDf)
+    val njPlan = njDf.queryExecution.executedPlan.toString
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
     assert(njIdxPlan.contains("LeftAnti"),
       "ngram jaccard must anti-join the hot-shingle list away")
     assert(!njIdxPlan.contains("BroadcastExchange"),
       "ngram jaccard must never broadcast the hot list")
-    val njDf = SparkEntry.queries("dedup_ngram_jaccard")(spark, dir)
-    show("dedup_ngram_jaccard", njDf)
-    val njPlan = njDf.queryExecution.executedPlan.toString
     assert(!njPlan.contains("BroadcastExchange"),
       "ngram jaccard must never broadcast the hot list or the index")
     // the mixture planner is scan-bound by design: token counts are a
@@ -375,10 +379,14 @@ object PlanAudit {
     // other corpus join; the final plan (last round over checkpointed
     // leaves) must show co-shuffled equi-joins and no nested loop
     // direct call: the suite's sim_pagerank is refined-backed as of r14;
-    // this audit pins the 2-probe-supplied composition (calibration path)
+    // this audit pins the 2-probe-supplied composition (calibration path).
+    // An edge list that fits the driver tail plans no round, so the
+    // section runs with auto-broadcast off, the at-scale path.
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val prDf = graft.operators.SimilarityOps.pageRank(spark, dir)
-    show("pageRank over 2-probe graph (calibration, direct)", prDf)
+    show("pageRank over 2-probe graph (calibration, direct, auto-broadcast off)", prDf)
     val prPlan = prDf.queryExecution.executedPlan.toString
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
     assert(prPlan.contains("ShuffledHashJoin"),
       "pagerank joins must co-shuffle")
     // the 2-probe graph build contributes the one legitimate nested

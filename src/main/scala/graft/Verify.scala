@@ -31,6 +31,8 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      // every job of the query, AQE stage jobs included, carries its name
+      spark.sparkContext.setJobGroup(name, name)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -48,7 +50,10 @@ object Verify {
         }
         rm(d); d.mkdirs()
         Files.writeString(Paths.get(s"$outDir/$name/_ERROR.txt"), msg + "\n")
-      } finally Caches.release() // each query's internal caches die with it
+      } finally {
+        Caches.release() // each query's internal caches die with it
+        spark.sparkContext.clearJobGroup()
+      }
     }
     // JSON string escape for every key and value: a tab or CR in
     // builder-authored SQL would otherwise make the driver's json.load

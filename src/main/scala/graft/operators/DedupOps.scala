@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.{Caches, Tables}
 
@@ -95,18 +95,25 @@ object DedupOps {
     * is precisely the relation a dedup pipeline does not want. The hot
     * list is corpus-dependent and unbounded, so it is anti-joined away
     * co-shuffled on the shingle hash (hinted shuffle_hash, never a
-    * broadcast build side). */
+    * broadcast build side). A shingle table that fits the [[Fixpoint]]
+    * driver tail is scored on the driver instead, output-identical. */
   def ngramJaccard(spark: SparkSession, dir: String, maxDf: Int = 64): DataFrame =
-    ngramJaccardPairs(spark, dir, maxDf).orderBy("doc_a", "doc_b")
+    Fixpoint.run("ngram_pairs", spark) { fp =>
+      ngramPairsIn(fp, dir, maxDf).fold(pairsFrame(fp, _), _.orderBy("doc_a", "doc_b"))
+    }
 
-  /** Plan probe for the audit harness (and [[ngramJaccardPairs]]'s index
-    * builder): the df-capped inverted index exactly as the pair pipeline
-    * builds it, BEFORE the checkpoint that hides it from the final plan
-    * — PlanAudit asserts the hot-list exclusion stays a co-shuffled
-    * LeftAnti with no broadcast build side here. */
+  /** Plan probe for the audit harness: the df-capped inverted index
+    * exactly as the Spark pair pipeline builds it, BEFORE the checkpoint
+    * that hides it from the final plan — PlanAudit asserts the hot-list
+    * exclusion stays a co-shuffled LeftAnti with no broadcast build side
+    * here. */
   private[graft] def ngramIndexProbe(spark: SparkSession, dir: String,
-                                     maxDf: Int = 64): DataFrame = {
-    val raw = Caches.cached(shingleTable(spark, dir))
+                                     maxDf: Int = 64): DataFrame =
+    ngramIndex(Caches.cached(shingleTable(spark, dir)), maxDf)
+
+  /** The shingle rows `raw` without those of a shingle whose document
+    * frequency exceeds `maxDf`. */
+  private def ngramIndex(raw: DataFrame, maxDf: Int): DataFrame = {
     // document frequency via groupBy (map-side combine absorbs hot keys;
     // a window over h would buffer a hot posting list in one task)
     val hot = raw.groupBy("h").agg(count(lit(1)).as("df"))
@@ -114,25 +121,47 @@ object DedupOps {
     raw.join(hot.hint("shuffle_hash"), Seq("h"), "left_anti")
   }
 
-  /** [[ngramJaccard]] without the presentation sort (r21): the cluster
-    * fixpoints consume the pair SET — the global sort of the corpus-pair
-    * relation bought them nothing (guide §2.4, "an orderBy used only to
-    * make output deterministic"), and the cache/checkpoint boundaries
-    * they put above it stopped the optimizer from ever removing it. */
-  private[operators] def ngramJaccardPairs(spark: SparkSession, dir: String,
-                                           maxDf: Int = 64): DataFrame = {
+  /** Near-dup pairs sorted by (doc_a, doc_b), computed on the driver. */
+  private final case class Pairs(a: Array[Long], b: Array[Long], jaccard: Array[Double])
+
+  /** The n-gram pair stage of one operator call, in its runner: the
+    * shingle table (doc_id, h) is cut and counted once. When it fits the
+    * driver tail the pairs are computed on the driver
+    * ([[ngramPairsOnDriver]]); otherwise the Spark pipeline runs over the
+    * same checkpoint, its index checkpoint owned by `fp`, so it is
+    * released with the call unless the returned frame reads it. The stage
+    * logs one record (`stage=pairs`). */
+  private def ngramPairsIn(fp: Fixpoint, dir: String, maxDf: Int): Either[Pairs, DataFrame] = {
+    val t0 = System.nanoTime()
     // shingles arrive as 60-bit longs: every downstream shuffle/join
     // moves 8-byte keys instead of ~20-byte strings, and the set
     // semantics are unchanged (within-pair collision odds ~1e-13)
-    // localCheckpoint, not Caches.cached (r22): the checkpoint's
-    // row-format blocks scan cheaper for the self-join's two readers
-    // than the columnar cache (same-JVM A/B of exactly this change +
-    // the counts cache below: 1.10×, tools/ab_r22b.jsonl), and the
-    // anti-join runs exactly once either way. Same MEMORY_AND_DISK
-    // footprint at any scale. The checkpoint hides the index build from
+    val (raw, rows) = fp.cut(shingleTable(fp.session, dir))
+    val local =
+      if (!fp.fitsDriver(rows * 2 * Fixpoint.FieldBytes)) None
+      else ngramPairsOnDriver(fp, raw.collect(), maxDf)
+    local match {
+      case Some(p) =>
+        fp.record(0, "driver", p.a.length, t0, "pairs")
+        Left(p)
+      case None =>
+        val out = ngramPairsOnSpark(fp, raw, maxDf)
+        fp.record(0, "spark", -1, t0, "pairs")
+        Right(out)
+    }
+  }
+
+  /** The Spark pair pipeline over the checkpointed shingle rows `raw`,
+    * unsorted: the cluster fixpoints consume the pair SET. */
+  private def ngramPairsOnSpark(fp: Fixpoint, raw: DataFrame, maxDf: Int): DataFrame = {
+    // a checkpoint, not Caches.cached (r22): the checkpoint's row-format
+    // blocks scan cheaper for the self-join's two readers than the
+    // columnar cache (same-JVM A/B of exactly this change + the counts
+    // cache below: 1.10×, tools/ab_r22b.jsonl), and the anti-join runs
+    // exactly once either way. The checkpoint hides the index build from
     // the final plan, so PlanAudit pins the LeftAnti/no-broadcast shape
     // on [[ngramIndexProbe]] instead.
-    val sh = ngramIndexProbe(spark, dir, maxDf).localCheckpoint()
+    val (sh, _) = fp.cut(ngramIndex(raw, maxDf))
     // per-doc set sizes are corpus-sized (one row per document): both
     // attaches below co-shuffle on the doc key — never a broadcast
     // build side that scales with the corpus. Cached (r22): the relation
@@ -153,6 +182,70 @@ object DedupOps {
         (col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
   }
+
+  /** The Spark pair pipeline's answer from the collected (doc_id, h)
+    * rows, each operation its own: document frequencies over rows, hot
+    * shingles (df > `maxDf`) dropped, n_sh the rows left per document,
+    * `inter` the row pairs of one non-hot shingle with doc_a < doc_b, and
+    * jaccard = inter / (n_a + n_b − inter) in doubles, kept at ≥ 0.5.
+    * The candidate pairs, Σ C(df, 2) over the non-hot shingles, are the
+    * state: one packed 8-byte (doc_a, doc_b) key each, sorted, so a run
+    * of one key is its `inter` and the runs come in (doc_a, doc_b) order.
+    * None — the Spark pipeline decides — when a doc_id or hash is null
+    * (its joins have their own null semantics) or when the candidates do
+    * not fit the driver tail. */
+  private def ngramPairsOnDriver(fp: Fixpoint, rows: Array[Row], maxDf: Int): Option[Pairs] =
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
+    else {
+      // rows ordered by (h, doc_id): each shingle's posting list is a run
+      val byH = rows.map(r => (r.getLong(1), r.getLong(0))).sorted
+      val docs = byH.map(_._2).distinct.sorted
+      // each row's document as a dense index in id order
+      val d = byH.map(r => java.util.Arrays.binarySearch(docs, r._2))
+      // [start, end) of each non-hot posting list
+      val runs = Array.newBuilder[(Int, Int)]
+      var i = 0
+      while (i < byH.length) {
+        var j = i
+        while (j < byH.length && byH(j)._1 == byH(i)._1) j += 1
+        if (j - i <= maxDf) runs += ((i, j))
+        i = j
+      }
+      val lists = runs.result()
+      val candidates = lists.map { case (s, e) => (e - s).toLong * (e - s - 1) / 2 }.sum
+      // (a JVM array holds fewer than Int.MaxValue keys, whatever the threshold)
+      if (candidates >= Int.MaxValue || !fp.fitsDriver(candidates * Fixpoint.FieldBytes)) None
+      else {
+        val nSh = new Array[Long](docs.length)
+        val keys = new Array[Long](candidates.toInt)
+        var k = 0
+        for ((s, e) <- lists; x <- s until e) {
+          nSh(d(x)) += 1
+          for (y <- x + 1 until e if d(x) < d(y)) {
+            keys(k) = d(x).toLong << 32 | d(y)
+            k += 1
+          }
+        }
+        java.util.Arrays.sort(keys, 0, k)
+        val (a, b, jac) = (Array.newBuilder[Long], Array.newBuilder[Long], Array.newBuilder[Double])
+        i = 0
+        while (i < k) {
+          var j = i
+          while (j < k && keys(j) == keys(i)) j += 1
+          val (x, y, inter) = ((keys(i) >>> 32).toInt, keys(i).toInt, (j - i).toLong)
+          val jaccard = inter.toDouble / (nSh(x) + nSh(y) - inter)
+          if (jaccard >= 0.5) { a += docs(x); b += docs(y); jac += jaccard }
+          i = j
+        }
+        Some(Pairs(a.result(), b.result(), jac.result()))
+      }
+    }
+
+  /** (doc_a, doc_b, jaccard) rows of driver pairs, in their order. */
+  private def pairsFrame(fp: Fixpoint, p: Pairs): DataFrame =
+    Fixpoint.frame(fp.session, StructType(Seq(StructField("doc_a", LongType),
+        StructField("doc_b", LongType), StructField("jaccard", DoubleType))),
+      p.a.indices.map(i => Row(p.a(i), p.b(i), p.jaccard(i))))
 
   /** MinHash + banded LSH near-dup pairs, verified with exact Jaccard.
     * 16 permutation minhashes over shingle base-hashes; 8 bands × 2 rows.
@@ -240,24 +333,33 @@ object DedupOps {
     * small-star, O(log n) rounds, identical relation); propagation is
     * kept as the default because its round structure mirrors the
     * recursive-SQL oracle most directly. The rounds run under
-    * [[Fixpoint]]: on the driver when the edge list fits its tail, else
-    * as Spark rounds whose driver reads only one aggregate per round. */
+    * [[Fixpoint]]: when the pair stage ran on the driver, the whole
+    * operator finishes there; else on the driver when the edge list fits
+    * its tail, else as Spark rounds whose driver reads only one aggregate
+    * per round. */
   def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
-    propagationComponents(ngramJaccardPairs(spark, dir).select(col("doc_a"), col("doc_b")))
-      .orderBy("doc_id")
+    Fixpoint.run("label_propagation", spark) { fp =>
+      ngramPairsIn(fp, dir, 64) match {
+        case Left(p) => propagateOnDriver(fp, Fixpoint.Indexed(p.a, p.b))
+        case Right(pairs) =>
+          propagationIn(fp, pairs.select(col("doc_a"), col("doc_b"))).orderBy("doc_id")
+      }
+    }
 
   /** [[nearDupClusters]]' fixpoint over an explicit undirected pair
     * relation (doc_a, doc_b), without the presentation sort. */
   private[graft] def propagationComponents(pairs: DataFrame): DataFrame =
-    Fixpoint.run("label_propagation", pairs.sparkSession) { fp =>
-      // one materialized pass of the pair pipeline, counted: the symmetric
-      // edge list (2 rows of (src, dst) per pair) is the loop's state
-      val (p, np) = fp.cut(pairs)
-      fp.collectPairs(p, 2 * np, 2 * Fixpoint.FieldBytes) match {
-        case Some(g) => propagateOnDriver(fp, g)
-        case None => propagateOnSpark(fp, p)
-      }
+    Fixpoint.run("label_propagation", pairs.sparkSession)(propagationIn(_, pairs))
+
+  private def propagationIn(fp: Fixpoint, pairs: DataFrame): DataFrame = {
+    // one materialized pass of the pair pipeline, counted: the symmetric
+    // edge list (2 rows of (src, dst) per pair) is the loop's state
+    val (p, np) = fp.cut(pairs)
+    fp.collectPairs(p, 2 * np, 2 * Fixpoint.FieldBytes) match {
+      case Some(g) => propagateOnDriver(fp, g)
+      case None => propagateOnSpark(fp, p)
     }
+  }
 
   /** Label propagation finished on the driver: the component pass gives
     * every node its component minimum, the labels the rounds settle on.
@@ -333,9 +435,16 @@ object DedupOps {
     * stars rooted at the component minima. Each half-round is one
     * groupBy + one join keyed on node id on the Spark path, and
     * convergence is an EXACT set-equality check (count + except), not a
-    * heuristic; small edge sets finish on the driver ([[Fixpoint]]). */
+    * heuristic; small edge sets finish on the driver ([[Fixpoint]]), and
+    * when the pair stage ran on the driver the whole operator does. */
   def nearDupClustersStar(spark: SparkSession, dir: String): DataFrame =
-    starComponents(ngramJaccardPairs(spark, dir).select(col("doc_a"), col("doc_b")))
+    Fixpoint.run("star_contraction", spark) { fp =>
+      ngramPairsIn(fp, dir, 64) match {
+        case Left(p) => starOnDriver(fp, Fixpoint.Indexed(p.a, p.b))
+        case Right(pairs) =>
+          starIn(fp, pairs.select(col("doc_a"), col("doc_b"))).orderBy("doc_id")
+      }
+    }
 
   /** Component-min labeling (doc_id, cluster_id) of an undirected edge
     * list (doc_a, doc_b); every node incident to an edge is labeled.
@@ -345,7 +454,8 @@ object DedupOps {
 
   /** [[starComponents]] without the presentation sort — the composition
     * seam for consumers that join or re-sort the labeling themselves
-    * (knn components, exemplars); see [[ngramJaccardPairs]].
+    * (knn components, exemplars): they consume the labeling as a SET, and
+    * the global sort of a corpus-sized relation would buy them nothing.
     *
     * NO seed distinct (r22): every production caller feeds unique
     * canonical pairs (groupBy outputs or mutualized top-k edges), so the
@@ -359,17 +469,19 @@ object DedupOps {
     * compares SETS (count equality gates an except) — only the round-0
     * count would shift, never the labeling. */
   private[graft] def starComponentsCore(pairs: DataFrame): DataFrame =
-    Fixpoint.run("star_contraction", pairs.sparkSession) { fp =>
-      val (seed, seedCount) =
-        fp.cut(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      // self-loops leave the Spark rounds at largeStar's filter, and a
-      // node with nothing else leaves the answer with them
-      fp.collectPairs(seed.filter(!(col("u") <=> col("v"))), seedCount,
-          2 * Fixpoint.FieldBytes) match {
-        case Some(g) => starOnDriver(fp, g)
-        case None => starOnSpark(fp, seed, seedCount)
-      }
+    Fixpoint.run("star_contraction", pairs.sparkSession)(starIn(_, pairs))
+
+  private def starIn(fp: Fixpoint, pairs: DataFrame): DataFrame = {
+    val (seed, seedCount) =
+      fp.cut(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
+    // self-loops leave the Spark rounds at largeStar's filter, and a
+    // node with nothing else leaves the answer with them
+    fp.collectPairs(seed.filter(!(col("u") <=> col("v"))), seedCount,
+        2 * Fixpoint.FieldBytes) match {
+      case Some(g) => starOnDriver(fp, g)
+      case None => starOnSpark(fp, seed, seedCount)
     }
+  }
 
   // r22 NEGATIVE RESULT, kept as shipped: two restructures of the star
   // rounds were built and rejected on a same-JVM adjacent A/B

@@ -23,16 +23,20 @@ import graft.Checkpoints
   *    the one rule), the operator collects it once and finishes on the
   *    driver, then hands back a frame. The descent (seed, rounds and
   *    mutual tail, decided from the corpus size before any of them),
-  *    PageRank and k-means repeat their Spark rounds' arithmetic round by
-  *    round ([[onDriver]]); the two component loops share one pass,
-  *    [[Indexed.components]]. The threshold is the size up to which
-  *    Spark itself ships a relation to the driver and back out as a
-  *    broadcast; the collected rows are boxed, so the driver briefly holds
-  *    about three times the estimate. The threshold bounds driver memory,
-  *    not speed: on a 4-core box the driver tail was faster at every
-  *    size measured, including a 16 MB descent state that the default
-  *    threshold sends to the Spark rounds. A threshold of -1 (broadcasts
-  *    off) always takes the Spark path.
+  *    PageRank (degrees, rounds and the node attach, decided from the
+  *    edge and node counts) and k-means repeat their Spark rounds'
+  *    arithmetic round by round ([[onDriver]]); the two component loops
+  *    share one pass, [[Indexed.components]], and when the n-gram pair
+  *    stage before them fits (sized from its shingle rows, then from its
+  *    candidate pairs) they finish whole on the driver with it. The
+  *    threshold is the size up to which Spark itself ships a relation to
+  *    the driver and back out as a broadcast; the collected rows are
+  *    boxed, so the driver briefly holds about three times the estimate.
+  *    The threshold bounds driver memory, not speed: on a 4-core box the
+  *    driver tail was faster at every size measured, including a 16 MB
+  *    descent state that the default threshold sends to the Spark
+  *    rounds. A threshold of -1 (broadcasts off) always takes the Spark
+  *    path.
   *  - **Spark rounds** ([[onSpark]]): the state stays a chain of local
   *    checkpoints, materialized by the same jobs as before the runner
   *    existed. After every round the runner checks that the new state's
@@ -161,6 +165,8 @@ private[graft] object Fixpoint {
     * graph plausibly has. */
   val MaxRounds = 50
 
+  private val JobDescription = "spark.job.description"
+
   /** Width of one numeric column of loop state, in bytes. */
   val FieldBytes = 8L
 
@@ -184,10 +190,18 @@ private[graft] object Fixpoint {
   def run(loop: String, spark: SparkSession)(body: Fixpoint => DataFrame): DataFrame =
     using(loop, spark)(body)(Seq(_))
 
-  /** [[run]] for a result of several frames; `backing` lists them. */
+  /** [[run]] for a result of several frames; `backing` lists them. The
+    * call's jobs run with `spark.job.description = graft:<loop>`, a local
+    * property that the AQE stage jobs inherit; the caller's description
+    * is restored on exit. */
   def using[T](loop: String, spark: SparkSession)(body: Fixpoint => T)
-              (backing: T => Seq[DataFrame]): T =
-    Checkpoints.using(scope => body(new Fixpoint(loop, spark, scope)))(backing)
+              (backing: T => Seq[DataFrame]): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(s"graft:$loop")
+    try Checkpoints.using(scope => body(new Fixpoint(loop, spark, scope)))(backing)
+    finally sc.setLocalProperty(JobDescription, caller)
+  }
 
   /** A frame over rows built on the driver. */
   def frame(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =

@@ -1328,7 +1328,7 @@ object SimilarityOps {
     * rank⋈edges co-shuffle + a dst-keyed sum (deg ≤ k = 3, so
     * contribution fan-out is bounded), and the rounds chain lazily into
     * one checkpoint. An edge list that fits the [[Fixpoint]] driver tail
-    * runs its rounds on the driver. */
+    * with the node ids runs the whole operator on the driver. */
   def pageRank(spark: SparkSession, dir: String, iters: Int = 10): DataFrame =
     pageRankOverGraph(spark, dir, knnGraph2Edges(spark, dir), iters)
 
@@ -1338,151 +1338,162 @@ object SimilarityOps {
     pageRankOverGraph(spark, dir, knnGraphRefinedEdges(spark, dir))
 
   private[graft] def pageRankOverGraph(spark: SparkSession, dir: String,
-                                       graph: DataFrame, iters: Int = 10): DataFrame = {
-    // cache the edge list: pageRankFrom's out-degree relation AND the
-    // final deg re-attach both read it — uncached, the second consumer
-    // rebuilt the whole graph (quantize→train→block→score→mutualize)
-    val g = graft.Caches.cached(graph.select(col("ida"), col("idb")))
-    val nodes = DedupOps.quantized(spark, dir).select(col("vec_id"))
-    pageRankFrom(nodes, g, iters,
-      nodeCount = Some(graft.Tables.rowCount(spark, dir, "embeddings")))
-  }
+                                       graph: DataFrame, iters: Int = 10): DataFrame =
+    pageRankOf(graft.Tables.load(spark, dir, "embeddings").select(col("vec_id")), graph, iters,
+      graft.Tables.rowCount(spark, dir, "embeddings"), sorted = true)
 
   /** The ppm recurrence over an explicit (nodes, undirected edges) pair —
     * shared by [[pageRank]] and [[clusterExemplars]] so the composed
-    * operator builds the graph ONCE.
+    * operator builds the graph ONCE. `sorted` adds the presentation sort
+    * by vec_id; consumers that join the rank relation onward (exemplars)
+    * skip it, since the global sort of the node-sized frame buys them
+    * nothing (guide §2.4).
     *
-    * Iterative-tail parallelism: the per-round frames are NODE-sized
-    * (≤ n rank rows, ≤ k·2n edge rows), so when `nodeCount` is known the
-    * loop runs under a shuffle-partition count derived from the DATA
-    * (~100k rows per partition, capped at the session default) instead
-    * of the corpus-wide setting. At sf0.1 the default 32 partitions made
-    * each of the 10 rounds ~10 32-task stages — ~1.6 s of pure task
-    * latency per round, 16 of sim_pagerank's 21.7 s (r11 measurement);
-    * at cluster scale the cap keeps the configured parallelism. The conf
-    * is restored before returning — the final assembled plan (and every
-    * other query) still plans under the session default. */
-  private[operators] def pageRankFrom(nodes: DataFrame, g: DataFrame,
-                                      iters: Int = 10,
-                                      nodeCount: Option[Long] = None): DataFrame =
-    pageRankUnsorted(nodes, g, iters, nodeCount).orderBy("vec_id")
-
-  /** [[pageRankFrom]] without the presentation sort — for consumers that
-    * join the rank relation onward (exemplars), where the global sort of
-    * the node-sized frame buys nothing (guide §2.4).
+    * The edge list is cut and counted first. When it and the `nodeCount`
+    * node ids fit the [[Fixpoint]] driver tail, the whole operator runs
+    * on the driver ([[pageRankOnDriver]]); otherwise the Spark rounds do.
+    *
+    * Iterative-tail parallelism on the Spark path: the per-round frames
+    * are NODE-sized (≤ n rank rows, ≤ k·2n edge rows), so the loop runs
+    * under a shuffle-partition count derived from `nodeCount` (~100k rows
+    * per partition, capped at the session default) instead of the
+    * corpus-wide setting. At sf0.1 the default 32 partitions made each of
+    * the 10 rounds ~10 32-task stages — ~1.6 s of pure task latency per
+    * round, 16 of sim_pagerank's 21.7 s (r11 measurement); at cluster
+    * scale the cap keeps the configured parallelism. The conf is restored
+    * before returning — the final assembled plan (and every other query)
+    * still plans under the session default.
     *
     * PRECONDITION (r21 advice): every endpoint of `g` must appear in
     * `nodes`. The active-nodes loop iterates over edge endpoints and only
-    * restricts to `nodes` at the final left join — a ghost endpoint
-    * outside `nodes` would feed rank into real nodes, where the pre-r21
-    * form (which re-joined `nodes` every round) excluded it. Every
-    * caller passes nodes = the full vector id set ⊇ all graph endpoints,
-    * so the two forms are output-identical today; a future caller with
-    * nodes ⊂ endpoints would not be. */
-  private[graft] def pageRankUnsorted(nodes: DataFrame, g: DataFrame,
-                                      iters: Int = 10,
-                                      nodeCount: Option[Long] = None): DataFrame =
+    * restricts to `nodes` at the final attach — a ghost endpoint outside
+    * `nodes` would feed rank into real nodes, where the pre-r21 form
+    * (which re-joined `nodes` every round) excluded it. Every caller
+    * passes nodes = the full vector id set ⊇ all graph endpoints, so the
+    * two forms are output-identical today; a future caller with nodes ⊂
+    * endpoints would not be. */
+  private def pageRankOf(nodes: DataFrame, g: DataFrame, iters: Int, nodeCount: Long,
+                         sorted: Boolean): DataFrame =
     Fixpoint.run("pagerank", nodes.sparkSession) { fp =>
-      val edges = g.unionByName(g.select(col("idb").as("ida"), col("ida").as("idb")))
-        .toDF("src", "dst")
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      // LEAN materialization barrier, not a plan-carrying cache: the loop
-      // references the edge relation `iters` times, so it becomes a
-      // shallow local checkpoint — (src, dst, deg) is ≤ k·2n short rows.
-      // Reading an InMemoryRelation whose lineage is a join over the
-      // cached ARRAY-bearing quantized frame instead cost ~0.7 s per round
-      // in deserialization and cache-scan stages (r11 measurement: the 10
-      // rounds fell from ~10-15 s to 0.2-0.5 s with lean checkpoints +
-      // lazy chaining). The checkpoint is materialized here, so the graph
-      // build it absorbs runs at FULL session parallelism, before the
-      // reduced loop scope below; its row count sizes the driver tail.
-      val (out, outRows) = fp.cut(edges.join(deg.hint("shuffle_hash"), "src"))
-      // ACTIVE nodes only in the loop (r21): an isolated node (no edges)
-      // never receives a contribution, so its rank is exactly 150000 +
-      // (850000·0) div 10⁶ = 150000 from round 1 on — re-joining the full
-      // node-id frame every round only re-derived that constant. The loop
-      // now iterates over edge-endpoint nodes (every active node receives
-      // ≥ 1 contribution per round because the mutual graph is symmetric,
-      // so the contribution aggregate itself enumerates all of them — the
-      // per-round left join back onto the node frame is gone: 10 joins +
-      // 10 node-frame exchanges removed, guide §2.4), and isolated nodes
-      // re-attach ONCE at the end via coalesce on the final left join.
-      // Output identical for any iters ≥ 1 (the suite always runs 10).
-      require(iters >= 1, "pageRankFrom: iters must be >= 1")
-      fp.collectPairs(out.select(col("src"), col("dst")), outRows,
-          3 * Fixpoint.FieldBytes) match {
-        case Some(e) => pageRankOnDriver(fp, nodes, e, iters)
-        case None =>
-          // the rounds chain LAZILY — each is referenced exactly once by
-          // the next, so nothing re-evaluates — and the single checkpoint
-          // at the end materializes the whole chain INSIDE the
-          // reduced-parallelism scope (laziness would otherwise defer
-          // planning past the restore); the chain logs one record.
-          // AQE stays on in the scope (r22 negative result): although every
-          // join here is shuffle_hash-hinted, the balanced same-JVM A/B
-          // (tools/ab_r22_aqe.jsonl) measured AQE-off as 1.16× SLOWER on this
-          // loop — AQE's coalescing of the hinted exchanges is worth more
-          // than the per-exchange stage-job overhead. See IterLoop's note.
-          val ranks = IterLoop.withLoopPartitions(nodes.sparkSession, nodeCount) {
-            val t0 = System.nanoTime()
-            var r = out.select(col("src").as("vec_id")).distinct()
-              .withColumn("rank_ppm", lit(1000000L))
-            (1 to iters).foreach { _ =>
-              r = r.join(out.hint("shuffle_hash"), col("vec_id") === col("src"))
-                .select(col("dst"), expr("rank_ppm DIV deg").as("c"))
-                .groupBy("dst").agg(sum(col("c")).as("s"))
-                .select(col("dst").as("vec_id"),
-                  expr("150000L + (850000L * s) DIV 1000000L").as("rank_ppm"))
-            }
-            val (ranks, rows) = fp.cut(r)
-            fp.record(iters, "spark", rows, t0)
-            ranks
-          }
-          nodes.select(col("vec_id"))
-            .join(ranks.hint("shuffle_hash"), Seq("vec_id"), "left")
-            .join(deg.hint("shuffle_hash"), col("vec_id") === col("src"), "left")
-            .select(col("vec_id"), coalesce(col("deg"), lit(0L)).as("deg"),
-              coalesce(col("rank_ppm"), lit(150000L)).as("rank_ppm"))
+      require(iters >= 1, "pageRank: iters must be >= 1")
+      val t0 = System.nanoTime()
+      val (ge, m) = fp.cut(g.select(col("ida"), col("idb")))
+      val local =
+        if (!fp.fitsDriver((2 * m + nodeCount) * Fixpoint.FieldBytes)) None
+        else pageRankOnDriver(fp, nodes.collect(), ge.collect(), iters, t0)
+      local.getOrElse {
+        fp.record(0, "spark", 2 * m, t0, "pagerank")
+        val ranks = pageRankOnSpark(fp, nodes, ge, iters, nodeCount)
+        if (sorted) ranks.orderBy("vec_id") else ranks
       }
     }
 
-  /** The ppm rounds over the collected directed edge list (src → dst),
-    * each operation the Spark rounds' own: integer `DIV` on non-negatives
-    * and overflow-checked sums. Degrees and ranks return as one frame for
-    * the final attach onto the node frame, so the driver path re-derives
-    * no degree in Spark. */
-  private def pageRankOnDriver(fp: Fixpoint, nodes: DataFrame, e: Fixpoint.Indexed,
-                               iters: Int): DataFrame = {
-    val deg = new Array[Long](e.n)
-    e.a.foreach(u => deg(u) += 1)
-    // -1 = no rank row (a node that received no contribution leaves the
-    // frame, exactly as it leaves the Spark round's aggregate)
-    val r0 = Array.tabulate(e.n)(u => if (deg(u) > 0) 1000000L else -1L)
-    val ranks = fp.onDriver(r0, iters) { (r, _) =>
-      val s = new Array[Long](e.n)
-      val got = new Array[Boolean](e.n)
-      for (i <- e.a.indices) if (r(e.a(i)) >= 0) {
-        s(e.b(i)) = Math.addExact(s(e.b(i)), r(e.a(i)) / deg(e.a(i)))
-        got(e.b(i)) = true
+  private def pageRankOnSpark(fp: Fixpoint, nodes: DataFrame, g: DataFrame, iters: Int,
+                              nodeCount: Long): DataFrame = {
+    val edges = g.unionByName(g.select(col("idb").as("ida"), col("ida").as("idb")))
+      .toDF("src", "dst")
+    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+    // LEAN materialization barrier, not a plan-carrying cache: the loop
+    // references the edge relation `iters` times, so it becomes a
+    // shallow local checkpoint — (src, dst, deg) is ≤ k·2n short rows.
+    // Reading an InMemoryRelation whose lineage is a join over the
+    // cached ARRAY-bearing quantized frame instead cost ~0.7 s per round
+    // in deserialization and cache-scan stages (r11 measurement: the 10
+    // rounds fell from ~10-15 s to 0.2-0.5 s with lean checkpoints +
+    // lazy chaining). The checkpoint is materialized here, before the
+    // reduced loop scope below.
+    val (out, _) = fp.cut(edges.join(deg.hint("shuffle_hash"), "src"))
+    // ACTIVE nodes only in the loop (r21): an isolated node (no edges)
+    // never receives a contribution, so its rank is exactly 150000 +
+    // (850000·0) div 10⁶ = 150000 from round 1 on — re-joining the full
+    // node-id frame every round only re-derived that constant. The loop
+    // iterates over edge-endpoint nodes (every active node receives ≥ 1
+    // contribution per round because the mutual graph is symmetric, so
+    // the contribution aggregate itself enumerates all of them — the
+    // per-round left join back onto the node frame is gone: 10 joins + 10
+    // node-frame exchanges removed, guide §2.4), and isolated nodes
+    // re-attach ONCE at the end via coalesce on the final left join.
+    // Output identical for any iters ≥ 1 (the suite always runs 10).
+    //
+    // The rounds chain LAZILY — each is referenced exactly once by the
+    // next, so nothing re-evaluates — and the single checkpoint at the
+    // end materializes the whole chain INSIDE the reduced-parallelism
+    // scope (laziness would otherwise defer planning past the restore);
+    // the chain logs one record. AQE stays on in the scope (r22 negative
+    // result): although every join here is shuffle_hash-hinted, the
+    // balanced same-JVM A/B (tools/ab_r22_aqe.jsonl) measured AQE-off as
+    // 1.16× SLOWER on this loop — AQE's coalescing of the hinted
+    // exchanges is worth more than the per-exchange stage-job overhead.
+    // See IterLoop's note.
+    val ranks = IterLoop.withLoopPartitions(fp.session, Some(nodeCount)) {
+      val t0 = System.nanoTime()
+      var r = out.select(col("src").as("vec_id")).distinct()
+        .withColumn("rank_ppm", lit(1000000L))
+      (1 to iters).foreach { _ =>
+        r = r.join(out.hint("shuffle_hash"), col("vec_id") === col("src"))
+          .select(col("dst"), expr("rank_ppm DIV deg").as("c"))
+          .groupBy("dst").agg(sum(col("c")).as("s"))
+          .select(col("dst").as("vec_id"),
+            expr("150000L + (850000L * s) DIV 1000000L").as("rank_ppm"))
       }
-      val next = Array.tabulate(e.n)(v =>
-        if (got(v)) 150000L + Math.multiplyExact(850000L, s(v)) / 1000000L else -1L)
-      Fixpoint.Step(next, next.count(_ >= 0).toLong)
+      val (ranks, rows) = fp.cut(r)
+      fp.record(iters, "spark", rows, t0)
+      ranks
     }
-    val local = Fixpoint.frame(fp.session, StructType(Seq(
-        StructField("vec_id", LongType), StructField("deg", LongType),
-        StructField("rank_ppm", LongType))),
-      (0 until e.n).filter(deg(_) > 0).map(v =>
-        Row(e.ids(v), deg(v), if (ranks(v) >= 0) ranks(v) else null)))
     nodes.select(col("vec_id"))
-      .join(local.hint("shuffle_hash"), Seq("vec_id"), "left")
+      .join(ranks.hint("shuffle_hash"), Seq("vec_id"), "left")
+      .join(deg.hint("shuffle_hash"), col("vec_id") === col("src"), "left")
       .select(col("vec_id"), coalesce(col("deg"), lit(0L)).as("deg"),
         coalesce(col("rank_ppm"), lit(150000L)).as("rank_ppm"))
   }
 
+  /** The whole operator on the driver over the collected node ids and
+    * undirected edges, each operation the Spark path's own: degrees over
+    * the edges taken both ways, the ppm rounds with integer `DIV` on
+    * non-negatives and overflow-checked sums, and the attach onto every
+    * node row (deg 0 and rank 150000 for a node without edges), in vec_id
+    * order. None — the Spark path decides — when an id is null (its joins
+    * have their own null semantics). The decision logs one record
+    * (`stage=pagerank`). */
+  private def pageRankOnDriver(fp: Fixpoint, nodeRows: Array[Row], edgeRows: Array[Row],
+                               iters: Int, t0: Long): Option[DataFrame] =
+    if (nodeRows.exists(_.isNullAt(0)) || edgeRows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      None
+    else {
+      val (ga, gb) = (edgeRows.map(_.getLong(0)), edgeRows.map(_.getLong(1)))
+      // the directed edges: each undirected edge both ways
+      val e = Fixpoint.Indexed(ga ++ gb, gb ++ ga)
+      fp.record(0, "driver", e.a.length, t0, "pagerank")
+      val deg = new Array[Long](e.n)
+      e.a.foreach(u => deg(u) += 1)
+      // -1 = no rank row (a node that received no contribution leaves the
+      // frame, exactly as it leaves the Spark round's aggregate)
+      val r0 = Array.tabulate(e.n)(u => if (deg(u) > 0) 1000000L else -1L)
+      val ranks = fp.onDriver(r0, iters) { (r, _) =>
+        val s = new Array[Long](e.n)
+        val got = new Array[Boolean](e.n)
+        for (i <- e.a.indices) if (r(e.a(i)) >= 0) {
+          s(e.b(i)) = Math.addExact(s(e.b(i)), r(e.a(i)) / deg(e.a(i)))
+          got(e.b(i)) = true
+        }
+        val next = Array.tabulate(e.n)(v =>
+          if (got(v)) 150000L + Math.multiplyExact(850000L, s(v)) / 1000000L else -1L)
+        Fixpoint.Step(next, next.count(_ >= 0).toLong)
+      }
+      val ids = nodeRows.map(_.getLong(0))
+      java.util.Arrays.sort(ids)
+      Some(Fixpoint.frame(fp.session, StructType(Seq(StructField("vec_id", LongType),
+          StructField("deg", LongType), StructField("rank_ppm", LongType))),
+        ids.toSeq.map { id =>
+          val v = java.util.Arrays.binarySearch(e.ids, id)
+          if (v < 0) Row(id, 0L, 150000L)
+          else Row(id, deg(v), if (ranks(v) >= 0) ranks(v) else 150000L)
+        }))
+    }
+
   /** Cluster exemplars — the composed read-side of the whole similarity
     * family: for every semantic cluster ([[knnComponents]]' star
-    * contraction), its most AUTHORITATIVE member ([[pageRankFrom]]'s top
+    * contraction), its most AUTHORITATIVE member ([[pageRank]]'s top
     * rank, ties to the smaller id) plus the member count — the "show me
     * one representative document per topic" query a curation pipeline
     * runs. The mutual k-NN graph is built ONCE and feeds both the
@@ -1520,9 +1531,9 @@ object SimilarityOps {
     val comp = DedupOps.starComponentsCore(
         g.select(col("ida").as("doc_a"), col("idb").as("doc_b")))
       .select(col("doc_id").as("vec_id"), col("cluster_id"))
-    val nodes = DedupOps.quantized(spark, dir).select(col("vec_id"))
-    val pr = pageRankUnsorted(nodes, g,
-        nodeCount = Some(graft.Tables.rowCount(spark, dir, "embeddings")))
+    val nodes = graft.Tables.load(spark, dir, "embeddings").select(col("vec_id"))
+    val pr = pageRankOf(nodes, g, 10, graft.Tables.rowCount(spark, dir, "embeddings"),
+        sorted = false)
       .select(col("vec_id"), col("rank_ppm"))
     val w = Window.partitionBy("cluster_id")
     comp.join(pr.hint("shuffle_hash"), "vec_id")

@@ -1,12 +1,6 @@
 package graft
 
-import scala.collection.mutable
-
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.{LogEvent, Logger}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, transform, when}
 
 import graft.operators.{DedupOps, Fixpoint, KMeans, SimilarityOps}
@@ -26,71 +20,7 @@ import graft.operators.{DedupOps, Fixpoint, KMeans, SimilarityOps}
   * path does; and both leave to the Spark path the vectors it alone
   * defines (a zero norm, a duplicated id).
   */
-class FixpointParitySpec extends SparkTestBase {
-
-  // the sf0.01 tables, beside the suite's default sf0.001 fixture
-  private val sf01 = s"${new java.io.File(sf).getParent}/sf0.01"
-
-  private def sparkPath[T](body: => T): T = {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  /** `body`'s result and the (loop, path, stage) of every round record it
-    * logged; the stage is empty for a round. */
-  private def recorded[T](body: => T): (T, Seq[(String, String, String)]) = {
-    // start the session first: its log-level reset would drop the appender
-    spark.version
-    val lines = mutable.ArrayBuffer.empty[String]
-    val app = new AbstractAppender("fixpoint-records", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        lines.synchronized(lines += e.getMessage.getFormattedMessage)
-    }
-    app.start()
-    val logger = LogManager.getLogger("graft.Fixpoint").asInstanceOf[Logger]
-    val level = logger.getLevel
-    logger.addAppender(app)
-    logger.setLevel(Level.INFO)
-    val out = try body finally {
-      logger.removeAppender(app)
-      logger.setLevel(level)
-      app.stop()
-    }
-    val rec = "loop=(\\S+) round=\\d+ path=(\\S+) .*?( stage=\\S+)?".r
-    (out, lines.toSeq.collect { case rec(loop, path, stage) =>
-      (loop, path, Option(stage).fold("")(_.stripPrefix(" stage="))) })
-  }
-
-  /** The (stage, path) of `loop`'s records of stages outside the rounds. */
-  private def stages(loop: String, recs: Seq[(String, String, String)]): Seq[(String, String)] =
-    recs.collect { case (`loop`, path, stage) if stage.nonEmpty => (stage, path) }
-
-  /** Rows as comparable values: doubles by raw bits, arrays by element,
-    * in a canonical order. */
-  private def canon(rows: Array[Row]): Seq[List[Any]] =
-    rows.toSeq.map(_.toSeq.toList.map {
-      case d: Double => ("bits", java.lang.Double.doubleToRawLongBits(d))
-      case s: scala.collection.Seq[_] => s.toList
-      case x => x
-    }).sortBy(_.toString)
-
-  /** Collect `run()` once per path; assert both took their path for
-    * `loop` and agree byte for byte. Returns each path's (stage, path)
-    * records of `loop`'s stages outside the rounds. */
-  private def assertParity(loop: String)(run: () => Seq[DataFrame])
-      : (Seq[(String, String)], Seq[(String, String)]) = {
-    def collectAll() = Caches.withScope(run().map(df => canon(df.collect())))
-    val (local, localPaths) = recorded(collectAll())
-    val (dist, distPaths) = recorded(sparkPath(collectAll()))
-    assert(localPaths.filter(_._1 == loop).map(_._2).distinct === Seq("driver"),
-      s"$loop: expected driver rounds, records $localPaths")
-    assert(distPaths.filter(_._1 == loop).map(_._2).distinct === Seq("spark"),
-      s"$loop: expected Spark rounds, records $distPaths")
-    assert(local.exists(_.nonEmpty), s"$loop: empty answer")
-    local.zip(dist).foreach { case (l, d) => assert(l === d, s"$loop: driver and Spark rows differ") }
-    (stages(loop, localPaths), stages(loop, distPaths))
-  }
+class FixpointParitySpec extends ParitySupport {
 
   private lazy val refined: DataFrame =
     SimilarityOps.knnGraphRefinedEdges(spark, sf01).select(col("ida"), col("idb")).localCheckpoint()

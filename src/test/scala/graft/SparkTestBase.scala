@@ -17,15 +17,23 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   /** `body`'s result and the call sites (file, no line) of the jobs it
     * started, in order; a marker job after `body` orders the listener's
     * events. */
-  protected def jobsOf[T](body: => T): (T, Seq[String]) = {
+  protected def jobsOf[T](body: => T): (T, Seq[String]) =
+    jobsSeen(body)(_.stageInfos.maxBy(_.stageId).name.takeWhile(_ != ':'))
+
+  /** `body`'s result and the `spark.job.description` of the jobs it
+    * started, in order (null for a job without one). */
+  protected def jobDescriptionsOf[T](body: => T): (T, Seq[String]) =
+    jobsSeen(body)(e => Option(e.properties).map(_.getProperty("spark.job.description")).orNull)
+
+  private def jobsSeen[T](body: => T)(what: SparkListenerJobStart => String): (T, Seq[String]) = {
     val marker = "jobs-of-marker"
-    val sites = new ConcurrentLinkedQueue[String]
+    val sites = new ConcurrentLinkedQueue[Option[String]]
     val done = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
           done.countDown()
-        else sites.add(e.stageInfos.maxBy(_.stageId).name.takeWhile(_ != ':'))
+        else sites.add(Option(what(e)))
     }
     spark.sparkContext.addSparkListener(listener)
     val out = try {
@@ -35,7 +43,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       assert(done.await(60, TimeUnit.SECONDS), "marker job not seen")
       out
     } finally spark.sparkContext.removeSparkListener(listener)
-    (out, sites.toArray(Array.empty[String]).toSeq)
+    (out, sites.toArray(Array.empty[Option[String]]).toSeq.map(_.orNull))
   }
   override def afterAll(): Unit = {
     // wall-time attribution for the parallel forked groups (the sbt

@@ -33,7 +33,7 @@ object PlanAudit {
       "rel_pricing_summary", "rel_revenue_by_nation",
       "dedup_minhash_lsh", "sim_brute_topk",
       "text_stratified_sample", "text_pack_sequences",
-      "dedup_embedding_cosine", "dedup_embedding_auto",
+      "dedup_embedding_cosine",
       "evt_asof_join",
       "text_distinctive_terms", "text_lang_id",
       "text_self_information", "text_vocab_coverage").map { name =>
@@ -66,12 +66,20 @@ object PlanAudit {
     // dedup_embedding_cosine has no legitimate broadcast at all; the
     // auto variant's only broadcast is the nlist-row seed frame inside
     // its cached coarse assignment, never a BroadcastHashJoin pair join.
+    // Vectors and pairs that fit the driver tail plan no join at all, so
+    // the auto variant is planned with auto-broadcast off, the at-scale
+    // path.
     val cosPlan = frames("dedup_embedding_cosine").queryExecution.executedPlan.toString
     assert(cosPlan.contains("ShuffledHashJoin"),
       "embedding near-dup pair join must be a shuffled hash join")
     assert(!cosPlan.contains("BroadcastExchange"),
       "embedding near-dup must not broadcast the corpus")
-    val autoPlan = frames("dedup_embedding_auto").queryExecution.executedPlan.toString
+    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val autoDf = SparkEntry.queries("dedup_embedding_auto")(spark, dir)
+    show("dedup_embedding_auto (auto-broadcast off)", autoDf)
+    val autoPlan = autoDf.queryExecution.executedPlan.toString
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
     assert(autoPlan.contains("ShuffledHashJoin"),
       "embedding auto near-dup pair join must be a shuffled hash join")
     assert(!autoPlan.contains("BroadcastHashJoin"),
@@ -93,7 +101,6 @@ object PlanAudit {
     // side is KB-sized and the planner would (legitimately) broadcast it;
     // the audit pins the AT-SCALE shape — where neither side fits an
     // executor — by planning this one frame with auto-broadcast off.
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val rangeDf = SparkEntry.queries("evt_range_join")(spark, dir)
     show("evt_range_join (auto-broadcast off)", rangeDf)
@@ -412,9 +419,13 @@ object PlanAudit {
       s"value quantiles must prune the events scan to event_type+value, read: $vqRead")
     // cluster exemplars: composition of audited pieces — still assert
     // the composed plan never degenerates to a nested loop / cartesian
-    // and the exemplar pick window is cluster-partitioned
+    // and the exemplar pick window is cluster-partitioned. Node rows that
+    // fit the driver tail are picked on the driver, which plans no
+    // window, so the section runs with auto-broadcast off.
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val ceDf = graft.operators.SimilarityOps.clusterExemplars(spark, dir)
     val cePlan = ceDf.queryExecution.executedPlan.toString
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
     // same 2-probe allowance as pagerank: the cached graph lineage
     // carries the nlist-row centroid broadcast cross-score
     assert(!cePlan.contains("CartesianProduct"),

@@ -72,17 +72,7 @@ case class VectorMomentsAgg(
     val q = new Array[Long](dim)
     var i = 0
     while (i < dim) { q(i) = arr.getLong(i); i += 1 }
-    var p = 0
-    i = 0
-    while (i < dim) {
-      b.hot1(i) += q(i)
-      var j = i
-      while (j < dim) { b.hot2(p) += q(i) * q(j); p += 1; j += 1 }
-      i += 1
-    }
-    b.n += 1
-    b.hotRows += 1
-    if (b.hotRows >= FlushRows) b.flush()
+    b.add(q)
     b
   }
 
@@ -147,13 +137,17 @@ case class VectorMomentsAgg(
 
 object VectorMomentsAgg {
   /** Rows accumulated in the Long hot path before a BigInteger flush.
-    * With |q| ≤ 2²⁴ each product is < 2⁴⁸, so 2¹⁴ rows stay < 2⁶² —
+    * With |q| ≤ 2²⁴ each product is ≤ 2⁴⁸, so 2¹⁴ rows stay ≤ 2⁶² —
     * overflow-free with headroom. */
   private[graft] val FlushRows = 1 << 14
 
+  /** Largest |q| for which the hot sums cannot wrap ([[FlushRows]]). */
+  private[graft] val HotBound = 1L << 24
+
   /** Aggregation buffer: Long hot sums (per-row adds) + BigInteger cold
     * sums (unbounded exact totals). Mutable by design — Spark owns each
-    * buffer instance single-threaded. */
+    * buffer instance single-threaded, and the driver moments of
+    * [[graft.operators.SimilarityOps.topComponent]] fill one the same way. */
   final class Buf(dim: Int, nPairs: Int) {
     var n: Long = 0L
     var hotRows: Long = 0L
@@ -161,6 +155,21 @@ object VectorMomentsAgg {
     val hot2 = new Array[Long](nPairs)
     val cold1: Array[BigInteger] = Array.fill(dim)(BigInteger.ZERO)
     val cold2: Array[BigInteger] = Array.fill(nPairs)(BigInteger.ZERO)
+
+    /** Count one row `q` of `dim` components into the hot sums. */
+    def add(q: Array[Long]): Unit = {
+      var p = 0
+      var i = 0
+      while (i < dim) {
+        hot1(i) += q(i)
+        var j = i
+        while (j < dim) { hot2(p) += q(i) * q(j); p += 1; j += 1 }
+        i += 1
+      }
+      n += 1
+      hotRows += 1
+      if (hotRows >= FlushRows) flush()
+    }
 
     def flush(): Unit = if (hotRows > 0) {
       var i = 0

@@ -672,19 +672,79 @@ object DedupOps {
     * joins its max-cosine list, and only same-list pairs pay the exact
     * cosine. The blocking is nprobe=1, so cross-list near-dups are
     * missed — the standard recall/cost trade, and the oracle replays the
-    * identical training + assignment so the gate is exact. Shuffle
-    * shape: two broadcast-assign + co-shuffled-update rounds for the
-    * quantizer, then one self-join co-shuffled on the list id. */
-  def embeddingNearDupAuto(spark: SparkSession, dir: String): DataFrame = {
-    val q = Caches.cached(quantized(spark, dir))
-    // corpus count for the √n list-count rule: parquet metadata, no scan
-    val n = Tables.rowCount(spark, dir, "embeddings")
-    val (asg, _) = KMeans.fitSized(q, n, nlist = KMeans.autoNlist(n))
-    // the assignment is corpus-LENGTH (one row per vector) even though
-    // it is narrow, so attaching it must co-shuffle on vec_id — Catalyst
-    // would happily broadcast it at toy scale and OOM at real scale
-    val blocked = q.join(asg.hint("shuffle_hash"), "vec_id")
-    blockPairs(blocked, "cl")
+    * identical training + assignment so the gate is exact.
+    *
+    * Whole on the driver when it fits the [[Fixpoint]] driver tail: when
+    * the n vectors do (n·528 bytes, n from the parquet footers), one job
+    * collects them and the k-means rounds run on the driver; when the
+    * same-list pairs then do too (Σ C(|list|, 2) at 4 × 8 bytes a pair),
+    * every same-list pair is scored on the driver with the Spark plan's
+    * cosine, `dot.toDouble / sqrt(nrm_a) / sqrt(nrm_b)` with a the
+    * smaller id, and the pairs at ≥ 0.35 come back as one driver-built
+    * frame in (vec_a, vec_b) order. Pairs that do not fit run
+    * [[blockPairs]] over the driver assignment; vectors that do not fit
+    * (or that [[Fixpoint.Vectors]] declines) run the Spark k-means and
+    * pairs: two broadcast-assign + co-shuffled-update rounds, then one
+    * self-join co-shuffled on the list id. The decision logs one record
+    * (`stage=pairs`). */
+  def embeddingNearDupAuto(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.run("embedding_near_dup", spark) { fp =>
+      val t0 = System.nanoTime()
+      // corpus count for the √n list-count rule: parquet metadata, no scan
+      val n = Tables.rowCount(spark, dir, "embeddings")
+      val nlist = KMeans.autoNlist(n)
+      lazy val q = Caches.cached(quantized(spark, dir))
+      val local =
+        if (!fp.fitsDriver(Fixpoint.vectorBytes(n))) None
+        else Fixpoint.Vectors.collect(quantized(spark, dir))
+      local match {
+        case Some(v) =>
+          val (asg, _) = KMeans.lloydOnDriver(fp, v, nlist = nlist)
+          // each list's vector rows, in id order
+          val lists = v.ids.indices.filter(asg(_).nonEmpty).groupBy(asg(_).get)
+            .view.mapValues(_.toArray).toMap
+          val pairs = lists.values.map(l => l.length.toLong * (l.length - 1) / 2).sum
+          if (fp.fitsDriver(pairs * 4 * Fixpoint.FieldBytes)) {
+            fp.record(0, "driver", pairs, t0, "pairs")
+            blockPairsOnDriver(fp, v, lists)
+          } else {
+            fp.record(0, "spark", pairs, t0, "pairs")
+            blockPairs(q.join(KMeans.assignmentFrame(spark, v, asg).hint("shuffle_hash"),
+              "vec_id"), "cl")
+          }
+        case None =>
+          fp.record(0, "spark", -1, t0, "pairs")
+          val (asg, _) = KMeans.fitSized(q, n, nlist = nlist)
+          // the assignment is corpus-LENGTH (one row per vector) even
+          // though it is narrow, so attaching it must co-shuffle on
+          // vec_id — Catalyst would happily broadcast it at toy scale and
+          // OOM at real scale
+          blockPairs(q.join(asg.hint("shuffle_hash"), "vec_id"), "cl")
+      }
+    }
+
+  /** [[blockPairs]] on the driver over the vector rows of each list (id
+    * order within a list, keyed by cl): the (vec_a, vec_b, cl, cosine)
+    * rows at cosine ≥ 0.35, in (vec_a, vec_b) order. */
+  private def blockPairsOnDriver(fp: Fixpoint, v: Fixpoint.Vectors,
+                                 lists: Map[Long, Array[Int]]): DataFrame = {
+    val sq = v.nrm.map(x => math.sqrt(x.toDouble))
+    // row a's list, its cl and a's position there; rows run in id order,
+    // so taking each a in turn with its later list-mates yields the pairs
+    // sorted
+    val n = v.ids.length
+    val listOf = new Array[Array[Int]](n)
+    val clOf = new Array[Long](n)
+    val at = new Array[Int](n)
+    for ((cl, l) <- lists; k <- l.indices) { listOf(l(k)) = l; clOf(l(k)) = cl; at(l(k)) = k }
+    val rows = Seq.newBuilder[Row]
+    for (a <- 0 until n if listOf(a) != null; b <- listOf(a).view.drop(at(a) + 1)) {
+      val cos = Fixpoint.Vectors.dot(v.qv(a), v.qv(b)).toDouble / sq(a) / sq(b)
+      if (cos >= 0.35) rows += Row(v.ids(a), v.ids(b), clOf(a), cos)
+    }
+    Fixpoint.frame(fp.session, StructType(Seq(StructField("vec_a", LongType),
+        StructField("vec_b", LongType), StructField("cl", LongType),
+        StructField("cosine", DoubleType))), rows.result())
   }
 
   /** The quantization expression itself — the ONE definition of

@@ -28,7 +28,9 @@ import graft.Checkpoints
   *    arithmetic round by round ([[onDriver]]); the two component loops
   *    share one pass, [[Indexed.components]], and when the n-gram pair
   *    stage before them fits (sized from its shingle rows, then from its
-  *    candidate pairs) they finish whole on the driver with it. The
+  *    candidate pairs) they finish whole on the driver with it. The top
+  *    component's moments and the embedding near-dup pairs decide from
+  *    the vectors ([[vectorBytes]]), the pairs then from their count. The
   *    threshold is the size up to which Spark itself ships a relation to
   *    the driver and back out as a broadcast; the collected rows are
   *    boxed, so the driver briefly holds about three times the estimate.

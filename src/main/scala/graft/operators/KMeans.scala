@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
@@ -93,21 +93,34 @@ object KMeans {
     }
   }
 
+  /** [[lloydOnDriver]]'s assignment and centroids as frames. */
+  private def fitOnDriver(fp: Fixpoint, v: Fixpoint.Vectors, iters: Int, nlist: Int,
+                          firstSeed: Int): (DataFrame, DataFrame) = {
+    val (asg, cents) = lloydOnDriver(fp, v, iters, nlist, firstSeed)
+    (assignmentFrame(fp.session, v, asg),
+      Fixpoint.frame(fp.session, StructType(Seq(StructField("cl", LongType),
+          StructField("cv", ArrayType(LongType)), StructField("cnrm", LongType))),
+        cents.map(c => Row(c.cl, c.cv.toSeq, c.cnrm)).toSeq))
+  }
+
+  /** A centroid of the driver rounds. */
+  private[operators] final case class Cent(cl: Long, cv: Array[Long], cnrm: Long)
+
   /** Lloyd's rounds on the driver with the Spark rounds' arithmetic: the
     * 64-bit dot product, cosine as `dot.toDouble / sqrt(nrm) / sqrt(cnrm)`,
     * argmax by (scos DESC, cl ASC) — what `max(struct(scos, -cl))`
     * orders — and means as `sum div count`, truncated toward zero, with
-    * zero-norm means dropped. */
-  private def fitOnDriver(fp: Fixpoint, v: Fixpoint.Vectors, iters: Int, nlist: Int,
-                          firstSeed: Int): (DataFrame, DataFrame) = {
-    final case class Cent(cl: Long, cv: Array[Long], cnrm: Long)
+    * zero-norm means dropped. Returns each vector row's centroid id (None
+    * for a vector with no centroid to join: an empty centroid table) and
+    * the final centroids in cl order. */
+  private[operators] def lloydOnDriver(fp: Fixpoint, v: Fixpoint.Vectors, iters: Int = 2,
+                                       nlist: Int, firstSeed: Int = 10)
+      : (Array[Option[Long]], IndexedSeq[Cent]) = {
     val n = v.ids.length
     val cents0 = (0 until n)
       .filter(i => v.ids(i) >= firstSeed && v.ids(i) < firstSeed + nlist)
       .map(i => Cent(v.ids(i), v.qv(i), v.nrm(i)))
-    // the assignment as (vector row → centroid id); None for a vector
-    // with no centroid to join (an empty centroid table)
-    val (asg, cents) = fp.onDriver((v.ids.map(Option(_)), cents0), iters) { case ((_, cents), _) =>
+    fp.onDriver((v.ids.map(Option(_)), cents0), iters) { case ((_, cents), _) =>
       val sqrtC = cents.map(c => math.sqrt(c.cnrm.toDouble))
       val cl = Array.tabulate(n) { i =>
         val sq = math.sqrt(v.nrm(i).toDouble)
@@ -131,15 +144,14 @@ object KMeans {
       }.filter(_.cnrm > 0)
       Fixpoint.Step((cl, next), cl.count(_.nonEmpty).toLong)
     }
-    val spark = fp.session
-    val asgRows = (0 until n).filter(asg(_).nonEmpty).sortBy(v.ids(_))
-      .map(i => Row(v.ids(i), asg(i).get))
-    (Fixpoint.frame(spark, StructType(Seq(StructField("vec_id", LongType),
-        StructField("cl", LongType))), asgRows),
-      Fixpoint.frame(spark, StructType(Seq(StructField("cl", LongType),
-          StructField("cv", ArrayType(LongType)), StructField("cnrm", LongType))),
-        cents.sortBy(_.cl).map(c => Row(c.cl, c.cv.toSeq, c.cnrm))))
   }
+
+  /** (vec_id, cl) rows of a driver assignment, in vec_id order. */
+  private[operators] def assignmentFrame(spark: SparkSession, v: Fixpoint.Vectors,
+                                         asg: Array[Option[Long]]): DataFrame =
+    Fixpoint.frame(spark, StructType(Seq(StructField("vec_id", LongType),
+        StructField("cl", LongType))),
+      asg.indices.filter(asg(_).nonEmpty).map(i => Row(v.ids(i), asg(i).get)))
 
   /** The scale rule for the list count: nlist = ⌊√n⌋ (min 1). With ~√n
     * lists of ~√n vectors, a consumer's block-local pair space is

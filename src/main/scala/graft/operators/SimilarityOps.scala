@@ -1532,19 +1532,54 @@ object SimilarityOps {
         g.select(col("ida").as("doc_a"), col("idb").as("doc_b")))
       .select(col("doc_id").as("vec_id"), col("cluster_id"))
     val nodes = graft.Tables.load(spark, dir, "embeddings").select(col("vec_id"))
-    val pr = pageRankOf(nodes, g, 10, graft.Tables.rowCount(spark, dir, "embeddings"),
-        sorted = false)
+    val n = graft.Tables.rowCount(spark, dir, "embeddings")
+    val pr = pageRankOf(nodes, g, 10, n, sorted = false)
       .select(col("vec_id"), col("rank_ppm"))
-    val w = Window.partitionBy("cluster_id")
-    comp.join(pr.hint("shuffle_hash"), "vec_id")
-      .withColumn("rn", row_number().over(
-        w.orderBy(col("rank_ppm").desc, col("vec_id").asc)))
-      .withColumn("n_members", count(lit(1)).over(w))
-      .filter(col("rn") === 1)
-      .select(col("cluster_id"), col("vec_id").as("exemplar_id"),
-        col("rank_ppm").as("exemplar_rank_ppm"), col("n_members"))
-      .orderBy("cluster_id")
+    // at most n rows of (vec_id, cluster_id) and of (vec_id, rank_ppm)
+    val local =
+      if (!Fixpoint.fitsDriver(spark, n * 4 * Fixpoint.FieldBytes)) None
+      else exemplarsOnDriver(spark, comp.collect(), pr.collect())
+    local.getOrElse {
+      val w = Window.partitionBy("cluster_id")
+      comp.join(pr.hint("shuffle_hash"), "vec_id")
+        .withColumn("rn", row_number().over(
+          w.orderBy(col("rank_ppm").desc, col("vec_id").asc)))
+        .withColumn("n_members", count(lit(1)).over(w))
+        .filter(col("rn") === 1)
+        .select(col("cluster_id"), col("vec_id").as("exemplar_id"),
+          col("rank_ppm").as("exemplar_rank_ppm"), col("n_members"))
+        .orderBy("cluster_id")
+    }
   }
+
+  /** The exemplar pick on the driver over the collected (vec_id,
+    * cluster_id) labeling and (vec_id, rank_ppm) ranks, as the Spark plan
+    * picks: the inner join on vec_id (a row per matching pair), then per
+    * cluster the max rank_ppm with ties to the smaller vec_id and the
+    * joined row count, in cluster_id order. None — the Spark plan decides
+    * — when a value is null. Both inputs are driver-built frames on their
+    * driver paths, so collecting them starts no job. */
+  private def exemplarsOnDriver(spark: SparkSession, comp: Array[Row],
+                                ranks: Array[Row]): Option[DataFrame] =
+    if ((comp ++ ranks).exists(r => r.isNullAt(0) || r.isNullAt(1))) None
+    else {
+      val rankOf = ranks.groupMap(_.getLong(0))(_.getLong(1))
+      // cluster_id -> (exemplar vec_id, its rank_ppm, member rows)
+      val best = scala.collection.mutable.HashMap.empty[Long, (Long, Long, Long)]
+      for (r <- comp; rank <- rankOf.getOrElse(r.getLong(0), Array.empty[Long])) {
+        val (id, cl) = (r.getLong(0), r.getLong(1))
+        best(cl) = best.get(cl) match {
+          case Some((bid, brank, m)) =>
+            if (rank > brank || (rank == brank && id < bid)) (id, rank, m + 1)
+            else (bid, brank, m + 1)
+          case None => (id, rank, 1L)
+        }
+      }
+      Some(Fixpoint.frame(spark, StructType(Seq(StructField("cluster_id", LongType),
+          StructField("exemplar_id", LongType), StructField("exemplar_rank_ppm", LongType),
+          StructField("n_members", LongType, nullable = false))),
+        best.toSeq.sortBy(_._1).map { case (cl, (id, rank, m)) => Row(cl, id, rank, m) }))
+    }
 
   /** Exact covariance matrix of the embedding corpus — the
     * whitening/PCA front-end. ONE aggregate pass through the data via
@@ -1614,12 +1649,32 @@ object SimilarityOps {
     * `div` and DuckDB's `//` agree; the oracle unrolls the same 10
     * rounds as chained CTEs (same discipline as the PageRank twin).
     * Power iteration from the all-ones vector has no sign/tie ambiguity
-    * to agree on — the start vector and round count pin the result. */
+    * to agree on — the start vector and round count pin the result.
+    *
+    * Whole on the driver when the vectors fit the [[Fixpoint]] driver
+    * tail (n·528 bytes, n from the parquet footers, no job): one job
+    * collects (vec_id, qv, nrm) and the moments are summed on the driver
+    * in a [[graft.functions.VectorMomentsAgg]] buffer — the aggregate's
+    * own arithmetic, exact, so the two paths give the same integers. It
+    * declines to [[momentsOf]] when [[Fixpoint.Vectors]] does, and so
+    * when a component has |q| > 2²⁴ ([[hotBounded]]), past which the
+    * aggregate's Long hot sums may wrap and the Spark path alone defines
+    * the result. The decision logs one record (`stage=moments`). */
   def topComponent(spark: SparkSession, dir: String): DataFrame =
-    topComponentFrom(momentsOf(spark, dir))
+    Fixpoint.run("top_component", spark) { fp =>
+      val t0 = System.nanoTime()
+      val n = graft.Tables.rowCount(spark, dir, "embeddings")
+      val local =
+        if (!fp.fitsDriver(Fixpoint.vectorBytes(n))) None
+        else Fixpoint.Vectors.collect(hotBounded(DedupOps.quantized(spark, dir)))
+          .map(momentsOnDriver)
+      fp.record(0, if (local.isDefined) "driver" else "spark", n, t0, "moments")
+      val (vn, s1, s2) = local.getOrElse(momentsRow(momentsOf(spark, dir)))
+      componentOf(spark, vn, s1, s2)
+    }
 
-  /** The one corpus-scale stage, CACHED so [[topComponent]] and
-    * [[componentScores]] composed in one query share the single pass:
+  /** The one corpus-scale stage, CACHED so [[topComponent]]'s Spark path
+    * and [[componentScores]] composed in one query share the single pass:
     * one row of (n, s1[dim], s2[dim·(dim+1)/2]) exact moments. */
   private[graft] def momentsOf(spark: SparkSession, dir: String): DataFrame = {
     val dim = DedupOps.Dim
@@ -1629,9 +1684,36 @@ object SimilarityOps {
         .select(col("m.n").as("n"), col("m.s1").as("s1"), col("m.s2").as("s2")))
   }
 
-  /** Driver-side power iteration (r21): the moments row is O(dim²)
-    * numbers — a constant of the SCHEMA, not the corpus — so everything
-    * after the one distributed moments pass is dimension-sized integer
+  /** (n, s1, s2) of the one [[momentsOf]] row. */
+  private def momentsRow(m: DataFrame): (BigInt, Array[BigInt], Array[BigInt]) = {
+    val row = m.select(col("n"), col("s1"), col("s2")).head()
+    def big(i: Int) = row.getSeq[java.math.BigDecimal](i).map(d => BigInt(d.toBigInteger)).toArray
+    (BigInt(row.getLong(0)), big(1), big(2))
+  }
+
+  /** `q` with nrm 0, which [[Fixpoint.Vectors]] declines, on every
+    * vector with a component past the moments aggregate's hot-sum bound —
+    * set before the norm is computed, whose square of such a component
+    * can overflow where the aggregate never reads a norm. */
+  private def hotBounded(q: DataFrame): DataFrame = {
+    val bound = graft.functions.VectorMomentsAgg.HotBound
+    q.withColumn("nrm", when(exists(col("qv"), x => x > bound || x < -bound), lit(0L))
+      .otherwise(col("nrm")))
+  }
+
+  /** The moments of collected vectors, summed in the aggregate's own
+    * buffer: exact for components within its hot-sum bound. */
+  private def momentsOnDriver(v: Fixpoint.Vectors): (BigInt, Array[BigInt], Array[BigInt]) = {
+    val dim = DedupOps.Dim
+    val b = new graft.functions.VectorMomentsAgg.Buf(dim, dim * (dim + 1) / 2)
+    v.qv.foreach(b.add)
+    b.flush()
+    (BigInt(b.n), b.cold1.map(BigInt(_)), b.cold2.map(BigInt(_)))
+  }
+
+  /** Driver-side power iteration (r21) over the exact moments: they are
+    * O(dim²) numbers — a constant of the SCHEMA, not the corpus — so
+    * everything after the one moments pass is dimension-sized integer
     * arithmetic. The previous DataFrame form ran it as 10 chained
     * matvec+rescale rounds with a 64-row localCheckpoint each: ~20
     * driver-synchronous Spark jobs per query for work a single thread
@@ -1644,14 +1726,10 @@ object SimilarityOps {
     * Spark's Decimal.toDouble — byte-identical output, proven by
     * TopComponentParitySpec against [[topComponentFromDistributed]] and
     * end-to-end by the sim_top_component / sim_component_scores oracle
-    * rows. */
-  private def topComponentFrom(m: DataFrame): DataFrame = {
+    * rows. The rows are built in `i` order, so no sort is planned. */
+  private def componentOf(spark: SparkSession, n: BigInt, s1: Array[BigInt],
+                          s2: Array[BigInt]): DataFrame = {
     val dim = DedupOps.Dim
-    val spark = m.sparkSession
-    val row = m.select(col("n"), col("s1"), col("s2")).head()
-    val n = BigInt(row.getLong(0))
-    val s1 = row.getSeq[java.math.BigDecimal](1).map(d => BigInt(d.toBigInteger)).toArray
-    val s2 = row.getSeq[java.math.BigDecimal](2).map(d => BigInt(d.toBigInteger)).toArray
     // raw c_ij = n·s2_ij − s1_i·s1_j, mirrored — same as the tri/full frames
     def pi(i: Int, j: Int): Int = dim * i - i * (i - 1) / 2 + (j - i)
     val c = Array.ofDim[BigInt](dim, dim)
@@ -1682,22 +1760,16 @@ object SimilarityOps {
     // ((vtcv / vtv) * cscale) / ((n · n) · 1e12)
     def d(x: BigInt): Double = new java.math.BigDecimal(x.bigInteger).doubleValue
     val eig = d(vtcv) / d(vtv) * d(cscale) / (d(n) * d(n) * 1e12)
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      (0 until dim).map(i => org.apache.spark.sql.Row(i.toLong, v(i).toLong, eig)).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("i",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("component_ppm",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("eigenvalue",
-          org.apache.spark.sql.types.DoubleType, nullable = true))))
-      .orderBy("i")
+    Fixpoint.frame(spark, StructType(Seq(
+        StructField("i", LongType, nullable = false),
+        StructField("component_ppm", LongType),
+        StructField("eigenvalue", DoubleType))),
+      (0 until dim).map(i => Row(i.toLong, v(i).toLong, eig)))
   }
 
   /** The pre-r21 DataFrame-iterated form, kept as the parity witness for
     * the spec (TopComponentParitySpec asserts byte-identical output to
-    * the driver-side [[topComponentFrom]] on the test corpus). */
+    * the driver-side [[componentOf]] on the test corpus). */
   private[graft] def topComponentFromDistributed(m: DataFrame): DataFrame = {
     val dim = DedupOps.Dim
     val spark = m.sparkSession
@@ -1776,7 +1848,8 @@ object SimilarityOps {
     * sort. */
   def componentScores(spark: SparkSession, dir: String): DataFrame = {
     val m = momentsOf(spark, dir)
-    val tc = topComponentFrom(m)
+    val (n, s1, s2) = momentsRow(m)
+    val tc = componentOf(spark, n, s1, s2)
     val varr = tc.agg(expr(
       "transform(sort_array(collect_list(struct(i, component_ppm))), x -> x.component_ppm)")
       .as("v"))

@@ -96,10 +96,6 @@ object Tables {
     df.withColumn("ms", epochMs(df.schema))
   }
 
-  /** Register every table as a temp view so `spark.sql` works too. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
   /** Scale-adaptive scan fan-out (optimization guide §2.5, "input skew:
     * one huge unsplittable file … repartition immediately after the
     * read"). A small single-file parquet table scans as ONE split, so

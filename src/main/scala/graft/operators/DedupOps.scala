@@ -99,7 +99,7 @@ object DedupOps {
     * driver tail is scored on the driver instead, output-identical. */
   def ngramJaccard(spark: SparkSession, dir: String, maxDf: Int = 64): DataFrame =
     Fixpoint.run("ngram_pairs", spark) { fp =>
-      ngramPairsIn(fp, dir, maxDf).fold(pairsFrame(fp, _), _.orderBy("doc_a", "doc_b"))
+      ngramPairsIn(fp, dir, maxDf)(pairsFrame(fp, _))(_.orderBy("doc_a", "doc_b"))
     }
 
   /** Plan probe for the audit harness: the df-capped inverted index
@@ -124,30 +124,28 @@ object DedupOps {
   /** Near-dup pairs sorted by (doc_a, doc_b), computed on the driver. */
   private final case class Pairs(a: Array[Long], b: Array[Long], jaccard: Array[Double])
 
-  /** The n-gram pair stage of one operator call, in its runner: the
-    * shingle table (doc_id, h) is cut and counted once. When it fits the
-    * driver tail the pairs are computed on the driver
-    * ([[ngramPairsOnDriver]]); otherwise the Spark pipeline runs over the
+  /** The n-gram pair stage of one operator call, in its runner, and the
+    * operator's rest on the stage's path: the shingle table (doc_id, h) is
+    * cut and counted once. When it fits the driver tail the pairs are
+    * computed on the driver ([[ngramPairsOnDriver]]) and `onDriver`
+    * finishes the operator; otherwise the Spark pipeline runs over the
     * same checkpoint, its index checkpoint owned by `fp`, so it is
-    * released with the call unless the returned frame reads it. The stage
-    * logs one record (`stage=pairs`). */
-  private def ngramPairsIn(fp: Fixpoint, dir: String, maxDf: Int): Either[Pairs, DataFrame] = {
+    * released with the call unless the returned frame reads it, and
+    * `onSpark` finishes. The stage logs one record (`stage=pairs`). */
+  private def ngramPairsIn[A](fp: Fixpoint, dir: String, maxDf: Int)(onDriver: Pairs => A)
+                             (onSpark: DataFrame => A): A = {
     val t0 = System.nanoTime()
     // shingles arrive as 60-bit longs: every downstream shuffle/join
     // moves 8-byte keys instead of ~20-byte strings, and the set
     // semantics are unchanged (within-pair collision odds ~1e-13)
     val (raw, rows) = fp.cut(shingleTable(fp.session, dir))
-    val local =
-      if (!fp.fitsDriver(rows * 2 * Fixpoint.FieldBytes)) None
-      else ngramPairsOnDriver(fp, raw.collect(), maxDf)
-    local match {
-      case Some(p) =>
-        fp.record(0, "driver", p.a.length, t0, "pairs")
-        Left(p)
-      case None =>
-        val out = ngramPairsOnSpark(fp, raw, maxDf)
-        fp.record(0, "spark", -1, t0, "pairs")
-        Right(out)
+    fp.whole(rows * 2 * Fixpoint.FieldBytes)(ngramPairsOnDriver(fp, raw.collect(), maxDf).map { p =>
+      fp.record(0, p.a.length, t0, "pairs")
+      onDriver(p)
+    }) {
+      val out = ngramPairsOnSpark(fp, raw, maxDf)
+      fp.record(0, -1, t0, "pairs")
+      onSpark(out)
     }
   }
 
@@ -214,8 +212,7 @@ object DedupOps {
       val lists = runs.result()
       val candidates = lists.map { case (s, e) => (e - s).toLong * (e - s - 1) / 2 }.sum
       // (a JVM array holds fewer than Int.MaxValue keys, whatever the threshold)
-      if (candidates >= Int.MaxValue || !fp.fitsDriver(candidates * Fixpoint.FieldBytes)) None
-      else {
+      fp.fits(candidates * Fixpoint.FieldBytes)(Option.when(candidates < Int.MaxValue) {
         val nSh = new Array[Long](docs.length)
         val keys = new Array[Long](candidates.toInt)
         var k = 0
@@ -237,8 +234,8 @@ object DedupOps {
           if (jaccard >= 0.5) { a += docs(x); b += docs(y); jac += jaccard }
           i = j
         }
-        Some(Pairs(a.result(), b.result(), jac.result()))
-      }
+        Pairs(a.result(), b.result(), jac.result())
+      })
     }
 
   /** (doc_a, doc_b, jaccard) rows of driver pairs, in their order. */
@@ -339,10 +336,8 @@ object DedupOps {
     * per round. */
   def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
     Fixpoint.run("label_propagation", spark) { fp =>
-      ngramPairsIn(fp, dir, 64) match {
-        case Left(p) => propagateOnDriver(fp, Fixpoint.Indexed(p.a, p.b))
-        case Right(pairs) =>
-          propagationIn(fp, pairs.select(col("doc_a"), col("doc_b"))).orderBy("doc_id")
+      ngramPairsIn(fp, dir, 64)(p => propagateOnDriver(fp, Fixpoint.Indexed(p.a, p.b))) { pairs =>
+        propagationIn(fp, pairs.select(col("doc_a"), col("doc_b"))).orderBy("doc_id")
       }
     }
 
@@ -355,10 +350,8 @@ object DedupOps {
     // one materialized pass of the pair pipeline, counted: the symmetric
     // edge list (2 rows of (src, dst) per pair) is the loop's state
     val (p, np) = fp.cut(pairs)
-    fp.collectPairs(p, 2 * np, 2 * Fixpoint.FieldBytes) match {
-      case Some(g) => propagateOnDriver(fp, g)
-      case None => propagateOnSpark(fp, p)
-    }
+    fp.whole(2 * np * 2 * Fixpoint.FieldBytes)(
+      Fixpoint.Indexed.collect(p).map(propagateOnDriver(fp, _)))(propagateOnSpark(fp, p))
   }
 
   /** Label propagation finished on the driver: the component pass gives
@@ -371,7 +364,7 @@ object DedupOps {
     val t0 = System.nanoTime()
     val (label, depth) = g.components
     val rounds = math.max(depth, 1)
-    fp.record(rounds, "driver", g.n, t0)
+    fp.record(rounds, g.n, t0)
     require(rounds <= Fixpoint.MaxRounds,
       s"${fp.loop} did not converge in ${Fixpoint.MaxRounds} rounds")
     componentFrame(fp, g, label)
@@ -439,10 +432,8 @@ object DedupOps {
     * when the pair stage ran on the driver the whole operator does. */
   def nearDupClustersStar(spark: SparkSession, dir: String): DataFrame =
     Fixpoint.run("star_contraction", spark) { fp =>
-      ngramPairsIn(fp, dir, 64) match {
-        case Left(p) => starOnDriver(fp, Fixpoint.Indexed(p.a, p.b))
-        case Right(pairs) =>
-          starIn(fp, pairs.select(col("doc_a"), col("doc_b"))).orderBy("doc_id")
+      ngramPairsIn(fp, dir, 64)(p => starOnDriver(fp, Fixpoint.Indexed(p.a, p.b))) { pairs =>
+        starIn(fp, pairs.select(col("doc_a"), col("doc_b"))).orderBy("doc_id")
       }
     }
 
@@ -476,11 +467,9 @@ object DedupOps {
       fp.cut(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
     // self-loops leave the Spark rounds at largeStar's filter, and a
     // node with nothing else leaves the answer with them
-    fp.collectPairs(seed.filter(!(col("u") <=> col("v"))), seedCount,
-        2 * Fixpoint.FieldBytes) match {
-      case Some(g) => starOnDriver(fp, g)
-      case None => starOnSpark(fp, seed, seedCount)
-    }
+    fp.whole(seedCount * 2 * Fixpoint.FieldBytes)(
+      Fixpoint.Indexed.collect(seed.filter(!(col("u") <=> col("v")))).map(starOnDriver(fp, _)))(
+      starOnSpark(fp, seed, seedCount))
   }
 
   // r22 NEGATIVE RESULT, kept as shipped: two restructures of the star
@@ -561,7 +550,7 @@ object DedupOps {
   private def starOnDriver(fp: Fixpoint, g: Fixpoint.Indexed): DataFrame = {
     val t0 = System.nanoTime()
     val (label, _) = g.components
-    fp.record(1, "driver", g.n, t0)
+    fp.record(1, g.n, t0)
     componentFrame(fp, g, label)
   }
 
@@ -694,32 +683,28 @@ object DedupOps {
       val n = Tables.rowCount(spark, dir, "embeddings")
       val nlist = KMeans.autoNlist(n)
       lazy val q = Caches.cached(quantized(spark, dir))
-      val local =
-        if (!fp.fitsDriver(Fixpoint.vectorBytes(n))) None
-        else Fixpoint.Vectors.collect(quantized(spark, dir))
-      local match {
-        case Some(v) =>
-          val (asg, _) = KMeans.lloydOnDriver(fp, v, nlist = nlist)
-          // each list's vector rows, in id order
-          val lists = v.ids.indices.filter(asg(_).nonEmpty).groupBy(asg(_).get)
-            .view.mapValues(_.toArray).toMap
-          val pairs = lists.values.map(l => l.length.toLong * (l.length - 1) / 2).sum
-          if (fp.fitsDriver(pairs * 4 * Fixpoint.FieldBytes)) {
-            fp.record(0, "driver", pairs, t0, "pairs")
-            blockPairsOnDriver(fp, v, lists)
-          } else {
-            fp.record(0, "spark", pairs, t0, "pairs")
-            blockPairs(q.join(KMeans.assignmentFrame(spark, v, asg).hint("shuffle_hash"),
-              "vec_id"), "cl")
-          }
-        case None =>
-          fp.record(0, "spark", -1, t0, "pairs")
-          val (asg, _) = KMeans.fitSized(q, n, nlist = nlist)
-          // the assignment is corpus-LENGTH (one row per vector) even
-          // though it is narrow, so attaching it must co-shuffle on
-          // vec_id — Catalyst would happily broadcast it at toy scale and
-          // OOM at real scale
-          blockPairs(q.join(asg.hint("shuffle_hash"), "vec_id"), "cl")
+      fp.whole(Fixpoint.vectorBytes(n))(Fixpoint.Vectors.collect(quantized(spark, dir)).map { v =>
+        val (asg, _) = KMeans.lloydOnDriver(fp, v, nlist = nlist)
+        // each list's vector rows, in id order
+        val lists = v.ids.indices.filter(asg(_).nonEmpty).groupBy(asg(_).get)
+          .view.mapValues(_.toArray).toMap
+        val pairs = lists.values.map(l => l.length.toLong * (l.length - 1) / 2).sum
+        fp.whole(pairs * 4 * Fixpoint.FieldBytes)(Some {
+          fp.record(0, pairs, t0, "pairs")
+          blockPairsOnDriver(fp, v, lists)
+        }) {
+          fp.record(0, pairs, t0, "pairs")
+          blockPairs(q.join(KMeans.assignmentFrame(spark, v, asg).hint("shuffle_hash"),
+            "vec_id"), "cl")
+        }
+      }) {
+        fp.record(0, -1, t0, "pairs")
+        val (asg, _) = KMeans.fitSized(q, n, nlist = nlist)
+        // the assignment is corpus-LENGTH (one row per vector) even
+        // though it is narrow, so attaching it must co-shuffle on
+        // vec_id — Catalyst would happily broadcast it at toy scale and
+        // OOM at real scale
+        blockPairs(q.join(asg.hint("shuffle_hash"), "vec_id"), "cl")
       }
     }
 
@@ -780,13 +765,6 @@ object DedupOps {
     * isn't re-inlined per consumer. */
   private[operators] def dotCosine(a: String, b: String) = {
     val dot = graft.functions.VectorFunctions.dotLong(col(s"$a.qv"), col(s"$b.qv"))
-    dot.cast("double") / sqrt(col(s"$a.nrm").cast("double")) / sqrt(col(s"$b.nrm").cast("double"))
-  }
-
-  /** Exact cosine of two quantized vectors (aliases `a`, `b`). */
-  private[operators] def cosineCol(a: String, b: String) = {
-    val dot = aggregate(
-      zip_with(col(s"$a.qv"), col(s"$b.qv"), _ * _), lit(0L), _ + _)
     dot.cast("double") / sqrt(col(s"$a.nrm").cast("double")) / sqrt(col(s"$b.nrm").cast("double"))
   }
 }

@@ -13,58 +13,80 @@ import graft.Checkpoints
 
 /** The one round-loop lifecycle of the iterative operators: the k-NN
   * descent, PageRank, k-means, label propagation and star contraction,
-  * and the k-NN recall gate that scores the descent's graph.
+  * and the whole-operator stages beside them (the recall gate, the
+  * n-gram pair stage, the top component's moments, the embedding
+  * near-dup pairs and the cluster exemplar pick).
   *
-  * Two paths per loop:
-  *  - **driver tail**: when the loop's state — sized from counts the
-  *    operator already takes, times its row width at [[FieldBytes]] per
-  *    numeric column — is no larger than
-  *    `spark.sql.autoBroadcastJoinThreshold` ([[Fixpoint.fitsDriver]],
-  *    the one rule), the operator collects it once and finishes on the
-  *    driver, then hands back a frame. The descent (seed, rounds and
-  *    mutual tail, decided from the corpus size before any of them),
-  *    PageRank (degrees, rounds and the node attach, decided from the
-  *    edge and node counts) and k-means repeat their Spark rounds'
-  *    arithmetic round by round ([[onDriver]]); the two component loops
-  *    share one pass, [[Indexed.components]], and when the n-gram pair
-  *    stage before them fits (sized from its shingle rows, then from its
-  *    candidate pairs) they finish whole on the driver with it. The top
-  *    component's moments and the embedding near-dup pairs decide from
-  *    the vectors ([[vectorBytes]]), the pairs then from their count. The
-  *    threshold is the size up to which Spark itself ships a relation to
-  *    the driver and back out as a broadcast; the collected rows are
-  *    boxed, so the driver briefly holds about three times the estimate.
-  *    The threshold bounds driver memory, not speed: on a 4-core box the
-  *    driver tail was faster at every size measured, including a 16 MB
-  *    descent state that the default threshold sends to the Spark
-  *    rounds. A threshold of -1 (broadcasts off) always takes the Spark
-  *    path.
-  *  - **Spark rounds** ([[onSpark]]): the state stays a chain of local
-  *    checkpoints, materialized by the same jobs as before the runner
-  *    existed. After every round the runner checks that the new state's
-  *    checkpoints are materialized, and only then unpersists the
-  *    superseded ones (and whatever else that round checkpointed and no
-  *    longer needs).
+  * Each operator call decides between its two paths once, with
+  * [[whole]]`(bytes)(driver)(spark)`:
+  *  - **the size rule** ([[fitsDriver]], written only here): a state of
+  *    `bytes` — sized from counts the operator already takes, at
+  *    [[FieldBytes]] per numeric column — fits the driver tail when it is
+  *    no larger than `spark.sql.autoBroadcastJoinThreshold`, the size up
+  *    to which Spark itself ships a relation to the driver and back out
+  *    as a broadcast. -1 (broadcasts off) never runs a driver body. The
+  *    collected rows are boxed, so the driver briefly holds about three
+  *    times the estimate. The threshold bounds driver memory, not speed:
+  *    on a 4-core box the driver tail was faster at every size measured.
+  *  - **the order**: the driver body runs first and returns None to
+  *    decline (a null, a zero norm, a duplicated id — inputs whose meaning
+  *    the Spark plan alone defines); then the Spark body runs. An
+  *    exception from the driver body propagates. A driver body may decide
+  *    again on a state it derived ([[fits]]), declining to the same Spark
+  *    body.
+  *  - **the path label**: every [[record]] a body logs, and every round of
+  *    [[onDriver]] and [[onSpark]], carries the path of the body it runs
+  *    in, so no record can name the path not taken.
+  *  - **the job tag**: a runner exists only inside its call
+  *    ([[Fixpoint.run]] / [[Fixpoint.using]]), whose jobs run with
+  *    `spark.job.description = graft:<loop>`.
   *
-  * A fixed-round loop stops at its count (or earlier, when its step
-  * reports `done`); a converging loop that reaches [[MaxRounds]] without
+  * The rounds: [[onDriver]] repeats the Spark rounds' arithmetic on
+  * in-memory state; [[onSpark]] keeps the state a chain of local
+  * checkpoints and, after every round, checks that the new state's
+  * checkpoints are materialized before it unpersists the superseded ones
+  * (and whatever else that round checkpointed and no longer needs). A
+  * fixed-round loop stops at its count (or earlier, when its step reports
+  * `done`); a converging loop that reaches [[MaxRounds]] without
   * converging fails. Every round logs one INFO record on the
-  * `graft.Fixpoint` logger: loop, round, path, state rows and seconds; a
-  * loop that finishes in one step (a driver component pass, PageRank's
-  * lazily chained Spark rounds) logs one record for it, and a stage
-  * outside the rounds one record with its name ([[record]]).
+  * `graft.Fixpoint` logger — loop, round, path, state rows and seconds —
+  * and a stage outside the rounds one record with its name.
   *
-  * A runner lives for one operator call ([[Fixpoint.run]] /
-  * [[Fixpoint.using]]) and keeps its checkpoints in one
-  * [[graft.Checkpoints]] scope: on exit it unpersists every checkpoint it
-  * made except those the returned frames read; on a throw, all of them.
+  * A runner keeps its checkpoints in one [[graft.Checkpoints]] scope: on
+  * exit it unpersists every checkpoint it made except those the returned
+  * frames read; on a throw, all of them.
   */
 private[graft] final class Fixpoint private (val loop: String, val session: SparkSession,
                                              scope: Checkpoints) {
   import Fixpoint._
 
-  /** Whether a state of `bytes` fits the driver tail ([[Fixpoint.fitsDriver]]). */
-  def fitsDriver(bytes: Long): Boolean = Fixpoint.fitsDriver(session, bytes)
+  /** The path whose body runs now; it labels every [[record]]. */
+  private var path: Option[String] = None
+
+  /** The one size rule of every driver tail: a state of `bytes` fits when
+    * it is no larger than `spark.sql.autoBroadcastJoinThreshold`. */
+  private def fitsDriver(bytes: Long): Boolean = {
+    val limit = session.sessionState.conf.autoBroadcastJoinThreshold
+    limit >= 0 && bytes >= 0 && bytes <= limit
+  }
+
+  private def on[T](p: String)(body: => T): T = {
+    val outer = path
+    path = Some(p)
+    try body finally path = outer
+  }
+
+  /** The operator call's decision: `driver` when a state of `bytes` fits
+    * the driver tail, `spark` when it does not or the driver body declines
+    * (None). */
+  def whole[A](bytes: Long)(driver: => Option[A])(spark: => A): A =
+    fits(bytes)(driver).getOrElse(on("spark")(spark))
+
+  /** The driver half of [[whole]]: `driver` when a state of `bytes` fits,
+    * else None — a driver body's decision on a state it derived, whose
+    * decline falls back to the enclosing Spark body. */
+  def fits[A](bytes: Long)(driver: => Option[A]): Option[A] =
+    if (fitsDriver(bytes)) on("driver")(driver) else None
 
   /** A lazy local checkpoint of `df`, owned by this runner. The first
     * action that reads all of it materializes it. */
@@ -77,21 +99,9 @@ private[graft] final class Fixpoint private (val loop: String, val session: Spar
     (c, Checkpoints.rddsOf(c).head.count())
   }
 
-  /** The two long columns of `df` (`rows` rows, `bytesPerRow` of loop
-    * state each), indexed for driver rounds — None when the state does
-    * not fit the driver tail or an endpoint is null (the Spark rounds
-    * keep their own null semantics). */
-  def collectPairs(df: DataFrame, rows: Long, bytesPerRow: Long): Option[Indexed] =
-    if (!fitsDriver(rows * bytesPerRow)) None
-    else {
-      val rs = df.collect()
-      if (rs.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-      else Some(Indexed(rs.map(_.getLong(0)), rs.map(_.getLong(1))))
-    }
-
   /** A fixed-round loop's rounds on the driver over an in-memory state. */
   def onDriver[S](init: S, rounds: Int)(step: (S, Int) => Step[S]): S =
-    iterate("driver", init, rounds, converging = false)(step)
+    on("driver")(iterate(init, rounds, converging = false)(step))
 
   /** Rounds over checkpointed frames. `live` names the state's frames,
     * each a checkpoint or a projection or filter of one;
@@ -99,7 +109,7 @@ private[graft] final class Fixpoint private (val loop: String, val session: Spar
     * state ([[IterLoop.withLoopPartitions]]). */
   def onSpark[S](init: S, rounds: Int, converging: Boolean, partitionRows: Option[Long] = None)
                 (live: S => Seq[DataFrame])(step: (S, Int) => Step[S]): S = {
-    def body = iterate("spark", init, rounds, converging) { (s, t) =>
+    def body = on("spark")(iterate(init, rounds, converging) { (s, t) =>
       val superseded = live(s).flatMap(stateRdds).map(_.id).toSet
       val before = scope.owned.map(_.id).toSet
       val r = step(s, t)
@@ -113,11 +123,11 @@ private[graft] final class Fixpoint private (val loop: String, val session: Spar
       // longer needs
       scope.releaseWhere(rdd => (superseded(rdd.id) || !before(rdd.id)) && !keep(rdd.id))
       r
-    }
+    })
     partitionRows.fold(body)(n => IterLoop.withLoopPartitions(session, Some(n))(body))
   }
 
-  private def iterate[S](path: String, init: S, rounds: Int, converging: Boolean)
+  private def iterate[S](init: S, rounds: Int, converging: Boolean)
                         (step: (S, Int) => Step[S]): S = {
     var s = init
     var t = 0
@@ -128,21 +138,24 @@ private[graft] final class Fixpoint private (val loop: String, val session: Spar
       val r = step(s, t)
       s = r.state
       done = r.done
-      record(t, path, r.rows, t0)
+      record(t, r.rows, t0)
     }
     // a silent half-converged answer would be WRONG output — refuse
     require(done || !converging, s"$loop did not converge in $t rounds")
     s
   }
 
-  /** Log the record of `round` on `path`, begun at `t0` (nanoTime). A
-    * stage outside the rounds (the descent's seed and mutual tail, the
-    * recall gate) logs round 0 and its `stage` name; a lazily planned
-    * Spark stage logs rows=-1, its time falling to the action that reads
-    * it. */
-  def record(round: Int, path: String, rows: Long, t0: Long, stage: String = ""): Unit =
-    log.info(f"loop=$loop round=$round path=$path rows=$rows " +
+  /** Log the record of `round`, begun at `t0` (nanoTime), on the path
+    * whose body logs it. A stage outside the rounds (the descent's seed
+    * and mutual tail, the recall gate) logs round 0 and its `stage` name;
+    * a lazily planned Spark stage logs rows=-1, its time falling to the
+    * action that reads it. */
+  def record(round: Int, rows: Long, t0: Long, stage: String = ""): Unit = {
+    val p = path.getOrElse(throw new IllegalStateException(
+      s"$loop: a record outside a driver or Spark body"))
+    log.info(f"loop=$loop round=$round path=$p rows=$rows " +
       f"secs=${(System.nanoTime() - t0) / 1e9}%.3f" + (if (stage.isEmpty) "" else s" stage=$stage"))
+  }
 
   /** The checkpoint a state frame is a projection or filter of — not
     * the checkpoints it merely reads (a frame derived from the loop's
@@ -171,14 +184,6 @@ private[graft] object Fixpoint {
 
   /** Width of one numeric column of loop state, in bytes. */
   val FieldBytes = 8L
-
-  /** The one size rule of every driver tail: a state of `bytes` fits when
-    * it is no larger than `spark.sql.autoBroadcastJoinThreshold` (-1, no
-    * broadcasts, keeps every loop on its Spark path). */
-  def fitsDriver(spark: SparkSession, bytes: Long): Boolean = {
-    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
-    limit >= 0 && bytes >= 0 && bytes <= limit
-  }
 
   /** State bytes of `n` collected [[Vectors]] rows: (vec_id, qv[Dim], nrm). */
   def vectorBytes(n: Long): Long = n * (DedupOps.Dim + 2) * FieldBytes
@@ -268,6 +273,15 @@ private[graft] object Fixpoint {
       val ids = java.util.Arrays.copyOf(all, k)
       def ix(x: Long): Int = java.util.Arrays.binarySearch(ids, x)
       Indexed(ids, a.map(ix), b.map(ix))
+    }
+
+    /** The two long columns of `df`, collected in one job and indexed —
+      * None when an endpoint is null (the Spark rounds keep their own
+      * null semantics). */
+    def collect(df: DataFrame): Option[Indexed] = {
+      val rs = df.collect()
+      if (rs.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
+      else Some(Indexed(rs.map(_.getLong(0)), rs.map(_.getLong(1))))
     }
   }
 

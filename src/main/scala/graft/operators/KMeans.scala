@@ -59,13 +59,9 @@ object KMeans {
                               firstSeed: Int = 10): (DataFrame, DataFrame) =
     Fixpoint.using("kmeans", q.sparkSession) { fp =>
       // state: the vectors themselves, (vec_id, qv[Dim], nrm) per row
-      val local =
-        if (!fp.fitsDriver(Fixpoint.vectorBytes(rows))) None
-        else Fixpoint.Vectors.collect(q)
-      local match {
-        case Some(v) => fitOnDriver(fp, v, iters, nlist, firstSeed)
-        case None => fitOnSpark(fp, q, iters, nlist, firstSeed)
-      }
+      fp.whole(Fixpoint.vectorBytes(rows))(
+        Fixpoint.Vectors.collect(q).map(fitOnDriver(fp, _, iters, nlist, firstSeed)))(
+        fitOnSpark(fp, q, iters, nlist, firstSeed))
     } { case (asg, cents) => Seq(asg, cents) }
 
   private def fitOnSpark(fp: Fixpoint, q: DataFrame, iters: Int, nlist: Int,

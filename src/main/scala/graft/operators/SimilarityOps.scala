@@ -650,16 +650,13 @@ object SimilarityOps {
         seedTables == DescentSeedTables && seedTargetList == DescentSeedTarget &&
         earlyKd == DescentEarlyKd && earlyRounds == DescentEarlyRounds &&
         broadcastVecs == DescentBroadcastVecs
-      val local =
-        if (!shipped || !fp.fitsDriver(3 * n * kd * Fixpoint.FieldBytes + Fixpoint.vectorBytes(n)))
-          None
+      fp.whole(3 * n * kd * Fixpoint.FieldBytes + Fixpoint.vectorBytes(n))(
+        if (!shipped) None
         else {
           val t0 = System.nanoTime()
           Fixpoint.Vectors.collect(q).map(descentOnDriver(fp, _, n, t0, kd, rounds, seedTables,
             seedTargetList, kdOf, widthFinal))
-        }
-
-      def descentOnSpark(): DataFrame = {
+        }) {
         // Shuffle width stays at the session default DELIBERATELY: a
         // volume-derived raising scope (rows/8M ≈ 400 partitions for the
         // round-1 k'²·n candidate space at sf10) was built and A/B'd on an
@@ -673,7 +670,7 @@ object SimilarityOps {
         val (seed, seedRows) = fp.cut(directedTopFrom(
           bitsScored(q, n, seedTables, seedTargetList, dedup = false, checkpoint = fp.cut(_)._1),
           kd))
-        fp.record(0, "spark", seedRows, t0, "seed")
+        fp.record(0, seedRows, t0, "seed")
         // state: (graph, its rows, the previous round's neighborhood
         // relation for the incremental FoF cut below — None before round
         // 1: everything is new). The runner releases each superseded graph
@@ -842,11 +839,9 @@ object SimilarityOps {
         val t1 = System.nanoTime()
         val out = mutualizeCore(sd.select(least(col("src"), col("dst")).as("ida"),
           greatest(col("src"), col("dst")).as("idb"), col("cosine")))
-        fp.record(0, "spark", -1, t1, "mutual")
+        fp.record(0, -1, t1, "mutual")
         out
       }
-
-      local.getOrElse(descentOnSpark())
     }
 
   /** The whole shipped descent on the driver, over the collected vectors:
@@ -918,7 +913,7 @@ object SimilarityOps {
     val members = blk.zipWithIndex.flatMap { case (ks, x) => ks.map(_ -> x) }
       .groupBy(_._1).map { case (k, kx) => k -> kx.map(_._2) }
     val sd0 = topPerNode((x, offer) => blk(x).foreach(k => members(k).foreach(offer)))
-    fp.record(0, "driver", sd0.map(_.dst.length.toLong).sum, t0, "seed")
+    fp.record(0, sd0.map(_.dst.length.toLong).sum, t0, "seed")
 
     // used (previous round's neighborhood) per center, sorted; null =
     // not a center then
@@ -987,7 +982,7 @@ object SimilarityOps {
       r = rankOf(y, x)
       if r >= 0
     } yield Row(v.ids(x), v.ids(y), top(x).coss(p), p + 1L, r + 1L)
-    fp.record(0, "driver", mutual.length, t1, "mutual")
+    fp.record(0, mutual.length, t1, "mutual")
     Fixpoint.frame(fp.session, StructType(Seq(StructField("ida", LongType),
         StructField("idb", LongType), StructField("cosine", DoubleType),
         StructField("rnk_a", LongType), StructField("rnk_b", LongType))), mutual)
@@ -1155,12 +1150,10 @@ object SimilarityOps {
       val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
       val n = graft.Tables.rowCount(spark, dir, "embeddings")
       val t0 = System.nanoTime()
-      val local =
-        if (!fp.fitsDriver(Fixpoint.vectorBytes(n) + EvalQueries * n * 2 * Fixpoint.FieldBytes)) None
-        else Fixpoint.Vectors.collect(q).map(recallOnDriver(fp, _, graph, t0))
-      local.getOrElse {
+      fp.whole(Fixpoint.vectorBytes(n) + EvalQueries * n * 2 * Fixpoint.FieldBytes)(
+        Fixpoint.Vectors.collect(q).map(recallOnDriver(fp, _, graph, t0))) {
         val out = recallOnSpark(q, graph)
-        fp.record(0, "spark", -1, t0, "gate")
+        fp.record(0, -1, t0, "gate")
         out
       }
     }
@@ -1245,7 +1238,7 @@ object SimilarityOps {
       val hits = truth.sum
       Row(v.ids(x), nTrue, hits, if (nTrue == 0) 1.0 else hits.toDouble / nTrue)
     }
-    fp.record(0, "driver", rows.length, t0, "gate")
+    fp.record(0, rows.length, t0, "gate")
     Fixpoint.frame(fp.session, StructType(Seq(StructField("query_id", LongType),
         StructField("n_true", LongType), StructField("hits", LongType),
         StructField("recall", DoubleType))), rows.toSeq)
@@ -1378,11 +1371,9 @@ object SimilarityOps {
       require(iters >= 1, "pageRank: iters must be >= 1")
       val t0 = System.nanoTime()
       val (ge, m) = fp.cut(g.select(col("ida"), col("idb")))
-      val local =
-        if (!fp.fitsDriver((2 * m + nodeCount) * Fixpoint.FieldBytes)) None
-        else pageRankOnDriver(fp, nodes.collect(), ge.collect(), iters, t0)
-      local.getOrElse {
-        fp.record(0, "spark", 2 * m, t0, "pagerank")
+      fp.whole((2 * m + nodeCount) * Fixpoint.FieldBytes)(
+          pageRankOnDriver(fp, nodes.collect(), ge.collect(), iters, t0)) {
+        fp.record(0, 2 * m, t0, "pagerank")
         val ranks = pageRankOnSpark(fp, nodes, ge, iters, nodeCount)
         if (sorted) ranks.orderBy("vec_id") else ranks
       }
@@ -1437,7 +1428,7 @@ object SimilarityOps {
             expr("150000L + (850000L * s) DIV 1000000L").as("rank_ppm"))
       }
       val (ranks, rows) = fp.cut(r)
-      fp.record(iters, "spark", rows, t0)
+      fp.record(iters, rows, t0)
       ranks
     }
     nodes.select(col("vec_id"))
@@ -1463,7 +1454,7 @@ object SimilarityOps {
       val (ga, gb) = (edgeRows.map(_.getLong(0)), edgeRows.map(_.getLong(1)))
       // the directed edges: each undirected edge both ways
       val e = Fixpoint.Indexed(ga ++ gb, gb ++ ga)
-      fp.record(0, "driver", e.a.length, t0, "pagerank")
+      fp.record(0, e.a.length, t0, "pagerank")
       val deg = new Array[Long](e.n)
       e.a.foreach(u => deg(u) += 1)
       // -1 = no rank row (a node that received no contribution leaves the
@@ -1504,53 +1495,39 @@ object SimilarityOps {
     clusterExemplarsFrom(spark, dir,
       knnGraph2Edges(spark, dir).select(col("ida"), col("idb")))
 
-  /** [[clusterExemplars]] over the LINEAR bit-signature graph — the
-    * consumer composition for corpora where the Voronoi build's n^1.5
-    * pair space is unpayable (at 10⁹ vectors: ~3×10¹³ candidate dots vs
-    * the bit graph's ~2.6×10¹¹). Same fixpoint, same rank recurrence,
-    * same output contract; only the edge supplier changes — the whole
-    * point of the shared (ida, idb) edge-list seam. */
-  def clusterExemplarsBits(spark: SparkSession, dir: String): DataFrame =
-    clusterExemplarsFrom(spark, dir,
-      knnGraphBitsEdges(spark, dir).select(col("ida"), col("idb")))
-
   /** [[clusterExemplars]] over the DESCENT-REFINED graph — the linear
-    * composition that also carries at-scale RECALL: the bits graph's
-    * measured 0.02 sf10 recall means [[clusterExemplarsBits]]' clusters
-    * degenerate to hash-collision groups at 100×, while the refined
-    * graph holds high recall at its measured operating point (RECALL
-    * artifact) at the same O(n) cost class. This is the variant a
-    * large-corpus curation pipeline should run. */
+    * composition that also carries at-scale RECALL: the refined graph
+    * holds high recall at its measured operating point (RECALL artifact)
+    * at an O(n) cost class. This is the variant a large-corpus curation
+    * pipeline should run. */
   def clusterExemplarsRefined(spark: SparkSession, dir: String): DataFrame =
     clusterExemplarsFrom(spark, dir,
       knnGraphRefinedEdges(spark, dir).select(col("ida"), col("idb")))
 
   private[graft] def clusterExemplarsFrom(spark: SparkSession, dir: String,
-                                          graph: DataFrame): DataFrame = {
-    val g = graft.Caches.cached(graph)
-    val comp = DedupOps.starComponentsCore(
-        g.select(col("ida").as("doc_a"), col("idb").as("doc_b")))
-      .select(col("doc_id").as("vec_id"), col("cluster_id"))
-    val nodes = graft.Tables.load(spark, dir, "embeddings").select(col("vec_id"))
-    val n = graft.Tables.rowCount(spark, dir, "embeddings")
-    val pr = pageRankOf(nodes, g, 10, n, sorted = false)
-      .select(col("vec_id"), col("rank_ppm"))
-    // at most n rows of (vec_id, cluster_id) and of (vec_id, rank_ppm)
-    val local =
-      if (!Fixpoint.fitsDriver(spark, n * 4 * Fixpoint.FieldBytes)) None
-      else exemplarsOnDriver(spark, comp.collect(), pr.collect())
-    local.getOrElse {
-      val w = Window.partitionBy("cluster_id")
-      comp.join(pr.hint("shuffle_hash"), "vec_id")
-        .withColumn("rn", row_number().over(
-          w.orderBy(col("rank_ppm").desc, col("vec_id").asc)))
-        .withColumn("n_members", count(lit(1)).over(w))
-        .filter(col("rn") === 1)
-        .select(col("cluster_id"), col("vec_id").as("exemplar_id"),
-          col("rank_ppm").as("exemplar_rank_ppm"), col("n_members"))
-        .orderBy("cluster_id")
+                                          graph: DataFrame): DataFrame =
+    Fixpoint.run("cluster_exemplars", spark) { fp =>
+      val g = graft.Caches.cached(graph)
+      val comp = DedupOps.starComponentsCore(
+          g.select(col("ida").as("doc_a"), col("idb").as("doc_b")))
+        .select(col("doc_id").as("vec_id"), col("cluster_id"))
+      val nodes = graft.Tables.load(spark, dir, "embeddings").select(col("vec_id"))
+      val n = graft.Tables.rowCount(spark, dir, "embeddings")
+      val pr = pageRankOf(nodes, g, 10, n, sorted = false)
+        .select(col("vec_id"), col("rank_ppm"))
+      // at most n rows of (vec_id, cluster_id) and of (vec_id, rank_ppm)
+      fp.whole(n * 4 * Fixpoint.FieldBytes)(exemplarsOnDriver(spark, comp.collect(), pr.collect())) {
+        val w = Window.partitionBy("cluster_id")
+        comp.join(pr.hint("shuffle_hash"), "vec_id")
+          .withColumn("rn", row_number().over(
+            w.orderBy(col("rank_ppm").desc, col("vec_id").asc)))
+          .withColumn("n_members", count(lit(1)).over(w))
+          .filter(col("rn") === 1)
+          .select(col("cluster_id"), col("vec_id").as("exemplar_id"),
+            col("rank_ppm").as("exemplar_rank_ppm"), col("n_members"))
+          .orderBy("cluster_id")
+      }
     }
-  }
 
   /** The exemplar pick on the driver over the collected (vec_id,
     * cluster_id) labeling and (vec_id, rank_ppm) ranks, as the Spark plan
@@ -1659,22 +1636,36 @@ object SimilarityOps {
     * declines to [[momentsOf]] when [[Fixpoint.Vectors]] does, and so
     * when a component has |q| > 2²⁴ ([[hotBounded]]), past which the
     * aggregate's Long hot sums may wrap and the Spark path alone defines
-    * the result. The decision logs one record (`stage=moments`). */
+    * the result ([[momentsIn]]). */
   def topComponent(spark: SparkSession, dir: String): DataFrame =
     Fixpoint.run("top_component", spark) { fp =>
-      val t0 = System.nanoTime()
-      val n = graft.Tables.rowCount(spark, dir, "embeddings")
-      val local =
-        if (!fp.fitsDriver(Fixpoint.vectorBytes(n))) None
-        else Fixpoint.Vectors.collect(hotBounded(DedupOps.quantized(spark, dir)))
-          .map(momentsOnDriver)
-      fp.record(0, if (local.isDefined) "driver" else "spark", n, t0, "moments")
-      val (vn, s1, s2) = local.getOrElse(momentsRow(momentsOf(spark, dir)))
-      componentOf(spark, vn, s1, s2)
+      val (n, s1, s2) = momentsIn(fp, dir)
+      val (v, eig) = componentOf(n, s1, s2)
+      Fixpoint.frame(spark, StructType(Seq(
+          StructField("i", LongType, nullable = false),
+          StructField("component_ppm", LongType),
+          StructField("eigenvalue", DoubleType))),
+        v.indices.map(i => Row(i.toLong, v(i).toLong, eig)))
     }
 
-  /** The one corpus-scale stage, CACHED so [[topComponent]]'s Spark path
-    * and [[componentScores]] composed in one query share the single pass:
+  /** The exact moments (n, s1, s2) of one operator call, in its runner:
+    * summed on the driver when the vectors fit, else read from the one
+    * [[momentsOf]] row. The decision logs one record (`stage=moments`). */
+  private def momentsIn(fp: Fixpoint, dir: String): (BigInt, Array[BigInt], Array[BigInt]) = {
+    val t0 = System.nanoTime()
+    val n = graft.Tables.rowCount(fp.session, dir, "embeddings")
+    fp.whole(Fixpoint.vectorBytes(n))(
+      Fixpoint.Vectors.collect(hotBounded(DedupOps.quantized(fp.session, dir))).map { v =>
+        val m = momentsOnDriver(v)
+        fp.record(0, n, t0, "moments")
+        m
+      }) {
+      fp.record(0, n, t0, "moments")
+      momentsRow(momentsOf(fp.session, dir))
+    }
+  }
+
+  /** The one corpus-scale stage of [[momentsIn]]'s Spark path, cached:
     * one row of (n, s1[dim], s2[dim·(dim+1)/2]) exact moments. */
   private[graft] def momentsOf(spark: SparkSession, dir: String): DataFrame = {
     val dim = DedupOps.Dim
@@ -1726,9 +1717,10 @@ object SimilarityOps {
     * Spark's Decimal.toDouble — byte-identical output, proven by
     * TopComponentParitySpec against [[topComponentFromDistributed]] and
     * end-to-end by the sim_top_component / sim_component_scores oracle
-    * rows. The rows are built in `i` order, so no sort is planned. */
-  private def componentOf(spark: SparkSession, n: BigInt, s1: Array[BigInt],
-                          s2: Array[BigInt]): DataFrame = {
+    * rows. Returns the component v (component_ppm in `i` order) and the
+    * eigenvalue. */
+  private def componentOf(n: BigInt, s1: Array[BigInt],
+                          s2: Array[BigInt]): (Array[BigInt], Double) = {
     val dim = DedupOps.Dim
     // raw c_ij = n·s2_ij − s1_i·s1_j, mirrored — same as the tri/full frames
     def pi(i: Int, j: Int): Int = dim * i - i * (i - 1) / 2 + (j - i)
@@ -1759,12 +1751,7 @@ object SimilarityOps {
     // the exact operation order of the Column expression:
     // ((vtcv / vtv) * cscale) / ((n · n) · 1e12)
     def d(x: BigInt): Double = new java.math.BigDecimal(x.bigInteger).doubleValue
-    val eig = d(vtcv) / d(vtv) * d(cscale) / (d(n) * d(n) * 1e12)
-    Fixpoint.frame(spark, StructType(Seq(
-        StructField("i", LongType, nullable = false),
-        StructField("component_ppm", LongType),
-        StructField("eigenvalue", DoubleType))),
-      (0 until dim).map(i => Row(i.toLong, v(i).toLong, eig)))
+    (v, d(vtcv) / d(vtv) * d(cscale) / (d(n) * d(n) * 1e12))
   }
 
   /** The pre-r21 DataFrame-iterated form, kept as the parity witness for
@@ -1841,28 +1828,23 @@ object SimilarityOps {
     * v = w·10⁶, the s1·v term is the ×n centering constant), one
     * DECIMAL(38,0) number per vector, divided once into a double.
     *
-    * Scale shape: the moments pass is SHARED with the component (cached
-    * one-row frame), the component + constants are dimension-sized and
-    * broadcast via a 1-row crossJoin, and the score scan is one
-    * stateless map over the corpus — no shuffle until the presentation
-    * sort. */
-  def componentScores(spark: SparkSession, dir: String): DataFrame = {
-    val m = momentsOf(spark, dir)
-    val (n, s1, s2) = momentsRow(m)
-    val tc = componentOf(spark, n, s1, s2)
-    val varr = tc.agg(expr(
-      "transform(sort_array(collect_list(struct(i, component_ppm))), x -> x.component_ppm)")
-      .as("v"))
-    val consts = varr.crossJoin(m.select(col("n"), col("s1")))
-      .select(col("v"), col("n"),
-        expr("aggregate(zip_with(s1, v, (a, b) -> a * b), " +
-          "CAST(0 AS DECIMAL(38,0)), (acc, x) -> acc + x)").as("sv"))
-    val q = DedupOps.quantized(spark, dir).select(col("vec_id"), col("qv"))
-    q.crossJoin(broadcast(consts))
-      .select(col("vec_id"),
-        ((col("n") * graft.functions.VectorFunctions.dotLong(col("qv"), col("v"))
-            .cast("decimal(38,0)") - col("sv")).cast("double") /
-          (col("n").cast("double") * lit(1e12))).as("score"))
-      .orderBy("vec_id")
-  }
+    * Scale shape: the moments come from [[topComponent]]'s decision
+    * ([[momentsIn]]), the component v and the centering constant
+    * sv = Σᵢs1ᵢ·vᵢ (exact, as a DECIMAL(38,0) literal) are computed on
+    * the driver, and the score scan is one stateless map over the corpus
+    * — no shuffle until the presentation sort. */
+  def componentScores(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.run("component_scores", spark) { fp =>
+      val (n, s1, s2) = momentsIn(fp, dir)
+      val (v, _) = componentOf(n, s1, s2)
+      val sv = s1.zip(v).map { case (a, b) => a * b }.sum
+      val nl = lit(n.toLong)
+      DedupOps.quantized(spark, dir)
+        .select(col("vec_id"),
+          ((nl * graft.functions.VectorFunctions.dotLong(col("qv"), typedLit(v.map(_.toLong)))
+              .cast("decimal(38,0)") - lit(new java.math.BigDecimal(sv.bigInteger))
+              .cast("decimal(38,0)")).cast("double") /
+            (nl.cast("double") * lit(1e12))).as("score"))
+        .orderBy("vec_id")
+    }
 }

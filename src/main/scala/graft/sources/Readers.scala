@@ -101,18 +101,12 @@ object Readers {
       .filter(col("species").isin("mouse", "human"))
 
   /** S7 — dbGaP XML data_dict / var_report via the Spark 4 native XML
-    * source (`rowTag="variable"`); study-level attributes read with a
-    * second pass at `rowTag="data_table"`. The files are KB-scale so
-    * this could also be a driver-side parse (SURVEY.md §7.4.5) — using
-    * the data source keeps one code path if they ever grow. */
+    * source (`rowTag="variable"`). The files are KB-scale so this could
+    * also be a driver-side parse (SURVEY.md §7.4.5) — using the data
+    * source keeps one code path if they ever grow. */
   def dbgapVariables(spark: SparkSession, path: String): DataFrame =
     spark.read.format("xml")
       .option("rowTag", "variable")
-      .load(path)
-
-  def dbgapDataTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("xml")
-      .option("rowTag", "data_table")
       .load(path)
 
   /** S7/A5 — the var_report statistics the reference CONSUMES

@@ -18,7 +18,9 @@ import graft.operators.{DedupOps, Fixpoint, KMeans, SimilarityOps}
   * the descent's driver tail schedules no Spark job but the vector
   * collect; the recall gate's driver path scores every graph as its Spark
   * path does; and both leave to the Spark path the vectors it alone
-  * defines (a zero norm, a duplicated id).
+  * defines (a zero norm, a duplicated id). The decision itself,
+  * [[Fixpoint]]'s `whole`, is checked without data: its size rule, its
+  * order, its path label, and that the size rule is written only there.
   */
 class FixpointParitySpec extends ParitySupport {
 
@@ -174,5 +176,73 @@ class FixpointParitySpec extends ParitySupport {
       assert(jobs === Seq("collect at Fixpoint.scala"))
       assert(rows.nonEmpty)
     }
+  }
+
+  /** `body` in a runner of its own, with its records. */
+  private def decided[T](body: Fixpoint => T): (T, Seq[(String, String, String)]) =
+    recorded(Fixpoint.using("decision", spark)(body)(_ => Nil))
+
+  test("whole: a threshold of -1 never evaluates the driver body") {
+    var driverRuns = 0
+    val (out, _) = decided(fp => sparkPath(fp.whole(0L)({ driverRuns += 1; Some("driver") })("spark")))
+    assert(out === "spark")
+    assert(driverRuns === 0)
+    // a size past the threshold, or a negative one, does not either
+    val (past, _) = decided(fp => fp.whole(Long.MaxValue)({ driverRuns += 1; Some("driver") })("spark"))
+    val (negative, _) = decided(fp => fp.whole(-1L)({ driverRuns += 1; Some("driver") })("spark"))
+    assert((past, negative, driverRuns) === (("spark", "spark", 0)))
+  }
+
+  test("whole: a fitting driver body runs alone; its decline runs the Spark body once") {
+    var sparkRuns = 0
+    val (kept, _) = decided(fp => fp.whole(0L)(Some("driver")) { sparkRuns += 1; "spark" })
+    assert((kept, sparkRuns) === (("driver", 0)))
+    val (declined, _) = decided(fp => fp.whole(0L)(Option.empty[String]) { sparkRuns += 1; "spark" })
+    assert((declined, sparkRuns) === (("spark", 1)))
+  }
+
+  test("whole: an exception in the driver body propagates without the Spark body") {
+    var sparkRuns = 0
+    val e = intercept[ArithmeticException](decided(fp =>
+      fp.whole(0L)(Some(1 / sparkRuns))({ sparkRuns += 1; 0 })))
+    assert(e.getMessage.contains("by zero"))
+    assert(sparkRuns === 0)
+  }
+
+  test("whole: a record logged in either body carries that body's path") {
+    val t0 = System.nanoTime()
+    val (_, recs) = decided { fp =>
+      fp.whole(0L)({ fp.record(0, 1, t0, "kept"); Some(()) })(fp.record(0, 1, t0, "unused"))
+      fp.whole(0L)({
+        fp.record(0, 1, t0, "declined")
+        // a decision inside a driver body: its decline falls back to the
+        // enclosing Spark body
+        fp.fits(Long.MaxValue)(Some(fp.record(0, 1, t0, "unused")))
+      }) {
+        fp.record(0, 1, t0, "fallback")
+        fp.onDriver((), 1)((_, _) => Fixpoint.Step((), 1))
+      }
+      fp.whole(0L)({ fp.onSpark((), 1, converging = false)(_ => Nil)((_, _) =>
+        Fixpoint.Step((), 1)); Some(()) })(())
+      // outside both bodies there is no path to log
+      intercept[IllegalStateException](fp.record(0, 1, t0, "outside"))
+    }
+    assert(recs === Seq(("decision", "driver", "kept"), ("decision", "driver", "declined"),
+      ("decision", "spark", "fallback"), ("decision", "driver", ""), ("decision", "spark", "")))
+  }
+
+  test("the size rule is written only in operators/Fixpoint.scala") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val main = Iterator.iterate(Paths.get(sys.props("user.dir")).toAbsolutePath)(_.getParent)
+      .takeWhile(_ != null).map(_.resolve("src/main/scala")).find(Files.isDirectory(_))
+      .getOrElse(fail("no enclosing directory holds src/main/scala"))
+    val walk = Files.walk(main)
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val users = files.filter(f => Files.readString(f).contains("fitsDriver("))
+      .map(f => main.relativize(f).toString)
+    assert(users.contains("graft/operators/Fixpoint.scala"), s"the scan missed the rule: $users")
+    assert(users === Seq("graft/operators/Fixpoint.scala"))
   }
 }

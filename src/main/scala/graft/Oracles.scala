@@ -484,12 +484,10 @@ object Oracles {
     val nr = graft.operators.SimilarityOps.DescentRounds
     val ekd = graft.operators.SimilarityOps.DescentEarlyKd
     val er = graft.operators.SimilarityOps.DescentEarlyRounds
-    // staged EXPLORATION-width schedule — identical to the Scala kdOf
-    // (neighborhood ranks only; the per-round contraction always runs at
-    // the full k', matching the build). At the no-op default (ekd = kd)
-    // every staged clause below reduces to the unstaged r16 pipe
-    // byte-for-byte.
-    def kdOf(t: Int): Int = if (t >= 1 && t <= er && ekd < kd) ekd else kd
+    // staged EXPLORATION-width schedule — identical to
+    // SimilarityOps.descentWidth (neighborhood ranks only; the per-round
+    // contraction always runs at the full k', matching the build)
+    def kdOf(t: Int): Int = if (t <= er) ekd else kd
     def topCte(name: String, src: String, k: Int = kd): String =
       s"""$name AS MATERIALIZED (SELECT src, dst, cosine FROM (
          |  SELECT src, dst, cosine, row_number() OVER (PARTITION BY src

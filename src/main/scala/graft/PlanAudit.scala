@@ -189,45 +189,27 @@ object PlanAudit {
       "transition matrix's lag window must partition on user_id")
     assert(!tmPlan.contains("NestedLoop") && !tmPlan.contains("Cartesian"),
       "transition matrix must stay join-free")
-    // the knn graph's joins are corpus-sized on BOTH sides at every stage
-    // (bucket self-join, two vector fetches, mutuality self-join) — all
-    // hinted shuffle_hash; a broadcast of a corpus-sized frame is an OOM
-    // at cluster scale. The ONE legitimate broadcast is the nlist-row
-    // per-list-size table that attaches the skew-split factor (nsplit):
-    // it is an aggregate over the list key, bounded by √n rows.
-    // direct call: the 1-probe build left the suite in r14 (refined is the
-    // default edge supplier) but stays the Voronoi family's plan template —
-    // keep auditing it so the calibration path can't silently regress
-    val knnDf = graft.operators.SimilarityOps.knnGraph(spark, dir)
-    show("sim_knn_graph (calibration, direct)", knnDf)
-    val knnPlan = knnDf.queryExecution.executedPlan.toString
-    assert(knnPlan.contains("ShuffledHashJoin"),
-      "knn graph joins must co-shuffle")
-    // the scored-pair subtree repeats in the tree (mirror union +
-    // mutuality self-join), so assert on KIND, not count: every
-    // broadcast-hash join must be the nsplit attach keyed on cl
-    val knnBhj = "BroadcastHashJoin".r.findAllIn(knnPlan).length
-    assert(knnBhj >= 1 &&
-      knnBhj == "BroadcastHashJoin \\[cl#".r.findAllIn(knnPlan).length,
-      "knn graph's only broadcast-hash joins are the nlist-row nsplit attach on cl")
-    assert(!knnPlan.contains("NestedLoop") && !knnPlan.contains("Cartesian"),
-      "knn graph must stay equi-join only — no cartesian anywhere")
-    // the 2-probe graph's only broadcasts are the nlist-row centroid
-    // frames inside the probe assignment and the nlist-row nsplit
-    // table of the skew split (both bounded √n — legitimate); every
-    // corpus-sized join (probe attach, salted pair join, mutuality)
-    // must be a shuffled hash join, never a broadcast-hash or a
-    // non-broadcast cartesian
+    // the 2-probe graph's corpus-sized joins (probe attach, salted pair
+    // join, mutuality self-join) are all hinted shuffle_hash; a broadcast
+    // of a corpus-sized frame is an OOM at cluster scale. Its one
+    // legitimate broadcast-hash join is the nlist-row per-list-size table
+    // that attaches the skew-split factor (nsplit) — an aggregate over
+    // the list key, bounded by √n rows. The scored-pair subtree repeats
+    // in the tree (mirror + mutuality self-join), so assert on KIND, not
+    // count: every broadcast-hash join must be the nsplit attach keyed on
+    // cl, and there must be one
     val knn2Df = SparkEntry.queries("sim_knn_graph2")(spark, dir)
     show("sim_knn_graph2", knn2Df)
     val knn2Plan = knn2Df.queryExecution.executedPlan.toString
     assert(knn2Plan.contains("ShuffledHashJoin"),
       "2-probe knn graph joins must co-shuffle")
-    assert("BroadcastHashJoin \\[cl#".r.findAllIn(knn2Plan).length ==
-      "BroadcastHashJoin".r.findAllIn(knn2Plan).length,
+    val knn2Bhj = "BroadcastHashJoin".r.findAllIn(knn2Plan).length
+    assert(knn2Bhj >= 1 && knn2Bhj == "BroadcastHashJoin \\[cl#".r.findAllIn(knn2Plan).length,
       "2-probe broadcast-hash joins must all be the nlist-row nsplit attach on cl")
-    assert(!knn2Plan.contains("CartesianProduct"),
-      "2-probe centroid scoring must ride the broadcast, not a cartesian")
+    // the centroid scoring (a broadcast cross join) runs before the probe
+    // checkpoint, so the graph's own plan is equi-join only
+    assert(!knn2Plan.contains("NestedLoop") && !knn2Plan.contains("Cartesian"),
+      "2-probe knn graph must stay equi-join only — no cartesian anywhere")
     // the bit-signature graph's per-bucket size table is CORPUS-ORDER
     // (~n/64 rows keyed (table, bucket)) — unlike the Voronoi family's
     // nlist-row planning table it must CO-SHUFFLE onto the blocked rows,

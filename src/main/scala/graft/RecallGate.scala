@@ -8,7 +8,7 @@ import graft.operators.SimilarityOps
 /** First-class recall artifact generator for the k-NN graph family —
   * the measurement the at-scale ANN claims stand on (RECALL_rN.json).
   *
-  * For each (sf dir, graph spec) it builds the graph, scores it with the
+  * For each (sf dir, graph) it builds the graph, scores it with the
   * shared 100-query mutual-edge gate ([[SimilarityOps.knnRecallOf]] —
   * identical ground truth and eval set as the oracle-checked
   * sim_knn_recall* queries), and appends one JSONL row:
@@ -24,65 +24,27 @@ import graft.operators.SimilarityOps
   * claims auditable per round the way BENCH/CORRECTNESS already are.
   *
   * Usage: runMain graft.RecallGate <outJsonl> <sfDir> [sfDir …]
-  * Env:   SPARK_GRAFT_RECALL_GRAPHS — csv of graph specs (default
-  *        "2probe,bits,refined"); each spec is one of
-  *          1probe | 2probe | bits | refined
-  *        or a tuned refined sweep point ('+'-separated dials — ','
-  *        already separates the spec list)
-  *          refined@kd=48+rounds=7+tables=8+target=128+ekd=16
-  *        (omitted dials default to the shipped constants; tuned points
-  *        exist to PRICE the dials — only the default config is
-  *        oracle-checked).
+  * Env:   SPARK_GRAFT_RECALL_GRAPHS — csv of graph names (default
+  *        "2probe,bits,refined"), each one of 2probe | bits | refined.
+  *        Each graph is its suite operator's one configuration, so every
+  *        row's config is "default" (the committed sweep rows of earlier
+  *        dials keep theirs).
   */
 object RecallGate {
 
-  /** Dial names each graph accepts — a tuned spec carrying anything
-    * else (a typo like `round=7`, or dials on a graph that ignores
-    * them) must FAIL LOUDLY: silently building the default config
-    * while stamping the requested dials into the artifact row is the
-    * 35-minute wrong-measurement failure mode this parser exists to
-    * prevent. */
-  private val AcceptedDials: Map[String, Set[String]] = Map(
-    "1probe" -> Set.empty, "2probe" -> Set.empty, "bits" -> Set.empty,
-    "refined" -> Set("kd", "rounds", "tables", "target", "ekd", "erounds"))
+  private val Graphs: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "2probe" -> SimilarityOps.knnGraph2Edges, "bits" -> SimilarityOps.knnGraphBitsEdges,
+    "refined" -> ((s, d) => SimilarityOps.knnGraphRefinedEdges(s, d)))
 
-  private[graft] def parseSpec(spec: String): (String, Map[String, Long]) = {
-    val (name, dials) = spec.split("@", 2) match {
-      case Array(n) => (n, Map.empty[String, Long])
-      case Array(n, ds) =>
-        (n, ds.split("\\+").filter(_.nonEmpty).map { kv =>
-          kv.split("=", 2) match {
-            case Array(k, v) if v.trim.nonEmpty => k.trim -> v.trim.toLong
-            case _ => sys.error(
-              s"RecallGate: malformed dial '$kv' in spec '$spec' (want key=value)")
-          }
-        }.toMap)
+  /** The graphs a csv names, in order. Any other name — a retired graph,
+    * or a dial suffix like `refined@kd=48` — fails loudly before the first
+    * build: silently building the default while the artifact row records
+    * something else is the wrong-measurement failure this guards. */
+  private[graft] def graphs(csv: String): Seq[(String, (SparkSession, String) => DataFrame)] =
+    csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { name =>
+      name -> Graphs.getOrElse(name, throw new IllegalArgumentException(
+        s"RecallGate: unknown graph '$name' (want one of ${Graphs.keys.toSeq.sorted.mkString(", ")})"))
     }
-    val accepted = AcceptedDials.getOrElse(name,
-      sys.error(s"RecallGate: unknown graph spec '$name'"))
-    val unknown = dials.keySet -- accepted
-    require(unknown.isEmpty,
-      s"RecallGate: spec '$spec' carries dial(s) ${unknown.mkString(",")} " +
-        s"that '$name' does not accept — the build would silently ignore them")
-    (name, dials)
-  }
-
-  private def build(spark: SparkSession, dir: String, spec: String): DataFrame = {
-    val (name, d) = parseSpec(spec)
-    name match {
-      case "1probe" => SimilarityOps.knnGraph(spark, dir)
-      case "2probe" => SimilarityOps.knnGraph2(spark, dir)
-      case "bits"   => SimilarityOps.knnGraphBits(spark, dir)
-      case "refined" => SimilarityOps.knnGraphRefinedTuned(spark, dir,
-        kd = d.getOrElse("kd", SimilarityOps.DescentK.toLong).toInt,
-        rounds = d.getOrElse("rounds", SimilarityOps.DescentRounds.toLong).toInt,
-        seedTables = d.getOrElse("tables", SimilarityOps.DescentSeedTables.toLong).toInt,
-        seedTargetList = d.getOrElse("target", SimilarityOps.DescentSeedTarget),
-        earlyKd = d.getOrElse("ekd", SimilarityOps.DescentEarlyKd.toLong).toInt,
-        earlyRounds = d.getOrElse("erounds", SimilarityOps.DescentEarlyRounds.toLong).toInt)
-      case other => sys.error(s"RecallGate: unknown graph spec '$other'") // unreachable: parseSpec validates
-    }
-  }
 
   /** One JSONL row of the sweep, every string quoted by [[BenchKit.jstr]]
     * (an sf path may hold `"` or `\`). Zero true edges means the gate
@@ -92,11 +54,11 @@ object RecallGate {
     * exists to prevent — so that point is an explicit ERROR row
     * (consumers filter on the `error` key). Locale.ROOT: a comma-decimal
     * default locale would emit invalid JSON through the format. */
-  private[graft] def jsonRow(graph: String, config: String, sf: String, nVectors: Long,
+  private[graft] def jsonRow(graph: String, sf: String, nVectors: Long,
                              nQueries: Long, trueEdges: Long, hits: Long,
                              buildSecs: Double, gateSecs: Double): String = {
     import BenchKit.jstr
-    val head = s"""{"graph":${jstr(graph)},"config":${jstr(config)},"sf":${jstr(sf)},""" +
+    val head = s"""{"graph":${jstr(graph)},"config":"default","sf":${jstr(sf)},""" +
       s""""n_vectors":$nVectors,"n_queries":$nQueries,"true_edges":$trueEdges,"""
     if (trueEdges == 0) head + s""""error":${jstr("degenerate gate: 0 true edges")}}"""
     else head + String.format(java.util.Locale.ROOT,
@@ -109,22 +71,21 @@ object RecallGate {
     require(args.length >= 2, "usage: RecallGate <outJsonl> <sfDir> [sfDir ...]")
     val outPath = java.nio.file.Paths.get(args(0))
     val sfDirs = args.drop(1).toSeq
-    val graphs = sys.env.getOrElse("SPARK_GRAFT_RECALL_GRAPHS", "2probe,bits,refined")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val builds = graphs(sys.env.getOrElse("SPARK_GRAFT_RECALL_GRAPHS", "2probe,bits,refined"))
     val spark = Tables.session("recall-gate")
     spark.sparkContext.setLogLevel("ERROR")
     // a degenerate point must not abort the remaining sweep (r14 advice:
-    // sys.error here silently discarded every later spec/sf) — record it
+    // sys.error here silently discarded every later graph/sf) — record it
     // as an explicit error row and keep sweeping, then exit non-zero
     var degenerate = 0
-    for (dir <- sfDirs; spec <- graphs) {
+    for (dir <- sfDirs; (name, build) <- builds) {
       val n = Tables.rowCount(spark, dir, "embeddings")
       // build and gate timed separately: the build is the graph's cost
       // story; the gate is the fixed O(|eval|·n) harness
       val t0 = System.nanoTime()
       // localCheckpoint (eager) materializes the edge relation so the
       // gate's two references don't rebuild the descent
-      val g = build(spark, dir, spec)
+      val g = build(spark, dir)
         .select(col("ida"), col("idb")).localCheckpoint()
       val buildSecs = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
@@ -133,17 +94,14 @@ object RecallGate {
           count(lit(1)).as("q")).collect()(0)
       val gateSecs = (System.nanoTime() - t1) / 1e9
       val (t, h, q) = (agg.getLong(0), agg.getLong(1), agg.getLong(2))
-      val (name, dials) = parseSpec(spec)
-      val cfg = if (dials.isEmpty) "default"
-        else dials.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(",")
       // a degenerate gate writes an error row ([[jsonRow]]) and the sweep
       // continues
       if (t == 0) {
         degenerate += 1
-        System.err.println(s"RecallGate: 0 true edges for $spec at $dir " +
+        System.err.println(s"RecallGate: 0 true edges for $name at $dir " +
           s"($n vectors, $q queries) — degenerate gate, recording error row")
       }
-      val row = jsonRow(name, cfg, dir, n, q, t, h, buildSecs, gateSecs)
+      val row = jsonRow(name, dir, n, q, t, h, buildSecs, gateSecs)
       java.nio.file.Files.writeString(outPath, row + "\n",
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)

@@ -92,9 +92,8 @@ object SparkEntry {
     // standalone recall decays at scale — 0.021 at sf10, RECALL_r15 —
     // seed diagnostics only). The
     // 1-probe Voronoi build and the bits-edge exemplar composition are
-    // retired from the suite (still in SimilarityOps + RecallGate specs);
-    // nobody should run an n^1.5 build or summarize 0.09-recall edges at
-    // 100× when a measured linear twin exists.
+    // retired and deleted: nobody should run an n^1.5 build or summarize
+    // 0.09-recall edges at 100× when a measured linear twin exists.
     "sim_knn_graph2" -> (SimilarityOps.knnGraph2 _),
     "sim_knn_recall2" -> (SimilarityOps.knnRecall2 _),
     "sim_knn_graph_bits" -> (SimilarityOps.knnGraphBits _),

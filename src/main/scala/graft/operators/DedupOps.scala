@@ -639,8 +639,8 @@ object DedupOps {
 
   /** All block-local scored pairs (vec_a < vec_b), salted and unsorted —
     * the shared pair engine of [[blockPairs]] (which thresholds for the
-    * near-dup relation) and [[SimilarityOps.knnGraph]] (which ranks, so
-    * it must see every same-block pair). */
+    * near-dup relation) and the k-NN graph builds (which rank, so
+    * they must see every same-block pair). */
   private[operators] def saltedBlockCosines(flat: DataFrame, key: String): DataFrame = {
     val salt = 8
     val build = flat.withColumn("_salt", pmod(col("vec_id"), lit(salt)))

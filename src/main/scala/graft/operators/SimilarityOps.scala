@@ -30,8 +30,8 @@ object SimilarityOps {
   private val NPlanes = 4
   private val NTables = 4
 
-  /** Eval-set size for the mutual-graph recall gates ([[knnRecall]] /
-    * [[knnRecall2]] / [[knnRecallBits]] / [[knnRecallRefined]]): 100
+  /** Eval-set size for the mutual-graph recall gates ([[knnRecall2]] /
+    * [[knnRecallBits]] / [[knnRecallRefined]]): 100
     * queries, not the 10 the top-k demos use — 10 queries carry only
     * 14-23 true mutual edges, so the gate resolved recall in ~7-point
     * increments (an r11 verdict finding; the sf10 zeros were partly
@@ -244,52 +244,6 @@ object SimilarityOps {
 
   private val KGraph = 3
 
-  /** Mutual k-NN graph over the WHOLE corpus (k = 3) — the
-    * neighborhood-graph construction that seeds clustering /
-    * visualization / graph-based dedup pipelines. Candidate edges are
-    * SAME-VORONOI-LIST pairs under the learned ⌊√n⌋-list quantizer (the
-    * [[graft.operators.KMeans]] blocking `dedup_embedding_auto` already
-    * proves out) — ~√n lists of ~√n vectors bound the pair space at
-    * n^1.5. The first cut of this operator blocked on the FIXED
-    * 16-bucket hyperplane LSH instead: bucket population grows linearly
-    * with the corpus there, so the pair space grows QUADRATICALLY —
-    * measured 2.9 s at sf0.1 but 13+ min at sf1, the exact blowup the
-    * √n rule exists to prevent. Cross-list neighbors are missed
-    * (nprobe=1 — the standard recall/cost trade, identical to the
-    * blocked dedup family; the oracle replays the same training so the
-    * gate is exact). Each endpoint ranks its candidates by exact cosine
-    * and an edge survives only if BOTH endpoints rank it top-k — the
-    * mutuality filter that prunes hub vertices.
-    *
-    * Scale shape: quantizer training is two broadcast-assign +
-    * co-shuffled-update rounds; the corpus-length assignment attach and
-    * the salted block self-join co-shuffle (hinted shuffle_hash —
-    * PlanAudit asserts no broadcast in the final plan); the mutuality
-    * filter self-joins the ≤ k·n-row top-k relation on the reversed pair
-    * key. Undirected pairs are scored ONCE (ida < idb) via
-    * [[DedupOps.saltedBlockCosines]] and mirrored, so each candidate
-    * edge pays exactly one 64-term native dot product. */
-  def knnGraph(spark: SparkSession, dir: String): DataFrame =
-    knnGraphEdges(spark, dir).orderBy("ida", "idb")
-
-  /** [[knnGraph]] without the presentation sort — the composition seam
-    * (r21): consumers that aggregate or join the edge set (components,
-    * pagerank, exemplars, recall gates) were paying a global sort of the
-    * corpus-sized edge relation inside their caches/checkpoints for an
-    * ordering nothing downstream reads (guide §2.4, "an orderBy used
-    * only to make output deterministic"). Same rows. */
-  private[graft] def knnGraphEdges(spark: SparkSession, dir: String): DataFrame = {
-    val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
-    val n = graft.Tables.rowCount(spark, dir, "embeddings")
-    val nlist = KMeans.autoNlist(n)
-    val (asg, _) = KMeans.fitSized(q, n, nlist = nlist)
-    val blocked = q.join(asg.hint("shuffle_hash"), "vec_id")
-    val scored = DedupOps.saltedBlockCosines(
-        capSplit(blocked, voronoiCap(n, nlist), narrow = asg), "blk")
-      .select(col("vec_a").as("ida"), col("vec_b").as("idb"), col("cosine"))
-    mutualizeCore(scored)
-  }
-
   /** The Voronoi family's split threshold: [[CapFactor]]× the BALANCED
     * list size ⌈n/nlist⌉ — balanced lists (the common case) never split. */
   private def voronoiCap(n: Long, nlist: Int): Long =
@@ -305,8 +259,8 @@ object SimilarityOps {
     * decade (r9/r10 measured ×15.0-18.7 per sf1→sf10 decade for the
     * graphs; everything else in the family holds ×6-9). Neighbors split
     * across sub-blocks of an OVERSIZED list are missed — the same
-    * recall-for-cost currency as the nprobe=1 blocking itself, priced by
-    * the same [[knnRecall]]/[[knnRecall2]] gates (balanced lists, the
+    * recall-for-cost currency as the list blocking itself, priced by
+    * the same [[knnRecall2]] gate (balanced lists, the
     * common case, have nsplit = 1 and lose nothing). Everything here is
     * exact integer arithmetic (`DIV`, `pmod`) mirrored verbatim by the
     * oracle pipes. The per-list sizes are an nlist-row aggregate —
@@ -339,20 +293,48 @@ object SimilarityOps {
 
   private val CapFactor = 4L
 
-  /** 2-probe mutual k-NN graph: every vector joins its TWO max-cosine
-    * Voronoi lists under the final trained centroids
-    * ([[KMeans.assignTop2]]), so candidate pairs need only share either
-    * endpoint's first- OR second-best list — the standard nprobe recall
-    * lever over [[knnGraph]]'s nprobe=1 blocking, bought with a bounded
+  /** 2-probe mutual k-NN graph over the WHOLE corpus (k = 3) — the
+    * neighborhood-graph construction that seeds clustering /
+    * visualization / graph-based dedup pipelines. Candidate edges are
+    * SAME-VORONOI-LIST pairs under the learned ⌊√n⌋-list quantizer (the
+    * [[graft.operators.KMeans]] blocking `dedup_embedding_auto` already
+    * proves out) — ~√n lists of ~√n vectors bound the pair space at
+    * n^1.5. The first cut of the Voronoi graph blocked on the FIXED
+    * 16-bucket hyperplane LSH instead: bucket population grows linearly
+    * with the corpus there, so the pair space grows QUADRATICALLY —
+    * measured 2.9 s at sf0.1 but 13+ min at sf1, the exact blowup the
+    * √n rule exists to prevent.
+    *
+    * Every vector joins its TWO max-cosine lists under the final trained
+    * centroids ([[KMeans.assignTop2]]), so candidate pairs need only
+    * share either endpoint's first- OR second-best list — the standard
+    * nprobe recall lever over single-list blocking, bought with a bounded
     * constant: block populations double, so the salted self-join's pair
-    * space is ≤ 4× the 1-probe n^1.5, and a pair sharing both lists is
-    * deduplicated BEFORE ranking (identical cosine rows — one
-    * `distinct`). [[knnRecall2]] prices the recall side of the trade;
-    * the sf-pair cost curve prices this side. */
+    * space is ≤ 4× the 1-probe n^1.5. Pairs in no shared list are missed
+    * (the oracle replays the same training, so the gate is exact).
+    * [[knnRecall2]] prices the recall side of the trade; the sf-pair
+    * cost curve prices this side. Each endpoint ranks its candidates by
+    * exact cosine and an edge survives only if BOTH endpoints rank it
+    * top-k — the mutuality filter that prunes hub vertices.
+    *
+    * Scale shape: quantizer training is two broadcast-assign +
+    * co-shuffled-update rounds; the corpus-length assignment attach and
+    * the salted block self-join co-shuffle (hinted shuffle_hash —
+    * PlanAudit asserts the only broadcast-hash joins are the nlist-row
+    * nsplit attach on cl); the mutuality filter self-joins the
+    * ≤ k·n-row top-k relation on the reversed pair key. Undirected pairs
+    * are scored ONCE (ida < idb) via [[DedupOps.saltedBlockCosines]] and
+    * mirrored, so each candidate edge pays exactly one 64-term native
+    * dot product. */
   def knnGraph2(spark: SparkSession, dir: String): DataFrame =
     knnGraph2Edges(spark, dir).orderBy("ida", "idb")
 
-  /** [[knnGraph2]] without the presentation sort (see [[knnGraphEdges]]). */
+  /** [[knnGraph2]] without the presentation sort — the composition seam
+    * (r21): consumers that aggregate or join the edge set (components,
+    * pagerank, exemplars, recall gates) were paying a global sort of the
+    * corpus-sized edge relation inside their caches/checkpoints for an
+    * ordering nothing downstream reads (guide §2.4, "an orderBy used
+    * only to make output deterministic"). Same rows. */
   private[graft] def knnGraph2Edges(spark: SparkSession, dir: String): DataFrame = {
     val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
     val n = graft.Tables.rowCount(spark, dir, "embeddings")
@@ -407,7 +389,7 @@ object SimilarityOps {
     ((d * 131 + hh * 37 + d * hh * 59 + d * d * hh * 17) % 1009) % 7 - 3
 
   /** Linear-cost mutual k-NN graph — the 100 TB path of the graph
-    * family. The Voronoi graphs ([[knnGraph]]/[[knnGraph2]]) pay the
+    * family. The Voronoi graph ([[knnGraph2]]) pays the
     * standard IVF n^1.5: ⌊√n⌋ lists of ~√n vectors cost n·√n in both
     * quantizer assignment and same-list pairs (measured ×15.0/×18.7 per
     * sf1→sf10 decade, r9). Here the block key is a b-bit HYPERPLANE
@@ -431,7 +413,7 @@ object SimilarityOps {
   def knnGraphBits(spark: SparkSession, dir: String): DataFrame =
     knnGraphBitsEdges(spark, dir).orderBy("ida", "idb")
 
-  /** [[knnGraphBits]] without the presentation sort (see [[knnGraphEdges]]). */
+  /** [[knnGraphBits]] without the presentation sort (see [[knnGraph2Edges]]). */
   private[graft] def knnGraphBitsEdges(spark: SparkSession, dir: String): DataFrame = {
     val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
     val n = graft.Tables.rowCount(spark, dir, "embeddings")
@@ -444,9 +426,9 @@ object SimilarityOps {
   /** The bit-signature candidate relation behind [[knnGraphBits]] —
     * distinct scored same-bucket pairs (ida < idb, exact cosine).
     * Factored out because [[knnGraphRefined]] seeds its descent from
-    * exactly these candidates. `tables`/`targetList` default to the
-    * shipped constants; the tuned overloads exist ONLY for the recall
-    * sweep harness ([[graft.RecallGate]]) that prices the dials.
+    * exactly these candidates, at its own seed constants
+    * ([[DescentSeedTables]]/[[DescentSeedTarget]]); `tables`/`targetList`
+    * default to the bits graph's.
     * `checkpoint` makes the eager signature checkpoint below — the
     * descent passes its [[Fixpoint]]'s, which releases it. */
   private def bitsScored(q: DataFrame, n: Long,
@@ -514,7 +496,7 @@ object SimilarityOps {
     * retain the previous graph's full edge set and the contraction
     * never narrows, the graph's MEMORY is lossless: the staged build's
     * edge set can only differ from the unstaged one by pairs the narrow
-    * rounds didn't explore. The first variant of this dial narrowed the
+    * rounds didn't explore. The first variant of this schedule narrowed the
     * contraction too; sf10 priced it at recall 0.9231 → 0.9021
     * (erounds=2) → 0.8182 (erounds=3) — a narrow contraction discards
     * the seed's tail edges PERMANENTLY (retention only carries the
@@ -523,7 +505,7 @@ object SimilarityOps {
     * k'-wide edge set survives every contraction by monotonicity of
     * the per-node top-k' cosine.
     *
-    * SHIPPED DEFAULT: EarlyKd = 32, EarlyRounds = 2 — priced at sf10
+    * EarlyKd = k'/2 = 32, EarlyRounds = 2 — priced at sf10
     * (200k vectors) by two same-JVM adjacent A/Bs in opposite orders:
     * unstaged-first 1428.5 vs 1150.3 s (ratio 0.805), staged-first
     * 1112.0 vs 1207.3 s (ratio 0.921); order-cancelled geomean 0.861
@@ -533,22 +515,21 @@ object SimilarityOps {
     * because the staged
     * new/old cut defers the tail entries' activation: pairs the
     * unstaged build marks old-old after round 1 are explored fresh by
-    * the wide rounds over a better graph. At EarlyKd ≥ k' the schedule
-    * is a NO-OP and both the build and the oracle twin reduce
-    * byte-identically to the unstaged r16 formulation; the twin
+    * the wide rounds over a better graph. The oracle twin
     * ([[graft.Oracles]]) interpolates these constants and unrolls the
-    * identical staged filters when active. SPARK_GRAFT_DESCENT_EKD /
-    * _EROUNDS (harness-only env, never set by the driver) move build +
-    * twin in lockstep for equivalence sweeps (tools/ekd_twin_check.sh),
-    * because the twin interpolates these constants when Verify dumps
-    * oracle_sql.json at runtime. The full pricing
-    * ladder — including the REJECTED contraction-narrowing variant
-    * (recall 0.9021/0.8182) — lives in RECALL_r17.json /
+    * identical staged filters. They are constants, not dials: the sweeps
+    * that priced them are committed (tools/recall_*.jsonl), and the full
+    * pricing ladder — including the REJECTED contraction-narrowing
+    * variant (recall 0.9021/0.8182) — lives in RECALL_r17.json /
     * ARCHITECTURE.md. */
-  private[graft] val DescentEarlyKd: Int =
-    sys.env.get("SPARK_GRAFT_DESCENT_EKD").map(_.toInt).getOrElse(DescentK / 2)
-  private[graft] val DescentEarlyRounds: Int =
-    sys.env.get("SPARK_GRAFT_DESCENT_EROUNDS").map(_.toInt).getOrElse(2)
+  private[graft] val DescentEarlyKd: Int = DescentK / 2
+  private[graft] val DescentEarlyRounds: Int = 2
+
+  /** Round t's (1-based) EXPLORATION width under the staged schedule —
+    * the neighborhood that generates FoF pairs; the contraction always
+    * runs at the full k'. */
+  private def descentWidth(t: Int): Int =
+    if (t <= DescentEarlyRounds) DescentEarlyKd else DescentK
 
   /** The refined graph's OWN seed dials — decoupled from the bits
     * graph's [[BitsTables]]/[[BitsTargetList]] because the sf10 sweep
@@ -576,7 +557,7 @@ object SimilarityOps {
   private[graft] val DescentBroadcastVecs = 500000L
 
   /** Graph-refined mutual k-NN — the demonstrated-recall-at-scale path.
-    * The blocked builds ([[knnGraph]]/[[knnGraph2]]/[[knnGraphBits]])
+    * The blocked builds ([[knnGraph2]]/[[knnGraphBits]])
     * all lose recall as the corpus grows: a true neighbor pair must
     * collide under the partition (same Voronoi cell, same b-bit
     * signature), and collision probability decays with cell count /
@@ -607,56 +588,30 @@ object SimilarityOps {
     * the descent recovers the cross-bucket edges blocking loses (the
     * gate measures the recovery every round; the bits seed alone
     * measured 0.00 eval recall at sf10, r11). The operator runs under
-    * [[Fixpoint]]: at the shipped dials, a corpus whose graph and vectors
-    * fit its driver tail is built on the driver from seed to mutual
-    * tail ([[descentOnDriver]]), output-identical. */
+    * [[Fixpoint]]: a corpus whose graph and vectors fit its driver tail
+    * is built on the driver from seed to mutual tail
+    * ([[descentOnDriver]]), output-identical. */
   def knnGraphRefined(spark: SparkSession, dir: String): DataFrame =
-    knnGraphRefinedTuned(spark, dir).orderBy("ida", "idb")
+    knnGraphRefinedEdges(spark, dir).orderBy("ida", "idb")
 
   /** [[knnGraphRefined]] without the presentation sort (see
-    * [[knnGraphEdges]]) — the edge supplier the refined consumers and
-    * Bench's shared-build attribution compose over. */
-  private[graft] def knnGraphRefinedEdges(spark: SparkSession, dir: String): DataFrame =
-    knnGraphRefinedTuned(spark, dir)
-
-  /** [[knnGraphRefined]] with every dial exposed — the sweep surface the
-    * at-scale recall measurements run on ([[graft.RecallGate]]). The
-    * shipped operator is the defaults; the oracle twin interpolates the
-    * same [[DescentK]]/[[DescentRounds]] constants, so only the default
-    * configuration is oracle-checked. */
-  private[graft] def knnGraphRefinedTuned(spark: SparkSession, dir: String,
-      kd: Int = DescentK, rounds: Int = DescentRounds,
-      seedTables: Int = DescentSeedTables,
-      seedTargetList: Long = DescentSeedTarget,
-      earlyKd: Int = DescentEarlyKd,
-      earlyRounds: Int = DescentEarlyRounds,
+    * [[knnGraph2Edges]]) — the edge supplier the refined consumers and
+    * Bench's shared-build attribution compose over. `broadcastVecs` is
+    * the Spark rounds' scoring-join dispatch ([[DescentBroadcastVecs]]),
+    * a parameter only so a test can force the co-shuffle path; the
+    * driver tail does not read it. */
+  private[graft] def knnGraphRefinedEdges(spark: SparkSession, dir: String,
       broadcastVecs: Long = DescentBroadcastVecs): DataFrame =
     Fixpoint.run("knn_descent", spark) { fp =>
-      // staged width schedule ([[DescentEarlyKd]]): EXPLORATION width per
-      // round — the neighborhood that generates FoF pairs; the contraction
-      // always runs at the full k'
-      def kdOf(t: Int): Int = if (t >= 1 && t <= earlyRounds && earlyKd < kd) earlyKd else kd
-      // the settled exit below is valid only once the exploration width has
-      // reached its final k'
-      def widthFinal(t: Int): Boolean = t > earlyRounds || earlyKd >= kd
       val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
       val n = graft.Tables.rowCount(spark, dir, "embeddings")
-      // One decision, from n alone: the driver tail replays the shipped
-      // operator only — any other dial (a sweep's k', rounds or seed, a
-      // forced scoring dispatch) keeps the Spark stages that define it.
-      // Its state is the directed graph, at most n·k' rows of (src, dst,
-      // cosine), plus the vectors it is scored from.
-      val shipped = kd == DescentK && rounds == DescentRounds &&
-        seedTables == DescentSeedTables && seedTargetList == DescentSeedTarget &&
-        earlyKd == DescentEarlyKd && earlyRounds == DescentEarlyRounds &&
-        broadcastVecs == DescentBroadcastVecs
-      fp.whole(3 * n * kd * Fixpoint.FieldBytes + Fixpoint.vectorBytes(n))(
-        if (!shipped) None
-        else {
-          val t0 = System.nanoTime()
-          Fixpoint.Vectors.collect(q).map(descentOnDriver(fp, _, n, t0, kd, rounds, seedTables,
-            seedTargetList, kdOf, widthFinal))
-        }) {
+      // One decision, from n alone. Its state is the directed graph, at
+      // most n·k' rows of (src, dst, cosine), plus the vectors it is
+      // scored from.
+      fp.whole(3 * n * DescentK * Fixpoint.FieldBytes + Fixpoint.vectorBytes(n)) {
+        val t0 = System.nanoTime()
+        Fixpoint.Vectors.collect(q).map(descentOnDriver(fp, _, n, t0))
+      } {
         // Shuffle width stays at the session default DELIBERATELY: a
         // volume-derived raising scope (rows/8M ≈ 400 partitions for the
         // round-1 k'²·n candidate space at sf10) was built and A/B'd on an
@@ -668,8 +623,9 @@ object SimilarityOps {
         // initialPartitionNum), not something this operator should scope.
         val t0 = System.nanoTime()
         val (seed, seedRows) = fp.cut(directedTopFrom(
-          bitsScored(q, n, seedTables, seedTargetList, dedup = false, checkpoint = fp.cut(_)._1),
-          kd))
+          bitsScored(q, n, DescentSeedTables, DescentSeedTarget, dedup = false,
+            checkpoint = fp.cut(_)._1),
+          DescentK))
         fp.record(0, seedRows, t0, "seed")
         // state: (graph, its rows, the previous round's neighborhood
         // relation for the incremental FoF cut below — None before round
@@ -679,7 +635,7 @@ object SimilarityOps {
         // (several GB at sf10) for the session — storage pressure during
         // exactly the stages whose spill is the build's cost center.
         val (sd, _, _) = fp.onSpark[(DataFrame, Long, Option[DataFrame])](
-            (seed, seedRows, None), rounds, converging = false)(s => s._1 +: s._3.toSeq) {
+            (seed, seedRows, None), DescentRounds, converging = false)(s => s._1 +: s._3.toSeq) {
           case ((sd, sdRows, prevUsed), round) =>
             // bounded neighborhood: out-edges + top-k' in-edges per node.
             // Exploration width follows the staged schedule: on a narrow
@@ -697,7 +653,7 @@ object SimilarityOps {
             // the unfused form used there. Same tie-break (cosine DESC, id
             // ASC) as the pre-r21 windows; sd is a set, so the buffers'
             // duplicate collapse is a no-op — byte-identical und set.
-            val kdt = kdOf(round)
+            val kdt = descentWidth(round)
             val mirrored = sd.select(explode(array(
                 struct(col("src").as("center"), col("dst").as("nbr"),
                   col("cosine"), lit(true).as("is_out")),
@@ -753,15 +709,15 @@ object SimilarityOps {
             // (cosine DESC, id ASC; cosines are bit-deterministic per pair).
             // sd unchanged and kdt constant past the staged window imply und
             // and flagged repeat verbatim: zero new entries again, by
-            // induction to round `rounds`. Valid only once the exploration
+            // induction to round [[DescentRounds]]. Valid only once the exploration
             // width has reached its final k' (inside the staged window the
             // NEXT round widens the neighborhood and genuinely new entries
-            // appear). The DuckDB twin keeps unrolling the full `rounds` CTEs
+            // appear). The DuckDB twin keeps unrolling all [[DescentRounds]] CTEs
             // — the oracle rows remain an end-to-end proof that the skipped
             // rounds are no-ops. Cost of the check: one limit-1 probe of the
             // join of two checkpointed narrow relations; measured payoff at
             // sf0.1: rounds 6-8 (~1.0 s each) were exactly this identity.
-            if (widthFinal(round) && prevUsed.nonEmpty && flagged.filter(col("is_new")).isEmpty)
+            if (round > DescentEarlyRounds && prevUsed.nonEmpty && flagged.filter(col("is_new")).isEmpty)
               Fixpoint.Step((sd, sdRows, Some(und)), sdRows, done = true)
             else {
               // FoF pair generation stays the co-shuffled self-join (r22
@@ -827,7 +783,7 @@ object SimilarityOps {
               // sf10 and rejected (it permanently discards the seed's tail edges;
               // recall 0.9231 → 0.9021/0.8182). The exploration narrowing above
               // is where the candidate-volume savings live.
-              val (next, rows) = fp.cut(directedTopFrom(scored, kd))
+              val (next, rows) = fp.cut(directedTopFrom(scored, DescentK))
               // this round's neighborhood is the next round's used set
               Fixpoint.Step((next, rows, Some(und)), rows)
             }
@@ -844,7 +800,7 @@ object SimilarityOps {
       }
     }
 
-  /** The whole shipped descent on the driver, over the collected vectors:
+  /** The whole descent on the driver, over the collected vectors:
     * each stage the Spark operator's own arithmetic, with every cosine
     * `dot.toDouble / sqrt(nrm_a) / sqrt(nrm_b)` and a the smaller id
     * (index order is id order, so every tie-break on an index is the same
@@ -865,9 +821,8 @@ object SimilarityOps {
     * keeps each node's best of its candidate SET, whatever order it
     * arrives in — so the nodes score in parallel on the driver's cores.
     * `t0` is when the vector collect began: the seed's record counts it. */
-  private def descentOnDriver(fp: Fixpoint, v: Fixpoint.Vectors, n: Long, t0: Long, kd: Int,
-                              rounds: Int, seedTables: Int, seedTargetList: Long,
-                              kdOf: Int => Int, widthFinal: Int => Boolean): DataFrame = {
+  private def descentOnDriver(fp: Fixpoint, v: Fixpoint.Vectors, n: Long,
+                              t0: Long): DataFrame = {
     import graft.functions.TopKEdgesAgg.Buf
     val nv = v.ids.length
     val sq = v.nrm.map(x => math.sqrt(x.toDouble))
@@ -886,7 +841,7 @@ object SimilarityOps {
       val out = new Array[Edges](nv)
       java.util.stream.IntStream.range(0, nv).parallel().forEach { x =>
         val seen = scratch.get()
-        val buf = new Buf(kd)
+        val buf = new Buf(DescentK)
         each(x, y => if (y != x && seen(y) != x) {
           seen(y) = x
           buf.insert(y.toLong, if (x < y) cosine(x, y) else cosine(y, x))
@@ -898,15 +853,15 @@ object SimilarityOps {
 
     // seed: (table, signature) cell per node and table, then the cells'
     // sub-blocks; a node's candidates are its blocks' other members
-    val b = autoPlanes(n, seedTargetList)
-    val planes = Array.tabulate(seedTables, b)((t, h) =>
+    val b = autoPlanes(n, DescentSeedTarget)
+    val planes = Array.tabulate(DescentSeedTables, b)((t, h) =>
       Array.tabulate(DedupOps.Dim)(d => bitPlaneWeight(t * 64 + h, d + 1).toLong))
-    val cl = Array.tabulate(nv, seedTables) { (x, t) =>
+    val cl = Array.tabulate(nv, DescentSeedTables) { (x, t) =>
       var bucket = 0L
       for (h <- 0 until b) if (Fixpoint.Vectors.dot(v.qv(x), planes(t)(h)) >= 0) bucket += 1L << h
       t.toLong * (1L << b) + bucket
     }
-    val cap = CapFactor * seedTargetList
+    val cap = CapFactor * DescentSeedTarget
     val m = cl.flatten.groupBy(identity).map { case (c, xs) => c -> xs.length.toLong }
     val blk = cl.zipWithIndex.map { case (cs, x) =>
       cs.map(c => c * (1L << 20) + Math.floorMod(v.ids(x), (m(c) + cap - 1) / cap)) }
@@ -917,9 +872,9 @@ object SimilarityOps {
 
     // used (previous round's neighborhood) per center, sorted; null =
     // not a center then
-    val (sd, _) = fp.onDriver[(Array[Edges], Array[Array[Int]])]((sd0, null), rounds) {
+    val (sd, _) = fp.onDriver[(Array[Edges], Array[Array[Int]])]((sd0, null), DescentRounds) {
         case ((sd, prevUsed), round) =>
-      val kdt = kdOf(round)
+      val kdt = descentWidth(round)
       val inBuf = new Array[Buf](nv)
       val rev = Array.fill(nv)(Array.newBuilder[Int])
       for (x <- 0 until nv; i <- sd(x).dst.indices) {
@@ -942,7 +897,7 @@ object SimilarityOps {
         else und(c).map(y => prevUsed == null || prevUsed(c) == null ||
           java.util.Arrays.binarySearch(prevUsed(c), y) < 0)
       }
-      if (widthFinal(round) && prevUsed != null &&
+      if (round > DescentEarlyRounds && prevUsed != null &&
           !isNew.exists(f => f != null && f.contains(true)))
         Fixpoint.Step((sd, und), sd.map(_.dst.length.toLong).sum, done = true)
       else {
@@ -1025,13 +980,11 @@ object SimilarityOps {
   }
 
   /** (vec_id, cl) with cl = table · 2^b + signature bucket, one row per
-    * (vector, table). The b·[[BitsTables]] plane dot products run once
+    * (vector, table). The b·`tables` plane dot products run once
     * per row in the native codegen'd loop; sign bits assemble the
     * bucket id per table. Ids only — consumers re-attach vectors from
     * the cached quantized frame, so the checkpoint stores 2 columns. */
-  private def bitAssign(q: DataFrame, n: Long,
-                        tables: Int = BitsTables,
-                        targetList: Long = BitsTargetList): DataFrame = {
+  private def bitAssign(q: DataFrame, n: Long, tables: Int, targetList: Long): DataFrame = {
     val b = autoPlanes(n, targetList)
     val dots = (0 until tables).flatMap { t =>
       (0 until b).map { h =>
@@ -1097,40 +1050,25 @@ object SimilarityOps {
         col("f.rnk").as("rnk_a"), col("r.rnk").as("rnk_b"))
   }
 
-  /** Recall of the Voronoi-blocked mutual k-NN graph ([[knnGraph]],
-    * nprobe=1) against the EXACT mutual k-NN ground truth, restricted to
-    * edges incident to the eval query set (vec_id < [[EvalQueries]]) — the
-    * number that prices the blocking's cross-list misses, measured by
-    * the gate every round instead of trusted to prose (the same
-    * discipline as [[lshRecall]] / [[ivfRecall]]).
-    *
-    * Ground truth WITHOUT an all-pairs scan: the mutual-edge test for a
-    * query q needs only (1) q's exact global top-k — |queries|·n dot
-    * products with the query frame broadcast — and (2) the exact global
-    * top-k of q's ≤ k·|queries| candidate neighbors, another linear
-    * broadcast pass. Both arms are O(|eval set|·n): the eval harness
-    * stays linear in the corpus at any scale, where a full-graph ground
-    * truth would be the O(n²) blowup the blocked operator exists to
-    * avoid. Per query: its true mutual neighbors, how many survive in
-    * the blocked graph, and the recall ratio (vacuously 1.0 for a query
-    * with no true mutual neighbor). */
-  def knnRecall(spark: SparkSession, dir: String): DataFrame =
-    knnRecallOf(spark, dir, knnGraphEdges(spark, dir))
-
-  /** [[knnRecall]] for the 2-probe graph — the number that shows what
-    * the second probe buys (measured: 1-probe ≈ 0.10 on the synthetic
-    * corpus at sf0.01; the gate re-derives both every round). */
+  /** Recall of the 2-probe mutual k-NN graph ([[knnGraph2]]) against
+    * the EXACT mutual k-NN ground truth, restricted to edges incident to
+    * the eval query set (vec_id < [[EvalQueries]]) — the number that
+    * prices the blocking's cross-list misses, measured by the gate every
+    * round instead of trusted to prose (the same discipline as
+    * [[lshRecall]] / [[ivfRecall]]; the second probe was measured at
+    * ~4.5× the 1-probe recall on the synthetic corpus). The ground truth
+    * is [[knnRecallOf]]'s. */
   def knnRecall2(spark: SparkSession, dir: String): DataFrame =
     knnRecallOf(spark, dir, knnGraph2Edges(spark, dir))
 
-  /** [[knnRecall]] for the bit-signature graph — the number that prices
+  /** [[knnRecall2]] for the bit-signature graph — the number that prices
     * [[knnGraphBits]]' linear-cost trade: signature recall DECAYS as the
     * plane count grows with the corpus, and this gate re-derives the
     * decay point every round instead of trusting the theory. */
   def knnRecallBits(spark: SparkSession, dir: String): DataFrame =
     knnRecallOf(spark, dir, knnGraphBitsEdges(spark, dir))
 
-  /** [[knnRecall]] for the descent-refined graph — the gate that has to
+  /** [[knnRecall2]] for the descent-refined graph — the gate that has to
     * show the refinement actually recovering the cross-bucket edges the
     * bits seed loses (same eval set, same ground truth, directly
     * comparable to [[knnRecallBits]] row by row). */
@@ -1138,8 +1076,19 @@ object SimilarityOps {
     knnRecallOf(spark, dir, knnGraphRefinedEdges(spark, dir))
 
   /** The gate body behind every knnRecall* query — graph-agnostic, so
-    * the sweep harness ([[graft.RecallGate]]) and Bench's shared-build
+    * the recall artifact ([[graft.RecallGate]]) and Bench's shared-build
     * attribution can score an already-built (ida, idb) edge relation.
+    *
+    * Ground truth WITHOUT an all-pairs scan: the mutual-edge test for a
+    * query q needs only (1) q's exact global top-k — |queries|·n dot
+    * products with the query frame broadcast — and (2) the exact global
+    * top-k of q's ≤ k·|queries| candidate neighbors, another linear
+    * broadcast pass. Both arms are O(|eval set|·n): the eval harness
+    * stays linear in the corpus at any scale, where a full-graph ground
+    * truth would be the O(n²) blowup the blocked operators exist to
+    * avoid. Per query: its true mutual neighbors, how many survive in
+    * the graph, and the recall ratio (vacuously 1.0 for a query with no
+    * true mutual neighbor).
     * Under [[Fixpoint]]'s size rule, sized from n — the vectors plus the
     * graph's edges from an eval query, at most [[EvalQueries]]·n pairs —
     * a gate that fits runs on the driver ([[recallOnDriver]]),
@@ -1244,32 +1193,23 @@ object SimilarityOps {
         StructField("recall", DoubleType))), rows.toSeq)
   }
 
-  /** Connected components over the mutual-kNN edge relation — semantic
-    * clusters without any pre-existing label: [[knnGraph2]]'s edges fed
-    * to the same Kiveris star-contraction fixpoint the near-dup cluster
-    * family runs ([[DedupOps.starComponents]] — O(log n) rounds, exact
-    * convergence, driver reads only aggregates). Composition, not new
-    * machinery: the graph op and the component op are both corpus-scale
-    * proven on their own. The consumers run on the 2-PROBE graph — the
-    * second probe roughly doubles measured mutual-edge recall for a
-    * bounded ≤ 4× candidate constant, and clusters built on the
-    * higher-recall graph are what a curation pipeline actually wants
-    * (r9/r10 verdicts flagged consuming the 1-probe graph while the
-    * better one sat one call away). */
-  def knnComponents(spark: SparkSession, dir: String): DataFrame =
-    knnComponentsFrom(knnGraph2Edges(spark, dir))
-
-  /** Connected components over the DESCENT-REFINED graph — the
-    * linear-build composition: at ≥ 10⁸ vectors the 2-probe Voronoi
-    * build's n^1.5 pair space is unpayable and [[knnGraphRefined]] is
-    * the high-recall graph that still exists (measured 0.90+ recall at
-    * the largest gate scale, RECALL artifact); the component fixpoint
-    * itself is scale-indifferent — it sees only (ida, idb). */
+  /** Connected components over the DESCENT-REFINED mutual-kNN edge
+    * relation — semantic clusters without any pre-existing label:
+    * [[knnGraphRefined]]'s edges fed to the same Kiveris star-contraction
+    * fixpoint the near-dup cluster family runs
+    * ([[DedupOps.starComponents]] — O(log n) rounds, exact convergence,
+    * driver reads only aggregates). Composition, not new machinery: the
+    * graph op and the component op are both corpus-scale proven on their
+    * own. The refined graph is the linear-build one: at ≥ 10⁸ vectors the
+    * 2-probe Voronoi build's n^1.5 pair space is unpayable, and the
+    * refined graph still holds high recall (0.90+ at the largest gate
+    * scale, RECALL artifact); the component fixpoint itself is
+    * scale-indifferent — it sees only (ida, idb). */
   def knnComponentsRefined(spark: SparkSession, dir: String): DataFrame =
     knnComponentsFrom(knnGraphRefinedEdges(spark, dir))
 
-  /** The fixpoint over an explicit edge relation — shared by the
-    * 2-probe and refined compositions and by Bench's shared-build
+  /** The fixpoint over an explicit edge relation — shared by
+    * [[knnComponentsRefined]] and by Bench's shared-build
     * attribution (which scores a pre-checkpointed graph). */
   private[graft] def knnComponentsFrom(graph: DataFrame): DataFrame =
     DedupOps.starComponentsCore(
@@ -1307,7 +1247,7 @@ object SimilarityOps {
   /** Integer PageRank over the mutual k-NN graph — semantic authority
     * scoring: vectors many vectors agree are their nearest neighbors
     * rank high, the label-free "representative member" signal for a
-    * semantic cluster (the companion of [[knnComponents]] on the same
+    * semantic cluster (the companion of [[knnComponentsRefined]] on the same
     * edge-list seam). Simplified PageRank, defined EXACTLY: rank in ppm,
     * r₀ = 10⁶, rₜ₊₁(v) = 150000 + (850000 · Σ_{u→v} (rₜ(u) div
     * deg(u))) div 10⁶, a FIXED 10 iterations — every operation integer
@@ -1483,7 +1423,7 @@ object SimilarityOps {
     }
 
   /** Cluster exemplars — the composed read-side of the whole similarity
-    * family: for every semantic cluster ([[knnComponents]]' star
+    * family: for every semantic cluster ([[knnComponentsFrom]]' star
     * contraction), its most AUTHORITATIVE member ([[pageRank]]'s top
     * rank, ties to the smaller id) plus the member count — the "show me
     * one representative document per topic" query a curation pipeline
@@ -1665,14 +1605,13 @@ object SimilarityOps {
     }
   }
 
-  /** The one corpus-scale stage of [[momentsIn]]'s Spark path, cached:
-    * one row of (n, s1[dim], s2[dim·(dim+1)/2]) exact moments. */
+  /** The one corpus-scale stage of [[momentsIn]]'s Spark path: one row
+    * of (n, s1[dim], s2[dim·(dim+1)/2]) exact moments, read once. */
   private[graft] def momentsOf(spark: SparkSession, dir: String): DataFrame = {
     val dim = DedupOps.Dim
-    val q = DedupOps.quantized(spark, dir).select(col("qv"))
-    graft.Caches.cached(
-      q.agg(graft.functions.VectorFunctions.vectorMoments(col("qv"), dim).as("m"))
-        .select(col("m.n").as("n"), col("m.s1").as("s1"), col("m.s2").as("s2")))
+    DedupOps.quantized(spark, dir).select(col("qv"))
+      .agg(graft.functions.VectorFunctions.vectorMoments(col("qv"), dim).as("m"))
+      .select(col("m.n").as("n"), col("m.s1").as("s1"), col("m.s2").as("s2"))
   }
 
   /** (n, s1, s2) of the one [[momentsOf]] row. */

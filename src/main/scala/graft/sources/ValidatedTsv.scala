@@ -149,8 +149,11 @@ object ValidatedTsv {
         case Regex(p) => !isEmptyCell(c) && !regexp_like(c, lit(p))
         case Cv(vs) => !isEmptyCell(c) && !c.isin(vs: _*)
         case IntegerCv(m) =>
+          // try_cast: a code past the int range is a violation, not an
+          // ANSI cast error (null here, so no key matches it)
           val code = regexp_extract(c, "^(\\d+)", 1)
-          !isEmptyCell(c) && (code === "" || !code.cast("int").isin(m.keys.toSeq: _*))
+          !isEmptyCell(c) &&
+            !coalesce(code.try_cast("int").isin(m.keys.toSeq: _*), lit(false))
         case AnyValue => lit(false)
       }
       emptyViolation || ruleViolation

@@ -45,6 +45,16 @@ class EtlSpec extends SparkTestBase {
     }
   }
 
+  test("S1: an integer code past the int range is a violation, not a cast error") {
+    import java.nio.file.Files
+    val path = Files.createTempDirectory("subjects_long_code").resolve("subjects.txt")
+    Files.writeString(path, "SUBJID\tSEX\tAGE\tDTHHRDY\nGTEX-3333\t99999999999\t60-69\t2\n")
+    val r = ValidatedTsv.read(spark, path.toString, GtexEtl.subjectSpec, "SUBJID")
+    val v = r.violations.collect().map(x => (x.getString(1), x.getString(2))).toSeq
+    assert(v === Seq(("SEX", "integer_cv")))
+    intercept[ValidatedTsv.ValidationFailedException](r.requireValid())
+  }
+
   /** Jobs started by `body` whose stages scan a file (a `FileScanRDD`).
     * A marker job after `body` orders the count: the listener bus delivers
     * events in order, so once the marker's start arrives, so have all of

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators._
 
-class ExtensionOpsSpec extends SparkTestBase {
+class ExtensionOpsSpec extends ParitySupport {
 
   test("caches: release() frees every operator-registered cache after consumption") {
     Caches.release() // drain whatever earlier suites left registered
@@ -253,18 +253,14 @@ class ExtensionOpsSpec extends SparkTestBase {
     auto.intersect(labeled).foreach(p => assert(autoCos(p) === labeledCos(p)))
   }
 
-  test("similarity: 2-probe knn graph improves (never hurts) eval-set recall") {
-    val r1 = SimilarityOps.knnRecall(spark, sf).collect()
-      .map(r => r.getLong(1) -> r.getLong(2))
+  test("similarity: 2-probe knn graph's recall gate and edge contract") {
     val r2 = SimilarityOps.knnRecall2(spark, sf).collect()
       .map(r => r.getLong(1) -> r.getLong(2))
-    // ground truth is probe-independent — n_true identical per query
-    assert(r1.map(_._1).toSeq === r2.map(_._1).toSeq)
-    // second probe strictly adds candidate pairs; on this corpus the
-    // measured totals are 2/21 (1-probe) vs 9/21 (2-probe)
-    assert(r2.map(_._2).sum > r1.map(_._2).sum,
-      s"2-probe hits ${r2.map(_._2).sum} should exceed 1-probe ${r1.map(_._2).sum}")
-    // graph contract holds for the 2-probe edges too
+    // the full 100-query eval set, hits never exceeding ground truth; on
+    // this corpus the measured total is 125/199
+    assert(r2.length === 100)
+    r2.foreach { case (nTrue, hits) => assert(hits <= nTrue) }
+    assert(r2.map(_._2).sum > 0, "2-probe graph recovers no true mutual edge")
     SimilarityOps.knnGraph2(spark, sf).collect().foreach { r =>
       assert(r.getLong(0) < r.getLong(1))
       assert(r.getLong(3) <= 3L && r.getLong(4) <= 3L)
@@ -327,11 +323,16 @@ class ExtensionOpsSpec extends SparkTestBase {
     // choice — forcing the corpus-scale shuffle_hash path must yield
     // byte-identical edges to the shipped broadcast path, otherwise the
     // sf-graded correctness runs (all under the threshold) would never
-    // exercise what a real corpus executes
-    def edges(bv: Long): Set[(Long, Long)] =
-      SimilarityOps.knnGraphRefinedTuned(spark, sf, broadcastVecs = bv)
-        .select(col("ida"), col("idb")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // exercise what a real corpus executes. Both run the Spark rounds:
+    // the driver tail, which this corpus fits, has no scoring joins.
+    def edges(bv: Long): Set[(Long, Long)] = {
+      val (out, recs) = recorded(sparkPath(
+        SimilarityOps.knnGraphRefinedEdges(spark, sf, broadcastVecs = bv)
+          .select(col("ida"), col("idb")).collect()))
+      assert(recs.filter(_._1 == "knn_descent").map(_._2).distinct === Seq("spark"),
+        s"broadcastVecs=$bv: expected Spark rounds, records $recs")
+      out.map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     val b = edges(Long.MaxValue) // always broadcast
     val s = edges(0L)            // always co-shuffle
     assert(b === s, "broadcast and shuffle_hash scoring paths disagree")
@@ -768,7 +769,7 @@ class ExtensionOpsSpec extends SparkTestBase {
   }
 
   test("sim: knn graph edges are mutual and within each endpoint's top k") {
-    val edges = SimilarityOps.knnGraph(spark, sf).collect()
+    val edges = SimilarityOps.knnGraph2(spark, sf).collect()
     assert(edges.nonEmpty)
     edges.foreach { r =>
       assert(r.getLong(r.fieldIndex("ida")) < r.getLong(r.fieldIndex("idb")))
@@ -787,9 +788,10 @@ class ExtensionOpsSpec extends SparkTestBase {
     // checked against sim_knn_graph2's edge set
     val edges = SparkEntry.queries("sim_knn_graph2")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    // direct call: the suite's sim_knn_components is refined-backed as of
-    // r14; this contract test pins the 2-probe-supplied composition
-    val comps = SimilarityOps.knnComponents(spark, sf).collect()
+    // direct composition: the suite's sim_knn_components is refined-backed
+    // as of r14; this contract test pins the component fixpoint over the
+    // 2-probe edges
+    val comps = SimilarityOps.knnComponentsFrom(SimilarityOps.knnGraph2Edges(spark, sf)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comps.keySet === edges.flatMap(e => Seq(e._1, e._2)).toSet)
     // both endpoints of every edge share a label

@@ -95,7 +95,7 @@ object GtexPipeline {
       val idx = graft.sources.Readers.dbgapFileIndex(spark, dbgapDir.getPath)
       show("dbGaP file index", idx)
       println("main study: " +
-        graft.sources.Readers.dbgapMainStudy(idx).head.getString(0))
+        graft.sources.Readers.dbgapMainStudy(idx).head().getString(0))
     }
     spark.stop()
   }

@@ -1,5 +1,10 @@
 package graft
 
+import graft.operators.{DedupOps, KMeans, SimilarityOps}
+import graft.operators.TextOps.{ApplyBudgetTokens, ChunkTokens, EvalMod, FilterLangs,
+  FilterMinQuality, OverlapK, OverlapMaxDf, PackBudget, PlanBudgetTokens, SampleRates,
+  ShuffleSeed, VocabCoverageK, WinnowK, WinnowW}
+
 /** DuckDB oracle SQL for the extension operator families (text analysis,
   * dedup, similarity search, events). Kept beside — not inside — the Spark
   * implementations so each side is independently readable; the contract is
@@ -119,7 +124,7 @@ object Oracles {
        |  FROM cf),
        |h AS (SELECT rnk, tok, cf,
        |  CAST(sum(cf) OVER (ORDER BY rnk) AS BIGINT) AS cum_cf
-       |  FROM r WHERE rnk <= ${graft.operators.TextOps.VocabCoverageK})
+       |  FROM r WHERE rnk <= $VocabCoverageK)
        |SELECT rnk, tok AS term, cf, cum_cf,
        | CAST((CAST(cum_cf AS HUGEINT) * 1000000) // n_total AS BIGINT) AS coverage_ppm
        |FROM h, tot ORDER BY rnk""".stripMargin
@@ -151,20 +156,21 @@ object Oracles {
        |FROM i JOIN cnt ca ON doc_a = ca.doc_id JOIN cnt cb ON doc_b = cb.doc_id
        |WHERE jaccard >= 0.5 ORDER BY doc_a, doc_b""".stripMargin
 
-  /** Shingles surviving the df <= maxDf hot-shingle cap — the truncated
-    * shingle universe DedupOps.ngramJaccard scores over ((doc_id, sh) is
-    * unique in SH, so count(*) per sh is exactly the document frequency). */
-  private def shCapped(maxDf: Int): String =
+  /** Shingles surviving the df <= DedupOps.NgramMaxDf hot-shingle cap — the
+    * truncated shingle universe DedupOps.ngramJaccard scores over ((doc_id,
+    * sh) is unique in SH, so count(*) per sh is exactly the document
+    * frequency). */
+  private val SHP =
     s"""shp AS (SELECT doc_id, sh FROM sh
-       |  JOIN (SELECT sh FROM sh GROUP BY sh HAVING count(*) <= $maxDf) keep USING (sh))""".stripMargin
+       |  JOIN (SELECT sh FROM sh GROUP BY sh HAVING count(*) <= ${DedupOps.NgramMaxDf}) keep USING (sh))""".stripMargin
 
   /** Df-capped shingle-Jaccard pairs — the oracle for the inverted-index
-    * ngram detector, mirroring its maxDf=64 hot-shingle exclusion from
-    * both the index and the per-doc set sizes. */
+    * ngram detector, mirroring its hot-shingle exclusion from both the
+    * index and the per-doc set sizes. */
   val dedupJaccardPairsCapped: String =
     s"""WITH $W,
        |$SH,
-       |${shCapped(64)},
+       |$SHP,
        |cnt AS (SELECT doc_id, count(*) AS n_sh FROM shp GROUP BY doc_id),
        |i AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS inter
        |  FROM shp x JOIN shp y ON x.sh = y.sh AND x.doc_id < y.doc_id GROUP BY 1, 2)
@@ -201,11 +207,11 @@ object Oracles {
        |FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
        |WHERE cosine >= 0.35 ORDER BY vec_a, vec_b""".stripMargin
 
-  /** Unrolled deterministic Lloyd's (2 rounds) over `n` (from QN) — the
-    * exact replay of operators.KMeans.fit(iters = 2, nlist = ⌊√count⌋):
-    * nl computes the √n list count (KMeans.autoNlist's twin — both are
-    * IEEE sqrt of an exact integer, truncated); k0 = seed vectors
-    * 10..10+nlist as centroids; per round t, a{t} = max-cosine assignment
+  /** Unrolled deterministic Lloyd's (KMeans.Iters = 2 rounds) over `n`
+    * (from QN) — the exact replay of operators.KMeans.fitSized(nlist =
+    * ⌊√count⌋): nl computes the √n list count (KMeans.autoNlist's twin —
+    * both are IEEE sqrt of an exact integer, truncated); k0 = seed vectors
+    * FirstSeed..FirstSeed+nlist as centroids; per round t, a{t} = max-cosine assignment
     * against k{t-1} (ties to the smaller cl) and k{t} = component-wise
     * truncated integer means of a{t} (`//` and Spark's `div` both
     * truncate toward zero). Exposes a2 (final assignment) and k2 (its
@@ -226,10 +232,10 @@ object Oracles {
          |  CAST(list_sum(list_transform(list(c ORDER BY i), x -> x*x)) AS BIGINT) AS cnrm
          |  FROM g$t GROUP BY cl) WHERE cnrm > 0)""".stripMargin
     val init =
-      """nl AS (SELECT GREATEST(1, CAST(floor(sqrt(count(*))) AS BIGINT)) AS nlist FROM n),
+      s"""nl AS (SELECT GREATEST(1, CAST(floor(sqrt(count(*))) AS BIGINT)) AS nlist FROM n),
         |k0 AS (SELECT vec_id AS cl, qv AS cv, nrm AS cnrm FROM n
-        |  WHERE vec_id >= 10 AND vec_id < 10 + (SELECT nlist FROM nl))""".stripMargin
-    (Seq(init) ++ (1 to 2).flatMap(t => Seq(asgCte(t), centCte(t)))).mkString(",\n")
+        |  WHERE vec_id >= ${KMeans.FirstSeed} AND vec_id < ${KMeans.FirstSeed} + (SELECT nlist FROM nl))""".stripMargin
+    (Seq(init) ++ (1 to KMeans.Iters).flatMap(t => Seq(asgCte(t), centCte(t)))).mkString(",\n")
   }
 
   /** Auto-blocked embedding near-dup: the learned k-means assignment
@@ -480,21 +486,21 @@ object Oracles {
     * twice — inlining doubles the tree per round (same rationale as
     * TOPC_PIPE). */
   private val KNNR_PIPE: String = {
-    val kd = graft.operators.SimilarityOps.DescentK
-    val nr = graft.operators.SimilarityOps.DescentRounds
-    val ekd = graft.operators.SimilarityOps.DescentEarlyKd
-    val er = graft.operators.SimilarityOps.DescentEarlyRounds
+    val kd = SimilarityOps.DescentK
+    val nr = SimilarityOps.DescentRounds
+    val ekd = SimilarityOps.DescentEarlyKd
+    val er = SimilarityOps.DescentEarlyRounds
     // staged EXPLORATION-width schedule — identical to
     // SimilarityOps.descentWidth (neighborhood ranks only; the per-round
     // contraction always runs at the full k', matching the build)
     def kdOf(t: Int): Int = if (t <= er) ekd else kd
-    def topCte(name: String, src: String, k: Int = kd): String =
+    def topCte(name: String, src: String): String =
       s"""$name AS MATERIALIZED (SELECT src, dst, cosine FROM (
          |  SELECT src, dst, cosine, row_number() OVER (PARTITION BY src
          |    ORDER BY cosine DESC, dst ASC) AS rnk
          |  FROM (SELECT ida AS src, idb AS dst, cosine FROM $src
          |        UNION ALL SELECT idb, ida, cosine FROM $src) d_$name) t_$name
-         | WHERE rnk <= $k)""".stripMargin
+         | WHERE rnk <= $kd)""".stripMargin
     def roundCtes(t: Int): String = {
       val p = s"sd${t - 1}"
       val kdt = kdOf(t)
@@ -526,8 +532,8 @@ object Oracles {
          |${topCte(s"sd$t", s"s$t")}""".stripMargin
     }
     val rounds = (1 to nr).map(roundCtes).mkString(",\n")
-    s"""${knnbCandidates(graft.operators.SimilarityOps.DescentSeedTables,
-           graft.operators.SimilarityOps.DescentSeedTarget)},
+    s"""${knnbCandidates(SimilarityOps.DescentSeedTables,
+           SimilarityOps.DescentSeedTarget)},
        |${topCte("sd0", "scb")},
        |$rounds,
        |fr AS (SELECT DISTINCT LEAST(src, dst) AS ida, GREATEST(src, dst) AS idb, cosine
@@ -555,10 +561,10 @@ object Oracles {
     * the DuckDB twin of SimilarityOps.knnRecallRefined. */
   val simKnnRecallRefined: String = knnRecallSql(KNNR_PIPE, "mkr")
 
-  /** The graph recall gates evaluate 100 queries (vec_id < 100), not
-    * the 10 the top-k demos use — SimilarityOps.EvalQueries' twin; 10
-    * queries resolved recall in ~7-point increments. */
-  private def knnRecallSql(pipe: String, mk: String, nq: Int = 100): String =
+  /** The graph recall gates evaluate SimilarityOps.EvalQueries = 100
+    * queries (vec_id < 100), not the 10 the top-k demos use; 10 queries
+    * resolved recall in ~7-point increments. */
+  private def knnRecallSql(pipe: String, mk: String): String =
     s"""WITH $QN,
        |$pipe,
        |bd AS (SELECT a.vec_id AS src, b.vec_id AS dst, ${cosine("a", "b")} AS cosine
@@ -567,7 +573,7 @@ object Oracles {
        |    row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst ASC) AS rnk
        |  FROM bd) WHERE rnk <= 3),
        |bm AS (SELECT x.src AS query_id, x.dst AS nbr FROM bt x
-       |  JOIN bt y ON x.src = y.dst AND x.dst = y.src WHERE x.src < $nq),
+       |  JOIN bt y ON x.src = y.dst AND x.dst = y.src WHERE x.src < ${SimilarityOps.EvalQueries}),
        |h AS (SELECT bm.query_id, bm.nbr,
        |  CASE WHEN $mk.ida IS NOT NULL THEN 1 ELSE 0 END AS hit
        |  FROM bm LEFT JOIN $mk ON $mk.ida = LEAST(bm.query_id, bm.nbr)
@@ -577,7 +583,7 @@ object Oracles {
        | CAST(coalesce(sum(h.hit), 0) AS BIGINT) AS hits,
        | CAST(CASE WHEN count(h.nbr) = 0 THEN 1.0
        |  ELSE CAST(coalesce(sum(h.hit), 0) AS DOUBLE) / count(h.nbr) END AS DOUBLE) AS recall
-       |FROM (SELECT vec_id FROM n WHERE vec_id < $nq) q
+       |FROM (SELECT vec_id FROM n WHERE vec_id < ${SimilarityOps.EvalQueries}) q
        |LEFT JOIN h ON q.vec_id = h.query_id
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
@@ -588,13 +594,11 @@ object Oracles {
     * recursive reach re-references it per iteration, and inlining the
     * whole graph pipeline into every round measured 59 s vs 3 s
     * materialized at sf0.01. */
-  val simKnnComponentsRefined: String = componentsSql(KNNR_PIPE, "mkr")
-
-  private def componentsSql(pipe: String, mk: String): String =
+  val simKnnComponentsRefined: String =
     s"""WITH RECURSIVE $QN,
-       |$pipe,
-       |e AS MATERIALIZED (SELECT ida AS src, idb AS dst FROM $mk
-       |  UNION ALL SELECT idb, ida FROM $mk),
+       |$KNNR_PIPE,
+       |e AS MATERIALIZED (SELECT ida AS src, idb AS dst FROM mkr
+       |  UNION ALL SELECT idb, ida FROM mkr),
        |reach(node, label) AS (
        |  SELECT src, src FROM e
        |  UNION
@@ -602,14 +606,12 @@ object Oracles {
        |SELECT node AS vec_id, min(label) AS cluster_id
        |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin
 
-  /** Integer PageRank over the DESCENT-REFINED mutual-kNN graph — the
-    * DuckDB twin of SimilarityOps.pageRankRefined: the same fixed 10
-    * rounds of the ppm recurrence unrolled as chained CTEs, every
-    * operation integer floor division on non-negatives. */
-  val simPagerankRefined: String = pagerankSql(KNNR_PIPE, "mkr")
-
-  private def pagerankSql(pipe: String, mk: String): String = {
-    val rounds = (1 to 10).map { t =>
+  /** The PageRank CTEs over `mk`'s mutual edges: e (both directions), dg
+    * (degrees), nd (nodes), r0 and the SimilarityOps.PageRankIters rounds
+    * of the ppm recurrence, every operation integer floor division on
+    * non-negatives; the last round is [[PrLast]]. */
+  private def prRounds(mk: String): String = {
+    val rounds = (1 to SimilarityOps.PageRankIters).map { t =>
       s"""r$t AS (SELECT nd.vec_id,
          |  150000 + (850000 * coalesce(s.c, 0)) // 1000000 AS rank_ppm
          |  FROM nd LEFT JOIN (
@@ -618,54 +620,46 @@ object Oracles {
          |    JOIN dg ON dg.src = e.src
          |    GROUP BY e.dst) s USING (vec_id))""".stripMargin
     }.mkString(",\n")
-    s"""WITH $QN,
-       |$pipe,
-       |e AS MATERIALIZED (SELECT ida AS src, idb AS dst FROM $mk
+    s"""e AS MATERIALIZED (SELECT ida AS src, idb AS dst FROM $mk
        |  UNION ALL SELECT idb, ida FROM $mk),
        |dg AS MATERIALIZED (SELECT src, count(*) AS deg FROM e GROUP BY src),
        |nd AS MATERIALIZED (SELECT vec_id FROM n),
        |r0 AS (SELECT vec_id, CAST(1000000 AS BIGINT) AS rank_ppm FROM nd),
-       |$rounds
-       |SELECT nd.vec_id AS vec_id, CAST(coalesce(dg.deg, 0) AS BIGINT) AS deg,
-       | CAST(r10.rank_ppm AS BIGINT) AS rank_ppm
-       |FROM nd LEFT JOIN dg ON dg.src = nd.vec_id
-       |JOIN r10 ON r10.vec_id = nd.vec_id
-       |ORDER BY 1""".stripMargin
+       |$rounds""".stripMargin
   }
+
+  private val PrLast = s"r${SimilarityOps.PageRankIters}"
+
+  /** Integer PageRank over the DESCENT-REFINED mutual-kNN graph — the
+    * DuckDB twin of SimilarityOps.pageRankRefined: the same fixed
+    * rounds of the ppm recurrence unrolled as chained CTEs. */
+  val simPagerankRefined: String =
+    s"""WITH $QN,
+       |$KNNR_PIPE,
+       |${prRounds("mkr")}
+       |SELECT nd.vec_id AS vec_id, CAST(coalesce(dg.deg, 0) AS BIGINT) AS deg,
+       | CAST($PrLast.rank_ppm AS BIGINT) AS rank_ppm
+       |FROM nd LEFT JOIN dg ON dg.src = nd.vec_id
+       |JOIN $PrLast ON $PrLast.vec_id = nd.vec_id
+       |ORDER BY 1""".stripMargin
 
   /** Cluster exemplars over the DESCENT-REFINED graph — the DuckDB twin
     * of SimilarityOps.clusterExemplarsRefined: the same mutual-kNN graph
     * feeding both the recursive component reach and the unrolled
     * PageRank rounds; exemplar = top rank per cluster, ties to the
     * smaller id. */
-  val simClusterExemplarsRefined: String = exemplarsSql(KNNR_PIPE, "mkr")
-
-  private def exemplarsSql(pipe: String, mk: String): String = {
-    val rounds = (1 to 10).map { t =>
-      s"""r$t AS (SELECT nd.vec_id,
-         |  150000 + (850000 * coalesce(s.c, 0)) // 1000000 AS rank_ppm
-         |  FROM nd LEFT JOIN (
-         |    SELECT e.dst AS vec_id, sum(p.rank_ppm // dg.deg) AS c
-         |    FROM r${t - 1} p JOIN e ON p.vec_id = e.src
-         |    JOIN dg ON dg.src = e.src
-         |    GROUP BY e.dst) s USING (vec_id))""".stripMargin
-    }.mkString(",\n")
+  val simClusterExemplarsRefined: String =
     s"""WITH RECURSIVE $QN,
-       |$pipe,
-       |e AS MATERIALIZED (SELECT ida AS src, idb AS dst FROM $mk
-       |  UNION ALL SELECT idb, ida FROM $mk),
-       |dg AS MATERIALIZED (SELECT src, count(*) AS deg FROM e GROUP BY src),
-       |nd AS MATERIALIZED (SELECT vec_id FROM n),
-       |r0 AS (SELECT vec_id, CAST(1000000 AS BIGINT) AS rank_ppm FROM nd),
-       |$rounds,
+       |$KNNR_PIPE,
+       |${prRounds("mkr")},
        |reach(node, label) AS (
        |  SELECT src, src FROM e
        |  UNION
        |  SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node),
        |comp AS (SELECT node AS vec_id, min(label) AS cluster_id
        |  FROM reach GROUP BY node),
-       |j AS (SELECT c.cluster_id, c.vec_id, r10.rank_ppm
-       |  FROM comp c JOIN r10 USING (vec_id)),
+       |j AS (SELECT c.cluster_id, c.vec_id, $PrLast.rank_ppm
+       |  FROM comp c JOIN $PrLast USING (vec_id)),
        |sel AS (SELECT *,
        |  row_number() OVER (PARTITION BY cluster_id
        |    ORDER BY rank_ppm DESC, vec_id ASC) AS rn,
@@ -674,7 +668,6 @@ object Oracles {
        | CAST(rank_ppm AS BIGINT) AS exemplar_rank_ppm,
        | CAST(nm AS BIGINT) AS n_members
        |FROM sel WHERE rn = 1 ORDER BY cluster_id""".stripMargin
-  }
 
   /** Exact per-type value quantiles — the DuckDB twin of
     * EventOps.valueQuantiles (cents quantization, integer
@@ -899,30 +892,30 @@ object Oracles {
        |  FROM agg),
        |j AS (SELECT c.doc_id,
        |  CASE WHEN is_canonical = 0 THEN 'drop_duplicate'
-       |   WHEN d.lang NOT IN ('de','en','es','fr') THEN 'drop_lang'
-       |   WHEN quality IS NULL OR quality < 0.4 THEN 'drop_quality'
+       |   WHEN d.lang NOT IN (${FilterLangs.map(l => s"'$l'").mkString(",")}) THEN 'drop_lang'
+       |   WHEN quality IS NULL OR quality < $FilterMinQuality THEN 'drop_quality'
        |   ELSE 'kept' END AS status
        |  FROM documents d JOIN canon c USING (doc_id) LEFT JOIN qual USING (doc_id))
        |SELECT status, count(*) AS n_docs FROM j GROUP BY status ORDER BY status""".stripMargin
 
-  /** Winnowing fingerprints (k=8, w=4) — the DuckDB twin of
+  /** Winnowing fingerprints (k = WinnowK, w = WinnowW) — the DuckDB twin of
     * TextOps.winnowFingerprint: same k-gram hashes, same window minima,
     * full windows only. */
   val textWinnowFingerprint: String =
     s"""WITH $W,
        |d0 AS (SELECT doc_id,
        |  lower(array_to_string(list_filter(ws, x -> len(x) > 0), ' ')) AS nt FROM w),
-       |d AS (SELECT doc_id, nt, len(nt) - 7 AS ng FROM d0 WHERE len(nt) - 7 >= 4),
-       |g AS (SELECT doc_id, ng, i, ${graft.operators.Texty.baseHash60Sql("substr(nt, CAST(i AS INT), 8)")} AS h
+       |d AS (SELECT doc_id, nt, len(nt) - ${WinnowK - 1} AS ng FROM d0 WHERE len(nt) - ${WinnowK - 1} >= $WinnowW),
+       |g AS (SELECT doc_id, ng, i, ${graft.operators.Texty.baseHash60Sql(s"substr(nt, CAST(i AS INT), $WinnowK)")} AS h
        |  FROM d, UNNEST(range(1, CAST(ng AS INT) + 1)) AS t(i)),
        |mw AS (SELECT doc_id, ng, i,
-       |  min(h) OVER (PARTITION BY doc_id ORDER BY i ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mn
+       |  min(h) OVER (PARTITION BY doc_id ORDER BY i ROWS BETWEEN CURRENT ROW AND ${WinnowW - 1} FOLLOWING) AS mn
        |  FROM g)
        |SELECT DISTINCT doc_id, mn AS fingerprint FROM mw
-       |WHERE i <= ng - 3 ORDER BY doc_id, fingerprint""".stripMargin
+       |WHERE i <= ng - ${WinnowW - 1} ORDER BY doc_id, fingerprint""".stripMargin
 
   /** Per-language in-order sequence packing — the DuckDB twin of
-    * TextOps.packSequences at budget 2048. */
+    * TextOps.packSequences at its PackBudget. */
   val textPackSequences: String =
     s"""WITH $W,
        |t AS (SELECT doc_id, lang,
@@ -931,25 +924,27 @@ object Oracles {
        |  CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id) AS BIGINT) AS cum_tokens
        |  FROM t)
        |SELECT doc_id, lang, n_tokens, cum_tokens,
-       | (cum_tokens - n_tokens) // 2048 AS seq_id
+       | (cum_tokens - n_tokens) // $PackBudget AS seq_id
        |FROM c ORDER BY lang, doc_id""".stripMargin
 
   /** Deterministic per-language stratified sample — the DuckDB twin of
-    * TextOps.stratifiedSample (en kept at 0.4, everything else 1.0). */
-  val textStratifiedSample: String =
+    * TextOps.stratifiedSample (SampleRates, everything else 1.0). */
+  val textStratifiedSample: String = {
+    val rates = SampleRates.map { case (l, r) => s"WHEN lang = '$l' THEN $r" }.mkString(" ")
     s"""SELECT doc_id, lang FROM documents
        |WHERE ${graft.operators.Texty.baseHash60Sql("CAST(doc_id AS VARCHAR)")} % 1000000
-       |  < (CASE WHEN lang = 'en' THEN 0.4 ELSE 1.0 END) * 1000000
+       |  < (CASE $rates ELSE 1.0 END) * 1000000
        |ORDER BY doc_id""".stripMargin
+  }
 
   /** Eval-set decontamination — the DuckDB twin of TextOps.decontaminate
-    * (hold-out doc_id % 20 = 0; same 60-bit shingle hashes). */
+    * (hold-out doc_id % EvalMod = 0; same 60-bit shingle hashes). */
   val textDecontaminate: String =
     s"""WITH $W,
        |$SH,
        |h AS (SELECT doc_id, ${graft.operators.Texty.baseHash60Sql("sh")} AS h FROM sh),
-       |ev AS (SELECT doc_id AS eval_doc_id, h FROM h WHERE doc_id % 20 = 0),
-       |corp AS (SELECT doc_id, h FROM h WHERE doc_id % 20 <> 0)
+       |ev AS (SELECT doc_id AS eval_doc_id, h FROM h WHERE doc_id % $EvalMod = 0),
+       |corp AS (SELECT doc_id, h FROM h WHERE doc_id % $EvalMod <> 0)
        |SELECT corp.doc_id,
        | count(DISTINCT corp.h) AS n_shingles,
        | count(DISTINCT CASE WHEN eval_doc_id IS NOT NULL THEN corp.h END) AS n_hit_shingles,
@@ -962,16 +957,16 @@ object Oracles {
        |GROUP BY corp.doc_id ORDER BY corp.doc_id""".stripMargin
 
   /** Cross-source contamination matrix — the DuckDB twin of
-    * TextOps.crossSourceOverlap (word-8-shingles, same 60-bit hashes,
-    * same df ≤ 64 posting-list truncation). */
+    * TextOps.crossSourceOverlap (word-OverlapK-shingles, same 60-bit
+    * hashes, same df ≤ OverlapMaxDf posting-list truncation). */
   val textCrossSourceOverlap: String =
     s"""WITH w8 AS (SELECT doc_id, source,
        |  string_split_regex(trim(text), '\\s+') AS ws FROM documents),
-       |s8 AS (SELECT DISTINCT doc_id, source, array_to_string(ws[i:i+7], ' ') AS sh
-       |  FROM w8, UNNEST(range(1, len(ws)-6)) AS t(i) WHERE len(ws) >= 8),
+       |s8 AS (SELECT DISTINCT doc_id, source, array_to_string(ws[i:i+${OverlapK - 1}], ' ') AS sh
+       |  FROM w8, UNNEST(range(1, len(ws)-${OverlapK - 2})) AS t(i) WHERE len(ws) >= $OverlapK),
        |h8 AS (SELECT doc_id, source, ${graft.operators.Texty.baseHash60Sql("sh")} AS h FROM s8),
        |p AS (SELECT doc_id, source, h FROM
-       |  (SELECT *, count(*) OVER (PARTITION BY h) AS df FROM h8) WHERE df <= 64)
+       |  (SELECT *, count(*) OVER (PARTITION BY h) AS df FROM h8) WHERE df <= $OverlapMaxDf)
        |SELECT a.source AS source_a, b.source AS source_b,
        | count(DISTINCT (a.doc_id, b.doc_id)) AS n_doc_pairs,
        | count(DISTINCT a.h) AS n_shared_shingles
@@ -980,7 +975,7 @@ object Oracles {
 
   /** Corpus mixture plan — the DuckDB twin of TextOps.mixturePlan
     * (per-(lang, source) token counts, proportional-cap keep rate at a
-    * 5000-token budget, exact integer ppm). */
+    * PlanBudgetTokens budget, exact integer ppm). */
   val textMixturePlan: String =
     s"""WITH t AS (SELECT lang, source,
        |  CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
@@ -988,13 +983,13 @@ object Oracles {
        |a AS (SELECT lang, source, count(*) AS n_docs,
        |  CAST(sum(nt) AS BIGINT) AS n_tokens FROM t GROUP BY 1, 2)
        |SELECT lang, source, n_docs, n_tokens,
-       | LEAST(1000000, (5000::BIGINT * 1000000) // GREATEST(1, n_tokens)) AS rate_ppm,
-       | (n_tokens * LEAST(1000000, (5000::BIGINT * 1000000) // GREATEST(1, n_tokens))) // 1000000
+       | LEAST(1000000, ($PlanBudgetTokens::BIGINT * 1000000) // GREATEST(1, n_tokens)) AS rate_ppm,
+       | (n_tokens * LEAST(1000000, ($PlanBudgetTokens::BIGINT * 1000000) // GREATEST(1, n_tokens))) // 1000000
        |   AS planned_tokens
        |FROM a ORDER BY lang, source""".stripMargin
 
   /** Mixture plan applied — the DuckDB twin of TextOps.mixtureApply
-    * (same rate derivation as textMixturePlan at the 200-token apply
+    * (same rate derivation as textMixturePlan at the ApplyBudgetTokens
     * budget, same deterministic hash-gate keep decision as
     * textStratifiedSample). */
   val textMixtureApply: String =
@@ -1004,7 +999,7 @@ object Oracles {
        |a AS (SELECT lang, source, CAST(sum(nt) AS BIGINT) AS n_tokens
        |  FROM t GROUP BY 1, 2),
        |p AS (SELECT lang, source,
-       |  LEAST(1000000, (200::BIGINT * 1000000) // GREATEST(1, n_tokens)) AS rate_ppm
+       |  LEAST(1000000, ($ApplyBudgetTokens::BIGINT * 1000000) // GREATEST(1, n_tokens)) AS rate_ppm
        |  FROM a)
        |SELECT d.doc_id, d.lang, d.source, p.rate_ppm
        |FROM documents d JOIN p USING (lang, source)
@@ -1055,7 +1050,7 @@ object Oracles {
   val dedupClusters: String =
     s"""WITH RECURSIVE $W,
        |$SH,
-       |${shCapped(64)},
+       |$SHP,
        |cnt AS (SELECT doc_id, count(*) AS n_sh FROM shp GROUP BY doc_id),
        |i AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS inter
        |  FROM shp x JOIN shp y ON x.sh = y.sh AND x.doc_id < y.doc_id GROUP BY 1, 2),
@@ -1099,7 +1094,7 @@ object Oracles {
       |ORDER BY material_id, name""".stripMargin
 
   /** Chunk-level exact dedup — the DuckDB twin of TextOps.chunkDedup
-    * (16-token non-overlapping chunks, global first-wins on the 60-bit
+    * (ChunkTokens-token non-overlapping chunks, global first-wins on the 60-bit
     * chunk hash, first = min (doc_id, chunk_idx), reassembly in chunk
     * order; empty reassembly is '' on both engines). */
   val textChunkDedup: String =
@@ -1107,8 +1102,8 @@ object Oracles {
        |  list_filter(string_split_regex(trim(text), '\\s+'), x -> len(x) > 0) AS ws
        |  FROM documents),
        |c AS (SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
-       |  array_to_string(ws[CAST(i*16+1 AS INT) : CAST(i*16+16 AS INT)], ' ') AS chunk
-       |  FROM w0, UNNEST(range(0, (len(ws)-1)//16 + 1)) AS t(i) WHERE len(ws) > 0),
+       |  array_to_string(ws[CAST(i*$ChunkTokens+1 AS INT) : CAST(i*$ChunkTokens+$ChunkTokens AS INT)], ' ') AS chunk
+       |  FROM w0, UNNEST(range(0, (len(ws)-1)//$ChunkTokens + 1)) AS t(i) WHERE len(ws) > 0),
        |h AS (SELECT doc_id, chunk_idx, chunk,
        |  ${graft.operators.Texty.baseHash60Sql("chunk")} AS h FROM c),
        |k AS (SELECT doc_id, chunk_idx, chunk,
@@ -1126,7 +1121,7 @@ object Oracles {
     * bit-for-bit. */
   val textCorpusShuffle: String =
     s"""WITH k AS (SELECT doc_id,
-       |  ${graft.operators.Texty.baseHash60Sql("'epoch0:' || CAST(doc_id AS VARCHAR)")} AS k
+       |  ${graft.operators.Texty.baseHash60Sql(s"'$ShuffleSeed:' || CAST(doc_id AS VARCHAR)")} AS k
        |  FROM documents),
        |nb AS (SELECT LEAST(GREATEST((count(*) + 4095) // 4096, 1), 65536) AS nb
        |  FROM documents)

@@ -372,7 +372,8 @@ object PlanAudit {
     // An edge list that fits the driver tail plans no round, so the
     // section runs with auto-broadcast off, the at-scale path.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val prDf = graft.operators.SimilarityOps.pageRank(spark, dir)
+    val prDf = graft.operators.SimilarityOps.pageRankOverGraph(spark, dir,
+      graft.operators.SimilarityOps.knnGraph2Edges(spark, dir))
     show("pageRank over 2-probe graph (calibration, direct, auto-broadcast off)", prDf)
     val prPlan = prDf.queryExecution.executedPlan.toString
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
@@ -405,7 +406,8 @@ object PlanAudit {
     // fit the driver tail are picked on the driver, which plans no
     // window, so the section runs with auto-broadcast off.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val ceDf = graft.operators.SimilarityOps.clusterExemplars(spark, dir)
+    val ceDf = graft.operators.SimilarityOps.clusterExemplarsFrom(spark, dir,
+      graft.operators.SimilarityOps.knnGraph2Edges(spark, dir).select("ida", "idb"))
     val cePlan = ceDf.queryExecution.executedPlan.toString
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
     // same 2-probe allowance as pagerank: the cached graph lineage

@@ -105,7 +105,7 @@ object ScaleGen {
     val maxKey: Long = keyed.map { case (n, ks) =>
       val maxes = ks.map(k => max(col(k).cast("long")))
       val top = if (maxes.size == 1) maxes.head else greatest(maxes: _*)
-      Tables.load(spark, src, n).agg(top.as("m")).head.getLong(0)
+      Tables.load(spark, src, n).agg(top.as("m")).head().getLong(0)
     }.max
     val stride = Iterator.iterate(Stride)(_ * 10).dropWhile(_ <= maxKey).next()
     require(stride.toDouble * copies < Long.MaxValue.toDouble, "stride overflow")

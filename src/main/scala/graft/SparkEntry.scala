@@ -42,13 +42,13 @@ object SparkEntry {
     "text_lang_id" -> (TextOps.langId _),
     "text_fingerprint" -> (TextOps.fingerprint _),
     "text_bpe_tokens" -> (TextOps.bpeTokenStats _),
-    "text_stratified_sample" -> ((s: SparkSession, d: String) => TextOps.stratifiedSample(s, d)),
-    "text_pack_sequences" -> ((s: SparkSession, d: String) => TextOps.packSequences(s, d)),
-    "text_winnow_fingerprint" -> ((s: SparkSession, d: String) => TextOps.winnowFingerprint(s, d)),
+    "text_stratified_sample" -> (TextOps.stratifiedSample _),
+    "text_pack_sequences" -> (TextOps.packSequences _),
+    "text_winnow_fingerprint" -> (TextOps.winnowFingerprint _),
     "text_self_information" -> (TextOps.selfInformation _),
-    "text_vocab_coverage" -> ((s: SparkSession, d: String) => TextOps.vocabCoverage(s, d)),
+    "text_vocab_coverage" -> (TextOps.vocabCoverage _),
     "dedup_exact" -> (DedupOps.exact _),
-    "dedup_ngram_jaccard" -> ((s: SparkSession, d: String) => DedupOps.ngramJaccard(s, d)),
+    "dedup_ngram_jaccard" -> (DedupOps.ngramJaccard _),
     "dedup_minhash_lsh" -> (DedupOps.minhashLsh _),
     "dedup_simhash" -> (DedupOps.simhash _),
     "dedup_embedding_cosine" -> (DedupOps.embeddingNearDup _),
@@ -71,12 +71,12 @@ object SparkEntry {
     "evt_retention" -> (EventOps.retention _),
     "evt_asof_join" -> (EventOps.asofJoin _),
     "evt_range_join" -> (EventOps.rangeJoin _),
-    "text_corpus_filter" -> ((s: SparkSession, d: String) => TextOps.corpusFilter(s, d)),
-    "text_decontaminate" -> ((s: SparkSession, d: String) => TextOps.decontaminate(s, d)),
+    "text_corpus_filter" -> (TextOps.corpusFilter _),
+    "text_decontaminate" -> (TextOps.decontaminate _),
     "text_repetition" -> (TextOps.repetition _),
-    "text_cross_source_overlap" -> ((s: SparkSession, d: String) => TextOps.crossSourceOverlap(s, d)),
-    "text_mixture_plan" -> ((s: SparkSession, d: String) => TextOps.mixturePlan(s, d)),
-    "text_mixture_apply" -> ((s: SparkSession, d: String) => TextOps.mixtureApply(s, d)),
+    "text_cross_source_overlap" -> (TextOps.crossSourceOverlap _),
+    "text_mixture_plan" -> (TextOps.mixturePlan _),
+    "text_mixture_apply" -> (TextOps.mixtureApply _),
     "evt_funnel" -> (EventOps.funnel _),
     "evt_stickiness" -> (EventOps.stickiness _),
     "evt_anomaly" -> (EventOps.anomaly _),
@@ -103,8 +103,8 @@ object SparkEntry {
     "sim_knn_components" -> (SimilarityOps.knnComponentsRefined _),
     "sim_pagerank" -> (SimilarityOps.pageRankRefined _),
     "sim_cluster_exemplars" -> (SimilarityOps.clusterExemplarsRefined _),
-    "text_chunk_dedup" -> ((s: SparkSession, d: String) => TextOps.chunkDedup(s, d)),
-    "text_corpus_shuffle" -> ((s: SparkSession, d: String) => TextOps.corpusShuffle(s, d)),
+    "text_chunk_dedup" -> (TextOps.chunkDedup _),
+    "text_corpus_shuffle" -> (TextOps.corpusShuffle _),
     "sim_embedding_covariance" -> (SimilarityOps.embeddingCovariance _),
     "sim_top_component" -> (SimilarityOps.topComponent _),
     "sim_component_scores" -> (SimilarityOps.componentScores _),

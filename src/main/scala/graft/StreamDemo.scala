@@ -38,7 +38,7 @@ object StreamDemo {
     val values = Tables.load(spark, dir, "events")
       .select(col("value")).as(org.apache.spark.sql.Encoders.DOUBLE)
     println("[profile] event value: " +
-      values.select(graft.operators.ProfileAggregator.of.toColumn).head)
+      values.select(graft.operators.ProfileAggregator.of.toColumn).head())
 
     val media = Multimodal.syntheticMedia(spark, dir)
     val frames = Multimodal.decodeFrames(media)

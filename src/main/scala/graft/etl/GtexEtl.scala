@@ -52,7 +52,7 @@ object GtexEtl {
         * only by loadBucketed; any other producer MUST set it to the
         * real chain relation (EntityStore.chainRelation is the single
         * definition) because Q4 reads the ROWS, not just the presence.
-        * View graphs and the plain parquet layout leave it
+        * View graphs and JSON re-reads leave it
         * None and the queries derive the chain from `materials`. */
       bucketedDerives: Option[DataFrame] = None) {
 
@@ -242,7 +242,7 @@ object GtexEtl {
   def consentMeta(spark: SparkSession, varReportPath: String): DataFrame = {
     val consentId = consentVariable(
       graft.sources.Readers.dbgapVariables(spark, varReportPath))
-      .select("_id").head.getString(0)
+      .select("_id").head().getString(0)
     graft.sources.Readers.dbgapVarReportEnums(spark, varReportPath)
       .filter(col("var_id") === consentId)
       .select(col("code").cast("string").as("CONSENT"),

@@ -22,19 +22,16 @@ import graft.etl.GtexEtl.EntityGraph
   * union, and — unlike the view form — the other branches' input
   * relations are never even listed.
   *
-  * Two layouts:
-  *   - [[save]]/[[load]]: plain parquet paths — portable, no catalog.
-  *   - [[saveBucketed]]/[[loadBucketed]]: the query-optimized layout.
-  *     The corpus-sized tables are written `bucketBy` their join/pivot
-  *     key (saveAsTable + an explicit external path), so a catalog read
-  *     reports `HashPartitioning(key, B)` at the scan and
-  *     EnsureRequirements deletes the exchanges the plain layout pays:
-  *     Q7's characteristics pivot and its subject joins ride the bucket
-  *     distribution end-to-end, Q4's sample/subject build sides never
-  *     shuffle, and the file chain's three dataset_id joins are
-  *     co-located. This is the same class of planning-time win the
-  *     material_type partitioning delivered for Q3's scan — pruning
-  *     removed a read, bucketing removes the shuffles.
+  * The layout ([[saveBucketed]]/[[loadBucketed]]) is query-optimized:
+  * the corpus-sized tables are written `bucketBy` their join/pivot key
+  * (saveAsTable + an explicit external path), so a catalog read reports
+  * `HashPartitioning(key, B)` at the scan and EnsureRequirements deletes
+  * the exchanges an unbucketed scan pays: Q7's characteristics pivot and
+  * its subject joins ride the bucket distribution end-to-end, Q4's
+  * sample/subject build sides never shuffle, and the file chain's three
+  * dataset_id joins are co-located. This is the same class of
+  * planning-time win the material_type partitioning delivered for Q3's
+  * scan — pruning removed a read, bucketing removes the shuffles.
   */
 object EntityStore {
 
@@ -86,30 +83,6 @@ object EntityStore {
     "data_acquisitions" -> (_.dataAcquisitions),
     "diseases" -> (_.diseases))
 
-  private def tables(g: EntityGraph): Seq[(String, DataFrame)] =
-    TableAccessors.map { case (n, f) => n -> f(g) }
-
-  /** Write every entity table under `out/<name>`. One pass per table —
-    * each write is a distributed parquet job; nothing is collected. */
-  def save(g: EntityGraph, out: String): Unit =
-    tables(g).foreach { case (name, df) =>
-      val w = df.write.mode("overwrite")
-      Partitioned.get(name).fold(w)(cols => w.partitionBy(cols: _*))
-        .parquet(s"$out/$name")
-    }
-
-  /** Read a graph back from [[save]]'s layout. Partition columns come
-    * back as real columns (Spark restores them from the directory
-    * names); every consumer selects by name, so the order change is
-    * invisible. */
-  def load(spark: SparkSession, out: String): EntityGraph = {
-    def r(name: String): DataFrame = spark.read.parquet(s"$out/$name")
-    EntityGraph(r("datasets"), r("identifiers"), r("studies"),
-      r("study_groups"), r("group_members"), r("materials"),
-      r("anatomical_parts"), r("characteristics"), r("dimensions"),
-      r("distributions"), r("data_acquisitions"), r("diseases"))
-  }
-
   /** Catalog table name for a materialize dir — content-addressed so
     * concurrent materializations of different dirs in one session never
     * collide, and a re-load of the same dir resolves the same tables.
@@ -148,7 +121,7 @@ object EntityStore {
       Partitioned.get(name).fold(w)(cols => w.partitionBy(cols: _*))
         .saveAsTable(tableName(out, name))
     }
-    tables(g).foreach { case (name, df) =>
+    TableAccessors.map { case (n, f) => n -> f(g) }.foreach { case (name, df) =>
       Bucketed.get(name) match {
         case Some(key) => bucketedWrite(name, df, key)
         case None =>

@@ -81,7 +81,7 @@ object DedupOps {
 
   /** N-gram Jaccard near-dup pairs (jaccard >= 0.5) via a df-capped
     * inverted index: only pairs sharing at least one NON-HOT shingle are
-    * scored. Shingles with document frequency > `maxDf` are excluded
+    * scored. Shingles with document frequency > [[NgramMaxDf]] are excluded
     * from the index AND from the per-doc set sizes (the same truncated-
     * universe semantics as [[Texty.crossSourceOverlapFrom]], and the
     * oracle mirrors the cap), so the similarity is Jaccard over the
@@ -97,27 +97,28 @@ object DedupOps {
     * co-shuffled on the shingle hash (hinted shuffle_hash, never a
     * broadcast build side). A shingle table that fits the [[Fixpoint]]
     * driver tail is scored on the driver instead, output-identical. */
-  def ngramJaccard(spark: SparkSession, dir: String, maxDf: Int = 64): DataFrame =
+  def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
     Fixpoint.run("ngram_pairs", spark) { fp =>
-      ngramPairsIn(fp, dir, maxDf)(pairsFrame(fp, _))(_.orderBy("doc_a", "doc_b"))
+      ngramPairsIn(fp, dir)(pairsFrame(fp, _))(_.orderBy("doc_a", "doc_b"))
     }
+
+  private[graft] val NgramMaxDf: Int = 64
 
   /** Plan probe for the audit harness: the df-capped inverted index
     * exactly as the Spark pair pipeline builds it, BEFORE the checkpoint
     * that hides it from the final plan — PlanAudit asserts the hot-list
     * exclusion stays a co-shuffled LeftAnti with no broadcast build side
     * here. */
-  private[graft] def ngramIndexProbe(spark: SparkSession, dir: String,
-                                     maxDf: Int = 64): DataFrame =
-    ngramIndex(Caches.cached(shingleTable(spark, dir)), maxDf)
+  private[graft] def ngramIndexProbe(spark: SparkSession, dir: String): DataFrame =
+    ngramIndex(Caches.cached(shingleTable(spark, dir)))
 
   /** The shingle rows `raw` without those of a shingle whose document
-    * frequency exceeds `maxDf`. */
-  private def ngramIndex(raw: DataFrame, maxDf: Int): DataFrame = {
+    * frequency exceeds [[NgramMaxDf]]. */
+  private def ngramIndex(raw: DataFrame): DataFrame = {
     // document frequency via groupBy (map-side combine absorbs hot keys;
     // a window over h would buffer a hot posting list in one task)
     val hot = raw.groupBy("h").agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).select("h")
+      .filter(col("df") > NgramMaxDf).select("h")
     raw.join(hot.hint("shuffle_hash"), Seq("h"), "left_anti")
   }
 
@@ -132,18 +133,18 @@ object DedupOps {
     * same checkpoint, its index checkpoint owned by `fp`, so it is
     * released with the call unless the returned frame reads it, and
     * `onSpark` finishes. The stage logs one record (`stage=pairs`). */
-  private def ngramPairsIn[A](fp: Fixpoint, dir: String, maxDf: Int)(onDriver: Pairs => A)
+  private def ngramPairsIn[A](fp: Fixpoint, dir: String)(onDriver: Pairs => A)
                              (onSpark: DataFrame => A): A = {
     val t0 = System.nanoTime()
     // shingles arrive as 60-bit longs: every downstream shuffle/join
     // moves 8-byte keys instead of ~20-byte strings, and the set
     // semantics are unchanged (within-pair collision odds ~1e-13)
     val (raw, rows) = fp.cut(shingleTable(fp.session, dir))
-    fp.whole(rows * 2 * Fixpoint.FieldBytes)(ngramPairsOnDriver(fp, raw.collect(), maxDf).map { p =>
+    fp.whole(rows * 2 * Fixpoint.FieldBytes)(ngramPairsOnDriver(fp, raw.collect()).map { p =>
       fp.record(0, p.a.length, t0, "pairs")
       onDriver(p)
     }) {
-      val out = ngramPairsOnSpark(fp, raw, maxDf)
+      val out = ngramPairsOnSpark(fp, raw)
       fp.record(0, -1, t0, "pairs")
       onSpark(out)
     }
@@ -151,7 +152,7 @@ object DedupOps {
 
   /** The Spark pair pipeline over the checkpointed shingle rows `raw`,
     * unsorted: the cluster fixpoints consume the pair SET. */
-  private def ngramPairsOnSpark(fp: Fixpoint, raw: DataFrame, maxDf: Int): DataFrame = {
+  private def ngramPairsOnSpark(fp: Fixpoint, raw: DataFrame): DataFrame = {
     // a checkpoint, not Caches.cached (r22): the checkpoint's row-format
     // blocks scan cheaper for the self-join's two readers than the
     // columnar cache (same-JVM A/B of exactly this change + the counts
@@ -159,7 +160,7 @@ object DedupOps {
     // exactly once either way. The checkpoint hides the index build from
     // the final plan, so PlanAudit pins the LeftAnti/no-broadcast shape
     // on [[ngramIndexProbe]] instead.
-    val (sh, _) = fp.cut(ngramIndex(raw, maxDf))
+    val (sh, _) = fp.cut(ngramIndex(raw))
     // per-doc set sizes are corpus-sized (one row per document): both
     // attaches below co-shuffle on the doc key — never a broadcast
     // build side that scales with the corpus. Cached (r22): the relation
@@ -183,7 +184,7 @@ object DedupOps {
 
   /** The Spark pair pipeline's answer from the collected (doc_id, h)
     * rows, each operation its own: document frequencies over rows, hot
-    * shingles (df > `maxDf`) dropped, n_sh the rows left per document,
+    * shingles (df > [[NgramMaxDf]]) dropped, n_sh the rows left per document,
     * `inter` the row pairs of one non-hot shingle with doc_a < doc_b, and
     * jaccard = inter / (n_a + n_b − inter) in doubles, kept at ≥ 0.5.
     * The candidate pairs, Σ C(df, 2) over the non-hot shingles, are the
@@ -192,7 +193,7 @@ object DedupOps {
     * None — the Spark pipeline decides — when a doc_id or hash is null
     * (its joins have their own null semantics) or when the candidates do
     * not fit the driver tail. */
-  private def ngramPairsOnDriver(fp: Fixpoint, rows: Array[Row], maxDf: Int): Option[Pairs] =
+  private def ngramPairsOnDriver(fp: Fixpoint, rows: Array[Row]): Option[Pairs] =
     if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
     else {
       // rows ordered by (h, doc_id): each shingle's posting list is a run
@@ -206,7 +207,7 @@ object DedupOps {
       while (i < byH.length) {
         var j = i
         while (j < byH.length && byH(j)._1 == byH(i)._1) j += 1
-        if (j - i <= maxDf) runs += ((i, j))
+        if (j - i <= NgramMaxDf) runs += ((i, j))
         i = j
       }
       val lists = runs.result()
@@ -336,7 +337,7 @@ object DedupOps {
     * per round. */
   def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
     Fixpoint.run("label_propagation", spark) { fp =>
-      ngramPairsIn(fp, dir, 64)(p => propagateOnDriver(fp, Fixpoint.Indexed(p.a, p.b))) { pairs =>
+      ngramPairsIn(fp, dir)(p => propagateOnDriver(fp, Fixpoint.Indexed(p.a, p.b))) { pairs =>
         propagationIn(fp, pairs.select(col("doc_a"), col("doc_b"))).orderBy("doc_id")
       }
     }
@@ -432,7 +433,7 @@ object DedupOps {
     * when the pair stage ran on the driver the whole operator does. */
   def nearDupClustersStar(spark: SparkSession, dir: String): DataFrame =
     Fixpoint.run("star_contraction", spark) { fp =>
-      ngramPairsIn(fp, dir, 64)(p => starOnDriver(fp, Fixpoint.Indexed(p.a, p.b))) { pairs =>
+      ngramPairsIn(fp, dir)(p => starOnDriver(fp, Fixpoint.Indexed(p.a, p.b))) { pairs =>
         starIn(fp, pairs.select(col("doc_a"), col("doc_b"))).orderBy("doc_id")
       }
     }
@@ -654,10 +655,11 @@ object DedupOps {
 
   /** Embedding near-dup WITHOUT a pre-existing blocking label — the
     * clustering step [[embeddingNearDup]] assumes done. Coarse Voronoi
-    * blocking from a LEARNED quantizer: [[KMeans.fit]] trains
-    * deterministic fixed-iteration Lloyd's centroids (init: vectors
-    * 10..10+nlist with nlist = ⌊√n⌋, [[KMeans.autoNlist]] — ~√n lists of
-    * ~√n vectors bound the same-list pair space at n^1.5), every vector
+    * blocking from a LEARNED quantizer: [[KMeans.fitSized]] trains
+    * deterministic fixed-iteration Lloyd's centroids (init: the nlist
+    * vectors from [[KMeans.FirstSeed]] on, nlist = ⌊√n⌋,
+    * [[KMeans.autoNlist]] — ~√n lists of ~√n vectors bound the
+    * same-list pair space at n^1.5), every vector
     * joins its max-cosine list, and only same-list pairs pay the exact
     * cosine. The blocking is nprobe=1, so cross-list near-dups are
     * missed — the standard recall/cost trade, and the oracle replays the
@@ -684,7 +686,7 @@ object DedupOps {
       val nlist = KMeans.autoNlist(n)
       lazy val q = Caches.cached(quantized(spark, dir))
       fp.whole(Fixpoint.vectorBytes(n))(Fixpoint.Vectors.collect(quantized(spark, dir)).map { v =>
-        val (asg, _) = KMeans.lloydOnDriver(fp, v, nlist = nlist)
+        val (asg, _) = KMeans.lloydOnDriver(fp, v, nlist)
         // each list's vector rows, in id order
         val lists = v.ids.indices.filter(asg(_).nonEmpty).groupBy(asg(_).get)
           .view.mapValues(_.toArray).toMap
@@ -699,7 +701,7 @@ object DedupOps {
         }
       }) {
         fp.record(0, -1, t0, "pairs")
-        val (asg, _) = KMeans.fitSized(q, n, nlist = nlist)
+        val (asg, _) = KMeans.fitSized(q, n, nlist)
         // the assignment is corpus-LENGTH (one row per vector) even
         // though it is narrow, so attaching it must co-shuffle on
         // vec_id — Catalyst would happily broadcast it at toy scale and

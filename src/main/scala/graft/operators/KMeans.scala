@@ -15,7 +15,7 @@ import graft.functions.VectorFunctions
   * Everything is exact integer math until the final cosine, so training
   * is bit-deterministic across engines and partition orders, and the
   * DuckDB oracle replays it as unrolled CTEs:
-  *  - init: the vectors with vec_id `firstSeed until firstSeed+nlist`
+  *  - init: the vectors with vec_id `FirstSeed until FirstSeed+nlist`
   *    (content-addressed, no RNG seed to agree on);
   *  - assign: max-cosine centroid, ties to the smaller centroid id;
   *  - update: component-wise truncated integer MEAN (`sum div count` —
@@ -37,7 +37,12 @@ import graft.functions.VectorFunctions
   */
 object KMeans {
 
-  /** Lloyd's for `iters` rounds; returns (assignment, centroids) =
+  /** Lloyd's round count, and the first vec_id of the seed window. */
+  private[graft] val Iters: Int = 2
+  private[graft] val FirstSeed: Int = 10
+
+  /** Lloyd's for [[Iters]] rounds over `q`, whose row count is `rows`
+    * (callers read it from the parquet footers); returns (assignment, centroids) =
     * ((vec_id, cl), (cl, cv, cnrm)) with the centroids being the integer
     * means OF that final assignment. The rounds run under [[Fixpoint]]:
     * on the driver when the vectors fit its tail (both frames then hold
@@ -46,31 +51,23 @@ object KMeans {
     * all use it at least twice) also get to reuse as materialized blocks;
     * see the in-loop comment for why a cache alone is not enough.
     *
-    * The `nlist` default (10) exists for unit specs; production callers
-    * pass [[autoNlist]] so list count — and with it per-list size and the
-    * block-local pair space of every consumer — scales as √n. */
-  def fit(q: DataFrame, iters: Int = 2, nlist: Int = 10,
-          firstSeed: Int = 10): (DataFrame, DataFrame) =
-    fitSized(q, q.count(), iters, nlist, firstSeed)
-
-  /** [[fit]] for a caller that already knows `q`'s row count `rows` —
-    * every production caller counts the table for [[autoNlist]]. */
-  private[graft] def fitSized(q: DataFrame, rows: Long, iters: Int = 2, nlist: Int = 10,
-                              firstSeed: Int = 10): (DataFrame, DataFrame) =
+    * Production callers pass [[autoNlist]] so list count — and with it
+    * per-list size and the block-local pair space of every consumer —
+    * scales as √n. */
+  private[graft] def fitSized(q: DataFrame, rows: Long, nlist: Int): (DataFrame, DataFrame) =
     Fixpoint.using("kmeans", q.sparkSession) { fp =>
       // state: the vectors themselves, (vec_id, qv[Dim], nrm) per row
       fp.whole(Fixpoint.vectorBytes(rows))(
-        Fixpoint.Vectors.collect(q).map(fitOnDriver(fp, _, iters, nlist, firstSeed)))(
-        fitOnSpark(fp, q, iters, nlist, firstSeed))
+        Fixpoint.Vectors.collect(q).map(fitOnDriver(fp, _, nlist)))(
+        fitOnSpark(fp, q, nlist))
     } { case (asg, cents) => Seq(asg, cents) }
 
-  private def fitOnSpark(fp: Fixpoint, q: DataFrame, iters: Int, nlist: Int,
-                         firstSeed: Int): (DataFrame, DataFrame) = {
+  private def fitOnSpark(fp: Fixpoint, q: DataFrame, nlist: Int): (DataFrame, DataFrame) = {
     val cents0 = q
-      .filter(col("vec_id") >= firstSeed && col("vec_id") < firstSeed + nlist)
+      .filter(col("vec_id") >= FirstSeed && col("vec_id") < FirstSeed + nlist)
       .select(col("vec_id").as("cl"), col("qv").as("cv"), col("nrm").as("cnrm"))
     val asg0: DataFrame = q.select(col("vec_id"), col("vec_id").as("cl"))
-    fp.onSpark((asg0, cents0), iters, converging = false)(s => Seq(s._1, s._2)) {
+    fp.onSpark((asg0, cents0), Iters, converging = false)(s => Seq(s._1, s._2)) {
       case ((_, cents), _) =>
         // cut lineage at every half-round: a round's plan otherwise embeds
         // several copies of `q` through the previous round's centroids
@@ -90,9 +87,8 @@ object KMeans {
   }
 
   /** [[lloydOnDriver]]'s assignment and centroids as frames. */
-  private def fitOnDriver(fp: Fixpoint, v: Fixpoint.Vectors, iters: Int, nlist: Int,
-                          firstSeed: Int): (DataFrame, DataFrame) = {
-    val (asg, cents) = lloydOnDriver(fp, v, iters, nlist, firstSeed)
+  private def fitOnDriver(fp: Fixpoint, v: Fixpoint.Vectors, nlist: Int): (DataFrame, DataFrame) = {
+    val (asg, cents) = lloydOnDriver(fp, v, nlist)
     (assignmentFrame(fp.session, v, asg),
       Fixpoint.frame(fp.session, StructType(Seq(StructField("cl", LongType),
           StructField("cv", ArrayType(LongType)), StructField("cnrm", LongType))),
@@ -109,14 +105,13 @@ object KMeans {
     * zero-norm means dropped. Returns each vector row's centroid id (None
     * for a vector with no centroid to join: an empty centroid table) and
     * the final centroids in cl order. */
-  private[operators] def lloydOnDriver(fp: Fixpoint, v: Fixpoint.Vectors, iters: Int = 2,
-                                       nlist: Int, firstSeed: Int = 10)
+  private[operators] def lloydOnDriver(fp: Fixpoint, v: Fixpoint.Vectors, nlist: Int)
       : (Array[Option[Long]], IndexedSeq[Cent]) = {
     val n = v.ids.length
     val cents0 = (0 until n)
-      .filter(i => v.ids(i) >= firstSeed && v.ids(i) < firstSeed + nlist)
+      .filter(i => v.ids(i) >= FirstSeed && v.ids(i) < FirstSeed + nlist)
       .map(i => Cent(v.ids(i), v.qv(i), v.nrm(i)))
-    fp.onDriver((v.ids.map(Option(_)), cents0), iters) { case ((_, cents), _) =>
+    fp.onDriver((v.ids.map(Option(_)), cents0), Iters) { case ((_, cents), _) =>
       val sqrtC = cents.map(c => math.sqrt(c.cnrm.toDouble))
       val cl = Array.tabulate(n) { i =>
         val sq = math.sqrt(v.nrm(i).toDouble)

@@ -35,12 +35,11 @@ object SimilarityOps {
     * queries, not the 10 the top-k demos use — 10 queries carry only
     * 14-23 true mutual edges, so the gate resolved recall in ~7-point
     * increments (an r11 verdict finding; the sf10 zeros were partly
-    * instrument, not only graph). Decoupled from [[NQueries]] because
-    * that constant doubles as the k-means seed-window offset
-    * ([[ivfTopK]]'s firstSeed) — moving it would retrain every learned
-    * quantizer in the suite. The gates stay O(|eval|·n): 100 broadcast
+    * instrument, not only graph). Decoupled from [[NQueries]], the
+    * top-k demos' query ids 0..9, which end where [[KMeans.FirstSeed]]'s
+    * seed window starts. The gates stay O(|eval|·n): 100 broadcast
     * rows against the corpus, linear at any scale. */
-  private val EvalQueries = 100
+  private[graft] val EvalQueries = 100
 
   /** Exact top-k cosine neighbors for each query vector (vec_id < 10). */
   def bruteForceTopK(spark: SparkSession, dir: String): DataFrame =
@@ -151,10 +150,10 @@ object SimilarityOps {
   /** IVF-style approximate top-k — the other standard ANN scale path
     * beside LSH. Three phases, all deterministic and oracle-replicable:
     *
-    *  1. coarse quantizer: [[KMeans.fit]] with nlist = ⌊√n⌋
-    *     ([[KMeans.autoNlist]]; deterministic init from vectors
-    *     10..10+nlist) yields the inverted-list assignment and its
-    *     truncated-integer-mean centroids;
+    *  1. coarse quantizer: [[KMeans.fitSized]] with nlist = ⌊√n⌋
+    *     ([[KMeans.autoNlist]]; deterministic init from the nlist
+    *     vectors from [[KMeans.FirstSeed]] on) yields the inverted-list
+    *     assignment and its truncated-integer-mean centroids;
     *  2. probe: each query scores the [[autoNprobe]] max-cosine
     *     centroids;
     *  3. search: exact cosine only inside the probed lists.
@@ -182,7 +181,7 @@ object SimilarityOps {
     * count from parquet metadata rather than re-counting the frame. */
   private def ivfTopKFrom(q: DataFrame, corpusN: Long): DataFrame = {
     val nlist = KMeans.autoNlist(corpusN)
-    val (asg, cents) = KMeans.fitSized(q, corpusN, nlist = nlist, firstSeed = NQueries)
+    val (asg, cents) = KMeans.fitSized(q, corpusN, nlist)
     // corpus-length assignment: co-shuffle, never broadcast
     val lists = q.join(asg.hint("shuffle_hash"), "vec_id")
     val queries = q.filter(col("vec_id") < NQueries)
@@ -339,7 +338,7 @@ object SimilarityOps {
     val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
     val n = graft.Tables.rowCount(spark, dir, "embeddings")
     val nlist = KMeans.autoNlist(n)
-    val (_, cents) = KMeans.fitSized(q, n, nlist = nlist)
+    val (_, cents) = KMeans.fitSized(q, n, nlist)
     // checkpoint the 2-probe assignment: it is a NARROW (vec_id, cl)
     // frame whose lineage holds two corpus-wide centroid-scoring
     // aggregates, and un-barriered it would re-evaluate three times
@@ -417,14 +416,15 @@ object SimilarityOps {
   private[graft] def knnGraphBitsEdges(spark: SparkSession, dir: String): DataFrame = {
     val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
     val n = graft.Tables.rowCount(spark, dir, "embeddings")
-    // dedup = false (r21): multi-table collisions repeat with the same
-    // cosine and mutualize's TopKEdgesAgg collapses them in its buffer —
-    // the full-relation distinct exchange is redundant (output unchanged)
-    mutualizeCore(bitsScored(q, n, dedup = false))
+    mutualizeCore(bitsScored(q, n))
   }
 
   /** The bit-signature candidate relation behind [[knnGraphBits]] —
-    * distinct scored same-bucket pairs (ida < idb, exact cosine).
+    * scored same-bucket pairs (ida < idb, exact cosine). Not distinct
+    * (r21): a pair colliding in several tables repeats with the same
+    * cosine, and every consumer feeds TopKEdgesAgg, whose bounded buffer
+    * collapses the repeats — a full-relation distinct exchange would be
+    * pure overhead.
     * Factored out because [[knnGraphRefined]] seeds its descent from
     * exactly these candidates, at its own seed constants
     * ([[DescentSeedTables]]/[[DescentSeedTarget]]); `tables`/`targetList`
@@ -434,7 +434,6 @@ object SimilarityOps {
   private def bitsScored(q: DataFrame, n: Long,
                          tables: Int = BitsTables,
                          targetList: Long = BitsTargetList,
-                         dedup: Boolean = true,
                          checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
     // checkpoint the NARROW (vec_id, cl) signature assignment: the
     // b·tables plane dot products per row run exactly ONCE here,
@@ -443,17 +442,10 @@ object SimilarityOps {
     // cached quantized frame
     val narrow = checkpoint(bitAssign(q, n, tables, targetList))
     val blocked = q.join(narrow.hint("shuffle_hash"), "vec_id")
-    val scored = DedupOps.saltedBlockCosines(
+    DedupOps.saltedBlockCosines(
         capSplit(blocked, CapFactor * targetList, narrow = narrow,
           broadcastSizes = false), "blk")
       .select(col("vec_a").as("ida"), col("vec_b").as("idb"), col("cosine"))
-    // dedup = false everywhere TopKEdgesAgg consumes the pairs (the
-    // descent seed AND, as of r21, the bits graph via mutualize): a pair
-    // colliding in several tables repeats with the same cosine and the
-    // bounded buffer collapses it — the full-relation dedup exchange is
-    // pure overhead there. The flag stays for consumers that need true
-    // set semantics (none in the suite today).
-    if (dedup) scored.distinct() else scored
   }
 
   /** Internal neighbor-list width and round count for
@@ -623,7 +615,7 @@ object SimilarityOps {
         // initialPartitionNum), not something this operator should scope.
         val t0 = System.nanoTime()
         val (seed, seedRows) = fp.cut(directedTopFrom(
-          bitsScored(q, n, DescentSeedTables, DescentSeedTarget, dedup = false,
+          bitsScored(q, n, DescentSeedTables, DescentSeedTarget,
             checkpoint = fp.cut(_)._1),
           DescentK))
         fp.record(0, seedRows, t0, "seed")
@@ -953,7 +945,7 @@ object SimilarityOps {
     val q = graft.Caches.cached(DedupOps.quantized(spark, dir))
     val n = graft.Tables.rowCount(spark, dir, "embeddings")
     directedTopFrom(
-      bitsScored(q, n, DescentSeedTables, DescentSeedTarget, dedup = false), DescentK)
+      bitsScored(q, n, DescentSeedTables, DescentSeedTarget), DescentK)
   }
 
   /** Directed top-k per endpoint from a scored pair relation — the
@@ -1244,39 +1236,38 @@ object SimilarityOps {
         col("e.cosine").as("cosine"), (col("p") + 1).cast("long").as("rnk"))
       .orderBy("query_id", "rnk")
 
-  /** Integer PageRank over the mutual k-NN graph — semantic authority
+  /** PageRank over the DESCENT-REFINED graph — linear graph build (the
+    * 100 TB composition; see [[knnComponentsRefined]]). */
+  def pageRankRefined(spark: SparkSession, dir: String): DataFrame =
+    pageRankOverGraph(spark, dir, knnGraphRefinedEdges(spark, dir))
+
+  /** Integer PageRank over a mutual k-NN graph — semantic authority
     * scoring: vectors many vectors agree are their nearest neighbors
     * rank high, the label-free "representative member" signal for a
     * semantic cluster (the companion of [[knnComponentsRefined]] on the same
     * edge-list seam). Simplified PageRank, defined EXACTLY: rank in ppm,
     * r₀ = 10⁶, rₜ₊₁(v) = 150000 + (850000 · Σ_{u→v} (rₜ(u) div
-    * deg(u))) div 10⁶, a FIXED 10 iterations — every operation integer
-    * (both engines floor identically on non-negatives), no dangling
-    * redistribution (the mutual graph has no sinks among connected
-    * nodes; isolated vectors hold the base rank 150000+850000·0).
+    * deg(u))) div 10⁶, a FIXED [[PageRankIters]] iterations — every
+    * operation integer (both engines floor identically on non-negatives),
+    * no dangling redistribution (the mutual graph has no sinks among
+    * connected nodes; isolated vectors hold the base rank 150000+850000·0).
     * Fixed iterations → deterministic, oracle-replayable (the DuckDB
-    * twin unrolls the same 10 rounds), and no convergence test —
+    * twin unrolls the same rounds), and no convergence test —
     * unlike the cluster fixpoints there is nothing to test. At 100 TB:
     * one (src, dst, deg) relation checkpointed; each round is a
     * rank⋈edges co-shuffle + a dst-keyed sum (deg ≤ k = 3, so
     * contribution fan-out is bounded), and the rounds chain lazily into
     * one checkpoint. An edge list that fits the [[Fixpoint]] driver tail
     * with the node ids runs the whole operator on the driver. */
-  def pageRank(spark: SparkSession, dir: String, iters: Int = 10): DataFrame =
-    pageRankOverGraph(spark, dir, knnGraph2Edges(spark, dir), iters)
-
-  /** PageRank over the DESCENT-REFINED graph — same recurrence, linear
-    * graph build (the 100 TB composition; see [[knnComponentsRefined]]). */
-  def pageRankRefined(spark: SparkSession, dir: String): DataFrame =
-    pageRankOverGraph(spark, dir, knnGraphRefinedEdges(spark, dir))
-
   private[graft] def pageRankOverGraph(spark: SparkSession, dir: String,
-                                       graph: DataFrame, iters: Int = 10): DataFrame =
-    pageRankOf(graft.Tables.load(spark, dir, "embeddings").select(col("vec_id")), graph, iters,
+                                       graph: DataFrame): DataFrame =
+    pageRankOf(graft.Tables.load(spark, dir, "embeddings").select(col("vec_id")), graph,
       graft.Tables.rowCount(spark, dir, "embeddings"), sorted = true)
 
+  private[graft] val PageRankIters: Int = 10
+
   /** The ppm recurrence over an explicit (nodes, undirected edges) pair —
-    * shared by [[pageRank]] and [[clusterExemplars]] so the composed
+    * shared by [[pageRankOverGraph]] and [[clusterExemplarsFrom]] so the composed
     * operator builds the graph ONCE. `sorted` adds the presentation sort
     * by vec_id; consumers that join the rank relation onward (exemplars)
     * skip it, since the global sort of the node-sized frame buys them
@@ -1305,27 +1296,26 @@ object SimilarityOps {
     * passes nodes = the full vector id set ⊇ all graph endpoints, so the
     * two forms are output-identical today; a future caller with nodes ⊂
     * endpoints would not be. */
-  private def pageRankOf(nodes: DataFrame, g: DataFrame, iters: Int, nodeCount: Long,
+  private def pageRankOf(nodes: DataFrame, g: DataFrame, nodeCount: Long,
                          sorted: Boolean): DataFrame =
     Fixpoint.run("pagerank", nodes.sparkSession) { fp =>
-      require(iters >= 1, "pageRank: iters must be >= 1")
       val t0 = System.nanoTime()
       val (ge, m) = fp.cut(g.select(col("ida"), col("idb")))
       fp.whole((2 * m + nodeCount) * Fixpoint.FieldBytes)(
-          pageRankOnDriver(fp, nodes.collect(), ge.collect(), iters, t0)) {
+          pageRankOnDriver(fp, nodes.collect(), ge.collect(), t0)) {
         fp.record(0, 2 * m, t0, "pagerank")
-        val ranks = pageRankOnSpark(fp, nodes, ge, iters, nodeCount)
+        val ranks = pageRankOnSpark(fp, nodes, ge, nodeCount)
         if (sorted) ranks.orderBy("vec_id") else ranks
       }
     }
 
-  private def pageRankOnSpark(fp: Fixpoint, nodes: DataFrame, g: DataFrame, iters: Int,
+  private def pageRankOnSpark(fp: Fixpoint, nodes: DataFrame, g: DataFrame,
                               nodeCount: Long): DataFrame = {
     val edges = g.unionByName(g.select(col("idb").as("ida"), col("ida").as("idb")))
       .toDF("src", "dst")
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     // LEAN materialization barrier, not a plan-carrying cache: the loop
-    // references the edge relation `iters` times, so it becomes a
+    // references the edge relation once per round, so it becomes a
     // shallow local checkpoint — (src, dst, deg) is ≤ k·2n short rows.
     // Reading an InMemoryRelation whose lineage is a join over the
     // cached ARRAY-bearing quantized frame instead cost ~0.7 s per round
@@ -1344,7 +1334,7 @@ object SimilarityOps {
     // per-round left join back onto the node frame is gone: 10 joins + 10
     // node-frame exchanges removed, guide §2.4), and isolated nodes
     // re-attach ONCE at the end via coalesce on the final left join.
-    // Output identical for any iters ≥ 1 (the suite always runs 10).
+    // Output identical for any round count ≥ 1.
     //
     // The rounds chain LAZILY — each is referenced exactly once by the
     // next, so nothing re-evaluates — and the single checkpoint at the
@@ -1360,7 +1350,7 @@ object SimilarityOps {
       val t0 = System.nanoTime()
       var r = out.select(col("src").as("vec_id")).distinct()
         .withColumn("rank_ppm", lit(1000000L))
-      (1 to iters).foreach { _ =>
+      (1 to PageRankIters).foreach { _ =>
         r = r.join(out.hint("shuffle_hash"), col("vec_id") === col("src"))
           .select(col("dst"), expr("rank_ppm DIV deg").as("c"))
           .groupBy("dst").agg(sum(col("c")).as("s"))
@@ -1368,7 +1358,7 @@ object SimilarityOps {
             expr("150000L + (850000L * s) DIV 1000000L").as("rank_ppm"))
       }
       val (ranks, rows) = fp.cut(r)
-      fp.record(iters, rows, t0)
+      fp.record(PageRankIters, rows, t0)
       ranks
     }
     nodes.select(col("vec_id"))
@@ -1387,7 +1377,7 @@ object SimilarityOps {
     * have their own null semantics). The decision logs one record
     * (`stage=pagerank`). */
   private def pageRankOnDriver(fp: Fixpoint, nodeRows: Array[Row], edgeRows: Array[Row],
-                               iters: Int, t0: Long): Option[DataFrame] =
+                               t0: Long): Option[DataFrame] =
     if (nodeRows.exists(_.isNullAt(0)) || edgeRows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
       None
     else {
@@ -1400,7 +1390,7 @@ object SimilarityOps {
       // -1 = no rank row (a node that received no contribution leaves the
       // frame, exactly as it leaves the Spark round's aggregate)
       val r0 = Array.tabulate(e.n)(u => if (deg(u) > 0) 1000000L else -1L)
-      val ranks = fp.onDriver(r0, iters) { (r, _) =>
+      val ranks = fp.onDriver(r0, PageRankIters) { (r, _) =>
         val s = new Array[Long](e.n)
         val got = new Array[Boolean](e.n)
         for (i <- e.a.indices) if (r(e.a(i)) >= 0) {
@@ -1422,20 +1412,7 @@ object SimilarityOps {
         }))
     }
 
-  /** Cluster exemplars — the composed read-side of the whole similarity
-    * family: for every semantic cluster ([[knnComponentsFrom]]' star
-    * contraction), its most AUTHORITATIVE member ([[pageRank]]'s top
-    * rank, ties to the smaller id) plus the member count — the "show me
-    * one representative document per topic" query a curation pipeline
-    * runs. The mutual k-NN graph is built ONCE and feeds both the
-    * component fixpoint and the rank recurrence; the final exemplar pick
-    * is a per-cluster window (bounded by cluster size), never a global
-    * sort. */
-  def clusterExemplars(spark: SparkSession, dir: String): DataFrame =
-    clusterExemplarsFrom(spark, dir,
-      knnGraph2Edges(spark, dir).select(col("ida"), col("idb")))
-
-  /** [[clusterExemplars]] over the DESCENT-REFINED graph — the linear
+  /** [[clusterExemplarsFrom]] over the DESCENT-REFINED graph — the linear
     * composition that also carries at-scale RECALL: the refined graph
     * holds high recall at its measured operating point (RECALL artifact)
     * at an O(n) cost class. This is the variant a large-corpus curation
@@ -1444,6 +1421,15 @@ object SimilarityOps {
     clusterExemplarsFrom(spark, dir,
       knnGraphRefinedEdges(spark, dir).select(col("ida"), col("idb")))
 
+  /** Cluster exemplars — the composed read-side of the whole similarity
+    * family: for every semantic cluster of the mutual k-NN `graph`
+    * ([[knnComponentsFrom]]' star contraction), its most AUTHORITATIVE
+    * member ([[pageRankOverGraph]]'s top rank, ties to the smaller id)
+    * plus the member count — the "show me one representative document
+    * per topic" query a curation pipeline runs. The graph is built ONCE
+    * and feeds both the component fixpoint and the rank recurrence; the
+    * final exemplar pick is a per-cluster window (bounded by cluster
+    * size), never a global sort. */
   private[graft] def clusterExemplarsFrom(spark: SparkSession, dir: String,
                                           graph: DataFrame): DataFrame =
     Fixpoint.run("cluster_exemplars", spark) { fp =>
@@ -1453,7 +1439,7 @@ object SimilarityOps {
         .select(col("doc_id").as("vec_id"), col("cluster_id"))
       val nodes = graft.Tables.load(spark, dir, "embeddings").select(col("vec_id"))
       val n = graft.Tables.rowCount(spark, dir, "embeddings")
-      val pr = pageRankOf(nodes, g, 10, n, sorted = false)
+      val pr = pageRankOf(nodes, g, n, sorted = false)
         .select(col("vec_id"), col("rank_ppm"))
       // at most n rows of (vec_id, cluster_id) and of (vec_id, rank_ppm)
       fp.whole(n * 4 * Fixpoint.FieldBytes)(exemplarsOnDriver(spark, comp.collect(), pr.collect())) {

@@ -198,15 +198,14 @@ object TextOps {
   /** Corpus cleaning (north-star composition): the keep/drop decision a
     * training pipeline applies before anything else — drop exact
     * duplicates (keep the canonical group minimum), drop languages off
-    * the whitelist, drop low-quality documents — with per-reason tallies
+    * the [[FilterLangs]] whitelist, drop documents of quality under
+    * [[FilterMinQuality]] — with per-reason tallies
     * so the filtering is auditable. Decision order is fixed
     * (duplicate → language → quality) so every document lands in exactly
     * one bucket. Composes [[DedupOps.exact]] and [[qualityScore]]: two
     * doc-keyed aggregations joined on doc_id — the corpus never shuffles
     * on anything but its natural key. */
-  def corpusFilter(spark: SparkSession, dir: String,
-                   langs: Seq[String] = Seq("de", "en", "es", "fr"),
-                   minQuality: Double = 0.4): DataFrame = {
+  def corpusFilter(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents").select(col("doc_id"), col("lang"))
     val canonical = DedupOps.exact(spark, dir).select(col("doc_id"), col("is_canonical"))
     val quality = qualityScore(spark, dir).select(col("doc_id"), col("quality"))
@@ -218,24 +217,27 @@ object TextOps {
       .join(quality, Seq("doc_id"), "left")
       .withColumn("status",
         when(col("is_canonical") === 0, "drop_duplicate")
-          .when(!col("lang").isin(langs: _*), "drop_lang")
-          .when(col("quality").isNull || col("quality") < minQuality, "drop_quality")
+          .when(!col("lang").isin(FilterLangs: _*), "drop_lang")
+          .when(col("quality").isNull || col("quality") < FilterMinQuality, "drop_quality")
           .otherwise("kept"))
       .groupBy("status").agg(count(lit(1)).as("n_docs"))
       .orderBy("status")
   }
 
+  private[graft] val FilterLangs: Seq[String] = Seq("de", "en", "es", "fr")
+  private[graft] val FilterMinQuality: Double = 0.4
+
   /** Winnowing fingerprints (north-star op — the ROLLING-hash document
-    * fingerprint): hash every char k-gram of the normalized text, slide
-    * a w-wide window over the hash sequence, and keep each window's
-    * minimum — the classic winnowing scheme whose fingerprint set is
-    * position-robust (any shared substring of length ≥ k+w-1 guarantees
-    * a shared fingerprint). One explode (k-grams) + one doc-keyed window
-    * + distinct: all shuffles key on doc_id, the natural partitioning.
+    * fingerprint): hash every char k-gram ([[WinnowK]]) of the normalized
+    * text, slide a w-wide window ([[WinnowW]]) over the hash sequence,
+    * and keep each window's minimum — the classic winnowing scheme whose
+    * fingerprint set is position-robust (any shared substring of length
+    * ≥ k+w-1 guarantees a shared fingerprint). One explode (k-grams) +
+    * one doc-keyed window + distinct: all shuffles key on doc_id, the
+    * natural partitioning.
     * Emitted row-per-fingerprint so overlap joins compose directly with
     * the inverted-index dedup pattern. */
-  def winnowFingerprint(spark: SparkSession, dir: String,
-                        k: Int = 8, w: Int = 4): DataFrame = {
+  def winnowFingerprint(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val norm = lower(concat_ws(" ", tokens(col("text"))))
     // the cache is a required barrier (same trap as the shingle path):
@@ -251,26 +253,29 @@ object TextOps {
     // instead of inside the single-split scan task
     val d = docs.repartition(col("doc_id"))
       .select(col("doc_id"), norm.as("nt"))
-      .withColumn("ng", length(col("nt")) - lit(k - 1))
-      .filter(col("ng") >= w) // need at least one full window
+      .withColumn("ng", length(col("nt")) - lit(WinnowK - 1))
+      .filter(col("ng") >= WinnowW) // need at least one full window
       .transform(graft.Caches.cached(_))
     val grams = d.select(col("doc_id"), col("ng"),
-      posexplode(expr(s"transform(sequence(1, length(nt) - ${k - 1})," +
-        s" i -> substring(nt, i, $k))")).as(Seq("pos0", "gram")))
+      posexplode(expr(s"transform(sequence(1, length(nt) - ${WinnowK - 1})," +
+        s" i -> substring(nt, i, $WinnowK))")).as(Seq("pos0", "gram")))
     val win = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("pos0").rowsBetween(0, w - 1)
+      .partitionBy("doc_id").orderBy("pos0").rowsBetween(0, WinnowW - 1)
     grams
       .select(col("doc_id"), col("ng"), col("pos0"),
         Texty.baseHash60(col("gram")).as("h"))
       .withColumn("mn", min(col("h")).over(win))
-      .filter(col("pos0") <= col("ng") - w) // full windows only (pos0 is 0-based)
+      .filter(col("pos0") <= col("ng") - WinnowW) // full windows only (pos0 is 0-based)
       .select(col("doc_id"), col("mn").as("fingerprint")).distinct()
       .orderBy("doc_id", "fingerprint")
   }
 
+  private[graft] val WinnowK: Int = 8
+  private[graft] val WinnowW: Int = 4
+
   /** Sequence packing (north-star op): assign documents to fixed
-    * token-budget training sequences. Documents are ordered
-    * deterministically within each language stratum and cut into
+    * token-budget ([[PackBudget]]) training sequences. Documents are
+    * ordered deterministically within each language stratum and cut into
     * sequences wherever the running token total crosses the budget —
     * `seq_id = (cumsum - n_tokens) div budget`, the streaming-friendly
     * first-fit-in-order policy (greedy bin packing is inherently
@@ -278,8 +283,7 @@ object TextOps {
     * run). The window is PARTITIONED BY lang — never a partition-less
     * global window — so state per task is one stratum, and strata pack
     * independently exactly as a sharded packer would. */
-  def packSequences(spark: SparkSession, dir: String,
-                    budget: Long = 2048L): DataFrame = {
+  def packSequences(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.spread(Tables.load(spark, dir, "documents"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy("doc_id")
@@ -287,9 +291,11 @@ object TextOps {
         size(tokens(col("text"))).cast("long").as("n_tokens"))
       .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
       .withColumn("seq_id",
-        ((col("cum_tokens") - col("n_tokens")) / lit(budget)).cast("long"))
+        ((col("cum_tokens") - col("n_tokens")) / lit(PackBudget)).cast("long"))
       .orderBy("lang", "doc_id")
   }
+
+  private[graft] val PackBudget: Long = 2048L
 
   /** Eval-set decontamination (north-star op): the overlap check a
     * training pipeline runs before anything ships — flag every corpus
@@ -306,19 +312,20 @@ object TextOps {
     * partitioning), and the corpus-sized shingle frame never shuffles on
     * shingle hash at all.
     *
-    * HONESTY CAVEAT on the fixture: the `doc_id % evalMod == 0` hold-out
-    * used here (so the DuckDB oracle can replay the split) is 1/evalMod
+    * HONESTY CAVEAT on the fixture: the `doc_id % EvalMod == 0` hold-out
+    * used here (so the DuckDB oracle can replay the split) is 1/EvalMod
     * of the CORPUS — it grows with corpus size, so the broadcast bound
     * above does NOT hold for this stand-in eval set at 100 TB. The
     * production deployment swaps the modular filter for the real
     * benchmark table (bounded by construction); if the eval side ever
     * were corpus-proportional, the right plan flips to the langId
     * co-shuffle shape instead. */
-  def decontaminate(spark: SparkSession, dir: String,
-                    evalMod: Long = 20L): DataFrame =
-    decontaminateFrom(Tables.spread(Tables.load(spark, dir, "documents")), evalMod)
+  def decontaminate(spark: SparkSession, dir: String): DataFrame =
+    decontaminateFrom(Tables.spread(Tables.load(spark, dir, "documents")))
 
-  def decontaminateFrom(docs: DataFrame, evalMod: Long = 20L): DataFrame = {
+  private[graft] val EvalMod: Long = 20L
+
+  def decontaminateFrom(docs: DataFrame): DataFrame = {
     // cache the tokenized column BEFORE the shingle lambda: the barrier
     // stops projection collapse from inlining the split into the
     // per-element transform (which re-tokenizes per shingle — O(len²)
@@ -330,9 +337,9 @@ object TextOps {
       .select(col("doc_id"), explode(shingles(col("toks"), 3)).as("sh"))
       .select(col("doc_id"), Texty.baseHash60(col("sh")).as("h"))
       .transform(graft.Caches.cached(_)) // read twice: eval index + corpus side
-    val evalIdx = sh.filter(pmod(col("doc_id"), lit(evalMod)) === 0)
+    val evalIdx = sh.filter(pmod(col("doc_id"), lit(EvalMod)) === 0)
       .select(col("h"), col("doc_id").as("eval_doc_id"))
-    val corpus = sh.filter(pmod(col("doc_id"), lit(evalMod)) =!= 0)
+    val corpus = sh.filter(pmod(col("doc_id"), lit(EvalMod)) =!= 0)
     corpus.join(broadcast(evalIdx), Seq("h"), "left")
       .groupBy("doc_id")
       .agg(
@@ -400,14 +407,16 @@ object TextOps {
     * catalog-sized, not corpus-sized; everything after is arithmetic on
     * ≤ |langs|·|sources| rows. The rate column feeds stratifiedSample's
     * hash gate directly. */
-  def mixturePlan(spark: SparkSession, dir: String,
-                  budgetTokens: Long = 5000L): DataFrame =
+  def mixturePlan(spark: SparkSession, dir: String): DataFrame =
     // not spread (r21 re-measure): size(tokens()) is one light pass and
     // the fan-out exchange measured as a net loss (0.21 → 0.39 s at
     // sf0.1, reproduced twice)
-    mixturePlanFrom(Tables.load(spark, dir, "documents"), budgetTokens)
+    mixturePlanFrom(Tables.load(spark, dir, "documents"), PlanBudgetTokens)
 
-  def mixturePlanFrom(docs: DataFrame, budgetTokens: Long = 5000L): DataFrame = {
+  private[graft] val PlanBudgetTokens: Long = 5000L
+  private[graft] val ApplyBudgetTokens: Long = 200L
+
+  def mixturePlanFrom(docs: DataFrame, budgetTokens: Long): DataFrame = {
     docs.select(col("lang"), col("source"),
         size(tokens(col("text"))).cast("long").as("nt"))
       .groupBy("lang", "source")
@@ -436,16 +445,16 @@ object TextOps {
     * shuffles. Deriving the plan costs one (lang, source)-keyed aggregate
     * over a 3-column pruned scan — the planner's own audited shape.
     *
-    * The default budget (200 tokens) sits BELOW the typical stratum of
-    * the synthetic corpus so most strata genuinely downsample — a budget
-    * no stratum exceeds would leave the gate untested. */
-  def mixtureApply(spark: SparkSession, dir: String,
-                   budgetTokens: Long = 200L): DataFrame = {
+    * The budget ([[ApplyBudgetTokens]], 200 tokens) sits BELOW the
+    * typical stratum of the synthetic corpus so most strata genuinely
+    * downsample — a budget no stratum exceeds would leave the gate
+    * untested. */
+  def mixtureApply(spark: SparkSession, dir: String): DataFrame = {
     // not spread (r21 re-measure, same basis as mixturePlan): the corpus
     // branch is a 3-column projection and the plan branch one light
     // tokenize pass — the exchange lost 0.43 → 0.60 s at sf0.1
     val docs = Tables.load(spark, dir, "documents")
-    val plan = mixturePlanFrom(docs, budgetTokens).select("lang", "source", "rate_ppm")
+    val plan = mixturePlanFrom(docs, ApplyBudgetTokens).select("lang", "source", "rate_ppm")
     docs.select(col("doc_id"), col("lang"), col("source"))
       .join(broadcast(plan), Seq("lang", "source"))
       .filter(pmod(Texty.baseHash60(col("doc_id").cast("string")), lit(1000000L))
@@ -454,33 +463,24 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** Deterministic per-language stratified sampling (north-star op): a
-    * training-data pipeline downsamples over-represented strata (e.g.
-    * keep 40% of English, all of everything else). The keep decision is
-    * `hash60(doc_id) mod 1e6 < rate·1e6` — a pure projection: ONE scan,
-    * ZERO shuffles, identical result on any engine and any partitioning
-    * (no `rand()`, whose draw order is partition-dependent), and the
-    * sample is reproducible across reruns — the property lineage
-    * tracking needs. Rates ride in a literal map (broadcast-equivalent);
-    * unlisted languages default to 1.0. */
   /** Cross-source contamination matrix (north-star op): before mixing
     * corpora, a training-data pipeline measures how much each pair of
     * sources overlaps — for every ordered source pair (source_a <
     * source_b), the number of distinct document pairs sharing at least
-    * one word-8-shingle and the number of distinct shared shingle
+    * one word-8-shingle ([[OverlapK]]) and the number of distinct shared shingle
     * hashes. High off-diagonal mass means two "independent" sources are
     * actually mirrors of each other and mixing weights must account for
     * it.
     *
-    * Shuffle shape at scale: every exchange keys on the shingle hash, so
-    * Catalyst reuses one partitioning across df-aggregate, hot-list
-    * anti-join, and self-join. Document frequency comes from a groupBy —
-    * NOT a window count over the h partition: partial aggregation
-    * absorbs hot keys map-side, where a window would buffer (and spill)
-    * a boilerplate shingle's entire posting list inside one task. The
-    * df > `maxDf` keys become a hot-list that is anti-joined away
-    * co-shuffled (the hot set is corpus-dependent and unbounded, so it
-    * is hinted shuffle_hash, never broadcast; the probe side streams).
+    * Shuffle shape at scale: every exchange — df-aggregate, hot-list
+    * anti-join, self-join — keys on the shingle hash. Document frequency
+    * comes from a groupBy — NOT a window count over the h partition:
+    * partial aggregation absorbs hot keys map-side, where a window would
+    * buffer (and spill) a boilerplate shingle's entire posting list
+    * inside one task. The df > `maxDf` ([[OverlapMaxDf]]) keys become a
+    * hot-list that is anti-joined away co-shuffled (the hot set is
+    * corpus-dependent and unbounded, so it is hinted shuffle_hash, never
+    * broadcast; the probe side streams).
     * The cap bounds per-key pair space at maxDf² and total pair output
     * at O(#shingles · maxDf) — without it a single boilerplate 8-gram
     * shared by a million documents would emit 10¹² pairs. The
@@ -490,12 +490,13 @@ object TextOps {
     * The cap lives in the oracle SQL too, so the gate verifies the
     * truncated semantics, not an idealized one. The output matrix is
     * ≤ |sources|² rows — driver-safe by construction. */
-  def crossSourceOverlap(spark: SparkSession, dir: String,
-                         k: Int = 8, maxDf: Int = 64): DataFrame =
-    crossSourceOverlapFrom(Tables.spread(Tables.load(spark, dir, "documents")), k, maxDf)
+  def crossSourceOverlap(spark: SparkSession, dir: String): DataFrame =
+    crossSourceOverlapFrom(Tables.spread(Tables.load(spark, dir, "documents")), OverlapMaxDf)
 
-  def crossSourceOverlapFrom(docs: DataFrame, k: Int = 8,
-                             maxDf: Int = 64): DataFrame = {
+  private[graft] val OverlapK: Int = 8
+  private[graft] val OverlapMaxDf: Int = 64
+
+  def crossSourceOverlapFrom(docs: DataFrame, maxDf: Int): DataFrame = {
     // cache the tokenized column BEFORE the shingle lambda (projection-
     // collapse barrier — see decontaminateFrom)
     val toks = graft.Caches.cached(
@@ -504,7 +505,7 @@ object TextOps {
     // groupBy count below is exactly the document frequency
     val sh = toks
       .select(col("doc_id"), col("source"),
-        explode(shingles(col("toks"), k)).as("sh"))
+        explode(shingles(col("toks"), OverlapK)).as("sh"))
       .select(col("doc_id"), col("source"), Texty.baseHash60(col("sh")).as("h"))
       .transform(graft.Caches.cached(_)) // read twice: df aggregate + index
     // hot-list exclusion: partial-aggregated count (map-side combine
@@ -513,17 +514,18 @@ object TextOps {
     // task, never a broadcast of the unbounded hot set
     val hot = sh.groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf).select("h")
-    // localCheckpoint, not Caches.cached (r22): the anti join leaves the
-    // relation hash-partitioned on h and the checkpoint's LogicalRDD
-    // carries that partitioning where the in-memory cache reports it
-    // unknown — the self-join below then plans without re-exchanging
-    // both sides (the same change A/B'd at 1.10× on the ngram-Jaccard
-    // twin of this pipeline, tools/ab_r22b.jsonl; footprint unchanged)
+    // localCheckpoint, not Caches.cached (r22): the checkpoint's
+    // row-format blocks scan cheaper for the self-join's two readers than
+    // the columnar cache (the same change A/B'd at 1.10× on the
+    // ngram-Jaccard twin of this pipeline, tools/ab_r22b.jsonl; footprint
+    // unchanged). It does not carry the anti join's partitioning: its
+    // scan reports UnknownPartitioning, and both self-join sides
+    // re-exchange on h
     val pruned = sh.join(hot.hint("shuffle_hash"), Seq("h"), "left_anti")
       .localCheckpoint() // read twice: both sides of the self-join
-    // the index is corpus-sized: co-shuffle on h (reusing the partitioning
-    // the anti-join already established) rather than letting AQE broadcast
-    // it at toy SF — the same discipline as distinctiveTerms' df attach
+    // the index is corpus-sized: co-shuffle on h rather than letting AQE
+    // broadcast it at toy SF — the same discipline as distinctiveTerms'
+    // df attach
     pruned.as("a").join(pruned.as("b").hint("shuffle_hash"),
         col("a.h") === col("b.h") && col("a.source") < col("b.source"))
       .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))
@@ -535,14 +537,14 @@ object TextOps {
 
   /** Chunk-level exact dedup — the C4/RefinedWeb "line dedup" move at
     * chunk granularity (the corpus has no newlines, so the unit is
-    * consecutive non-overlapping `chunkTokens`-token windows, last
+    * consecutive non-overlapping [[ChunkTokens]]-token windows, last
     * partial chunk included): a chunk instance survives iff it is the
     * GLOBAL first occurrence of its text, first = lexicographic min
     * (doc_id, chunk_idx); every later copy — within a doc or across the
     * corpus — is dropped, and each doc is reassembled from its surviving
     * chunks in order.
     *
-    * 100 TB shape: the explode is bounded (n_tokens / chunkTokens rows
+    * 100 TB shape: the explode is bounded (n_tokens / ChunkTokens rows
     * per doc); first-wins is ONE groupBy on the 60-bit chunk hash whose
     * min(struct) combines map-side, so a boilerplate chunk with millions
     * of copies still ships one candidate per map partition; the winner
@@ -551,11 +553,12 @@ object TextOps {
     * reassembly keys on doc_id, the table's natural partitioning. No
     * corpus-wide window, no self-join — pair space never materializes,
     * which is what makes chunk dedup cheaper than document near-dup. */
-  def chunkDedup(spark: SparkSession, dir: String,
-                 chunkTokens: Int = 16): DataFrame =
-    chunkDedupFrom(Tables.spread(Tables.load(spark, dir, "documents")), chunkTokens)
+  def chunkDedup(spark: SparkSession, dir: String): DataFrame =
+    chunkDedupFrom(Tables.spread(Tables.load(spark, dir, "documents")), ChunkTokens)
 
-  def chunkDedupFrom(docs: DataFrame, chunkTokens: Int = 16): DataFrame = {
+  private[graft] val ChunkTokens: Int = 16
+
+  def chunkDedupFrom(docs: DataFrame, chunkTokens: Int): DataFrame = {
     val chunks = docs
       .select(col("doc_id"), Texty.tokens(col("text")).as("ws"))
       .filter(size(col("ws")) > 0)
@@ -587,8 +590,9 @@ object TextOps {
     * partition-less `row_number` window that funnels the corpus through
     * one task). Two-pass distributed total-order rank:
     *
-    *  1. shuffle key k = 60-bit md5 of the doc id (seeded — re-keying
-    *     the seed is a fresh epoch permutation); bucket = fixed-width
+    *  1. shuffle key k = 60-bit md5 of the doc id (seeded with
+    *     [[ShuffleSeed]] — re-keying the seed is a fresh epoch
+    *     permutation); bucket = fixed-width
     *     range of the hash domain via pure-integer range mapping
     *     `((k >> 20) · nb) >> 40` — monotone in k, balanced by hash
     *     uniformity, no sampling pass and no nondeterministic
@@ -610,14 +614,12 @@ object TextOps {
     * doc_id)` bit-for-bit (the oracle runs exactly that, and re-derives
     * nb with the same integer arithmetic) while every data-sized step
     * stays partition-parallel. */
-  def corpusShuffle(spark: SparkSession, dir: String,
-                    seed: String = "epoch0"): DataFrame = {
-    val raw = Tables.load(spark, dir, "documents")
-    val n = raw.count() // parquet-metadata count — over the raw scan
-    val docs = Tables.spread(raw) // the md5 keying is the hot row step
+  def corpusShuffle(spark: SparkSession, dir: String): DataFrame = {
+    val n = Tables.rowCount(spark, dir, "documents")
+    val docs = Tables.spread(Tables.load(spark, dir, "documents")) // md5 keying: the hot row step
     val nb = math.min((n + 4095L) / 4096L, 65536L).max(1L)
     val keyed = docs.select(col("doc_id"),
-        Texty.baseHash60(concat(lit(seed + ":"), col("doc_id").cast("string"))).as("k"))
+        Texty.baseHash60(concat(lit(ShuffleSeed + ":"), col("doc_id").cast("string"))).as("k"))
       .withColumn("bucket", shiftright(shiftright(col("k"), 20) * lit(nb), 40))
     val offsets = keyed.groupBy("bucket").agg(count(lit(1)).as("bn"))
       .withColumn("off",
@@ -634,11 +636,22 @@ object TextOps {
       .orderBy("position")
   }
 
-  def stratifiedSample(spark: SparkSession, dir: String,
-                       rates: Map[String, Double] = Map("en" -> 0.4)): DataFrame = {
+  private[graft] val ShuffleSeed: String = "epoch0"
+  private[graft] val SampleRates: Map[String, Double] = Map("en" -> 0.4)
+
+  /** Deterministic per-language stratified sampling (north-star op): a
+    * training-data pipeline downsamples over-represented strata (e.g.
+    * keep 40% of English, all of everything else). The keep decision is
+    * `hash60(doc_id) mod 1e6 < rate·1e6` — a pure projection: ONE scan,
+    * ZERO shuffles, identical result on any engine and any partitioning
+    * (no `rand()`, whose draw order is partition-dependent), and the
+    * sample is reproducible across reruns — the property lineage
+    * tracking needs. Rates ride in a literal map ([[SampleRates]],
+    * broadcast-equivalent); unlisted languages default to 1.0. */
+  def stratifiedSample(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val rateCol = coalesce(
-      element_at(map(rates.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*),
+      element_at(map(SampleRates.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*),
         col("lang")),
       lit(1.0))
     docs.select(col("doc_id"), col("lang"),
@@ -697,7 +710,7 @@ object TextOps {
     * with the DuckDB twin (Oracles.textVocabCoverage interpolates it), so
     * the two engines cannot silently diverge the way a free `k` parameter
     * against a hard-coded oracle literal could (r13 advice). */
-  val VocabCoverageK: Int = 32
+  private[graft] val VocabCoverageK: Int = 32
 
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.spread(Tables.load(spark, dir, "documents"))

@@ -178,7 +178,7 @@ object DatsQueries {
     // exactly one source, so the per-name column merge is a coalesce,
     // not a conflict resolution.
     //
-    // On VIEW graphs (and the plain parquet layout) there is no scan
+    // On VIEW graphs (and JSON re-reads) there is no scan
     // partitioning to ride, so splitting the pivot only buys a second
     // full aggregation + a second scaffold join — measured as the r17
     // sf0.1 direct regression (4.0 → 6.4 s) — and the union pivot's

@@ -61,12 +61,6 @@ class DatsRoundTripSpec extends SparkTestBase {
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
   }
 
-  test("EntityStore: all seven queries answer identically over materialized parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("dats_rt_pq").toString
-    EntityStore.save(graph, dir)
-    assertSameAnswers(EntityStore.load(spark, dir))
-  }
-
   test("EntityStore bucketed: all seven queries answer identically over the bucketed layout") {
     // the r17 query-optimized layout (bucketBy join/pivot keys through
     // the catalog) must be answer-identical to the direct views, with a

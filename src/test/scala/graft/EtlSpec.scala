@@ -126,7 +126,7 @@ class EtlSpec extends SparkTestBase {
   test("S6: comment-aware TSV extracts accessions and data") {
     val (data, acc) = Readers.commentTsv(spark, res("restricted_subject.txt"))
     assert(data.count() === 3)
-    val a = acc.head
+    val a = acc.head()
     assert(a.getString(0) === "phs000951.v2.p2")
     assert(a.getString(1) === "pht003641.v2.p2")
   }
@@ -145,7 +145,7 @@ class EtlSpec extends SparkTestBase {
     val feats = Readers.gff3(spark, res("annot.gff3"),
       expectedGenomeBuild = Some("GRCm38-C57BL/6J"))
     assert(feats.count() === 3) // NCBI row filtered out
-    val gene = feats.filter(col("feature_id") === "MGI:1918911").head
+    val gene = feats.filter(col("feature_id") === "MGI:1918911").head()
     assert(gene.getAs[Map[String, String]]("attr")("Name") === "Xkr4")
     val pc = Readers.gff3ParentChild(feats).collect()
     assert(pc.length === 1)

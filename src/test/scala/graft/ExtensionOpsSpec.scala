@@ -132,8 +132,8 @@ class ExtensionOpsSpec extends ParitySupport {
 
   test("kmeans: assignment is total and centroids are the truncated integer means") {
     val q = Caches.cached(DedupOps.quantized(spark, sf))
-    val (asg, cents) = KMeans.fit(q)
     val n = q.count()
+    val (asg, cents) = KMeans.fitSized(q, n, nlist = 10)
     // total, unique assignment into the seeded id range
     val rows = asg.collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(rows.length.toLong === n)
@@ -569,13 +569,13 @@ class ExtensionOpsSpec extends ParitySupport {
 
   test("events: sessionization partitions all events, durations non-negative") {
     val sess = EventOps.sessionize(spark, sf)
-    val totalEvents = sess.agg(sum("n_events")).head.getLong(0)
+    val totalEvents = sess.agg(sum("n_events")).head().getLong(0)
     assert(totalEvents === Tables.load(spark, sf, "events").count())
     sess.collect().foreach(r => assert(r.getLong(r.fieldIndex("duration_ms")) >= 0))
   }
 
   test("events: hourly rollup count matches table size") {
-    val total = EventOps.hourlyRollup(spark, sf).agg(sum("n_events")).head.getLong(0)
+    val total = EventOps.hourlyRollup(spark, sf).agg(sum("n_events")).head().getLong(0)
     assert(total === Tables.load(spark, sf, "events").count())
   }
 
@@ -623,7 +623,7 @@ class ExtensionOpsSpec extends ParitySupport {
       (2L, "a b c d e f g h z w", "srcB"),
       (3L, "p q r s t u v w x y", "srcC"),
       (4L, "a b c d e f g h k l", "srcA")).toDF("doc_id", "text", "source")
-    val out = TextOps.crossSourceOverlapFrom(docs).collect()
+    val out = TextOps.crossSourceOverlapFrom(docs, TextOps.OverlapMaxDf).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r).toMap
     assert(out.keySet === Set(("srcA", "srcB"))) // srcC absent; no intra-source pair
     val r = out(("srcA", "srcB"))
@@ -641,6 +641,10 @@ class ExtensionOpsSpec extends ParitySupport {
       assert(r.getLong(r.fieldIndex("n_doc_pairs")) >= 1L)
       assert(r.getLong(r.fieldIndex("n_shared_shingles")) >= 1L)
     }
+  }
+
+  test("text: corpus shuffle sizes its buckets from the parquet footers, without a job") {
+    assert(jobsOf(TextOps.corpusShuffle(spark, sf))._2.isEmpty)
   }
 
   test("text: mixture plan keeps under-budget strata whole, caps over-budget ones") {
@@ -685,8 +689,9 @@ class ExtensionOpsSpec extends ParitySupport {
   }
 
   test("text: mixture apply keeps exactly the docs the plan's hash gate admits") {
-    // same 200-token budget as mixtureApply's default
-    val plan = TextOps.mixturePlanFrom(Tables.load(spark, sf, "documents"), 200L).collect()
+    // mixtureApply's own budget
+    val plan = TextOps.mixturePlanFrom(Tables.load(spark, sf, "documents"),
+        TextOps.ApplyBudgetTokens).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(r.fieldIndex("rate_ppm")))
       .toMap
     val kept = TextOps.mixtureApply(spark, sf).collect()

@@ -32,7 +32,7 @@ class FixpointParitySpec extends ParitySupport {
 
   private def quantized: DataFrame = Caches.cached(DedupOps.quantized(spark, sf01))
 
-  private def nlist: Int = KMeans.autoNlist(Tables.rowCount(spark, sf01, "embeddings"))
+  private def rows: Long = Tables.rowCount(spark, sf01, "embeddings")
 
   test("k-NN descent: driver tail and Spark rounds build the identical graph") {
     val (local, dist) =
@@ -94,7 +94,7 @@ class FixpointParitySpec extends ParitySupport {
 
   test("k-means: driver tail and Spark rounds give identical assignments and centroids") {
     assertParity("kmeans") { () =>
-      val (asg, cents) = KMeans.fit(quantized, nlist = nlist)
+      val (asg, cents) = KMeans.fitSized(quantized, rows, KMeans.autoNlist(rows))
       Seq(asg, cents)
     }
   }
@@ -140,7 +140,7 @@ class FixpointParitySpec extends ParitySupport {
     leftBy("knn_descent")(() => Seq(SimilarityOps.knnGraphRefinedEdges(spark, sf01)))
     leftBy("pagerank")(() => Seq(SimilarityOps.pageRankOverGraph(spark, sf01, refined)))
     leftBy("kmeans") { () =>
-      val (asg, cents) = KMeans.fit(quantized, nlist = nlist)
+      val (asg, cents) = KMeans.fitSized(quantized, rows, KMeans.autoNlist(rows))
       Seq(asg, cents)
     }
     leftBy("label_propagation")(() => Seq(DedupOps.propagationComponents(nearDupPairs)))

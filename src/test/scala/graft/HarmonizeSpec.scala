@@ -38,7 +38,7 @@ class HarmonizeSpec extends SparkTestBase {
     val chars = Harmonize.harmonizedChars(long(
       ("s1", "AGE", ""), ("s2", "GENDER", "1")), numericSexCodes = false)
     assert(chars.filter(col("material_id") === "s1").count() === 0)
-    assert(chars.filter(col("material_id") === "s2").head.getString(3) === "1")
+    assert(chars.filter(col("material_id") === "s2").head().getString(3) === "1")
   }
 
   test("hypertension status: yes/1 → yes, non-blank → no, blank → absent") {
@@ -48,15 +48,15 @@ class HarmonizeSpec extends SparkTestBase {
       ("s5", "UNRELATED", "yes")), Harmonize.TopmedHypertensionVars)
     val byId = d.collect().map(r => r.getString(0) -> r.getString(3)).toMap
     assert(byId === Map("s1" -> "yes", "s2" -> "yes", "s3" -> "no"))
-    assert(d.head.getString(1) === "Hypertension")
-    assert(d.head.getString(2) === "DOID:10763")
+    assert(d.head().getString(1) === "Hypertension")
+    assert(d.head().getString(2) === "DOID:10763")
   }
 
   test("conflicting hypertension vars reduce by severity, not input order") {
     val d = Harmonize.hypertension(long(
       ("s1", "HYPERTENSION", "no"), ("s1", "MHHTN", "yes")),
       Harmonize.GtexHypertensionVars)
-    assert(d.head.getString(3) === "yes")
+    assert(d.head().getString(3) === "yes")
   }
 
   test("trigger sets are pipeline-exact: TOPMed ignores MHHTN, GTEx ignores HIGHBLOODPRES") {

@@ -78,7 +78,7 @@ class OverlayS8Spec extends SparkTestBase {
     val vr = res("dbgap_dir/phs000424.v7.pht002742.v7.p2.GTEx_Subject.var_report.xml")
     // exactly one CONSENT var without a .cN suffix is selected
     val cv = GtexEtl.consentVariable(Readers.dbgapVariables(spark, vr))
-    assert(cv.select("_id").head.getString(0) === "phv00169064.v7")
+    assert(cv.select("_id").head().getString(0) === "phv00169064.v7")
     // zero matches (a data_dict with no CONSENT) is fatal
     intercept[IllegalArgumentException] {
       GtexEtl.consentVariable(Readers.dbgapVariables(spark,
@@ -130,7 +130,7 @@ class OverlayS8Spec extends SparkTestBase {
     // GENDER/VISIT_AGE aren't in the public data_dict fixture → null acc;
     // the join itself must not drop or duplicate rows
     val g1111 = graph.materials.filter(col("name") === "GTEX-1111")
-      .select("material_id").head.getString(0)
+      .select("material_id").head().getString(0)
     val chars = over.characteristics.filter(col("material_id") === g1111)
     assert(chars.count() === 6) // 4 raw + 2 harmonized
   }
@@ -138,7 +138,7 @@ class OverlayS8Spec extends SparkTestBase {
   test("S7/A5: var_report stats and enum counts parse from XML") {
     val xml = res("phs000424.v7.pht002742.v7.p2.GTEx_Subject.data_dict.xml")
     val stats = Readers.dbgapVarReportStats(spark, xml)
-      .filter(col("var_name") === "SEX").head
+      .filter(col("var_name") === "SEX").head()
     assert(stats.getAs[Long]("n") === 752L)
     assert(stats.getAs[Long]("distinct_vals") === 2L)
     val enums = Readers.dbgapVarReportEnums(spark, xml).collect()
@@ -153,7 +153,7 @@ class OverlayS8Spec extends SparkTestBase {
     assert(df.schema.fieldNames.toSeq ===
       Seq("seqid", "source", "ftype", "start", "end", "score", "strand", "phase", "attr"))
     assert(df.count() === 4) // no source filter at scan level
-    val gene = df.filter(col("source") === "MGI" && col("ftype") === "gene").head
+    val gene = df.filter(col("source") === "MGI" && col("ftype") === "gene").head()
     assert(gene.getAs[Long]("start") === 3205901L)
     assert(gene.getAs[Map[String, String]]("attr")("Name") === "Xkr4")
     // pruning reaches the scan: only requested fields are read
@@ -184,7 +184,7 @@ class OverlayS8Spec extends SparkTestBase {
     val desc = q.queryExecution.executedPlan.toString
     assert(desc.contains("start IS NOT NULL"), desc)
     assert(q.count() === 1)
-    assert(q.head.getAs[String]("seqid") === "chr1")
+    assert(q.head().getAs[String]("seqid") === "chr1")
     // without the filter the null-start row still surfaces
     assert(df.count() === 2)
   }
@@ -193,7 +193,7 @@ class OverlayS8Spec extends SparkTestBase {
     val idx = Readers.dbgapFileIndex(spark, res("dbgap_dir"))
     assert(idx.count() === 4)
     val row = idx.filter(col("file_name").contains("pht002742") &&
-      col("metadata_type") === "data_dict").head
+      col("metadata_type") === "data_dict").head()
     assert(row.getAs[String]("study_id") === "phs000424.v7")
     assert(row.getAs[String]("data_table_id") === "pht002742.v7")
     assert(row.getAs[String]("participant_set") === ".p2")
@@ -204,7 +204,7 @@ class OverlayS8Spec extends SparkTestBase {
   test("S8: sub-study heuristic keeps exactly the data_dict-bearing study") {
     val idx = Readers.dbgapFileIndex(spark, res("dbgap_dir"))
     val main = Readers.dbgapMainStudy(idx)
-    assert(main.head.getString(0) === "phs000424.v7") // phs000425 = substudy
+    assert(main.head().getString(0) === "phs000424.v7") // phs000425 = substudy
   }
 
   test("S14: embedded-literal scrape parses studies via the regex state machine") {
@@ -256,27 +256,27 @@ class OverlayS8Spec extends SparkTestBase {
       res("restricted_gtex_subject.txt"), res("restricted_gtex_subject_phenotypes.txt"))
     // overlaid subjects lose public chars, gain restricted ones
     val g1111 = graph.materials.filter(col("name") === "GTEX-1111")
-      .select("material_id").head.getString(0)
+      .select("material_id").head().getString(0)
     val chars1111 = over.characteristics.filter(col("material_id") === g1111)
       .select("name").collect().map(_.getString(0)).toSet
     // raw restricted vars + the P9 harmonized twins (GENDER→Gender,
     // VISIT_AGE→Age); HYPERTENSION also lands in graph.diseases
     assert(chars1111 === Set("CONSENT", "GENDER", "VISIT_AGE", "HYPERTENSION",
       "Gender", "Age"))
-    val disease1111 = over.diseases.filter(col("material_id") === g1111).head
+    val disease1111 = over.diseases.filter(col("material_id") === g1111).head()
     assert(disease1111.getAs[String]("status") === "yes")
     assert(disease1111.getAs[String]("disease_id") === "DOID:10763")
     // numeric sex decode on the GTEx restricted path: "1" → male
     val gender1111 = over.characteristics.filter(
-      col("material_id") === g1111 && col("name") === "Gender").head.getAs[String]("value")
+      col("material_id") === g1111 && col("name") === "Gender").head().getAs[String]("value")
     assert(gender1111 === "male")
     // blank HYPERTENSION (GTEX-4444) → unknown → no disease row
     val g4444 = graph.materials.filter(col("name") === "GTEX-4444")
-      .select("material_id").head.getString(0)
+      .select("material_id").head().getString(0)
     assert(over.diseases.filter(col("material_id") === g4444).count() === 0)
     // non-overlaid subjects keep public chars
     val g3333 = graph.materials.filter(col("name") === "GTEX-3333")
-      .select("material_id").head.getString(0)
+      .select("material_id").head().getString(0)
     val chars3333 = over.characteristics.filter(col("material_id") === g3333)
       .select("name").collect().map(_.getString(0)).toSet
     assert(chars3333 === Set("SEX", "AGE", "DTHHRDY"))

@@ -25,7 +25,7 @@ class RelationalSpec extends SparkTestBase {
 
   test("ordersPerCustomerHistogram: weighted sum equals order count") {
     val hist = Relational.ordersPerCustomerHistogram(spark, sf)
-    val total = hist.agg(sum(col("n_orders") * col("n_customers"))).head.getLong(0)
+    val total = hist.agg(sum(col("n_orders") * col("n_customers"))).head().getLong(0)
     val nOrders = Tables.load(spark, sf, "orders").count()
     assert(total === nOrders)
   }
@@ -36,22 +36,22 @@ class RelationalSpec extends SparkTestBase {
       .select("o_custkey").distinct().count()
     assert(top.count() === nCustWithOrders)
     // spot check: the top price matches the max aggregate for that customer
-    val first = top.head
+    val first = top.head()
     val expected = Tables.load(spark, sf, "orders")
       .filter(col("o_custkey") === first.getLong(0))
-      .agg(max("o_totalprice")).head.getDouble(0)
+      .agg(max("o_totalprice")).head().getDouble(0)
     assert(first.getDouble(2) === expected)
   }
 
   test("reconciliation: tallies partition the customer set") {
-    val r = Relational.orderReconciliation(spark, sf).head
+    val r = Relational.orderReconciliation(spark, sf).head()
     assert(r.getLong(0) === r.getLong(1) + r.getLong(2))
   }
 
   test("pivot: row sums equal per-priority counts") {
     val piv = Relational.statusByPriorityPivot(spark, sf)
     val total = piv.agg(sum(col("status_f") + col("status_o") + col("status_p")))
-      .head.getLong(0)
+      .head().getLong(0)
     assert(total === Tables.load(spark, sf, "orders").count())
   }
 }

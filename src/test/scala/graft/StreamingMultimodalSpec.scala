@@ -75,6 +75,6 @@ class StreamingMultimodalSpec extends SparkTestBase {
       assert(math.abs(f.feature.sum - 1.0f) < 1e-3) // histogram normalized
     }
     val resized = Multimodal.resizeMeta(media.toDF(), 32)
-    assert(resized.agg(max("meta.width")).head.getInt(0) <= 32)
+    assert(resized.agg(max("meta.width")).head().getInt(0) <= 32)
   }
 }

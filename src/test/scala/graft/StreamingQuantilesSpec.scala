@@ -48,7 +48,7 @@ class StreamingQuantilesSpec extends SparkTestBase {
     input.addData(ev(1, 1.0, T0), ev(2, 2.0, T0 + 60000L), ev(3, 3.0, T0 + 120000L))
     q.processAllAvailable()
     val mid = EventStream.quantilesRollup(spark.table("quantile_deltas_late"))
-      .filter(col("q_ppm") === 500000L).head.getDouble(2)
+      .filter(col("q_ppm") === 500000L).head().getDouble(2)
     assert(mid === 2.0)
     // batch 2: two LATE cheap clicks (still above the watermark) drag
     // the median down — two more +1 deltas, nothing retracted
@@ -58,7 +58,7 @@ class StreamingQuantilesSpec extends SparkTestBase {
     val deltas = spark.table("quantile_deltas_late")
     assert(deltas.filter(col("delta") < 0).count() === 0L)
     val p50 = EventStream.quantilesRollup(deltas)
-      .filter(col("q_ppm") === 500000L).head.getDouble(2)
+      .filter(col("q_ppm") === 500000L).head().getDouble(2)
     assert(p50 === 1.0)
   }
 }

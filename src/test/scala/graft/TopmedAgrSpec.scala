@@ -22,7 +22,7 @@ class TopmedAgrSpec extends SparkTestBase {
       res("topmed/topmed-cram.tsv"), res("topmed/topmed-crai.tsv"),
       res("topmed/topmed-vcf.tsv"), res("topmed/topmed-vcfcsi.tsv")))
     assert(merged.count() === 5)
-    val sci = merged.filter(col("File_Name") === "NWD100002.b38.irc.v1.cram").head
+    val sci = merged.filter(col("File_Name") === "NWD100002.b38.irc.v1.cram").head()
     assert(sci.getAs[Long]("file_size") === 12300000000L) // 1.23e10
     // duplicate File_Name across files must be fatal
     intercept[IllegalArgumentException] {
@@ -37,7 +37,7 @@ class TopmedAgrSpec extends SparkTestBase {
     val merged = TopmedEtl.mergeSubjectTables(subj, pheno)
     assert(merged.count() === 3)
     assert(merged.columns.contains("GENDER") && merged.columns.contains("CONSENT"))
-    val su1 = merged.filter(col("SUBJECT_ID") === "SU001").head
+    val su1 = merged.filter(col("SUBJECT_ID") === "SU001").head()
     assert(su1.getAs[String]("HYPERTENSION") === "yes")
   }
 
@@ -74,7 +74,7 @@ class TopmedAgrSpec extends SparkTestBase {
   test("S9/P13: AGR BGI genes with SO lookup and taxon filter") {
     val genes = AgrMgdEtl.bgiGenes(spark, res("agr/MGI_BGI.json"))
     assert(genes.count() === 3) // human gene filtered out
-    val xkr4 = genes.filter(col("gene_id") === "MGI:1918911").head
+    val xkr4 = genes.filter(col("gene_id") === "MGI:1918911").head()
     assert(xkr4.getAs[String]("so_name") === "Protein Coding Gene")
     assert(xkr4.getAs[String]("strand") === "reverse")
   }
@@ -113,7 +113,7 @@ class TopmedAgrSpec extends SparkTestBase {
     val byGene = hom.collect().map(r => r.getString(0) -> r.getSeq[String](2)).toMap
     assert(byGene("MGI:1918911") === Seq("114786", "114787"))
     assert(byGene("MGI:2222222") === Seq.empty)
-    val cov = AgrMgdEtl.homologCoverage(hom).head
+    val cov = AgrMgdEtl.homologCoverage(hom).head()
     assert(cov.getLong(0) === 2 && cov.getLong(1) === 1 && cov.getLong(2) === 1)
   }
 

@@ -43,7 +43,7 @@ class TopmedPipelineSpec extends SparkTestBase {
     // NWD100001 cram (gs+s3) + NWD100002 cram (gs+s3) + NWD100001 vcf (gs+s3)
     assert(withMd5.count() === 6)
     val sci = graph.distributions
-      .filter(col("access_url") === "s3://t/NWD100002.b38.irc.v1.cram").head
+      .filter(col("access_url") === "s3://t/NWD100002.b38.irc.v1.cram").head()
     assert(sci.getAs[Long]("size") === 12300000000L) // P10 sci-notation cast
   }
 
@@ -56,9 +56,9 @@ class TopmedPipelineSpec extends SparkTestBase {
     val anat = graph.anatomicalParts.collect()
       .map(r => r.getAs[String]("name") -> r.getAs[String]("uberon_id")).toMap
     assert(anat === Map("blood" -> "UBERON:0000178", "saliva" -> "UBERON:0001836"))
-    val nwd1 = samples.filter(col("name") === "NWD100001").head
+    val nwd1 = samples.filter(col("name") === "NWD100001").head()
     val bloodId = graph.anatomicalParts.filter(col("name") === "blood")
-      .head.getAs[String]("anatomy_id")
+      .head().getAs[String]("anatomy_id")
     assert(nwd1.getAs[String]("anatomy_id") === bloodId)
     assert(nwd1.getAs[String]("subject_id") === "SU001")
     // J6 merged Sample_Attributes columns land as sample characteristics
@@ -86,8 +86,8 @@ class TopmedPipelineSpec extends SparkTestBase {
     val s = Seq(("101", "NWD1", "useA")).toDF("dbGaP_Sample_ID", "SAMPLE_ID", "SAMPLE_USE")
     val disjoint = Seq(("101", "Blood")).toDF("dbGaP_Sample_ID", "BODY_SITE")
     val merged = TopmedEtl.mergeSubjectTables(s, disjoint, "dbGaP_Sample_ID")
-    assert(merged.head.getAs[String]("BODY_SITE") === "Blood")
-    assert(merged.head.getAs[String]("SAMPLE_USE") === "useA")
+    assert(merged.head().getAs[String]("BODY_SITE") === "Blood")
+    assert(merged.head().getAs[String]("SAMPLE_USE") === "useA")
     val conflicting = Seq(("101", "NWD9")).toDF("dbGaP_Sample_ID", "SAMPLE_ID")
     intercept[IllegalArgumentException] {
       TopmedEtl.mergeSubjectTables(s, conflicting, "dbGaP_Sample_ID")
@@ -125,7 +125,7 @@ class TopmedPipelineSpec extends SparkTestBase {
 
   test("P9: harmonized phenotypes and hypertension wired into the graph") {
     val su001 = graph.materials.filter(col("name") === "SU001")
-      .select("material_id").head.getString(0)
+      .select("material_id").head().getString(0)
     val harmonized = graph.characteristics
       .filter(col("material_id") === su001 && col("name").isin("Gender", "Age"))
       .collect().map(r => r.getAs[String]("name") -> r.getAs[String]("value")).toMap

@@ -47,7 +47,8 @@ class WholeOperatorSpec extends ParitySupport {
         assert(local === Seq("pagerank" -> "driver"), dir)
         assert(dist === Seq("pagerank" -> "spark"), dir)
         val (exLocal, exDist) = assertParity("pagerank", inOrder = true)(
-          () => Seq(SimilarityOps.clusterExemplars(spark, dir)))
+          () => Seq(SimilarityOps.clusterExemplarsFrom(spark, dir,
+            SimilarityOps.knnGraph2Edges(spark, dir).select(col("ida"), col("idb")))))
         assert(exLocal === Seq("pagerank" -> "driver"), dir)
         assert(exDist === Seq("pagerank" -> "spark"), dir)
       } finally DedupOps.unpersistCheckpoint(graph)

@@ -20,8 +20,7 @@ object QueryProbe {
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(1)
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query '$name'"))
-    val spark = Tables.session("query-probe",
-      cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Tables.session("query-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     case class JobRec(id: Int, var desc: String = "", var start: Long = 0L,

@@ -11,6 +11,10 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet)
       else None
+    only.foreach { names =>
+      val missing = names -- SparkEntry.queries.keySet
+      require(missing.isEmpty, s"Verify names not found: $missing")
+    }
     val spark = Tables.session("graft-verify")
     // ERROR: the localCheckpoint lineage WARNs flood the log at 69
     // queries (same rationale as Bench)

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.model.Dats
 import graft.sources.Readers
 
 /** AGR (gene/disease/phenotype/ortholog) and MGD (reference genome +
@@ -196,40 +197,32 @@ object AgrMgdEtl {
 
     val topId = entityId("Dataset", lit(s"AGR-${in.modName}"))
     val topDataset = spark.range(1).select(
-      topId.as("dataset_id"), lit(null).cast("string").as("parent_dataset_id"),
+      topId.as("dataset_id"),
       lit(s"Alliance of Genome Resources ${in.modName} gene set").as("title"),
       lit(s"${in.modName} reference genes with disease/phenotype/ortholog annotations").as("description"),
-      lit("1.0").as("version"), lit(null).cast("string").as("data_type"),
-      lit(null).cast("string").as("study_id"))
+      lit("1.0").as("version"))
 
     val geneMaterials = genes.select(
       entityId("Material", col("gene_id")).as("material_id"),
       col("symbol").as("name"),
       lit("gene").as("material_type"), lit("gene").as("role"),
-      lit(null).cast("string").as("subject_id"),
-      lit(null).cast("string").as("derives_from"),
-      lit(null).cast("string").as("anatomy_id"),
       col("synopsis").as("description"))
 
     // location + SO-term + annotation characteristics in long form
     val locChars = Seq("so_name", "assembly", "chromosome", "strand").map { c =>
       genes.filter(col(c).isNotNull).select(
         entityId("Material", col("gene_id")).as("material_id"),
-        lit(null).cast("string").as("var_acc"), lit(c).as("name"),
-        col(c).cast("string").as("value"))
+        lit(c).as("name"), col(c).cast("string").as("value"))
     }.reduce(_ unionByName _)
     val diseaseChars = gd.filter(size(col("do_ids")) > 0).select(
       entityId("Material", col("gene_id")).as("material_id"),
-      lit(null).cast("string").as("var_acc"), lit("diseases").as("name"),
-      array_join(col("do_ids"), ",").as("value"))
+      lit("diseases").as("name"), array_join(col("do_ids"), ",").as("value"))
     val phenoChars = gp.filter(size(col("phenotype_terms")) > 0).select(
       entityId("Material", col("gene_id")).as("material_id"),
-      lit(null).cast("string").as("var_acc"), lit("phenotypes").as("name"),
-      array_join(col("phenotype_terms"), ",").as("value"))
+      lit("phenotypes").as("name"), array_join(col("phenotype_terms"), ",").as("value"))
     val orthoChars = go.filter(size(col("human_orthologs")) > 0).select(
       entityId("Material", col("gene_id")).as("material_id"),
-      lit(null).cast("string").as("var_acc"), lit("human_orthologs").as("name"),
-      array_join(col("human_orthologs"), ",").as("value"))
+      lit("human_orthologs").as("name"), array_join(col("human_orthologs"), ",").as("value"))
 
     // the "all genes" group hangs off a synthetic Study so the writer's
     // Dataset→Study→StudyGroup→members chain applies as-is
@@ -246,18 +239,12 @@ object AgrMgdEtl {
         studyId.as("study_id"), lit(s"all ${in.modName} genes").as("name")),
       groupMembers = geneMaterials.select(groupId.as("group_id"), col("material_id")),
       materials = geneMaterials,
-      anatomicalParts = spark.range(0).select(lit("").as("anatomy_id"),
-        lit("").as("name"), lit("").as("uberon_id")),
+      anatomicalParts = Dats.AnatomicalParts.empty(spark),
       characteristics = locChars.unionByName(diseaseChars)
         .unionByName(phenoChars).unionByName(orthoChars),
-      dimensions = spark.range(0).select(lit("").as("dim_id"), lit("").as("owner_id"),
-        lit("").as("name"), lit("").as("var_acc"), lit("").as("description"),
-        lit("").as("value")),
-      distributions = spark.range(0).select(lit("").as("dataset_id"),
-        lit("").as("access_url"), lit(0L).as("size"), lit("").as("md5"),
-        lit("").as("doi"), lit("").as("index_doi")),
-      dataAcquisitions = spark.range(0).select(lit("").as("dataset_id"),
-        lit("").as("input_material_id")),
-      diseases = Harmonize.emptyDiseases(spark))
+      dimensions = Dats.Dimensions.empty(spark),
+      distributions = Dats.Distributions.empty(spark),
+      dataAcquisitions = Dats.DataAcquisitions.empty(spark),
+      diseases = Dats.Diseases.empty(spark)).conformed
   }
 }

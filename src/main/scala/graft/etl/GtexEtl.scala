@@ -40,12 +40,10 @@ object GtexEtl {
       diseases: DataFrame,
       /** Two roles, both load-bearing for the query planner:
         * (1) the derivesFrom chain relation — `materials` projected to
-        * (material_id, material_type, role, name, derives_from). On a
-        * face-bearing bucketed layout this is the derives_edges table
-        * (bucketed by `derives_from`, so Q4's corpus-sized FK scan
-        * arrives pre-distributed on its join key); on a face-less
-        * bucketed dir [[graft.io.EntityStore.loadBucketed]] derives it
-        * from the bucketed materials table instead.
+        * (material_id, material_type, role, name, derives_from). On the
+        * bucketed layout this is the derives_edges table (bucketed by
+        * `derives_from`, so Q4's corpus-sized FK scan arrives
+        * pre-distributed on its join key).
         * (2) presence is the BUCKETED-LAYOUT MARKER: `nonEmpty` tells
         * Q7 its input scans carry bucket distributions, flipping the
         * pivot to the per-source shape that rides them. Normally set
@@ -56,24 +54,34 @@ object GtexEtl {
         * None and the queries derive the chain from `materials`. */
       bucketedDerives: Option[DataFrame] = None) {
 
-    /** The twelve entity tables, in field order. */
+    /** The twelve entity tables, in [[Dats.EntityTables]] order. */
     def tables: Seq[DataFrame] = Seq(datasets, identifiers, studies, studyGroups,
       groupMembers, materials, anatomicalParts, characteristics, dimensions,
       distributions, dataAcquisitions, diseases)
+
+    /** This graph with every table fitted to its [[Dats]] schema
+      * ([[Dats.Table.conform]]): a producer builds only the columns it has. */
+    def conformed: EntityGraph = EntityGraph.fromTables(
+      Dats.EntityTables.zip(tables).map { case (t, df) => t.conform(df) }, bucketedDerives)
 
     /** This graph with its twelve tables materialized once, concurrently,
       * as local checkpoints: executor-resident, computed once however many
       * queries read them. */
     def materialized: EntityGraph = Checkpoints.using { cp =>
-      val t = cp.all(tables)
-      EntityGraph(t(0), t(1), t(2), t(3), t(4), t(5), t(6), t(7), t(8), t(9), t(10), t(11),
-        bucketedDerives)
+      EntityGraph.fromTables(cp.all(tables), bucketedDerives)
     }(_.tables)
 
     /** Release the checkpoints behind every table — those [[build]],
       * [[restrictedOverlay]] and [[graft.io.DatsJsonReader.read]]
       * materialize. `catalog.clearCache()` does not reach them. */
     def unpersist(): Unit = (tables ++ bucketedDerives).foreach(DedupOps.unpersistCheckpoint)
+  }
+
+  object EntityGraph {
+    /** The graph of twelve tables given in [[Dats.EntityTables]] order. */
+    def fromTables(t: Seq[DataFrame], bucketedDerives: Option[DataFrame] = None): EntityGraph =
+      EntityGraph(t(0), t(1), t(2), t(3), t(4), t(5), t(6), t(7), t(8), t(9), t(10), t(11),
+        bucketedDerives)
   }
 
   // ---- column specs (ccmm/gtex/parsers/portal_files.py:16-108) ----
@@ -268,8 +276,7 @@ object GtexEtl {
       col("_var_name").as("name"),
       regexp_extract(col("_id"), "^(phv\\d+)", 1).as("var_acc"),
       coalesce(description,
-        concat(lit("dbGaP variable "), col("_var_name"))).as("description"),
-      lit(null).cast("string").as("value"))
+        concat(lit("dbGaP variable "), col("_var_name"))).as("description"))
   }
 
   /** J11 — dbGaP variable lookup keyed by (var_type, var_name +
@@ -302,13 +309,13 @@ object GtexEtl {
   /** One row per non-empty cell of the `vars` columns of `df`:
     * (material_id, var_acc, name, value), with `material_id` derived from
     * `key` and `var_acc` given per column. One generator pass over `df`. */
-  private def longForm(df: DataFrame, key: String, vars: Seq[(String, Column)]): DataFrame =
+  private[etl] def longForm(df: DataFrame, key: String, vars: Seq[(String, Column)]): DataFrame =
     df.select(Dats.entityId("Material", col(key)).as("material_id"),
         stack(lit(vars.size) +: vars.flatMap { case (name, acc) => Seq(acc, lit(name), col(name)) }: _*)
           .as(Seq("var_acc", "name", "value")))
       .filter(col("value").isNotNull && col("value") =!= "")
 
-  private val NoAccession = lit(null).cast("string")
+  private[etl] val NoAccession = lit(null).cast("string")
 
   /** §3.1 steps 2-9: the normalized entity graph of the portal and
     * manifest files, in three concurrent rounds of Spark actions:
@@ -471,8 +478,6 @@ object GtexEtl {
       lit("subject").as("material_type"),
       lit("donor").as("role"),
       col("SUBJID").as("subject_id"),
-      lit(null).cast("string").as("derives_from"),
-      lit(null).cast("string").as("anatomy_id"),
       concat(lit("GTEx subject "), col("SUBJID")).as("description"))
 
     // -- per typed sample, its material with derivesFrom nesting (R3,
@@ -499,15 +504,14 @@ object GtexEtl {
       .unionByName(longForm(samples, "SAMPID",
         Seq("SMATSSCR", "SMRIN", "SMMAPRT", "SMGNSDTC").map(_ -> NoAccession)))
 
-    // -- file datasets from the CRAM manifests --
+    // -- file datasets from the CRAM manifests, under the study dataset --
     val fileDatasets = files.select(
       col("dataset_id"),
-      lit(null).cast("string").as("parent_dataset_id"),
+      studyDatasetId.as("parent_dataset_id"),
       concat(col("data_type"), lit(" of sample "), col("sample_id")).as("title"),
       concat(col("data_type"), lit(" CRAM file for "), col("sample_id")).as("description"),
       lit("v7").as("version"),
-      col("data_type"),
-      lit(null).cast("string").as("study_id"))
+      col("data_type"))
 
     // one GCP and one AWS distribution per file; index_doi = the .crai
     // index file's DOI (the reference surfaces it as the distribution's
@@ -522,7 +526,6 @@ object GtexEtl {
       entityId("Dimension", concat(col("dataset_id"), lit("|md5"))).as("dim_id"),
       col("dataset_id").as("owner_id"),
       lit("MD5").as("name"),
-      lit(null).cast("string").as("var_acc"),
       lit("MD5 checksum of the CRAM file").as("description"),
       col("cram_file_md5").as("value"))
 
@@ -532,11 +535,10 @@ object GtexEtl {
 
     // -- top-level skeleton (steps 5-7 of §3.1) --
     val topRow = spark.range(1).select(
-      topId.as("dataset_id"), lit(null).cast("string").as("parent_dataset_id"),
+      topId.as("dataset_id"),
       lit(TopDatasetTitle).as("title"),
       lit("Common Fund Genotype-Tissue Expression Project").as("description"),
-      lit("v7").as("version"), lit(null).cast("string").as("data_type"),
-      lit(null).cast("string").as("study_id"))
+      lit("v7").as("version"))
 
     val studyRows = scraped match {
       case Some(s) =>
@@ -547,19 +549,16 @@ object GtexEtl {
           concat(lit("Genotype-Tissue Expression"),
             coalesce(col("descr"), lit(""))).as("description"),
           col("version"),
-          lit(null).cast("string").as("data_type"),
           when(col("id") === StudyAccession, studyId).as("study_id"))
       case None =>
         spark.range(1).select(
           studyDatasetId.as("dataset_id"), topId.as("parent_dataset_id"),
           lit(StudyAccession).as("title"),
           lit("GTEx dbGaP study").as("description"),
-          lit("v7").as("version"), lit(null).cast("string").as("data_type"),
-          studyId.as("study_id"))
+          lit("v7").as("version"), studyId.as("study_id"))
     }
-    // file datasets hang off the study dataset
-    val datasets = topRow.unionByName(studyRows).unionByName(
-      fileDatasets.withColumn("parent_dataset_id", studyDatasetId))
+    val datasets = Seq(topRow, studyRows, fileDatasets)
+      .reduce(_.unionByName(_, allowMissingColumns = true))
 
     val topIdentifier = spark.range(1).select(
       topId.as("entity_id"), lit("GTEx").as("identifier"), lit("GTEx").as("identifier_source"))
@@ -577,7 +576,6 @@ object GtexEtl {
       entityId("Dimension", concat(col("id"), lit("|subject_count"))).as("dim_id"),
       entityId("Dataset", col("id")).as("owner_id"),
       lit("Actual Subject Count").as("name"),
-      lit(null).cast("string").as("var_acc"),
       lit("The actual number of subjects entered into a clinical trial.").as("description"),
       col("n_participants").cast("string").as("value")))
 
@@ -600,8 +598,7 @@ object GtexEtl {
           spark.range(1).select(
             entityId("Dimension", lit(acc)).as("dim_id"),
             studyDatasetId.as("owner_id"), lit(n).as("name"), lit(acc).as("var_acc"),
-            concat(lit("dbGaP variable "), lit(n)).as("description"),
-            lit(null).cast("string").as("value"))
+            concat(lit("dbGaP variable "), lit(n)).as("description"))
         }.reduce(_ unionByName _))
 
     // -- round 3: every entity table materialized once; on return the
@@ -612,16 +609,16 @@ object GtexEtl {
       studies = studies,
       studyGroups = studyGroups,
       groupMembers = groupMembers,
-      materials = subjectMaterials.unionByName(sampleMaterials),
+      materials = subjectMaterials.unionByName(sampleMaterials, allowMissingColumns = true),
       anatomicalParts = anatomicalParts,
       characteristics = characteristics,
-      dimensions = scrapeDimensions.fold(studyDimensions)(studyDimensions.unionByName)
-        .unionByName(fileDimensions),
+      dimensions = (studyDimensions +: scrapeDimensions.toSeq :+ fileDimensions)
+        .reduce(_.unionByName(_, allowMissingColumns = true)),
       distributions = fileDistributions,
       dataAcquisitions = dataAcquisitions,
       // public portal columns carry no phenotype variables to harmonize;
       // hypertension arrives with the restricted overlay (P9)
-      diseases = Harmonize.emptyDiseases(spark)).materialized
+      diseases = Dats.Diseases.empty(spark)).conformed.materialized
   }(_.tables)
 
   /** §3.1 step 10 — the restricted-access overlay
@@ -662,19 +659,10 @@ object GtexEtl {
     }
     val consentBase = consentMeta match {
       case Some(meta) =>
-        val counts = withConsent.groupBy(col("CONSENT").cast("string").as("CONSENT"))
-          .agg(count(lit(1)).as("n_subjects"))
-          .join(broadcast(meta), Seq("CONSENT"), "left")
-        val unknown = counts.filter(col("consent_name").isNull)
-        require(unknown.isEmpty, "consent code(s) missing from var_report enum: " +
-          unknown.select("CONSENT").collect().map(_.getString(0)).mkString(","))
-        // null-safe: a var_report enum row with no count attribute must be
-        // fatal too (the reference's int(cvc['count']) raises), not
-        // filtered out by a null comparison
-        val mismatch = counts.filter(
-          !(col("declared_count") <=> col("n_subjects")))
-        require(mismatch.isEmpty, "subject count mismatch or missing declared count in consent group(s): " +
-          mismatch.select("CONSENT").collect().map(_.getString(0)).mkString(","))
+        TopmedEtl.requireDeclaredCounts(
+          withConsent.groupBy(col("CONSENT").cast("string").as("CONSENT"))
+            .agg(count(lit(1)).as("n_subjects"))
+            .join(broadcast(meta), Seq("CONSENT"), "left"))
         withConsent.join(broadcast(meta), withConsent("CONSENT") === meta("CONSENT"))
       case None => withConsent
     }
@@ -705,7 +693,7 @@ object GtexEtl {
     // (dna_extracts.py:93-175; GTEx decodes numeric sex codes) and the
     // hypertension variables become bearerOfDisease rows
     val overlaidChars = rawChars.unionByName(
-      Harmonize.harmonizedChars(rawChars, numericSexCodes = true))
+      Harmonize.harmonizedChars(rawChars, numericSexCodes = true), allowMissingColumns = true)
     val overlaidDiseases = Harmonize.hypertension(rawChars, Harmonize.GtexHypertensionVars)
     val overlaidIds = merged.select(entityId("Material", col("SUBJID")).as("material_id"))
     val keptChars = graph.characteristics.join(

@@ -47,8 +47,8 @@ object Harmonize {
     "Systolic blood pressure" -> "Systolic blood pressure of subject, measured in mmHg",
     "Diastolic blood pressure" -> "Diastolic blood pressure of subject, measured in mmHg")
 
-  /** Harmonized characteristic rows derived from long-form
-    * (material_id, name, value) characteristics. `numericSexCodes` selects
+  /** Harmonized characteristic rows (material_id, name, value) derived
+    * from long-form (material_id, name, value) characteristics. `numericSexCodes` selects
     * the GTEx-restricted gender decoding ("1"→male / "2"→female / else
     * null, dna_extracts.py:95-101) over the TOPMed plain lower-casing
     * (subjects.py:36). When several raw variables map to one harmonized
@@ -68,8 +68,6 @@ object Harmonize {
       .select(col("material_id"), hname.as("name"), hvalue.as("value"))
       .filter(col("name").isNotNull)
       .groupBy("material_id", "name").agg(min(col("value")).as("value"))
-      .select(col("material_id"), lit(null).cast("string").as("var_acc"),
-        col("name"), col("value"))
   }
 
   /** Variable names that trigger a hypertension row in the TOPMed
@@ -101,11 +99,6 @@ object Harmonize {
         when(col("rk") === 2, "yes").otherwise("no").as("status"))
   }
 
-  /** Empty diseases frame with the canonical schema. */
-  def emptyDiseases(spark: SparkSession): DataFrame =
-    spark.range(0).select(lit("").as("material_id"), lit("").as("name"),
-      lit("").as("disease_id"), lit("").as("status"))
-
   // ---- oracle-checkable synthetic twins over the TPC-H customer table ----
 
   private def syntheticLong(spark: SparkSession, dir: String): DataFrame =
@@ -124,7 +117,6 @@ object Harmonize {
     * mode) — DuckDB replays the same when-chain. */
   def harmonizedPhenotypesQuery(spark: SparkSession, dir: String): DataFrame =
     harmonizedChars(syntheticLong(spark, dir), numericSexCodes = true)
-      .select(col("material_id"), col("name"), col("value"))
       .orderBy("material_id", "name")
 
   /** Hypertension-status twin of [[hypertension]] for the oracle gate

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.model.Dats
 import graft.operators.Representative
 import graft.sources.ValidatedTsv
 import graft.sources.ValidatedTsv.{ColumnSpec, Regex}
@@ -84,10 +85,25 @@ object TopmedEtl {
       .agg(count(lit(1)).as("n_subjects"),
         sort_array(collect_list(col("SUBJECT_ID"))).as("members"))
     val joined = groups.join(consentMeta, Seq("CONSENT"), "left")
-    val mismatch = joined.filter(
-      col("declared_count").isNotNull && col("declared_count") =!= col("n_subjects"))
-    require(mismatch.isEmpty, "consent-group count mismatch vs var_report")
+    requireDeclaredCounts(joined)
     joined.orderBy("CONSENT")
+  }
+
+  /** J9, one rule for both pipelines (bin/topmed_to_dats.py:132-161,
+    * bin/gtex_v7_to_dats.py:207-221): `counts` holds each code's
+    * (CONSENT, n_subjects) left-joined to its var_report enum row
+    * (consent_name, declared_count). A code missing from the enum is
+    * fatal, and so is an enum row with no declared count: the
+    * reference's int(cvc['count']) raises, so the comparison is
+    * null-safe. */
+  private[etl] def requireDeclaredCounts(counts: DataFrame): Unit = {
+    def codes(df: DataFrame): String =
+      df.select(col("CONSENT").cast("string")).collect().map(_.getString(0)).mkString(",")
+    val unknown = counts.filter(col("consent_name").isNull)
+    require(unknown.isEmpty, "consent code(s) missing from var_report enum: " + codes(unknown))
+    val mismatch = counts.filter(!(col("declared_count") <=> col("n_subjects")))
+    require(mismatch.isEmpty,
+      "subject count mismatch or missing declared count in consent group(s): " + codes(mismatch))
   }
 
   /** P8 — BODY_SITE → anatomy (ccmm/topmed/dna_extracts.py:62-95):
@@ -174,20 +190,13 @@ object TopmedEtl {
       col("SUBJECT_ID").as("name"),
       lit("subject").as("material_type"), lit("donor").as("role"),
       col("SUBJECT_ID").as("subject_id"),
-      lit(null).cast("string").as("derives_from"),
-      lit(null).cast("string").as("anatomy_id"),
       concat(lit("TOPMed subject "), col("SUBJECT_ID")).as("description"))
-    val rawSubjChars = subjects.columns
-      .filterNot(c => c == "SUBJECT_ID" || c == "dbGaP_Subject_ID").toSeq
-      .map { v =>
-        subjects.filter(col(v).isNotNull && col(v) =!= "").select(
-          entityId("Material", col("SUBJECT_ID")).as("material_id"),
-          lit(null).cast("string").as("var_acc"), lit(v).as("name"), col(v).as("value"))
-      }.reduce(_ unionByName _)
+    val rawSubjChars = GtexEtl.longForm(subjects, "SUBJECT_ID", subjects.columns.toSeq
+      .filterNot(c => c == "SUBJECT_ID" || c == "dbGaP_Subject_ID").map(_ -> GtexEtl.NoAccession))
     // P9: harmonized phenotype dimensions alongside the raw dbGaP vars
     // (subjects.py:33-120 keeps both); TOPMed gender is plain lower-case
     val subjChars = rawSubjChars.unionByName(
-      Harmonize.harmonizedChars(rawSubjChars, numericSexCodes = false))
+      Harmonize.harmonizedChars(rawSubjChars, numericSexCodes = false), allowMissingColumns = true)
     val diseases = Harmonize.hypertension(rawSubjChars, Harmonize.TopmedHypertensionVars)
 
     // J6: restricted Sample ⋈ Sample_Attributes merged conflict-fatal
@@ -265,26 +274,19 @@ object TopmedEtl {
       concat(lit("DNA extracted from "), anatomyPrefix, subjectSuffix).as("description"))
 
     // P8: anatomy dimension table from the distinct mapped body sites
-    val anatomicalParts = restrictedSamples match {
-      case Some(rs) =>
-        rs.filter(col("anatomy_name").isNotNull)
-          .select(col("anatomy_name"), col("uberon_id")).distinct()
-          .select(entityId("AnatomicalPart", col("anatomy_name")).as("anatomy_id"),
-            col("anatomy_name").as("name"), col("uberon_id"))
-      case None =>
-        spark.range(0).select(lit("").as("anatomy_id"), lit("").as("name"),
-          lit("").as("uberon_id"))
+    val anatomicalParts = restrictedSamples.fold(Dats.AnatomicalParts.empty(spark)) { rs =>
+      rs.filter(col("anatomy_name").isNotNull)
+        .select(col("anatomy_name"), col("uberon_id")).distinct()
+        .select(entityId("AnatomicalPart", col("anatomy_name")).as("anatomy_id"),
+          col("anatomy_name").as("name"), col("uberon_id"))
     }
 
     // restricted sample characteristics in long form (samples.py:226-234)
     val sampleChars: Option[DataFrame] = restrictedSamples.map { rs =>
       val idCols = Set("dbGaP_Sample_ID", "dbGaP_Subject_ID", "SAMPLE_ID",
         "SUBJECT_ID", "anatomy_name", "uberon_id")
-      rs.columns.filterNot(idCols).toSeq.map { v =>
-        rs.filter(col(v).isNotNull && col(v) =!= "").select(
-          entityId("Material", col("SAMPLE_ID")).as("material_id"),
-          lit(null).cast("string").as("var_acc"), lit(v).as("name"), col(v).as("value"))
-      }.reduce(_ unionByName _)
+      GtexEtl.longForm(rs, "SAMPLE_ID",
+        rs.columns.toSeq.filterNot(idCols).map(_ -> GtexEtl.NoAccession))
     }
 
     // CRAM + VCF file datasets (samples.py:241-476): one dataset per
@@ -312,7 +314,7 @@ object TopmedEtl {
       col("dataset_id"), studyDatasetId.as("parent_dataset_id"),
       concat(col("data_type"), lit(" of sample "), col("sample_id")).as("title"),
       concat(col("data_type"), lit(" file for "), col("sample_id")).as("description"),
-      lit("v2").as("version"), col("data_type"), lit(null).cast("string").as("study_id"))
+      lit("v2").as("version"), col("data_type"))
     val fileDistributions = files.select(col("dataset_id"),
         col("gs_uri").as("access_url"), col("file_size").as("size"),
         col("md5sum").as("md5"), col("Sodium_GUID").as("doi"), col("index_doi"))
@@ -330,7 +332,6 @@ object TopmedEtl {
       entityId("Dimension", concat(col("dataset_id"), lit("|md5"))).as("dim_id"),
       col("dataset_id").as("owner_id"),
       lit("MD5").as("name"),
-      lit(null).cast("string").as("var_acc"),
       lit("MD5 checksum of the data file").as("description"),
       col("md5sum").as("value"))
 
@@ -357,18 +358,18 @@ object TopmedEtl {
         entityId("StudyGroup", concat(lit("consent-"), col("CONSENT"))).as("group_id"),
         entityId("Material", col("SUBJECT_ID")).as("material_id")))
 
-    val datasets = spark.range(1).select(
-        topId.as("dataset_id"), lit(null).cast("string").as("parent_dataset_id"),
-        lit("Trans-Omics for Precision Medicine (TOPMed)").as("title"),
-        lit("NHLBI TOPMed program").as("description"),
-        lit("v2").as("version"), lit(null).cast("string").as("data_type"),
-        lit(null).cast("string").as("study_id"))
-      .unionByName(spark.range(1).select(
-        studyDatasetId.as("dataset_id"), topId.as("parent_dataset_id"),
-        lit(in.studyAccession).as("title"), lit(in.studyName).as("description"),
-        lit("v2").as("version"), lit(null).cast("string").as("data_type"),
-        studyId.as("study_id")))
-      .unionByName(fileDatasets)
+    val datasets = Seq(
+        spark.range(1).select(
+          topId.as("dataset_id"),
+          lit("Trans-Omics for Precision Medicine (TOPMed)").as("title"),
+          lit("NHLBI TOPMed program").as("description"),
+          lit("v2").as("version")),
+        spark.range(1).select(
+          studyDatasetId.as("dataset_id"), topId.as("parent_dataset_id"),
+          lit(in.studyAccession).as("title"), lit(in.studyName).as("description"),
+          lit("v2").as("version"), studyId.as("study_id")),
+        fileDatasets)
+      .reduce(_.unionByName(_, allowMissingColumns = true))
 
     val identifiers = spark.range(1).select(
         topId.as("entity_id"), lit("TOPMed").as("identifier"), lit("TOPMed").as("identifier_source"))
@@ -383,20 +384,15 @@ object TopmedEtl {
         lit(in.studyName).as("name"), studyDatasetId.as("dataset_id")),
       studyGroups = studyGroups,
       groupMembers = groupMembers,
-      materials = subjectMaterials.unionByName(referenced),
+      materials = subjectMaterials.unionByName(referenced, allowMissingColumns = true),
       anatomicalParts = anatomicalParts,
       characteristics = sampleChars.fold(subjChars)(subjChars.unionByName),
-      dimensions = in.dbgapDataDictPaths
-        // dbGaP variables as study Dimensions, same registration as the
-        // GTEx path (topmed/public_metadata.add_study_vars)
-        .map(xml => GtexEtl.dbgapDimensions(spark, xml, studyDatasetId))
-        .reduceOption(_ unionByName _).getOrElse(
-        spark.range(0).select(lit("").as("dim_id"), lit("").as("owner_id"),
-          lit("").as("name"), lit("").as("var_acc"), lit("").as("description"),
-          lit("").as("value")))
-        .unionByName(fileDimensions),
+      // dbGaP variables as study Dimensions, same registration as the
+      // GTEx path (topmed/public_metadata.add_study_vars)
+      dimensions = (in.dbgapDataDictPaths.map(GtexEtl.dbgapDimensions(spark, _, studyDatasetId))
+        :+ fileDimensions).reduce(_.unionByName(_, allowMissingColumns = true)),
       distributions = fileDistributions,
       dataAcquisitions = dataAcquisitions,
-      diseases = diseases)
+      diseases = diseases).conformed
   }
 }

@@ -8,9 +8,9 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
 
 import graft.etl.GtexEtl.EntityGraph
+import graft.model.Dats
 
 /** S15 — the JSON-LD graph re-ingest (sparql/v0.7/rdflib_util.py:54-63),
   * re-expressed for the entity-table engine: parse a [[DatsJsonWriter]]
@@ -301,44 +301,30 @@ object DatsJsonReader {
       Row(did, owner, name, varAcc, desc, value)
     }.toSeq
     val studyRows = studyOf.iterator.map { case (sid, ds) =>
-      Row(sid, ds, studyNames.getOrElse(sid, null))
+      Row(sid, studyNames.getOrElse(sid, null), ds)
     }.toSeq
 
-    def s(fields: String*): StructType =
-      StructType(fields.map(f => StructField(f, StringType)))
-    def df(rows: Seq[Row], schema: StructType): DataFrame =
-      spark.createDataFrame(rows.asJava, schema)
+    // rows are built in their table's column order (Dats)
+    def df(t: Dats.Table, rows: Iterable[Row]): DataFrame =
+      spark.createDataFrame(rows.toSeq.asJava, t.schema)
 
     // the driver-side row buffers are shipped to the executors ONCE, all
     // twelve tables concurrently: a query over a LocalRelation would
     // re-send its rows with every plan that scans it
     EntityGraph(
-      datasets = df(datasets.toSeq, s("dataset_id", "parent_dataset_id", "title",
-        "description", "version", "data_type", "study_id")),
-      identifiers = df(identifiers.toSeq,
-        s("entity_id", "identifier", "identifier_source")),
-      studies = df(studyRows, s("study_id", "dataset_id", "name")),
-      studyGroups = df(studyGroups.toSeq, s("group_id", "study_id", "name")),
-      groupMembers = df(groupMembers.toSeq, s("group_id", "material_id")),
-      materials = df(materialRows, s("material_id", "name", "material_type",
-        "role", "subject_id", "derives_from", "anatomy_id", "description")),
-      anatomicalParts = df(anatomies.iterator.map {
+      datasets = df(Dats.Datasets, datasets),
+      identifiers = df(Dats.Identifiers, identifiers),
+      studies = df(Dats.Studies, studyRows),
+      studyGroups = df(Dats.StudyGroups, studyGroups),
+      groupMembers = df(Dats.GroupMembers, groupMembers),
+      materials = df(Dats.Materials, materialRows),
+      anatomicalParts = df(Dats.AnatomicalParts, anatomies.iterator.map {
           case (aid, (name, uberon)) => Row(aid, name, uberon)
-        }.toSeq, s("anatomy_id", "name", "uberon_id")),
-      characteristics = df(characteristics.toSeq,
-        s("material_id", "var_acc", "name", "value")),
-      dimensions = df(dimRows, s("dim_id", "owner_id", "name", "var_acc",
-        "description", "value")),
-      distributions = df(distRows, StructType(Seq(
-        StructField("dataset_id", StringType),
-        StructField("access_url", StringType),
-        StructField("size", LongType),
-        StructField("md5", StringType),
-        StructField("doi", StringType),
-        StructField("index_doi", StringType)))),
-      dataAcquisitions = df(dataAcquisitions.toSeq,
-        s("dataset_id", "input_material_id")),
-      diseases = df(diseases.toSeq,
-        s("material_id", "name", "disease_id", "status"))).materialized
+        }.toSeq),
+      characteristics = df(Dats.Characteristics, characteristics),
+      dimensions = df(Dats.Dimensions, dimRows),
+      distributions = df(Dats.Distributions, distRows),
+      dataAcquisitions = df(Dats.DataAcquisitions, dataAcquisitions),
+      diseases = df(Dats.Diseases, diseases)).materialized
   }
 }

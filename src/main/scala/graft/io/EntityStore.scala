@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.etl.GtexEtl.EntityGraph
+import graft.model.Dats
 
 /** Parquet persistence for an [[EntityGraph]] — the MATERIALIZED
   * deployment shape. The reference's own pipeline is exactly
@@ -59,36 +60,21 @@ object EntityStore {
 
   /** The derivesFrom chain relation: materials' five chain columns.
     * THE single definition of the face's schema — [[saveBucketed]]
-    * writes it (re-bucketed by the parent key) and [[loadBucketed]]
-    * derives it for face-less dirs, so the two layouts can never
-    * drift column-wise. Also the correct value for any producer that
-    * sets `bucketedDerives` itself (the field carries real chain ROWS,
-    * not just a marker — Q4 reads them). */
+    * writes it (re-bucketed by the parent key). Also the correct value
+    * for any producer that sets `bucketedDerives` itself (the field
+    * carries real chain ROWS, not just a marker — Q4 reads them). */
   def chainRelation(materials: DataFrame): DataFrame =
     materials.filter(col("derives_from").isNotNull)
       .select("material_id", "material_type", "role", "name",
         "derives_from")
 
-  private val TableAccessors: Seq[(String, EntityGraph => DataFrame)] = Seq(
-    "datasets" -> (_.datasets),
-    "identifiers" -> (_.identifiers),
-    "studies" -> (_.studies),
-    "study_groups" -> (_.studyGroups),
-    "group_members" -> (_.groupMembers),
-    "materials" -> (_.materials),
-    "anatomical_parts" -> (_.anatomicalParts),
-    "characteristics" -> (_.characteristics),
-    "dimensions" -> (_.dimensions),
-    "distributions" -> (_.distributions),
-    "data_acquisitions" -> (_.dataAcquisitions),
-    "diseases" -> (_.diseases))
+  /** The twelve table names, in [[EntityGraph.tables]] order. */
+  private val TableNames: Seq[String] = Dats.EntityTables.map(_.name)
 
   /** Catalog table name for a materialize dir — content-addressed so
     * concurrent materializations of different dirs in one session never
     * collide, and a re-load of the same dir resolves the same tables.
-    * `private[graft]` so specs can assert catalog state (e.g. that a
-    * face-less re-materialize dropped the stale derives_edges ENTRY,
-    * not just its data dir). */
+    * `private[graft]` so specs can assert catalog state. */
   private[graft] def tableName(out: String, name: String): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(out.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
@@ -111,8 +97,7 @@ object EntityStore {
     * fits an executor's shuffle memory — e.g. ~4096 for 100 TB of
     * characteristics rows; the layout survives any reader parallelism
     * because non-bucketed join sides shuffle TO the bucket count. */
-  def saveBucketed(g: EntityGraph, out: String, buckets: Int = 32,
-      derivesFace: Boolean = true): Unit = {
+  def saveBucketed(g: EntityGraph, out: String, buckets: Int = 32): Unit = {
     def bucketedWrite(name: String, df: DataFrame, key: String): Unit = {
       val w = df.repartition(buckets, col(key))
         .write.mode("overwrite").format("parquet")
@@ -121,7 +106,7 @@ object EntityStore {
       Partitioned.get(name).fold(w)(cols => w.partitionBy(cols: _*))
         .saveAsTable(tableName(out, name))
     }
-    TableAccessors.map { case (n, f) => n -> f(g) }.foreach { case (name, df) =>
+    TableNames.zip(g.tables).foreach { case (name, df) =>
       Bucketed.get(name) match {
         case Some(key) => bucketedWrite(name, df, key)
         case None =>
@@ -140,24 +125,8 @@ object EntityStore {
     // corpus-sized extract scan (the 60M-row branch at sf10) arrives
     // hashed on derives_from = the sample join key, deleting its
     // exchange. Partitioned by material_type like materials, so typed
-    // hops still prune whole directories. `derivesFace = false`
-    // reproduces the r17 layout — kept so the write cost of the face
-    // can be A/B-priced in one JVM.
-    if (derivesFace)
-      bucketedWrite(DerivesEdges, chainRelation(g.materials), "derives_from")
-    else {
-      // a face-less RE-materialize of a dir that previously had a face
-      // must not leave the stale face behind: [[loadBucketed]] would
-      // resurrect it and Q4 would silently join the OLD graph's
-      // extracts against the new samples. Drop both the catalog entry
-      // and the external data dir so "overwrite per table" holds for
-      // the face too.
-      val spark = g.materials.sparkSession
-      spark.sql(s"DROP TABLE IF EXISTS ${tableName(out, DerivesEdges)}")
-      val p = new org.apache.hadoop.fs.Path(s"$out/$DerivesEdges")
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-      ()
-    }
+    // hops still prune whole directories.
+    bucketedWrite(DerivesEdges, chainRelation(g.materials), "derives_from")
   }
 
   /** Drop everything [[saveBucketed]] created for `out`: the catalog
@@ -181,7 +150,7 @@ object EntityStore {
     // cleanup contract. Anything else is not ours to remove.
     val exists = fs.exists(p)
     if (exists) {
-      val names = TableAccessors.map(_._1) :+ DerivesEdges
+      val names = TableNames :+ DerivesEdges
       require(fs.listStatus(p).isEmpty ||
           names.exists(n => fs.exists(new org.apache.hadoop.fs.Path(p, n))),
         s"refusing to recursively delete $out: non-empty with no " +
@@ -195,32 +164,15 @@ object EntityStore {
 
   /** Read a graph back from [[saveBucketed]]'s layout: bucketed tables
     * through the catalog (so scans carry the bucket distribution),
-    * plain dims straight from parquet.
-    *
-    * `bucketedDerives` is ALWAYS set here — its presence marks "the
-    * scans under this graph carry bucket distributions", which is what
-    * the Q7 pivot shape keys off, and that property holds with or
-    * without the face. A face-less (r17-layout) dir gets the chain
-    * relation DERIVED from the bucketed materials table instead: Q4
-    * answers identically through the same plan the r17 layout had (the
-    * projection is materials-bucketed, so the extract→sample hop pays
-    * its one exchange), while Q7 still rides the per-source pivots
-    * over the material_id-bucketed characteristics/diseases scans —
-    * conflating the two would re-introduce the corpus-sized
-    * subject-key shuffle on exactly the dirs that can avoid it. */
+    * plain dims straight from parquet, and the derives_edges face as
+    * `bucketedDerives` — whose presence marks "the scans under this
+    * graph carry bucket distributions", which is what the Q7 pivot
+    * shape keys off. */
   def loadBucketed(spark: SparkSession, out: String): EntityGraph = {
     def r(name: String): DataFrame =
       if (Bucketed.contains(name)) spark.table(tableName(out, name))
       else spark.read.parquet(s"$out/$name")
-    val materials = r("materials")
-    val derives =
-      if (spark.catalog.tableExists(tableName(out, DerivesEdges)))
-        spark.table(tableName(out, DerivesEdges))
-      else chainRelation(materials)
-    EntityGraph(r("datasets"), r("identifiers"), r("studies"),
-      r("study_groups"), r("group_members"), materials,
-      r("anatomical_parts"), r("characteristics"), r("dimensions"),
-      r("distributions"), r("data_acquisitions"), r("diseases"),
-      bucketedDerives = Some(derives))
+    EntityGraph.fromTables(TableNames.map(r),
+      bucketedDerives = Some(spark.table(tableName(out, DerivesEdges))))
   }
 }

@@ -1,7 +1,8 @@
 package graft.model
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The DATS entity model, re-architected for Spark (SURVEY.md §1.1).
   *
@@ -15,26 +16,59 @@ import org.apache.spark.sql.functions._
   * only become `@id` references at serialization time
   * (graft.io.DatsJsonWriter).
   *
-  * Entity-table schemas (all ids are deterministic content hashes — the
-  * reference's throwaway uuid4 ids, datsobj.py:109-114, are replaced so
-  * runs are byte-reproducible, SURVEY.md §1.4):
-  *
-  *  - datasets(dataset_id, parent_dataset_id, title, description, version,
-  *    data_type, study_id)           — Dataset nodes; parent FK = hasPart⁻¹
-  *  - identifiers(entity_id, identifier, identifier_source)
-  *  - studies(study_id, name, dataset_id)
-  *  - study_groups(group_id, study_id, name)
-  *  - group_members(group_id, material_id)                — hasMember
-  *  - materials(material_id, name, material_type, role, subject_id,
-  *    derives_from, anatomy_id, description)
-  *  - anatomical_parts(anatomy_id, name, uberon_id)
-  *  - characteristics(material_id, var_acc, name, value)
-  *  - dimensions(dim_id, owner_id, name, var_acc, description, value)
-  *  - distributions(dataset_id, access_url, size, md5, doi, index_doi)
-  *  - data_acquisitions(dataset_id, input_material_id)    — producedBy.input
-  *  - diseases(material_id, name, disease_id, status)     — bearerOfDisease
+  * The twelve entity tables are defined once, in [[Dats.EntityTables]].
   */
 object Dats {
+
+  /** One entity table: its name and its ordered columns, every one a
+    * string except those in `longColumns`. */
+  final case class Table(name: String, columns: Seq[String], longColumns: Set[String] = Set.empty) {
+    val schema: StructType = StructType(columns.map(c =>
+      StructField(c, if (longColumns(c)) LongType else StringType)))
+
+    /** `df` fitted to this table: its columns in schema order, and a typed
+      * null for each column it lacks. A column the table does not have,
+      * or one of another type, fails. */
+    def conform(df: DataFrame): DataFrame = {
+      val alien = df.schema.fields.filterNot(f =>
+        schema.fieldNames.contains(f.name) && schema(f.name).dataType == f.dataType)
+      require(alien.isEmpty, s"$name has no column(s) of this name and type: " +
+        alien.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", "))
+      val present = df.columns.toSet
+      df.select(schema.fields.map(f =>
+        if (present(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)).toSeq: _*)
+    }
+
+    /** The table with no rows. */
+    def empty(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+  }
+
+  /** Dataset nodes; the parent FK is hasPart⁻¹. */
+  val Datasets: Table = Table("datasets", Seq("dataset_id", "parent_dataset_id", "title",
+    "description", "version", "data_type", "study_id"))
+  val Identifiers: Table = Table("identifiers", Seq("entity_id", "identifier", "identifier_source"))
+  val Studies: Table = Table("studies", Seq("study_id", "name", "dataset_id"))
+  val StudyGroups: Table = Table("study_groups", Seq("group_id", "study_id", "name"))
+  /** hasMember. */
+  val GroupMembers: Table = Table("group_members", Seq("group_id", "material_id"))
+  val Materials: Table = Table("materials", Seq("material_id", "name", "material_type", "role",
+    "subject_id", "derives_from", "anatomy_id", "description"))
+  val AnatomicalParts: Table = Table("anatomical_parts", Seq("anatomy_id", "name", "uberon_id"))
+  val Characteristics: Table = Table("characteristics", Seq("material_id", "var_acc", "name", "value"))
+  val Dimensions: Table = Table("dimensions", Seq("dim_id", "owner_id", "name", "var_acc",
+    "description", "value"))
+  val Distributions: Table = Table("distributions", Seq("dataset_id", "access_url", "size", "md5",
+    "doi", "index_doi"), longColumns = Set("size"))
+  /** producedBy.input. */
+  val DataAcquisitions: Table = Table("data_acquisitions", Seq("dataset_id", "input_material_id"))
+  /** bearerOfDisease. */
+  val Diseases: Table = Table("diseases", Seq("material_id", "name", "disease_id", "status"))
+
+  /** The twelve entity tables, in [[graft.etl.GtexEtl.EntityGraph]]'s field order. */
+  val EntityTables: Seq[Table] = Seq(Datasets, Identifiers, Studies, StudyGroups, GroupMembers,
+    Materials, AnatomicalParts, Characteristics, Dimensions, Distributions, DataAcquisitions,
+    Diseases)
 
   /** The 37 DATS JSON-LD types of the reference's registry
     * (ccmm/dats/datsobj.py:33-70) — retained for the serializer's
@@ -70,7 +104,8 @@ object Dats {
   val NoContextTypes: Set[String] = Set("License")
 
   /** Deterministic entity id: stable hash of (type, natural key) —
-    * replaces uuid4 so identical inputs give identical output documents.
+    * replaces the reference's throwaway uuid4 ids (datsobj.py:109-114)
+    * so identical inputs give identical output documents (SURVEY.md §1.4).
     * sha1 keeps collisions out of reach at catalog scale. */
   def entityId(datsType: String, naturalKey: Column): Column =
     concat(lit(datsType.toLowerCase), lit("-"), sha1(concat_ws("|", lit(datsType), naturalKey)))

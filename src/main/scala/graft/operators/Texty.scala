@@ -53,8 +53,6 @@ object Texty {
 object TextOps {
   import Texty._
 
-  /** Per-document token statistics (token counting — north-star op;
-    * whitespace tokenizer per the reference's string-keyed row model). */
   /** Top-3 distinctive terms per document — TF-IDF with a LINEAR inverse
     * document frequency: score = (tf · 10⁶) div df, descending, ties to
     * the lexicographically smaller term. The textbook log-idf is
@@ -85,6 +83,8 @@ object TextOps {
       .orderBy("doc_id", "rnk")
   }
 
+  /** Per-document token statistics (token counting — north-star op;
+    * whitespace tokenizer per the reference's string-keyed row model). */
   def tokenStats(spark: SparkSession, dir: String): DataFrame = {
     // NOT spread (r21 re-measure): Tables.spread pays off where the
     // per-row scan work is heavy (md5 shingling, regex segmentation —
@@ -699,6 +699,12 @@ object TextOps {
       .orderBy("doc_id")
   }
 
+  /** Head size for [[vocabCoverage]] — ONE graft-visible constant shared
+    * with the DuckDB twin (Oracles.textVocabCoverage interpolates it), so
+    * the two engines cannot silently diverge the way a free `k` parameter
+    * against a hard-coded oracle literal could (r13 advice). */
+  private[graft] val VocabCoverageK: Int = 32
+
   /** Zipf head coverage — the tokenizer/mixture-planning statistic: how
     * much of the corpus the top-K tokens cover. One vocabulary-sized
     * aggregate, then a DISTRIBUTED top-K (orderBy+limit — TakeOrdered,
@@ -706,12 +712,6 @@ object TextOps {
     * the running coverage is a window over the K surviving rows only.
     * Coverage is exact integer ppm (cum·1e6 floor-div total), ties
     * break lexicographically. */
-  /** Head size for [[vocabCoverage]] — ONE graft-visible constant shared
-    * with the DuckDB twin (Oracles.textVocabCoverage interpolates it), so
-    * the two engines cannot silently diverge the way a free `k` parameter
-    * against a hard-coded oracle literal could (r13 advice). */
-  private[graft] val VocabCoverageK: Int = 32
-
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.spread(Tables.load(spark, dir, "documents"))
     val tok = graft.Caches.cached(

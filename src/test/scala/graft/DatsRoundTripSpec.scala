@@ -73,59 +73,6 @@ class DatsRoundTripSpec extends SparkTestBase {
     finally EntityStore.dropBucketed(spark, dir)
   }
 
-  test("EntityStore bucketed, face-less: an r17-layout dir (no derives_edges) still answers identically") {
-    // loadBucketed's compat contract (EntityStore.scala): a dir written
-    // before the derives_edges face existed still loads — the chain
-    // relation comes DERIVED from the bucketed materials table (so Q4
-    // plans exactly like the r17 layout did) and bucketedDerives stays
-    // set, because its presence marks scan bucketing and that holds
-    // with or without the face: Q7 must keep the per-source pivots
-    // here, not regress to the view-path union shuffle. The answers
-    // must not depend on which source the chain relation came from.
-    val dir = java.nio.file.Files.createTempDirectory("dats_rt_nf").toString
-    EntityStore.saveBucketed(graph, dir, buckets = 5, derivesFace = false)
-    try {
-      val reread = EntityStore.loadBucketed(spark, dir)
-      assert(reread.bucketedDerives.nonEmpty,
-        "a face-less bucketed dir must still carry the layout marker (derived chain relation)")
-      assertSameAnswers(reread)
-    } finally EntityStore.dropBucketed(spark, dir)
-  }
-
-  test("EntityStore bucketed: a face-less re-materialize drops the stale face") {
-    // overwrite semantics for the face (EntityStore.saveBucketed): a
-    // second materialize of the SAME dir with derivesFace = false must
-    // not leave the first write's derives_edges behind — a stale face
-    // would silently answer Q4 from the old graph's extract rows. The
-    // second write uses a PERTURBED graph (all RNA-extract rows dropped),
-    // so a resurrected stale face would put the first graph's RNA rows
-    // back into Q4's answer and fail the comparison — re-materializing
-    // the identical graph here would make the answer check vacuous
-    // (r18 advice).
-    import org.apache.spark.sql.functions.col
-    val perturbed = graph.copy(materials = graph.materials.filter(
-      !(col("material_type") === "extract" && col("role") === "RNA extract")))
-    val dir = java.nio.file.Files.createTempDirectory("dats_rt_ow").toString
-    EntityStore.saveBucketed(graph, dir, buckets = 5)
-    EntityStore.saveBucketed(perturbed, dir, buckets = 5, derivesFace = false)
-    try {
-      val reread = EntityStore.loadBucketed(spark, dir)
-      // the marker survives (scans are still bucketed) but the relation
-      // must be the materials-derived one, not the dropped table —
-      // gone from BOTH the data dir and the session catalog
-      assert(!new java.io.File(s"$dir/derives_edges").exists(),
-        "the stale derives_edges data dir must be deleted")
-      assert(!spark.catalog.tableExists(EntityStore.tableName(dir, "derives_edges")),
-        "the stale derives_edges catalog entry must be dropped")
-      // the perturbation must be material to Q4, or the stale-face
-      // comparison below proves nothing
-      assert(rows(DatsQueries.listSubjectSamples(perturbed)) !==
-        rows(DatsQueries.listSubjectSamples(graph)),
-        "perturbation did not change Q4 — the stale-face check is vacuous")
-      assertSameAnswers(reread, base = perturbed)
-    } finally EntityStore.dropBucketed(spark, dir)
-  }
-
   test("K1+S15 on the TOPMed graph: consent groups, GUID files, MD5 dimensions round-trip") {
     // a second entity-shape family: consent StudyGroups, CRAM+VCF file
     // datasets keyed by GUID files, MD5 carried as a file-dataset

@@ -19,7 +19,7 @@ class HarmonizeSpec extends SparkTestBase {
       ("s1", "VISIT_YEAR", "1999"), ("s1", "SysBP", "120"),
       ("s1", "diasbp", "80"), ("s1", "UNRELATED", "x")),
       numericSexCodes = false)
-    val byName = chars.collect().map(r => r.getString(2) -> r.getString(3)).toMap
+    val byName = chars.collect().map(r => r.getAs[String]("name") -> r.getAs[String]("value")).toMap
     assert(byName === Map(
       "Gender" -> "male", // TOPMed path lower-cases (subjects.py:36)
       "Age" -> "54", "Visit year" -> "1999",
@@ -30,7 +30,7 @@ class HarmonizeSpec extends SparkTestBase {
     val chars = Harmonize.harmonizedChars(long(
       ("s1", "GENDER", "1"), ("s2", "SEX", "2"), ("s3", "GENDER", "9")),
       numericSexCodes = true)
-    val byId = chars.collect().map(r => r.getString(0) -> r.getString(3)).toMap
+    val byId = chars.collect().map(r => r.getString(0) -> r.getAs[String]("value")).toMap
     assert(byId === Map("s1" -> "male", "s2" -> "female", "s3" -> null))
   }
 
@@ -38,7 +38,7 @@ class HarmonizeSpec extends SparkTestBase {
     val chars = Harmonize.harmonizedChars(long(
       ("s1", "AGE", ""), ("s2", "GENDER", "1")), numericSexCodes = false)
     assert(chars.filter(col("material_id") === "s1").count() === 0)
-    assert(chars.filter(col("material_id") === "s2").head().getString(3) === "1")
+    assert(chars.filter(col("material_id") === "s2").head().getAs[String]("value") === "1")
   }
 
   test("hypertension status: yes/1 → yes, non-blank → no, blank → absent") {

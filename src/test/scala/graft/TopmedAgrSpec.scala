@@ -51,6 +51,13 @@ class TopmedAgrSpec extends SparkTestBase {
     assert(groups.head.getAs[Long]("n_subjects") === 2)
     val badMeta = Seq(("1", "GRU", 5L)).toDF("CONSENT", "consent_name", "declared_count")
     intercept[IllegalArgumentException] { TopmedEtl.consentGroups(subj, badMeta).count() }
+    // a consent code missing from the enum, and an enum row with no
+    // declared count, are fatal too
+    val missingCode = Seq(("1", "GRU", 2L)).toDF("CONSENT", "consent_name", "declared_count")
+    intercept[IllegalArgumentException] { TopmedEtl.consentGroups(subj, missingCode).count() }
+    val noCount = Seq(("1", "GRU", Some(2L)), ("2", "HMB", None))
+      .toDF("CONSENT", "consent_name", "declared_count")
+    intercept[IllegalArgumentException] { TopmedEtl.consentGroups(subj, noCount).count() }
   }
 
   test("A4: synthetic subject picks mode-with-tiebreak per variable") {
